@@ -17,6 +17,15 @@ Commit protocol (local-FS emulation of an Iceberg snapshot commit):
   3. checkpoint record written via tmpfile + atomic rename  (the catalog row)
 Crash between 2 and 3 re-runs one stage idempotently (overwrite) — the same
 window Iceberg's multi-table commits have (SURVEY.md §7.4).
+
+Where the lineage records come from (none costs a Spark pass of its own):
+  * a sink stage's ``partitions`` are per output file (``file_lineage``): row
+    counts from the parquet footers, bytes from the ``n_tok`` column chunk,
+    read on the driver after the snapshot rename;
+  * ``run_job``'s ``counts`` stage records per input partition
+    (``partition_lineage``), folded from the same aggregation that yields the
+    per-sink counts — grouped by ``spark_partition_id()`` over the persisted
+    routed plan.
 """
 
 from __future__ import annotations
@@ -25,10 +34,13 @@ import json
 import os
 import shutil
 import tempfile
+import threading
 import uuid
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _validate_run_id(run_id: str) -> str:
@@ -117,39 +129,55 @@ class CheckpointLog:
         return spark.read.option("multiLine", "true").json(self.root + "/*.json")
 
 
-def partition_lineage(df: DataFrame, bytes_col: str = "n_tok") -> list[dict]:
-    """Per-partition (rows, bytes) lineage of a DataFrame as it is currently
-    partitioned — one distributed pass, no collect of data rows."""
-    agg = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.sum(bytes_col) if bytes_col in df.columns else F.lit(0)).alias("n_bytes"),
-        )
-        .collect()
-    )
+def sum_rows_bytes(rows: Iterable, key: str) -> dict:
+    """``{row[key]: [n_rows, n_bytes]}`` summed over collected aggregate rows
+    that each carry ``key``, ``n_rows`` and ``n_bytes`` (null bytes count 0)."""
+    acc: dict = {}
+    for r in rows:
+        a = acc.setdefault(r[key], [0, 0])
+        a[0] += r["n_rows"]
+        a[1] += int(r["n_bytes"] or 0)
+    return acc
+
+
+def partition_lineage(rows: Iterable) -> list[dict]:
+    """Per-partition (rows, bytes) lineage records folded from the collected
+    rows of an aggregation grouped by ``spark_partition_id()`` (possibly with
+    finer keys too): each row carries ``partition_id``, ``n_rows`` and
+    ``n_bytes``. The aggregation is the caller's, so lineage can ride a job the
+    caller runs anyway (``run_job``'s counts) instead of a pass of its own."""
     return [
-        {"partition_id": r["partition_id"], "n_rows": r["n_rows"], "n_bytes": int(r["n_bytes"] or 0)}
-        for r in agg
+        {"partition_id": p, "n_rows": n, "n_bytes": b}
+        for p, (n, b) in sorted(sum_rows_bytes(rows, "partition_id").items())
     ]
 
 
-def file_lineage(spark: SparkSession, sink_dir: str, bytes_col: str = "n_tok") -> list[dict]:
-    """Per-output-file lineage of a written sink (file == sink-table partition
-    unit; the Iceberg manifest analog). Scans only the metadata columns."""
-    df = spark.read.parquet(sink_dir)
-    agg = (
-        df.groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.sum(bytes_col) if bytes_col in df.columns else F.lit(0)).alias("n_bytes"),
-        )
-        .collect()
-    )
-    return [
-        {"file": os.path.basename(r["file"]), "n_rows": r["n_rows"], "n_bytes": int(r["n_bytes"] or 0)}
-        for r in agg
-    ]
+def file_lineage(sink_dir: str, bytes_col: str = "n_tok") -> list[dict]:
+    """Per-output-file lineage of a written parquet sink (file == sink-table
+    partition unit; the Iceberg manifest analog), read on the driver from the
+    files themselves — row counts from each footer, bytes from the one
+    ``bytes_col`` column chunk — with no Spark job. Covers the files a Spark
+    read would (not ``_``/``.``-prefixed) that hold rows."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = []
+    for dirpath, dirnames, filenames in os.walk(sink_dir):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        for name in filenames:
+            if name.startswith(("_", ".")):
+                continue
+            pf = pq.ParquetFile(os.path.join(dirpath, name))
+            n_rows = pf.metadata.num_rows
+            if n_rows == 0:
+                continue
+            n_bytes = (
+                pc.sum(pf.read(columns=[bytes_col]).column(0)).as_py()
+                if bytes_col in pf.schema_arrow.names
+                else 0
+            )
+            out.append({"file": name, "n_rows": n_rows, "n_bytes": int(n_bytes or 0)})
+    return sorted(out, key=lambda r: r["file"])
 
 
 class ResumableRun:
@@ -159,6 +187,10 @@ class ResumableRun:
 
     ``fn`` returns ``(n_rows, n_bytes, partitions)`` for the checkpoint record
     (``partitions`` may be None → file lineage is derived from the sink).
+
+    Stages may run from several threads at once (``stage_concurrently``):
+    each owns its own directories and catalog file, and ``executed`` is
+    guarded by a lock.
     """
 
     def __init__(self, spark: SparkSession, out_root: str, run_id: str | None = None) -> None:
@@ -167,6 +199,7 @@ class ResumableRun:
         self.run_id = _validate_run_id(run_id) if run_id else uuid.uuid4().hex[:12]
         self.log = CheckpointLog(os.path.join(out_root, "_checkpoint"))
         self.executed: list[str] = []  # stages actually run (not resumed-over)
+        self._lock = threading.Lock()
         os.makedirs(out_root, exist_ok=True)
 
     def stage_dir(self, name: str) -> str:
@@ -185,7 +218,30 @@ class ResumableRun:
             shutil.rmtree(final, ignore_errors=True)
             os.replace(inprog, final)  # the "snapshot commit"
             if partitions is None:
-                partitions = file_lineage(self.spark, final)
+                partitions = file_lineage(final)
         self.log.record(self.run_id, name, n_rows, n_bytes, partitions or [])
-        self.executed.append(name)
+        with self._lock:
+            self.executed.append(name)
         return final
+
+    def stage_concurrently(self, fns: dict[str, Callable]) -> dict[str, str]:
+        """Run independent stages at once, one thread per stage (the
+        ``FlusherRunner`` analog: each sink commits on its own). Each thread
+        inherits the caller's Spark local properties (job group, scheduler
+        pool). Every stage is let finish — one failing neither stops nor
+        un-commits the others — and then the first failure in ``fns`` order
+        is raised. ``executed`` lists the stages that ran in ``fns`` order,
+        whatever order they finished in. Returns ``{name: committed dir}``."""
+        if not fns:
+            return {}
+        mark = len(self.executed)
+        with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+            futures = {
+                # one wrapper per thread: each gets its own copy of the properties
+                name: pool.submit(inheritable_thread_target(self.spark)(self.stage), name, fn)
+                for name, fn in fns.items()
+            }
+        with self._lock:
+            ran = set(self.executed[mark:])
+            self.executed[mark:] = [name for name in fns if name in ran]
+        return {name: f.result() for name, f in futures.items()}

@@ -2,29 +2,41 @@
 ``Router::Route`` + flusher-commit lifecycle (SURVEY.md §3.1) as one resumable
 Spark job.
 
-    read sequences → decode (Arrow) → parse (per-source CASE) → route
-      → [per-sink stage: filter → salted repartition → parquet commit]
-      → counts stage (per-sink rows + token bytes)
+    read sequences → decode (JVM decode_tokens_utf8) → parse (per-source,
+      compiled once per config) → enrich → route → persist
+      → ONE aggregation: per-sink rows + token sums and per-partition lineage
+      → [per-sink stages, committed concurrently: filter → salted
+         repartition → parquet commit → footer file lineage]
+      → counts stage, LAST, once every sink has committed (pyarrow write)
 
 Each sink is its own committed stage (one Iceberg-snapshot analog per flusher);
-re-running with the same ``run_id`` skips committed sinks — the kill/rerun
-contract ("a killed run resumes from the last committed snapshot without
-reprocessing"). The routed plan is persisted once so N sink writes don't
-recompute the parse stage N times (SURVEY.md §7.4 multi-sink duplication;
-Router.cpp:50-82 semantics allow a row in >1 sink).
+the sink stages run from one thread each, as the reference's ``FlusherRunner``
+sends asynchronously. Re-running with the same ``run_id`` skips committed
+sinks — the kill/rerun contract ("a killed run resumes from the last committed
+snapshot without reprocessing"); a committed ``counts`` stage means every sink
+committed, so a fully resumed run reads it back and touches no input. The
+routed plan is persisted once so N sink writes don't recompute the parse stage
+N times (SURVEY.md §7.4 multi-sink duplication; Router.cpp:50-82 semantics
+allow a row in >1 sink).
 """
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..checkpoint import ResumableRun, partition_lineage
-from ..operators.aggregate import salted_repartition, sink_counts
+from ..checkpoint import ResumableRun, partition_lineage, sum_rows_bytes
+from ..operators.aggregate import salted_repartition
 from ..operators.route import RouteRule, SinkCondition, fan_out, sink_predicate
 from ..sources.io import read_sequences
 from .pipeline import ParserSpec, build_pipeline
+
+_COUNTS_SCHEMA = pa.schema([("route", pa.string()), ("n_rows", pa.int64()), ("n_tok_sum", pa.int64())])
 
 
 def _write_sink(df: DataFrame, path: str, num_partitions: int, keep_tokens: bool) -> None:
@@ -39,6 +51,41 @@ def _write_sink(df: DataFrame, path: str, num_partitions: int, keep_tokens: bool
         .option("compression", "zstd")
         .parquet(path)
     )
+
+
+def _counts_and_lineage(
+    routed: DataFrame, conditions: list[SinkCondition] | None
+) -> tuple[dict, list]:
+    """Per-sink ``{n_rows, n_tok_sum}`` and the per-partition aggregate rows
+    (for ``partition_lineage``), from ONE aggregation job over the persisted
+    plan, grouped by ``spark_partition_id()``.
+
+    Route-keyed sinks group by route too. Condition-based sinks are NOT route
+    values (a row may land in several, 'always' takes all), so they sum a
+    membership flag per condition instead — one job for all sinks, not one
+    sequential count per sink: N back-to-back full passes cost ~N straggler
+    tails on a wide cluster."""
+    keys = [F.spark_partition_id().alias("partition_id")]
+    aggs = [F.count(F.lit(1)).alias("n_rows"), F.sum("n_tok").alias("n_bytes")]
+    if conditions is None:
+        keys.append(F.col("route"))
+    else:
+        cols, tok = routed.columns, F.coalesce(F.col("n_tok"), F.lit(0))
+        for i, c in enumerate(conditions):
+            p = sink_predicate(c, cols)
+            aggs += [F.sum(F.when(p, 1).otherwise(0)).alias(f"_r{i}"),
+                     F.sum(F.when(p, tok).otherwise(0)).alias(f"_t{i}")]
+    rows = routed.groupBy(*keys).agg(*aggs).collect()
+
+    if conditions is None:
+        sums = sum_rows_bytes(rows, "route")
+    else:
+        sums = {
+            c.sink: [sum(r[f"_r{i}"] for r in rows), sum(r[f"_t{i}"] for r in rows)]
+            for i, c in enumerate(conditions)
+        }
+    counts = {k: {"n_rows": int(n), "n_tok_sum": int(t)} for k, (n, t) in sums.items()}
+    return counts, rows
 
 
 def run_job(
@@ -69,10 +116,9 @@ def run_job(
     # reprocess, and recomputing from current input could disagree with the
     # committed sink contents if the input changed).
     if run.log.committed(run.run_id, "counts"):
-        cdf = spark.read.parquet(run.stage_dir("counts"))
         counts = {
             r["route"]: {"n_rows": r["n_rows"], "n_tok_sum": int(r["n_tok_sum"])}
-            for r in cdf.collect()
+            for r in pq.read_table(run.stage_dir("counts")).to_pylist()
         }
         sinks = {
             name[len("sink_"):]: run.stage_dir(name)
@@ -87,62 +133,38 @@ def run_job(
     )
     routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # Per-sink counts + input-side partition lineage in one cached pass.
+        counts, by_partition = _counts_and_lineage(routed, conditions)
         if conditions is None:
-            counts = {
-                r["route"]: {"n_rows": r["n_rows"], "n_tok_sum": int(r["n_tok_sum"])}
-                for r in sink_counts(routed).collect()
-            }
             sink_dfs = {
                 name: routed.filter(F.col("route") == F.lit(name)) for name in sorted(counts)
             }
         else:
-            # Condition-based sinks are NOT route values (a row may land in
-            # several, 'always' takes all) — route-keyed counts would record
-            # 0 for them. All sinks' counts come from ONE aggregation job over
-            # the persisted plan (a membership flag per condition), not one
-            # sequential count job per sink: N back-to-back full passes cost
-            # ~N straggler tails on a wide cluster — the same serial-stage
-            # cost write_fanout's thread pool exists to avoid.
             sink_dfs = fan_out(routed, conditions)
-            aggs = []
-            for i, c in enumerate(conditions):
-                p = sink_predicate(c, routed.columns)
-                aggs.append(
-                    F.sum(F.when(p, 1).otherwise(0)).alias(f"_r{i}")
-                )
-                aggs.append(
-                    F.sum(
-                        F.when(p, F.coalesce(F.col("n_tok"), F.lit(0))).otherwise(0)
-                    ).alias(f"_t{i}")
-                )
-            row = routed.agg(*aggs).collect()[0]
-            counts = {
-                c.sink: {
-                    "n_rows": int(row[f"_r{i}"] or 0),
-                    "n_tok_sum": int(row[f"_t{i}"] or 0),
-                }
-                for i, c in enumerate(conditions)
-            }
 
-        sinks: dict[str, str] = {}
-        for name, df in sink_dfs.items():
-            def _fn(inprog: str, df=df, name=name):
+        def _sink_fn(name: str, df: DataFrame):
+            def _fn(inprog: str):
                 _write_sink(df, inprog, num_partitions, keep_tokens)
                 c = counts.get(name, {"n_rows": 0, "n_tok_sum": 0})
                 return c["n_rows"], c["n_tok_sum"], None  # file lineage derived
 
-            sinks[name] = run.stage(f"sink_{name}", _fn)
+            return _fn
+
+        committed = run.stage_concurrently(
+            {f"sink_{name}": _sink_fn(name, df) for name, df in sink_dfs.items()}
+        )
+        sinks = {name: committed[f"sink_{name}"] for name in sink_dfs}
 
         def _counts_fn(inprog: str):
-            cdf = spark.createDataFrame(
-                [(k, v["n_rows"], v["n_tok_sum"]) for k, v in sorted(counts.items())],
-                "route string, n_rows long, n_tok_sum long",
+            # 4 rows: pyarrow writes the same table in ~1 ms, a Spark write
+            # job costs ~1 s; the commit protocol is local-FS already
+            os.makedirs(inprog)
+            table = pa.Table.from_pylist(
+                [{"route": k, **v} for k, v in sorted(counts.items())], schema=_COUNTS_SCHEMA
             )
-            cdf.coalesce(1).write.mode("overwrite").parquet(inprog)
+            pq.write_table(table, os.path.join(inprog, "part-00000.parquet"))
             total_rows = sum(v["n_rows"] for v in counts.values())
             total_tok = sum(v["n_tok_sum"] for v in counts.values())
-            return total_rows, total_tok, partition_lineage(routed)
+            return total_rows, total_tok, partition_lineage(by_partition)
 
         run.stage("counts", _counts_fn)
     finally:

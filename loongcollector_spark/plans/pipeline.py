@@ -98,7 +98,7 @@ def parse_by_source(
     empty = F.create_map().cast("map<string,string>")
     base = F.coalesce(F.col(fields_col), empty) if fields_col in df.columns else None
 
-    maps: list[Column] = [] if base is None else [base]
+    maps: list[Column] = []
     ok_expr: Column | None = None
     ts_expr: Column | None = None
     prev_ts = F.col(time_col) if time_col in df.columns else F.lit(None).cast("timestamp")
@@ -122,16 +122,12 @@ def parse_by_source(
     # base entries structurally (last-wins, LogEvent::SetContent semantics)
     # instead of letting map_concat throw DUPLICATE_MAP_KEY under the default
     # mapKeyDedupPolicy=EXCEPTION.
-    parsed_maps = maps if base is None else maps[1:]
-    parsed_expr = parsed_maps[0] if len(parsed_maps) == 1 else F.map_concat(*parsed_maps)
-    fields_expr = parsed_expr if base is None else P.merge_maps(base, parsed_expr)
-    ok_expr = F.coalesce(ok_expr.otherwise(F.lit(False)), F.lit(False))
-    ts_expr = ts_expr.otherwise(prev_ts)
-    return (
-        df.withColumn(fields_col, fields_expr)
-        .withColumn(P.PARSE_OK, ok_expr)
-        .withColumn(time_col, ts_expr)
-    )
+    parsed_expr = maps[0] if len(maps) == 1 else F.map_concat(*maps)
+    return df.withColumns({
+        fields_col: parsed_expr if base is None else P.merge_maps(base, parsed_expr),
+        P.PARSE_OK: F.coalesce(ok_expr.otherwise(F.lit(False)), F.lit(False)),
+        time_col: ts_expr.otherwise(prev_ts),
+    })
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,14 @@ lineage must reconcile with the committed sink contents.
 
 from __future__ import annotations
 
+import os
+import threading
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+
+from loongcollector_spark import oracle
 
 from loongcollector_spark.checkpoint import CheckpointLog, ResumableRun
 from loongcollector_spark.plans.job import run_job
@@ -169,3 +175,114 @@ def test_stage_name_validated(tmp_path):
         log.record("run_", "x", 0, 0, [])  # trailing '_' run_id collides
     log.record("run1", "stage-ok.v2", 1, 2, [])
     assert log.stages("run1") == ["stage-ok.v2"]
+
+
+def _oracle_sink_totals(seq_path) -> dict:
+    from loongcollector_spark.plans.pipeline import DELIM_KEYS, NGINX_KEYS, NGINX_REGEX
+
+    t = pq.read_table(seq_path)
+    rows = zip(t["doc_id"].to_pylist(), t["tokens"].to_pylist(),
+               t["n_tok"].to_pylist(), t["source"].to_pylist())
+    totals: dict = {}
+    for r in oracle.run_pipeline(rows, NGINX_REGEX, list(NGINX_KEYS), list(DELIM_KEYS)):
+        acc = totals.setdefault(r["route"], [0, 0])
+        acc[0] += 1
+        acc[1] += r["n_tok"]
+    return {k: tuple(v) for k, v in totals.items()}
+
+
+def test_sink_failure_during_concurrent_commit_then_resume(spark, seq_path, tmp_path, monkeypatch):
+    """One sink stage dies while the other sinks are committing: the others
+    still commit, ``counts`` (always last) does not, and a rerun with the same
+    run_id executes exactly the failed sink plus counts — with sink totals
+    equal to the oracle's."""
+    import loongcollector_spark.plans.job as job
+
+    real_write = job._write_sink
+    others_started = threading.Event()
+
+    def flaky_write(df, path, *args):
+        if os.path.basename(path).startswith("sink_sink_apsara"):
+            # fail only once another sink's write is in flight
+            assert others_started.wait(120), "sink stages did not run concurrently"
+            raise RuntimeError("killed mid-commit")
+        others_started.set()
+        real_write(df, path, *args)
+
+    monkeypatch.setattr(job, "_write_sink", flaky_write)
+    out = str(tmp_path / "jobf")
+    with pytest.raises(RuntimeError, match="killed mid-commit"):
+        run_job(spark, seq_path, out, run_id="f1")
+    log = CheckpointLog(out + "/_checkpoint")
+    assert log.stages("f1") == ["sink_sink_default", "sink_sink_nginx", "sink_sink_structured"]
+    assert not log.committed("f1", "counts")
+
+    monkeypatch.setattr(job, "_write_sink", real_write)
+    res = run_job(spark, seq_path, out, run_id="f1")
+    assert res["executed"] == ["sink_sink_apsara", "counts"]
+    expected = _oracle_sink_totals(seq_path)
+    assert {k: (v["n_rows"], v["n_tok_sum"]) for k, v in res["counts"].items()} == expected
+    for name, path in res["sinks"].items():
+        r = spark.read.parquet(path).agg(F.count(F.lit(1)).alias("n"), F.sum("n_tok").alias("t")).first()
+        assert (r["n"], r["t"]) == expected[name]
+        assert log.read("f1", f"sink_{name}")["n_rows"] == expected[name][0]
+
+
+def _spark_file_lineage(spark, sink_dir: str, bytes_col: str = "n_tok") -> list[dict]:
+    """Reference: per-file lineage from a Spark ``input_file_name()`` grouping."""
+    df = spark.read.parquet(sink_dir)
+    rows = df.groupBy(F.input_file_name().alias("file")).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        (F.sum(bytes_col) if bytes_col in df.columns else F.lit(0)).alias("n_bytes"),
+    ).collect()
+    return sorted(
+        ({"file": os.path.basename(r["file"]), "n_rows": r["n_rows"], "n_bytes": int(r["n_bytes"] or 0)}
+         for r in rows),
+        key=lambda r: r["file"],
+    )
+
+
+def test_footer_file_lineage_matches_spark_grouping(spark, seq_path, tmp_path):
+    """``file_lineage`` reads parquet footers and the n_tok column chunk on
+    the driver; it must equal the Spark input_file_name() grouping it
+    replaced, null n_tok values and a sink without n_tok included."""
+    from loongcollector_spark.checkpoint import file_lineage
+    from loongcollector_spark.plans.job import _write_sink
+
+    df = spark.read.parquet(seq_path).withColumn(
+        "n_tok", F.when(F.col("n_tok") % 7 == 0, F.lit(None)).otherwise(F.col("n_tok"))
+    )
+    sink = str(tmp_path / "sink")
+    _write_sink(df, sink, 8, keep_tokens=False)
+    got = file_lineage(sink)
+    assert len(got) > 1
+    assert got == _spark_file_lineage(spark, sink)
+    assert sum(r["n_rows"] for r in got) == 5000
+
+    bare = str(tmp_path / "bare")
+    _write_sink(df.drop("n_tok"), bare, 4, keep_tokens=False)
+    assert file_lineage(bare) == _spark_file_lineage(spark, bare)
+
+
+def test_concurrent_stages_keep_executed_complete_and_ordered(spark, tmp_path):
+    """Many more stage threads than cores, with a tiny switch interval: every
+    stage commits, none is lost from ``executed``, and ``executed`` keeps the
+    submission order whatever order the threads finished in."""
+    import sys
+
+    run = ResumableRun(spark, str(tmp_path / "out"), run_id="many")
+    names = [f"s{i:02d}" for i in range(48)]
+
+    def fn(d):
+        os.makedirs(d)
+        return 1, 1, []
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        dirs = run.stage_concurrently({n: fn for n in names})
+    finally:
+        sys.setswitchinterval(interval)
+    assert run.executed == names
+    assert run.log.stages("many") == names
+    assert all(os.path.isdir(dirs[n]) for n in names)

@@ -218,3 +218,35 @@ def test_parse_by_source_overwrites_preexisting_field(spark):
     assert out[0].fields["status"] == "200"  # parsed wins
     assert out[0].fields["host"] == "h1"     # untouched upstream key survives
     assert out[0].fields["extra"] == "e"
+
+
+def test_parse_by_source_follows_input_schema_and_config(spark):
+    """The same parsers over inputs with and without pre-existing
+    fields/event_time, and a different parser config for the same source,
+    must each get their own correct result."""
+    from loongcollector_spark.plans.pipeline import ParserSpec, parse_by_source
+
+    json_line, kv_line = '{"a":"1"}', "a:1\tb:2"
+    bare = spark.createDataFrame([("json", json_line), ("json", kv_line)], "source string, content string")
+    pre = bare.withColumn("fields", F.create_map(F.lit("up"), F.lit("u"))).withColumn(
+        "event_time", F.lit("2024-05-01 10:00:00").cast("timestamp")
+    )
+    as_json = {"json": ParserSpec(kind="json")}
+    as_kv = {"json": ParserSpec(kind="kv")}
+
+    def parse(df, parsers):
+        out = parse_by_source(df, parsers).collect()
+        return {r.content: (dict(r.fields), r._parse_ok, r.event_time) for r in out}
+
+    bare_json, pre_json = parse(bare, as_json), parse(pre, as_json)
+    bare_kv, pre_kv = parse(bare, as_kv), parse(pre, as_kv)
+
+    assert bare_json[json_line] == ({"a": "1"}, True, None)
+    assert bare_json[kv_line] == ({"__raw_log__": kv_line}, False, None)
+    ts = pre_json[json_line][2]
+    assert ts is not None and pre_json[kv_line][2] == ts  # upstream time kept
+    assert pre_json[json_line][:2] == ({"up": "u", "a": "1"}, True)
+    assert pre_json[kv_line][:2] == ({"up": "u", "__raw_log__": kv_line}, False)
+    assert bare_kv[kv_line] == ({"a": "1", "b": "2"}, True, None)
+    assert pre_kv[kv_line] == ({"up": "u", "a": "1", "b": "2"}, True, ts)
+    assert bare_kv != bare_json and pre_kv != pre_json

@@ -27,15 +27,13 @@ settings.register_profile(
 )  # derandomized: the driver gate runs pytest -x once per round — a fresh random
    # seed finding a NEW counterexample there would red the record for a bug that
    # exists every run; determinism makes the gate reflect the committed code
-settings.register_profile(
-    # opt-in randomized deep shake (builder-side only, never the gate):
-    #   HYPOTHESIS_DEEP=2000 python -m pytest tests/test_property*.py -q
-    "deep",
-    max_examples=int(os.environ.get("HYPOTHESIS_DEEP") or 2000),
-    deadline=None,
-    derandomize=False,
-)
-settings.load_profile("deep" if os.environ.get("HYPOTHESIS_DEEP") else "suite")
+# opt-in randomized deep shake (builder-side only, never the gate):
+#   HYPOTHESIS_DEEP=2000 python -m pytest tests/test_property*.py -q
+# unset, empty or 0 keeps the derandomized suite profile
+_deep_examples = int(os.environ.get("HYPOTHESIS_DEEP") or 0)
+if _deep_examples > 0:
+    settings.register_profile("deep", max_examples=_deep_examples, deadline=None, derandomize=False)
+settings.load_profile("deep" if _deep_examples > 0 else "suite")
 
 # ---------------------------------------------------------------------------
 # regex AST generator (valid by construction)

@@ -19,11 +19,13 @@ Usage: python tools/oracle_order_audit.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, ".")
+_TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [os.path.dirname(_TOOLS), _TOOLS]  # repo root, then tools/
 
 import __spark_entry__ as entrymod  # noqa: E402
 from check_oracle import TABLES, value_hash  # noqa: E402
@@ -66,5 +68,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "tools")
     raise SystemExit(main())
