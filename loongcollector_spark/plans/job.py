@@ -31,26 +31,15 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import ResumableRun, partition_lineage, sum_rows_bytes
-from ..operators.aggregate import salted_repartition
 from ..operators.route import RouteRule, SinkCondition, fan_out, sink_predicate
-from ..sources.io import read_sequences
+from ..sources.io import read_sequences, sink_writer
 from .pipeline import ParserSpec, build_pipeline
 
 _COUNTS_SCHEMA = pa.schema([("route", pa.string()), ("n_rows", pa.int64()), ("n_tok_sum", pa.int64())])
 
 
 def _write_sink(df: DataFrame, path: str, num_partitions: int, keep_tokens: bool) -> None:
-    if not keep_tokens and "tokens" in df.columns and "content" in df.columns:
-        df = df.drop("tokens")
-    out = salted_repartition(df, num_partitions) if num_partitions else df
-    # zstd, matching write_routed_partitioned/write_fanout: measured faster
-    # than the snappy default AND 35% smaller (sources/io.py)
-    (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", 1_000_000)
-        .option("compression", "zstd")
-        .parquet(path)
-    )
+    sink_writer(df, keep_tokens, num_partitions).mode("overwrite").parquet(path)
 
 
 def _counts_and_lineage(

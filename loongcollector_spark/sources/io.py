@@ -10,6 +10,9 @@
   sink-affinity repartition on the salted key before each write.
 * ``write_routed_partitioned`` — fast path when sinks are DISJOINT (pure
   row-level routing): single pass, ``partitionBy(route)``.
+* ``sink_writer``     — the payload, file-sizing and compression choices every
+  sink commit shares (``plans/job.py``'s sink stages, the stream fan-out in
+  ``streaming/job.py`` and ``write_routed_partitioned``).
 
 Iceberg notes: on a real cluster, swap ``format('parquet')`` for
 ``writeTo(table).append()`` on an Iceberg catalog — the snapshot commit is the
@@ -21,8 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
 from ..operators.aggregate import salted_repartition
 from ..operators.route import SinkCondition, fan_out
@@ -30,6 +32,38 @@ from ..operators.route import SinkCondition, fan_out
 
 def read_sequences(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     return spark.read.format(fmt).load(path)
+
+
+def sink_writer(
+    df: DataFrame,
+    keep_tokens: bool = False,
+    num_partitions: int | None = None,
+    compression: str = "zstd",
+    **salt,
+) -> DataFrameWriter:
+    """The writer of one sink commit, with the choices all sinks share:
+
+    * payload: ``content`` — byte-for-byte the token payload (the codec is
+      bijective, tokens are bytes), so routed-row token-array equality stays
+      exactly verifiable via re-encode while the sink avoids parquet-encoding
+      every token as an int32 (4× byte inflation, measured 8× slower write).
+      ``keep_tokens=True`` stores the raw int32 array too;
+    * ``num_partitions``: a salted repartition first (``salted_repartition``;
+      ``salt`` takes its ``salt_buckets``/``source_col``), after the drop so
+      the shuffle never carries ``tokens``;
+    * zstd: measured on the 600k-row routed write (local[32], /dev/shm) it is
+      BOTH faster than Spark's snappy default (1.56s vs 2.21s best) and 35%
+      smaller (27.6 vs 42.6 MB) — at 100 TB the size cut dominates downstream
+      scan + storage cost, so there is no speed/size trade to make;
+    * ``maxRecordsPerFile`` bounds file size (the Batcher/FlushStrategy
+      analog, core/collection_pipeline/batch/FlushStrategy.h:31-104).
+
+    The caller adds the save mode, ``partitionBy`` and the path."""
+    if not keep_tokens and "tokens" in df.columns and "content" in df.columns:
+        df = df.drop("tokens")
+    if num_partitions:
+        df = salted_repartition(df, num_partitions, **salt)
+    return df.write.option("maxRecordsPerFile", 1_000_000).option("compression", compression)
 
 
 def write_routed_partitioned(
@@ -42,39 +76,21 @@ def write_routed_partitioned(
     compression: str = "zstd",
 ) -> None:
     """Disjoint-sink fast path: one shuffle, one write, sinks = directories.
+    Payload, compression and file sizing: ``sink_writer``.
 
-    ``compression`` defaults to zstd: measured on the 600k-row routed write
-    (local[32], /dev/shm) it is BOTH faster than Spark's snappy default
-    (1.56s vs 2.21s best) and 35% smaller (27.6 vs 42.6 MB) — at 100 TB the
-    size cut dominates downstream scan + storage cost, so there is no
-    speed/size trade to make.
-
-    The salted repartition keeps one hot source from serializing the shuffle;
-    maxRecordsPerFile bounds file size (the Batcher/FlushStrategy analog,
-    core/collection_pipeline/batch/FlushStrategy.h:31-104).
-
-    Payload at the sink is the ``content`` string — byte-for-byte the token
-    payload (the codec is bijective, tokens are bytes), so routed-row
-    token-array equality stays exactly verifiable via re-encode while the sink
-    avoids parquet-encoding every token as an int32 (4× byte inflation,
-    measured 8× slower write). ``keep_tokens=True`` stores the raw int32 array
-    too.
+    Salt on (route, hash(doc_id)): each task then holds rows of exactly ONE
+    route, so partitionBy opens one parquet writer per task instead of one per
+    (task × route) — concurrent row-group buffers are the write stage's memory
+    footprint (4 routes × 64 tasks × ~128MB blew up local[32]); the salt
+    spreads the hot route over many tasks (sink-affinity sharding,
+    aggregator_shardhash.go:164-204 semantics).
     """
-    df = routed
-    if not keep_tokens and "tokens" in df.columns and "content" in df.columns:
-        df = df.drop("tokens")
-    if num_partitions:
-        # Salt on (route, hash(doc_id)): each task then holds rows of exactly
-        # ONE route, so partitionBy opens one parquet writer per task instead
-        # of one per (task × route) — concurrent row-group buffers are the
-        # write stage's memory footprint (4 routes × 64 tasks × ~128MB blew
-        # up local[32]); the salt spreads the hot route over many tasks
-        # (sink-affinity sharding, aggregator_shardhash.go:164-204 semantics).
-        df = salted_repartition(df, num_partitions, salt_buckets, source_col=route_col)
     (
-        df.write.mode("overwrite")
-        .option("maxRecordsPerFile", 1_000_000)
-        .option("compression", compression)
+        sink_writer(
+            routed, keep_tokens, num_partitions, compression,
+            salt_buckets=salt_buckets, source_col=route_col,
+        )
+        .mode("overwrite")
         .partitionBy(route_col)
         .parquet(out_dir)
     )
@@ -95,7 +111,7 @@ def write_fanout(
     executors) — sequential writes pay every job's straggler tail back-to-back,
     while concurrent ones overlap tail with the next sink's scan, which is the
     difference between ~1× and ~Nsinks× write wall on a 1000-executor cluster.
-    zstd sink default — see write_routed_partitioned.
+    zstd sink default — see sink_writer.
     """
     from concurrent.futures import ThreadPoolExecutor
 

@@ -9,25 +9,35 @@ and late-data drop via discard intervals. The Spark-native equivalents:
 * processor chain       → IDENTICAL stateless transformations as batch —
                           ``build_pipeline`` is reused verbatim
 * Batcher/FlushStrategy → trigger intervals + sink file sizing
-* at-least-once + resume→ streaming checkpoint (file-source offsets) — a
-                          restarted query reprocesses nothing, the streaming
-                          twin of checkpoint.py's batch resume
+* exactly-once + resume → streaming checkpoint (file-source offsets) plus a
+                          per-batch ledger file as commit marker — a restarted
+                          query replays only an uncommitted batch, and the
+                          replay neither duplicates nor loses rows; the
+                          streaming twin of checkpoint.py's batch resume
 * discard-old-events    → ``withWatermark`` on event_time for windowed aggs
 
-``foreachBatch`` fans out each micro-batch to the per-route sinks (append
-mode), mirroring Router.cpp:50-82.
+``start_fanout``'s ``foreachBatch`` fans out each micro-batch to the per-route
+sinks (Router.cpp:50-82) in ONE Spark job and commits it with the protocol of
+checkpoint.py (RangeCheckpoint prepare/commit, ExactlyOnceQueueManager).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import re
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..checkpoint import file_lineage
 from ..plans.pipeline import ParserSpec, build_pipeline
 from ..operators.route import RouteRule
 from ..schema import SEQUENCE_SCHEMA
+from ..sources.io import sink_writer
 
 
 def stream_sequences(
@@ -127,8 +137,11 @@ def stream_sequences_kafka(
     """Non-file streaming source #2: a real kafka topic behind the same
     sequence-schema seam as ``stream_sequences``/``stream_sequences_rate`` —
     the downstream pipeline (decode → parse → route → fan-out) is identical
-    stateless projections. Offsets ride Spark's streaming checkpoint
-    (at-least-once + resume, the ConsumerGroup-offset-commit analog).
+    stateless projections. Offsets ride Spark's streaming checkpoint (the
+    ConsumerGroup-offset-commit analog): a batch that failed before its offset
+    commit is replayed over the same offset range under the same batch id, and
+    ``start_fanout``'s ledger file decides whether it already committed — so
+    the fan-out stays exactly-once across a restart.
 
     NOTE: needs the spark-sql-kafka package on the classpath and a reachable
     broker — neither exists in this sandbox, so this wiring is exercised only
@@ -160,6 +173,100 @@ def stream_pipeline(
     return build_pipeline(stream_sequences(spark, input_dir), parsers, routes, **kwargs)
 
 
+_LEDGER_SCHEMA = pa.schema(
+    [("route", pa.string()), ("n_rows", pa.int64()), ("n_tok_sum", pa.int64()), ("batch_id", pa.int32())]
+)
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _route_of(dirname: str) -> str | None:
+    """The route value of a ``route=<v>`` directory Spark's ``partitionBy``
+    wrote: its Hive path escaping (``%XX``) undone, the null directory → None."""
+    v = dirname[len("route="):]
+    if v == _HIVE_NULL:
+        return None
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), v)
+
+
+def _stage_batch(batch_df: DataFrame, stage: str) -> None:
+    """The micro-batch's one Spark job: a route-partitioned write into
+    ``stage``, with the batch job's sink options."""
+    sink_writer(batch_df).mode("overwrite").partitionBy("route").parquet(stage)
+
+
+def _publish(stage: str, sinks: str, prefix: str) -> dict:
+    """Move the staged files into ``sinks/route=<r>/`` under ``prefix`` and
+    return ``{route: (n_rows, n_tok_sum)}`` from their footers."""
+    counts = {}
+    for d in sorted(os.listdir(stage)):
+        if not d.startswith("route="):
+            continue
+        files = file_lineage(os.path.join(stage, d))
+        if not files:
+            continue
+        os.makedirs(os.path.join(sinks, d), exist_ok=True)
+        for f in files:
+            os.replace(os.path.join(stage, d, f["file"]), os.path.join(sinks, d, prefix + f["file"]))
+        counts[_route_of(d)] = (sum(f["n_rows"] for f in files), sum(f["n_bytes"] for f in files))
+    return counts
+
+
+def _unpublish(sinks: str, prefix: str) -> None:
+    """Delete the files an earlier, uncommitted attempt moved under ``prefix``."""
+    for d in os.listdir(sinks):
+        if d.startswith("route="):
+            for name in os.listdir(os.path.join(sinks, d)):
+                if name.startswith(prefix):
+                    os.remove(os.path.join(sinks, d, name))
+
+
+def _write_ledger(path: str, batch_id: int, counts: dict) -> None:
+    """The batch's ledger rows (pyarrow, tmp + atomic rename): its commit marker."""
+    rows = [
+        {"route": r, "n_rows": n, "n_tok_sum": t, "batch_id": batch_id}
+        for r, (n, t) in sorted(counts.items(), key=lambda kv: (kv[0] is None, kv[0] or ""))
+    ]
+    tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path) + ".tmp")
+    pq.write_table(pa.Table.from_pylist(rows, schema=_LEDGER_SCHEMA), tmp)
+    os.replace(tmp, path)
+
+
+def _drop_stage(stage: str) -> None:
+    shutil.rmtree(stage, ignore_errors=True)
+    with contextlib.suppress(OSError):
+        os.rmdir(os.path.dirname(stage))  # the ``_inprogress`` parent, once empty
+
+
+def commit_batch(batch_df: DataFrame, batch_id: int, out_root: str) -> None:
+    """Commit one micro-batch exactly once into ``out_root``'s per-route sinks
+    and counts ledger, running ONE Spark job for it.
+
+      1. if ``counts/batch-<id>.parquet`` exists the batch committed before:
+         skip it. Otherwise, if its stage exists, an earlier attempt stopped
+         part-way: delete the files it published (``batch-<id>-`` prefix);
+      2. write the batch to ``sinks/_inprogress/<id>/`` (``partitionBy(route)``);
+      3. read per-route rows and token sums from the written footers;
+      4. move the files into ``sinks/route=<r>/`` named ``batch-<id>-<part>``;
+      5. write the ledger file — the commit — then drop the stage.
+
+    The stage is dropped only after the ledger is written, so a batch without
+    a ledger has published files only while its stage exists."""
+    sinks, counts = os.path.join(out_root, "sinks"), os.path.join(out_root, "counts")
+    stage = os.path.join(sinks, "_inprogress", str(batch_id))
+    ledger = os.path.join(counts, f"batch-{batch_id}.parquet")
+    prefix = f"batch-{batch_id}-"
+    if os.path.exists(ledger):
+        _drop_stage(stage)
+        return
+    if os.path.isdir(stage):
+        _unpublish(sinks, prefix)
+    _stage_batch(batch_df, stage)
+    by_route = _publish(stage, sinks, prefix)
+    os.makedirs(counts, exist_ok=True)
+    _write_ledger(ledger, batch_id, by_route)
+    _drop_stage(stage)
+
+
 def start_fanout(
     routed: DataFrame,
     out_root: str,
@@ -167,25 +274,18 @@ def start_fanout(
     available_now: bool = False,
     processing_time: str = "10 seconds",
 ):
-    """foreachBatch fan-out writer: each micro-batch appended to per-route
-    directories + a running counts ledger (one parquet row per batch/route —
-    the flusher OUT_EVENTS counters)."""
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        df = batch_df
-        if "tokens" in df.columns and "content" in df.columns:
-            df = df.drop("tokens")  # payload = content (bijective; see sources/io.py)
-        df.write.mode("append").partitionBy("route").parquet(os.path.join(out_root, "sinks"))
-        (
-            batch_df.groupBy("route")
-            .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("n_tok").alias("n_tok_sum"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(os.path.join(out_root, "counts"))
-        )
-
-    w = routed.writeStream.foreachBatch(_write_batch).option("checkpointLocation", checkpoint_dir)
+    """foreachBatch fan-out writer, exactly-once: each micro-batch lands in
+    per-route directories under ``out_root/sinks`` and as one ledger file
+    ``out_root/counts/batch-<id>.parquet`` (its rows and token sum per route —
+    the flusher OUT_EVENTS counters; a null route is the
+    ``__HIVE_DEFAULT_PARTITION__`` directory's). ``commit_batch`` runs one
+    Spark job per batch, takes the counts from the written files' footers and
+    writes the ledger file last, as the batch's commit marker. A batch that
+    fails before its offsets commit is replayed under the same id on restart
+    (same ``checkpoint_dir``): it is skipped if its ledger file exists, and
+    otherwise first deletes whatever its earlier attempt published."""
+    w = routed.writeStream.foreachBatch(lambda df, batch_id: commit_batch(df, batch_id, out_root))
+    w = w.option("checkpointLocation", checkpoint_dir)
     w = w.trigger(availableNow=True) if available_now else w.trigger(processingTime=processing_time)
     return w.start()
 
