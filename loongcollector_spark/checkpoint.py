@@ -21,25 +21,23 @@ window Iceberg's multi-table commits have (SURVEY.md §7.4).
 Where the lineage records come from (none costs a Spark pass of its own):
   * a sink stage's ``partitions`` are per output file (``file_lineage``): row
     counts from the parquet footers, bytes from the ``n_tok`` column chunk,
-    read on the driver after the snapshot rename;
-  * ``run_job``'s ``counts`` stage records per input partition
-    (``partition_lineage``), folded from the same aggregation that yields the
-    per-sink counts — grouped by ``spark_partition_id()`` over the persisted
-    routed plan.
+    read in-process (no Spark job) once the write that made them finished;
+  * ``run_job``'s ``counts`` stage records per write partition
+    (``partition_lineage``): its sinks' file records folded by the
+    ``part-<n>`` task number in each file name, so they add up to the
+    stage's rows even when a row went to several sinks.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import tempfile
-import threading
 import uuid
-from collections.abc import Callable, Iterable
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Iterable
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -129,27 +127,20 @@ class CheckpointLog:
         return spark.read.option("multiLine", "true").json(self.root + "/*.json")
 
 
-def sum_rows_bytes(rows: Iterable, key: str) -> dict:
-    """``{row[key]: [n_rows, n_bytes]}`` summed over collected aggregate rows
-    that each carry ``key``, ``n_rows`` and ``n_bytes`` (null bytes count 0)."""
+_TASK = re.compile(r"part-(\d+)")
+
+
+def partition_lineage(files: Iterable[dict]) -> list[dict]:
+    """Per-write-partition (rows, bytes) lineage folded from ``file_lineage``
+    records: files are keyed by the task number Spark puts in their names
+    (``part-<n>``), so one task's files across several sinks sum into one
+    record."""
     acc: dict = {}
-    for r in rows:
-        a = acc.setdefault(r[key], [0, 0])
-        a[0] += r["n_rows"]
-        a[1] += int(r["n_bytes"] or 0)
-    return acc
-
-
-def partition_lineage(rows: Iterable) -> list[dict]:
-    """Per-partition (rows, bytes) lineage records folded from the collected
-    rows of an aggregation grouped by ``spark_partition_id()`` (possibly with
-    finer keys too): each row carries ``partition_id``, ``n_rows`` and
-    ``n_bytes``. The aggregation is the caller's, so lineage can ride a job the
-    caller runs anyway (``run_job``'s counts) instead of a pass of its own."""
-    return [
-        {"partition_id": p, "n_rows": n, "n_bytes": b}
-        for p, (n, b) in sorted(sum_rows_bytes(rows, "partition_id").items())
-    ]
+    for f in files:
+        a = acc.setdefault(int(_TASK.match(f["file"]).group(1)), [0, 0])
+        a[0] += f["n_rows"]
+        a[1] += f["n_bytes"]
+    return [{"partition_id": p, "n_rows": n, "n_bytes": b} for p, (n, b) in sorted(acc.items())]
 
 
 def file_lineage(sink_dir: str, bytes_col: str = "n_tok") -> list[dict]:
@@ -187,10 +178,6 @@ class ResumableRun:
 
     ``fn`` returns ``(n_rows, n_bytes, partitions)`` for the checkpoint record
     (``partitions`` may be None → file lineage is derived from the sink).
-
-    Stages may run from several threads at once (``stage_concurrently``):
-    each owns its own directories and catalog file, and ``executed`` is
-    guarded by a lock.
     """
 
     def __init__(self, spark: SparkSession, out_root: str, run_id: str | None = None) -> None:
@@ -199,7 +186,6 @@ class ResumableRun:
         self.run_id = _validate_run_id(run_id) if run_id else uuid.uuid4().hex[:12]
         self.log = CheckpointLog(os.path.join(out_root, "_checkpoint"))
         self.executed: list[str] = []  # stages actually run (not resumed-over)
-        self._lock = threading.Lock()
         os.makedirs(out_root, exist_ok=True)
 
     def stage_dir(self, name: str) -> str:
@@ -220,28 +206,5 @@ class ResumableRun:
             if partitions is None:
                 partitions = file_lineage(final)
         self.log.record(self.run_id, name, n_rows, n_bytes, partitions or [])
-        with self._lock:
-            self.executed.append(name)
+        self.executed.append(name)
         return final
-
-    def stage_concurrently(self, fns: dict[str, Callable]) -> dict[str, str]:
-        """Run independent stages at once, one thread per stage (the
-        ``FlusherRunner`` analog: each sink commits on its own). Each thread
-        inherits the caller's Spark local properties (job group, scheduler
-        pool). Every stage is let finish — one failing neither stops nor
-        un-commits the others — and then the first failure in ``fns`` order
-        is raised. ``executed`` lists the stages that ran in ``fns`` order,
-        whatever order they finished in. Returns ``{name: committed dir}``."""
-        if not fns:
-            return {}
-        mark = len(self.executed)
-        with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-            futures = {
-                # one wrapper per thread: each gets its own copy of the properties
-                name: pool.submit(inheritable_thread_target(self.spark)(self.stage), name, fn)
-                for name, fn in fns.items()
-            }
-        with self._lock:
-            ran = set(self.executed[mark:])
-            self.executed[mark:] = [name for name in fns if name in ran]
-        return {name: f.result() for name, f in futures.items()}

@@ -1,6 +1,7 @@
 """Enrichment / transform operators (SURVEY.md §2.4).
 
-* ``dict_map``        — processor_dict_map lookup-table enrich via BROADCAST join
+* ``dict_map``        — processor_dict_map lookup-table enrich: literal map
+                        lookup for a dict, BROADCAST join for a table
                         (plugins/processor/dictmap/processor_dict_map.go:30-186)
 * ``rename_keys``     — processor_rename (plugins/processor/rename/processor_rename.go:26-141)
 * ``add_fields``      — processor_add_fields (plugins/processor/addfields/...go:26-85)
@@ -12,8 +13,9 @@
 * ``log_to_metric``   — processor_log_to_sls_metric reshape
                         (plugins/processor/logtoslsmetric/...go:32-172)
 
-Scale notes: dict_map is ALWAYS a broadcast hash join (dict ≤1000 rows per the
-reference's MaxDictSize) — zero shuffle on the fact side. The md5-desensitize
+Scale notes: dict_map never shuffles the fact side (dict ≤1000 rows per the
+reference's MaxDictSize): a dict is a literal map in the projection, a table a
+broadcast hash join. The md5-desensitize
 mode needs Python's re.sub with a hash callback → Arrow-batched pandas UDF
 (slow path, only when configured).
 """
@@ -57,7 +59,7 @@ def _set_field(base: Column, key: str, value: Column, present: Column) -> Column
 
 def dict_map(
     df: DataFrame,
-    dict_df: DataFrame,
+    lookup: DataFrame | dict,
     source_key: str,
     dest_key: str,
     missing: str | None = None,
@@ -65,18 +67,25 @@ def dict_map(
     fields_col: str = "fields",
     source_is_field: bool = True,
 ) -> DataFrame:
-    """Lookup-table enrich. ``dict_df`` must be 2 columns ``(key, value)``.
+    """Lookup-table enrich from ``lookup``: a Python ``dict`` or a
+    2-column ``(key, value)`` DataFrame.
 
-    Broadcast hash join on the dict (processor_dict_map.go caps dicts at 1000
-    entries, .go:96-146) → no shuffle of the big side, survives any scale-up.
-    ``mode='fill'`` writes only when ``dest_key`` is absent; ``missing`` is the
-    HandleMissing default (.go:148-186; None → leave row unenriched).
+    A ``dict`` becomes a literal ``create_map`` looked up per row — a plain
+    projection, no join and no broadcast job (processor_dict_map.go caps
+    dicts at 1000 entries, .go:96-146, so the literal stays small). A
+    DataFrame is a broadcast hash join → no shuffle of the big side. A null
+    key matches no row either way. ``mode='fill'`` writes only when
+    ``dest_key`` is absent; ``missing`` is the HandleMissing default
+    (.go:148-186; None → leave row unenriched).
     """
-    k, v = dict_df.columns[:2]
-    d = broadcast(dict_df.select(F.col(k).alias("__dm_key"), F.col(v).alias("__dm_val")))
     src = F.col(fields_col)[source_key] if source_is_field else F.col(source_key)
-    joined = df.join(d, src == F.col("__dm_key"), "left")
-    mapped = F.col("__dm_val")
+    if isinstance(lookup, dict):
+        pairs = [F.lit(x) for kv in lookup.items() if kv[0] is not None for x in kv]
+        joined, mapped = df, F.create_map(*pairs)[src] if pairs else F.lit(None).cast("string")
+    else:
+        k, v = lookup.columns[:2]
+        d = broadcast(lookup.select(F.col(k).alias("__dm_key"), F.col(v).alias("__dm_val")))
+        joined, mapped = df.join(d, src == F.col("__dm_key"), "left"), F.col("__dm_val")
     if missing is not None:
         # HandleMissing fills only rows that HAVE the source key
         mapped = F.when(src.isNotNull(), F.coalesce(mapped, F.lit(missing)))

@@ -8,8 +8,9 @@
   (core/collection_pipeline/route/Router.cpp:50-82): unconditional sinks always
   receive a copy; conditional sinks receive rows matching their Condition
   (event_type equality or tag equality, Condition.cpp:36-113). A row can go to
-  MULTIPLE sinks, so fan-out is one filtered write per sink over a cached
-  DataFrame — not ``partitionBy``.
+  MULTIPLE sinks: ``fan_out`` gives one filtered DataFrame per sink, and
+  ``with_sink_column`` explodes each row into one copy per sink so a single
+  ``partitionBy`` write on the copies commits them all.
 """
 
 from __future__ import annotations
@@ -89,21 +90,48 @@ def sink_predicate(cond: SinkCondition, df_cols: list[str]) -> Column:
     raise ValueError(f"unknown condition type {cond.type!r}")
 
 
+def check_distinct_sinks(conditions: list[SinkCondition]) -> None:
+    """Each condition needs its own sink: a repeated name would silently
+    merge (or, in ``fan_out``, REPLACE) one condition's rows with another's."""
+    dup = {c.sink for c in conditions if sum(x.sink == c.sink for x in conditions) > 1}
+    if dup:
+        raise ValueError(
+            f"duplicate sink name(s) {sorted(dup)} — each later condition "
+            "would silently REPLACE the earlier one's rows; give each "
+            "condition a distinct sink (or pre-merge the conditions)"
+        )
+
+
+def _discard_tag(c: SinkCondition) -> Column:
+    return F.map_filter(F.col("tags"), lambda k, _: k != F.lit(c.key))
+
+
 def fan_out(df: DataFrame, conditions: list[SinkCondition]) -> dict[str, DataFrame]:
     """Router.cpp:50-82 multi-sink duplication: each sink gets the rows its
     condition matches; a row may appear in several sinks. Caller should
     ``df.persist()`` first so the routed plan is computed once."""
-    dup = {c.sink for c in conditions if sum(x.sink == c.sink for x in conditions) > 1}
-    if dup:
-        raise ValueError(
-            f"fan_out: duplicate sink name(s) {sorted(dup)} — each later "
-            "condition would silently REPLACE the earlier one's rows; give "
-            "each condition a distinct sink (or pre-merge the conditions)"
-        )
+    check_distinct_sinks(conditions)
     out: dict[str, DataFrame] = {}
     for c in conditions:
         sunk = df.filter(sink_predicate(c, df.columns))
         if c.type == "tag" and c.discard_tag:
-            sunk = sunk.withColumn("tags", F.map_filter(F.col("tags"), lambda k, _: k != F.lit(c.key)))
+            sunk = sunk.withColumn("tags", _discard_tag(c))
         out[c.sink] = sunk
+    return out
+
+
+def with_sink_column(df: DataFrame, conditions: list[SinkCondition]) -> DataFrame:
+    """``fan_out`` as one plan: each row exploded into one copy per sink whose
+    condition holds, that sink's name in ``_sink`` — a row in k sinks appears
+    k times, a row in none is dropped — so ONE ``partitionBy("_sink")`` write
+    commits every sink. ``discard_tag`` applies to its own sink's copies."""
+    check_distinct_sinks(conditions)
+    hits = F.array(*[F.when(sink_predicate(c, df.columns), F.lit(c.sink)) for c in conditions])
+    out = df.withColumn("_sink", F.explode(F.filter(hits, lambda s: s.isNotNull())))
+    discards = [c for c in conditions if c.type == "tag" and c.discard_tag]
+    if discards:
+        tags = F.col("tags")
+        for c in discards:
+            tags = F.when(F.col("_sink") == F.lit(c.sink), _discard_tag(c)).otherwise(tags)
+        out = out.withColumn("tags", tags)
     return out

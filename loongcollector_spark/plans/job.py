@@ -3,78 +3,82 @@
 Spark job.
 
     read sequences → decode (JVM decode_tokens_utf8) → parse (per-source,
-      compiled once per config) → enrich → route → persist
-      → ONE aggregation: per-sink rows + token sums and per-partition lineage
-      → [per-sink stages, committed concurrently: filter → salted
-         repartition → parquet commit → footer file lineage]
+      compiled once per config) → enrich (literal map lookup) → route
+      → _sink column (a copy of route, or one exploded copy per matching
+        sink condition)
+      → ONE Spark job: salted (_sink, xxhash64(doc_id)) repartition →
+        partitionBy(_sink) parquet write into <out>/_inprogress/
+      → per-sink rows, token sums and file lineage from the footers
+      → [per-sink stages: rename of the sink's _sink=<v> directory]
       → counts stage, LAST, once every sink has committed (pyarrow write)
 
-Each sink is its own committed stage (one Iceberg-snapshot analog per flusher);
-the sink stages run from one thread each, as the reference's ``FlusherRunner``
-sends asynchronously. Re-running with the same ``run_id`` skips committed
-sinks — the kill/rerun contract ("a killed run resumes from the last committed
-snapshot without reprocessing"); a committed ``counts`` stage means every sink
-committed, so a fully resumed run reads it back and touches no input. The
-routed plan is persisted once so N sink writes don't recompute the parse stage
-N times (SURVEY.md §7.4 multi-sink duplication; Router.cpp:50-82 semantics
-allow a row in >1 sink).
+Each sink is its own committed stage (one Iceberg-snapshot analog per
+flusher), but every sink's rows come from the one write: the Router hands each
+event to its flushers once (Router.cpp:50-82) and each flusher counts what it
+sent. A row in several condition sinks is written once per sink. Re-running
+with the same ``run_id`` skips committed sinks and writes only the rows of the
+others — the kill/rerun contract ("a killed run resumes from the last
+committed snapshot without reprocessing"); a committed ``counts`` stage means
+every sink committed, so a fully resumed run reads it back and touches no
+input. Nothing is persisted and no aggregation job runs: the one write is the
+only pass over the routed plan.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..checkpoint import ResumableRun, partition_lineage, sum_rows_bytes
-from ..operators.route import RouteRule, SinkCondition, fan_out, sink_predicate
-from ..sources.io import read_sequences, sink_writer
-from .pipeline import ParserSpec, build_pipeline
+from ..checkpoint import ResumableRun, _validate_stage, partition_lineage
+from ..operators.route import RouteRule, SinkCondition, check_distinct_sinks, with_sink_column
+from ..sources.io import read_sequences, sink_writer, write_staged
+from .pipeline import DEFAULT_ROUTES, ParserSpec, build_pipeline
 
 _COUNTS_SCHEMA = pa.schema([("route", pa.string()), ("n_rows", pa.int64()), ("n_tok_sum", pa.int64())])
 
 
-def _write_sink(df: DataFrame, path: str, num_partitions: int, keep_tokens: bool) -> None:
-    sink_writer(df, keep_tokens, num_partitions).mode("overwrite").parquet(path)
-
-
-def _counts_and_lineage(
-    routed: DataFrame, conditions: list[SinkCondition] | None
-) -> tuple[dict, list]:
-    """Per-sink ``{n_rows, n_tok_sum}`` and the per-partition aggregate rows
-    (for ``partition_lineage``), from ONE aggregation job over the persisted
-    plan, grouped by ``spark_partition_id()``.
-
-    Route-keyed sinks group by route too. Condition-based sinks are NOT route
-    values (a row may land in several, 'always' takes all), so they sum a
-    membership flag per condition instead — one job for all sinks, not one
-    sequential count per sink: N back-to-back full passes cost ~N straggler
-    tails on a wide cluster."""
-    keys = [F.spark_partition_id().alias("partition_id")]
-    aggs = [F.count(F.lit(1)).alias("n_rows"), F.sum("n_tok").alias("n_bytes")]
-    if conditions is None:
-        keys.append(F.col("route"))
+def _sink_names(
+    routes: list[RouteRule] | None, conditions: list[SinkCondition] | None, default_sink: str | None
+) -> list[str]:
+    """Every sink the job can commit, validated before any Spark job runs: a
+    name that makes a bad stage name would otherwise fail only after the
+    write, and again on every rerun."""
+    if conditions is not None:
+        check_distinct_sinks(conditions)
+        names = [c.sink for c in conditions]
     else:
-        cols, tok = routed.columns, F.coalesce(F.col("n_tok"), F.lit(0))
-        for i, c in enumerate(conditions):
-            p = sink_predicate(c, cols)
-            aggs += [F.sum(F.when(p, 1).otherwise(0)).alias(f"_r{i}"),
-                     F.sum(F.when(p, tok).otherwise(0)).alias(f"_t{i}")]
-    rows = routed.groupBy(*keys).agg(*aggs).collect()
+        names = [r.sink for r in (DEFAULT_ROUTES if routes is None else routes)]
+        names += [] if default_sink is None else [default_sink]
+    for n in names:
+        if not isinstance(n, str) or not n:
+            raise ValueError(f"sink names must be non-empty strings: {n!r}")
+        _validate_stage(f"sink_{n}")
+    return list(dict.fromkeys(names))
 
-    if conditions is None:
-        sums = sum_rows_bytes(rows, "route")
-    else:
-        sums = {
-            c.sink: [sum(r[f"_r{i}"] for r in rows), sum(r[f"_t{i}"] for r in rows)]
-            for i, c in enumerate(conditions)
-        }
-    counts = {k: {"n_rows": int(n), "n_tok_sum": int(t)} for k, (n, t) in sums.items()}
-    return counts, rows
+
+def _totals(files: list[dict]) -> tuple[int, int]:
+    """(rows, token sum) of a sink from its ``file_lineage`` records."""
+    return sum(f["n_rows"] for f in files), sum(f["n_bytes"] for f in files)
+
+
+def _sink_stage(src: str | None, files: list[dict], plan: DataFrame, keep_tokens: bool):
+    """The body of one sink's stage: rename its staged directory into the
+    stage, or — for a condition sink that matched no row — write one zero-row
+    file with the columns of the others (``limit(0)`` plans no scan)."""
+
+    def _fn(inprog: str):
+        if src is None:
+            sink_writer(plan.drop("_sink").limit(0), keep_tokens).mode("overwrite").parquet(inprog)
+        else:
+            os.replace(src, inprog)
+        return (*_totals(files), files)
+
+    return _fn
 
 
 def run_job(
@@ -96,6 +100,7 @@ def run_job(
     """
     from .pipeline import default_enrich
 
+    names = _sink_names(routes, conditions, default_sink)
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism * 2
     run = ResumableRun(spark, out_root, run_id)
 
@@ -116,47 +121,46 @@ def run_job(
         }
         return {"run_id": run.run_id, "sinks": sinks, "counts": counts, "executed": []}
 
-    enrich_fn = default_enrich(spark) if enrich == "default" else enrich
-    routed = build_pipeline(
-        read_sequences(spark, input_path), parsers, routes, default_sink, enrich=enrich_fn
-    )
-    routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        counts, by_partition = _counts_and_lineage(routed, conditions)
-        if conditions is None:
-            sink_dfs = {
-                name: routed.filter(F.col("route") == F.lit(name)) for name in sorted(counts)
-            }
-        else:
-            sink_dfs = fan_out(routed, conditions)
-
-        def _sink_fn(name: str, df: DataFrame):
-            def _fn(inprog: str):
-                _write_sink(df, inprog, num_partitions, keep_tokens)
-                c = counts.get(name, {"n_rows": 0, "n_tok_sum": 0})
-                return c["n_rows"], c["n_tok_sum"], None  # file lineage derived
-
-            return _fn
-
-        committed = run.stage_concurrently(
-            {f"sink_{name}": _sink_fn(name, df) for name, df in sink_dfs.items()}
+    done = [n for n in names if run.log.committed(run.run_id, f"sink_{n}")]
+    pending = [n for n in names if n not in done]
+    staging = os.path.join(out_root, "_inprogress")
+    # per-sink file lineage; an earlier attempt's sinks from their records
+    files = {n: run.log.read(run.run_id, f"sink_{n}")["partitions"] for n in done}
+    if pending:
+        enrich_fn = default_enrich(spark) if enrich == "default" else enrich
+        routed = build_pipeline(
+            read_sequences(spark, input_path), parsers, routes, default_sink, enrich=enrich_fn
         )
-        sinks = {name: committed[f"sink_{name}"] for name in sink_dfs}
+        if conditions is None:
+            plan = routed.withColumn("_sink", F.col("route"))
+        else:
+            plan = with_sink_column(routed, conditions)
+        if done:
+            plan = plan.filter(F.col("_sink").isin(pending))
+        staged = write_staged(
+            sink_writer(plan, keep_tokens, num_partitions, salt_buckets=64, source_col="_sink"),
+            staging, "_sink",
+        )
+        # route sinks exist once they have rows; condition sinks always do
+        commit = sorted(staged) if conditions is None else pending
+        for name in commit:
+            src, files[name] = staged.get(name, (None, []))
+            run.stage(f"sink_{name}", _sink_stage(src, files[name], plan, keep_tokens))
+    shutil.rmtree(staging, ignore_errors=True)
+    sinks = {n: run.stage_dir(f"sink_{n}") for n in files}
+    counts = {n: dict(zip(("n_rows", "n_tok_sum"), _totals(fs))) for n, fs in files.items()}
 
-        def _counts_fn(inprog: str):
-            # 4 rows: pyarrow writes the same table in ~1 ms, a Spark write
-            # job costs ~1 s; the commit protocol is local-FS already
-            os.makedirs(inprog)
-            table = pa.Table.from_pylist(
-                [{"route": k, **v} for k, v in sorted(counts.items())], schema=_COUNTS_SCHEMA
-            )
-            pq.write_table(table, os.path.join(inprog, "part-00000.parquet"))
-            total_rows = sum(v["n_rows"] for v in counts.values())
-            total_tok = sum(v["n_tok_sum"] for v in counts.values())
-            return total_rows, total_tok, partition_lineage(by_partition)
+    def _counts_fn(inprog: str):
+        # 4 rows: pyarrow writes the same table in ~1 ms, a Spark write
+        # job costs ~1 s; the commit protocol is local-FS already
+        os.makedirs(inprog)
+        table = pa.Table.from_pylist(
+            [{"route": k, **v} for k, v in sorted(counts.items())], schema=_COUNTS_SCHEMA
+        )
+        pq.write_table(table, os.path.join(inprog, "part-00000.parquet"))
+        total_rows = sum(v["n_rows"] for v in counts.values())
+        total_tok = sum(v["n_tok_sum"] for v in counts.values())
+        return total_rows, total_tok, partition_lineage(f for fs in files.values() for f in fs)
 
-        run.stage("counts", _counts_fn)
-    finally:
-        routed.unpersist()
-
+    run.stage("counts", _counts_fn)
     return {"run_id": run.run_id, "sinks": sinks, "counts": counts, "executed": run.executed}

@@ -168,8 +168,8 @@ DEFAULT_ROUTES = [
     RouteRule("json|delimiter", "sink_structured"),
 ]
 
-# Default enrich stage (the north-star broadcast-lookup / desensitize step):
-# status code → class via broadcast dict join; last IP octet redacted.
+# Default enrich stage (the north-star lookup / desensitize step):
+# status code → class via a literal map lookup; last IP octet redacted.
 STATUS_CLASSES = [
     ("200", "ok"), ("301", "redirect"), ("403", "client_error"),
     ("404", "client_error"), ("500", "server_error"),
@@ -179,14 +179,15 @@ STATUS_CLASSES = [
 def default_enrich(spark) -> "Callable[[DataFrame], DataFrame]":  # noqa: F821
     """processor_dict_map + processor_desensitize over the parsed fields —
     the reference's rename/filter/desensitize enrich line as one composable
-    stage. The dict join is broadcast (zero shuffle of the fact side)."""
+    stage. The dict is a literal map, so the stage is one projection: no
+    join, no broadcast job (``spark`` is unused, kept for callers)."""
     from ..operators.enrich import desensitize_const, dict_map
 
-    dict_df = spark.createDataFrame(STATUS_CLASSES, "code string, cls string")
+    classes = dict(STATUS_CLASSES)
 
     def _apply(df: DataFrame) -> DataFrame:
         df = dict_map(
-            df, dict_df, source_key="response_code", dest_key="status_class", missing="other"
+            df, classes, source_key="response_code", dest_key="status_class", missing="other"
         )
         df = desensitize_const(df, "ip", r"\d+$", "x")  # redact last IP octet
         return df
@@ -206,7 +207,7 @@ def build_pipeline(
     untouched.
 
     ``enrich`` is a DataFrame→DataFrame stage (see ``default_enrich``) applied
-    between parse and route — the broadcast-lookup / desensitize line.
+    between parse and route — the lookup / desensitize line.
     ``route_on_parse_fail`` overrides the route for rows whose parse failed
     (e.g. send malformed lines to a quarantine sink).
     """

@@ -11,8 +11,13 @@
 * ``write_routed_partitioned`` — fast path when sinks are DISJOINT (pure
   row-level routing): single pass, ``partitionBy(route)``.
 * ``sink_writer``     — the payload, file-sizing and compression choices every
-  sink commit shares (``plans/job.py``'s sink stages, the stream fan-out in
+  sink commit shares (``plans/job.py``'s one sink write, the stream fan-out in
   ``streaming/job.py`` and ``write_routed_partitioned``).
+* ``write_staged``    — the one commit write batch and stream share: one
+  ``partitionBy`` write into a staging directory, then each value's directory
+  and file lineage from the parquet footers. ``run_job`` renames each value's
+  directory into its sink stage; ``commit_batch`` moves its files into the
+  per-route sinks.
 
 Iceberg notes: on a real cluster, swap ``format('parquet')`` for
 ``writeTo(table).append()`` on an Iceberg catalog — the snapshot commit is the
@@ -23,9 +28,11 @@ prepare/commit of the reference's exactly-once checkpoints
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
+from .. import checkpoint
 from ..operators.aggregate import salted_repartition
 from ..operators.route import SinkCondition, fan_out
 
@@ -64,6 +71,31 @@ def sink_writer(
     if num_partitions:
         df = salted_repartition(df, num_partitions, **salt)
     return df.write.option("maxRecordsPerFile", 1_000_000).option("compression", compression)
+
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_value(escaped: str) -> str | None:
+    """A ``partitionBy`` directory's value: Spark's Hive path escaping
+    (``%XX``) undone, the null directory → None."""
+    if escaped == _HIVE_NULL:
+        return None
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), escaped)
+
+
+def write_staged(writer: DataFrameWriter, stage_dir: str, col: str) -> dict:
+    """ONE ``partitionBy(col)`` parquet write of ``writer`` into ``stage_dir``
+    (replacing it), then ``{value: (dir, files)}`` for each value of ``col``
+    written: its directory and its ``checkpoint.file_lineage`` records, read
+    once from the footers. A value has a directory only if it has rows."""
+    writer.mode("overwrite").partitionBy(col).parquet(stage_dir)
+    out = {}
+    for d in sorted(os.listdir(stage_dir)):
+        if d.startswith(col + "="):
+            path = os.path.join(stage_dir, d)
+            out[_partition_value(d[len(col) + 1:])] = (path, checkpoint.file_lineage(path))
+    return out
 
 
 def write_routed_partitioned(

@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import re
 import shutil
 
 import pyarrow as pa
@@ -33,11 +32,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpoint import file_lineage
 from ..plans.pipeline import ParserSpec, build_pipeline
 from ..operators.route import RouteRule
 from ..schema import SEQUENCE_SCHEMA
-from ..sources.io import sink_writer
+from ..sources.io import sink_writer, write_staged
 
 
 def stream_sequences(
@@ -176,38 +174,20 @@ def stream_pipeline(
 _LEDGER_SCHEMA = pa.schema(
     [("route", pa.string()), ("n_rows", pa.int64()), ("n_tok_sum", pa.int64()), ("batch_id", pa.int32())]
 )
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _route_of(dirname: str) -> str | None:
-    """The route value of a ``route=<v>`` directory Spark's ``partitionBy``
-    wrote: its Hive path escaping (``%XX``) undone, the null directory → None."""
-    v = dirname[len("route="):]
-    if v == _HIVE_NULL:
-        return None
-    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), v)
-
-
-def _stage_batch(batch_df: DataFrame, stage: str) -> None:
-    """The micro-batch's one Spark job: a route-partitioned write into
-    ``stage``, with the batch job's sink options."""
-    sink_writer(batch_df).mode("overwrite").partitionBy("route").parquet(stage)
-
-
-def _publish(stage: str, sinks: str, prefix: str) -> dict:
-    """Move the staged files into ``sinks/route=<r>/`` under ``prefix`` and
-    return ``{route: (n_rows, n_tok_sum)}`` from their footers."""
+def _publish(staged: dict, sinks: str, prefix: str) -> dict:
+    """Move the files ``write_staged`` staged into ``sinks/route=<r>/`` under
+    ``prefix`` and return ``{route: (n_rows, n_tok_sum)}`` from their footers."""
     counts = {}
-    for d in sorted(os.listdir(stage)):
-        if not d.startswith("route="):
-            continue
-        files = file_lineage(os.path.join(stage, d))
+    for route, (src, files) in staged.items():
         if not files:
             continue
-        os.makedirs(os.path.join(sinks, d), exist_ok=True)
+        dst = os.path.join(sinks, os.path.basename(src))
+        os.makedirs(dst, exist_ok=True)
         for f in files:
-            os.replace(os.path.join(stage, d, f["file"]), os.path.join(sinks, d, prefix + f["file"]))
-        counts[_route_of(d)] = (sum(f["n_rows"] for f in files), sum(f["n_bytes"] for f in files))
+            os.replace(os.path.join(src, f["file"]), os.path.join(dst, prefix + f["file"]))
+        counts[route] = (sum(f["n_rows"] for f in files), sum(f["n_bytes"] for f in files))
     return counts
 
 
@@ -244,10 +224,11 @@ def commit_batch(batch_df: DataFrame, batch_id: int, out_root: str) -> None:
       1. if ``counts/batch-<id>.parquet`` exists the batch committed before:
          skip it. Otherwise, if its stage exists, an earlier attempt stopped
          part-way: delete the files it published (``batch-<id>-`` prefix);
-      2. write the batch to ``sinks/_inprogress/<id>/`` (``partitionBy(route)``);
-      3. read per-route rows and token sums from the written footers;
-      4. move the files into ``sinks/route=<r>/`` named ``batch-<id>-<part>``;
-      5. write the ledger file — the commit — then drop the stage.
+      2. write the batch to ``sinks/_inprogress/<id>/`` (``write_staged``: one
+         ``partitionBy(route)`` write, no shuffle) and read per-route rows and
+         token sums from the written footers;
+      3. move the files into ``sinks/route=<r>/`` named ``batch-<id>-<part>``;
+      4. write the ledger file — the commit — then drop the stage.
 
     The stage is dropped only after the ledger is written, so a batch without
     a ledger has published files only while its stage exists."""
@@ -260,8 +241,8 @@ def commit_batch(batch_df: DataFrame, batch_id: int, out_root: str) -> None:
         return
     if os.path.isdir(stage):
         _unpublish(sinks, prefix)
-    _stage_batch(batch_df, stage)
-    by_route = _publish(stage, sinks, prefix)
+    staged = write_staged(sink_writer(batch_df), stage, "route")
+    by_route = _publish(staged, sinks, prefix)
     os.makedirs(counts, exist_ok=True)
     _write_ledger(ledger, batch_id, by_route)
     _drop_stage(stage)

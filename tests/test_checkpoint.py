@@ -9,7 +9,7 @@ lineage must reconcile with the committed sink contents.
 from __future__ import annotations
 
 import os
-import threading
+import re
 
 import pyarrow.parquet as pq
 import pytest
@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from loongcollector_spark import oracle
 
 from loongcollector_spark.checkpoint import CheckpointLog, ResumableRun
+from loongcollector_spark.operators.route import RouteRule, SinkCondition
 from loongcollector_spark.plans.job import run_job
 from loongcollector_spark.synth import ensure_sequences
 
@@ -191,41 +192,140 @@ def _oracle_sink_totals(seq_path) -> dict:
     return {k: tuple(v) for k, v in totals.items()}
 
 
-def test_sink_failure_during_concurrent_commit_then_resume(spark, seq_path, tmp_path, monkeypatch):
-    """One sink stage dies while the other sinks are committing: the others
-    still commit, ``counts`` (always last) does not, and a rerun with the same
-    run_id executes exactly the failed sink plus counts — with sink totals
-    equal to the oracle's."""
+def _sink_totals(spark, path) -> tuple:
+    r = spark.read.parquet(path).agg(F.count(F.lit(1)).alias("n"), F.sum("n_tok").alias("t")).first()
+    return r["n"], r["t"] or 0
+
+
+@pytest.mark.parametrize("fail_at,escaped", [
+    ("in_write", False), ("after_first_sink", False), ("before_counts", False),
+    ("after_first_sink", True),
+])
+def test_crash_replay_commits_each_sink_once(spark, seq_path, tmp_path, monkeypatch, fail_at, escaped):
+    """A run that dies inside the one sink write, after its first sink stage
+    committed, or just before ``counts``, then reruns with the same run_id:
+    the rerun executes exactly the uncommitted sinks plus counts, every sink
+    (files and record) holds the oracle's rows and tokens from one write, and
+    no staging directory is left. A sink name Spark path-escapes round-trips
+    into its stage and count key."""
     import loongcollector_spark.plans.job as job
+    from loongcollector_spark.plans.pipeline import DEFAULT_ROUTES
 
-    real_write = job._write_sink
-    others_started = threading.Event()
-
-    def flaky_write(df, path, *args):
-        if os.path.basename(path).startswith("sink_sink_apsara"):
-            # fail only once another sink's write is in flight
-            assert others_started.wait(120), "sink stages did not run concurrently"
-            raise RuntimeError("killed mid-commit")
-        others_started.set()
-        real_write(df, path, *args)
-
-    monkeypatch.setattr(job, "_write_sink", flaky_write)
-    out = str(tmp_path / "jobf")
-    with pytest.raises(RuntimeError, match="killed mid-commit"):
-        run_job(spark, seq_path, out, run_id="f1")
-    log = CheckpointLog(out + "/_checkpoint")
-    assert log.stages("f1") == ["sink_sink_default", "sink_sink_nginx", "sink_sink_structured"]
-    assert not log.committed("f1", "counts")
-
-    monkeypatch.setattr(job, "_write_sink", real_write)
-    res = run_job(spark, seq_path, out, run_id="f1")
-    assert res["executed"] == ["sink_sink_apsara", "counts"]
     expected = _oracle_sink_totals(seq_path)
+    routes = None
+    if escaped:
+        routes = [RouteRule(r.regex, "web logs=1%" if r.sink == "sink_apsara" else r.sink)
+                  for r in DEFAULT_ROUTES]
+        expected["web logs=1%"] = expected.pop("sink_apsara")
+
+    if fail_at == "in_write":
+        real = job.write_staged
+
+        def flaky_write(*a, **k):
+            real(*a, **k)
+            raise RuntimeError("injected: in_write")
+
+        monkeypatch.setattr(job, "write_staged", flaky_write)
+    elif fail_at == "after_first_sink":
+        real, calls = job._sink_stage, []
+
+        def flaky_stage(*a, **k):
+            calls.append(1)
+            if len(calls) == 2:
+                def fail(inprog):
+                    raise RuntimeError("injected: after_first_sink")
+                return fail
+            return real(*a, **k)
+
+        monkeypatch.setattr(job, "_sink_stage", flaky_stage)
+    else:
+        def flaky_lineage(*a, **k):
+            raise RuntimeError("injected: before_counts")
+
+        monkeypatch.setattr(job, "partition_lineage", flaky_lineage)
+
+    out = str(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="injected"):
+        run_job(spark, seq_path, out, run_id="c1", routes=routes)
+    monkeypatch.undo()
+    log = CheckpointLog(out + "/_checkpoint")
+    assert not log.committed("c1", "counts")
+    committed = set(log.stages("c1"))
+    assert len(committed) == {"in_write": 0, "after_first_sink": 1, "before_counts": 4}[fail_at]
+
+    res = run_job(spark, seq_path, out, run_id="c1", routes=routes)
+    assert res["executed"] == sorted(f"sink_{n}" for n in expected if f"sink_{n}" not in committed) + ["counts"]
     assert {k: (v["n_rows"], v["n_tok_sum"]) for k, v in res["counts"].items()} == expected
+    assert set(res["sinks"]) == set(expected)
     for name, path in res["sinks"].items():
-        r = spark.read.parquet(path).agg(F.count(F.lit(1)).alias("n"), F.sum("n_tok").alias("t")).first()
-        assert (r["n"], r["t"]) == expected[name]
-        assert log.read("f1", f"sink_{name}")["n_rows"] == expected[name][0]
+        assert path == os.path.join(out, f"sink_{name}")
+        rec = log.read("c1", f"sink_{name}")
+        assert _sink_totals(spark, path) == (rec["n_rows"], rec["n_bytes"]) == expected[name]
+        # one write's files only: every file carries the same write job id
+        jobs = {re.sub(r"^part-\d+-", "", f).split(".")[0] for f in os.listdir(path) if f.startswith("part-")}
+        assert len(jobs) == 1, (name, sorted(os.listdir(path)))
+    crec = log.read("c1", "counts")
+    assert crec["n_rows"] == sum(n for n, _ in expected.values())
+    assert sum(p["n_rows"] for p in crec["partitions"]) == crec["n_rows"]
+    assert not [d for d in os.listdir(out) if "inprogress" in d]
+
+
+def test_counts_lineage_adds_up_and_empty_sink_commits(spark, tmp_path):
+    """The counts record's per-write-partition lineage sums to its rows and
+    tokens in both modes, overlapping condition sinks included (a row in two
+    sinks is written, and counted, twice). A condition sink no row matches
+    still commits, as one zero-row file with the other sinks' columns."""
+    seq2k = ensure_sequences(2000)
+    out = str(tmp_path / "routes")
+    res = run_job(spark, seq2k, out, run_id="lr")
+    crec = CheckpointLog(out + "/_checkpoint").read("lr", "counts")
+    assert crec["n_rows"] == 2000
+    assert sum(p["n_rows"] for p in crec["partitions"]) == crec["n_rows"]
+    assert sum(p["n_bytes"] for p in crec["partitions"]) == crec["n_bytes"]
+    route_cols = spark.read.parquet(res["sinks"]["sink_nginx"]).schema
+
+    out = str(tmp_path / "conds")
+    res = run_job(spark, seq2k, out, run_id="lc", conditions=[
+        SinkCondition(sink="all_a", type="always"),
+        SinkCondition(sink="sink_nginx", type="route", value="sink_nginx"),
+        SinkCondition(sink="nope", type="route", value="none"),
+    ])
+    log = CheckpointLog(out + "/_checkpoint")
+    crec = log.read("lc", "counts")
+    n_nginx = res["counts"]["sink_nginx"]["n_rows"]
+    assert 0 < n_nginx < 2000
+    assert crec["n_rows"] == 2000 + n_nginx == 3403
+    assert sum(p["n_rows"] for p in crec["partitions"]) == crec["n_rows"]
+    assert sum(p["n_bytes"] for p in crec["partitions"]) == crec["n_bytes"]
+    assert res["counts"]["nope"] == {"n_rows": 0, "n_tok_sum": 0}
+    assert log.read("lc", "sink_nope")["n_rows"] == 0
+    files = [f for f in os.listdir(res["sinks"]["nope"]) if f.endswith(".parquet")]
+    assert len(files) == 1
+    assert pq.ParquetFile(os.path.join(res["sinks"]["nope"], files[0])).metadata.num_rows == 0
+    empty = spark.read.parquet(res["sinks"]["nope"])
+    assert empty.count() == 0
+    assert empty.schema == spark.read.parquet(res["sinks"]["all_a"]).schema == route_cols
+    assert "route" in empty.columns and len(empty.columns) == 8
+
+
+@pytest.mark.parametrize("kw", [
+    {"routes": [RouteRule("nginx", "a/b")]},
+    {"default_sink": "x__y"},
+    {"conditions": [SinkCondition(sink="ok"), SinkCondition(sink="")]},
+])
+def test_bad_sink_name_fails_before_any_spark_job(spark, seq_path, tmp_path, kw):
+    """A sink whose stage name the catalog rejects fails the run before any
+    Spark job: nothing is committed and nothing is staged."""
+    out, sc = str(tmp_path / "bad"), spark.sparkContext
+    sc.setJobGroup("bad-sink-name", "bad sink name")
+    try:
+        with pytest.raises(ValueError):
+            run_job(spark, seq_path, out, run_id="bad", **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("bad-sink-name") == []
+    assert CheckpointLog(out + "/_checkpoint").stages("bad") == []
+    assert not os.path.exists(os.path.join(out, "_inprogress"))
 
 
 def _spark_file_lineage(spark, sink_dir: str, bytes_col: str = "n_tok") -> list[dict]:
@@ -247,42 +347,18 @@ def test_footer_file_lineage_matches_spark_grouping(spark, seq_path, tmp_path):
     the driver; it must equal the Spark input_file_name() grouping it
     replaced, null n_tok values and a sink without n_tok included."""
     from loongcollector_spark.checkpoint import file_lineage
-    from loongcollector_spark.plans.job import _write_sink
+    from loongcollector_spark.sources.io import sink_writer
 
     df = spark.read.parquet(seq_path).withColumn(
         "n_tok", F.when(F.col("n_tok") % 7 == 0, F.lit(None)).otherwise(F.col("n_tok"))
     )
     sink = str(tmp_path / "sink")
-    _write_sink(df, sink, 8, keep_tokens=False)
+    sink_writer(df, False, 8).mode("overwrite").parquet(sink)
     got = file_lineage(sink)
     assert len(got) > 1
     assert got == _spark_file_lineage(spark, sink)
     assert sum(r["n_rows"] for r in got) == 5000
 
     bare = str(tmp_path / "bare")
-    _write_sink(df.drop("n_tok"), bare, 4, keep_tokens=False)
+    sink_writer(df.drop("n_tok"), False, 4).mode("overwrite").parquet(bare)
     assert file_lineage(bare) == _spark_file_lineage(spark, bare)
-
-
-def test_concurrent_stages_keep_executed_complete_and_ordered(spark, tmp_path):
-    """Many more stage threads than cores, with a tiny switch interval: every
-    stage commits, none is lost from ``executed``, and ``executed`` keeps the
-    submission order whatever order the threads finished in."""
-    import sys
-
-    run = ResumableRun(spark, str(tmp_path / "out"), run_id="many")
-    names = [f"s{i:02d}" for i in range(48)]
-
-    def fn(d):
-        os.makedirs(d)
-        return 1, 1, []
-
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        dirs = run.stage_concurrently({n: fn for n in names})
-    finally:
-        sys.setswitchinterval(interval)
-    assert run.executed == names
-    assert run.log.stages("many") == names
-    assert all(os.path.isdir(dirs[n]) for n in names)

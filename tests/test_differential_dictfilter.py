@@ -105,6 +105,33 @@ def test_dict_map_differential(spark):
         )
 
 
+def test_dict_map_literal_matches_broadcast_join(spark):
+    """A Python dict (literal map lookup, no join) and the same pairs as a
+    DataFrame (broadcast join) enrich identically under every mode ×
+    HandleMissing combination, on rows with the key, without it, with a
+    null source value and with a value the dict lacks."""
+    rng = random.Random(SEED + 1)
+    rows = [(i, _fields(rng)) for i in range(200)]
+    rows += [(1000, {"color": None, "label": "pre"}), (1001, {}), (1002, {"color": "zeta"}),
+             (1003, {"color": "alpha", "label": "pre"})]
+    df = spark.createDataFrame(rows, T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("fields", T.MapType(T.StringType(), T.StringType())),
+    ]))
+    dict_df = spark.createDataFrame(list(_DICT.items()), "k string, v string")
+    for mode in ("overwrite", "fill"):
+        for missing in (None, "other"):
+            got = {
+                kind: {r["id"]: r["fields"] for r in dict_map(
+                    df, lookup, "color", "label", missing=missing, mode=mode).collect()}
+                for kind, lookup in (("dict", dict(_DICT)), ("join", dict_df))
+            }
+            assert len(got["dict"]) == len(rows)
+            assert got["dict"] == got["join"], (mode, missing)
+            assert got["dict"] == {i: _emulate_dict_map(f, dest="label", missing=missing, mode=mode)
+                                   for i, f in rows}, (mode, missing)
+
+
 # ---------------------------------------------------------------------------
 # filter_include_exclude
 # ---------------------------------------------------------------------------

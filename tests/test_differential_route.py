@@ -65,3 +65,43 @@ def test_route_rows_differential(spark):
                 for k in set(got) ^ set(want)
                 | {k for k in got if k in want and got[k] != want[k]}
             })
+
+
+def test_with_sink_column_matches_fan_out(spark):
+    """The exploded ``_sink`` column holds, per sink, exactly the rows
+    ``fan_out`` gives that sink — a row in several sinks once per sink, null
+    predicates matching nothing — and ``discard_tag`` drops the tag only from
+    its own sink's copies."""
+    from pyspark.sql import functions as F
+
+    from loongcollector_spark.operators.route import SinkCondition, fan_out, with_sink_column
+
+    rng = random.Random(SEED + 1)
+    rows = []
+    for i in range(400):
+        tags = {k: rng.choice(["a", "b", None]) for k in ("k", "m") if rng.random() < 0.7}
+        rows.append((i, rng.choice(["log", "metric", None]), tags, rng.choice(_SINKS)))
+    df = spark.createDataFrame(rows, T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("route", T.StringType()),
+    ]))
+    conditions = [
+        SinkCondition(sink="all", type="always"),
+        SinkCondition(sink="logs", type="event_type", value="log"),
+        SinkCondition(sink="tag_a", type="tag", key="k", value="a", discard_tag=True),
+        SinkCondition(sink="tag_a_kept", type="tag", key="k", value="a"),
+        SinkCondition(sink="route_s1", type="route", value="s1"),
+        SinkCondition(sink="nothing", type="event_type", value="trace"),
+    ]
+
+    def rows_of(d):
+        return sorted((r["id"], sorted((r["tags"] or {}).items())) for r in d.select("id", "tags").collect())
+
+    exploded = with_sink_column(df, conditions)
+    assert exploded.columns == df.columns + ["_sink"]
+    for sink, want in fan_out(df, conditions).items():
+        got = rows_of(exploded.filter(F.col("_sink") == sink))
+        assert got == rows_of(want), sink
+    assert exploded.count() == sum(d.count() for d in fan_out(df, conditions).values())

@@ -104,6 +104,17 @@ def test_flagship_single_scan_and_no_python_in_parse(spark, seq_path):
     assert plan.count("Scan parquet") == 1  # one pass over the input
 
 
+def test_default_enrich_is_a_projection(spark, seq_path):
+    """The default pipeline's enrich is a literal map lookup: its plan has
+    no join and no broadcast exchange."""
+    from loongcollector_spark.plans.pipeline import build_pipeline, default_enrich
+    from loongcollector_spark.sources.io import read_sequences
+
+    plan = _plan(build_pipeline(read_sequences(spark, seq_path), enrich=default_enrich(spark)))
+    assert "BroadcastExchange" not in plan
+    assert "Join" not in plan
+
+
 def test_tfidf_and_unigram_broadcast_no_smj(spark, docs_path):
     """The vocabulary-sized df/LM tables must join back by BROADCAST (at web
     scale the corpus side must not shuffle for a vocab lookup), and the only

@@ -144,16 +144,17 @@ def test_fanout_crash_replay_is_exactly_once(spark, tmp_path, monkeypatch, fail_
         return False
 
     if fail_at == "mid_publish":  # fail on batch 1's second route: one route moved
-        real_lineage, seen = J.file_lineage, []
+        real_replace, seen = os.replace, []
 
-        def flaky_lineage(d, *a, **k):
-            if d.startswith(stage1 + os.sep):
+        def flaky_replace(src, dst, *a, **k):
+            d = os.path.dirname(str(src))
+            if d.startswith(stage1 + os.sep) and d not in seen:
                 seen.append(d)
                 if once(len(seen) == 2):
                     raise RuntimeError("injected: crash mid-publish")
-            return real_lineage(d, *a, **k)
+            return real_replace(src, dst, *a, **k)
 
-        monkeypatch.setattr(J, "file_lineage", flaky_lineage)
+        monkeypatch.setattr(J.os, "replace", flaky_replace)
     elif fail_at == "after_commit":  # ledger written and stage dropped
         real_drop = J._drop_stage
 
