@@ -1,32 +1,24 @@
 """Token <-> string codec.
 
 Tokens are byte values (bijective byte-level tokenization, FIXTURES.md §1).
-Decode paths:
+``with_content`` attaches the one pipeline decode, ``decode_tokens_utf8``:
+pure Catalyst, fully UTF-8-correct. An ``exists(tokens, t -> t > 127)`` guard
+routes each row to the cheap ``transform``+``char`` join (ASCII: byte ==
+codepoint) or, for the rare non-ASCII row, to
+``decode(to_binary(hex-join), 'UTF-8')``. Zero Python hop, whole plan stays in
+one WholeStageCodegen span. Measured on the 600k-row flagship blackhole
+(local[32], sf0.1): **3.3s stable** vs 4.35s best / 4–37s spread for the
+Arrow path — the mapInArrow hop round-trips EVERY column (incl. the token
+arrays) through Python workers and splits codegen, and worker spawn cost is
+hypervisor-weather-sensitive. ``strict=True`` is the ingest-boundary check on
+outside input.
 
-* ``decode_tokens_utf8`` (DEFAULT, ``method="auto"``) — pure Catalyst, fully
-  UTF-8-correct: an ``exists(tokens, t -> t > 127)`` guard routes each row to
-  the cheap ``transform``+``char`` join (ASCII: byte == codepoint) or, for the
-  rare non-ASCII row, to ``decode(to_binary(hex-join), 'UTF-8')``. Zero Python
-  hop, whole plan stays in one WholeStageCodegen span. Measured on the 600k-row
-  flagship blackhole (local[32], sf0.1): **3.3s stable** vs 4.35s best /
-  4–37s spread for the Arrow path — the mapInArrow hop round-trips EVERY
-  column (incl. the token arrays) through Python workers and splits codegen,
-  and worker spawn cost is hypervisor-weather-sensitive, which also polluted
-  the 2-vs-8-core scaling pairs.
-* ``decode_arrow`` — ``mapInArrow`` over RecordBatches, fully vectorized in C:
-  the list<int32> values buffer is cast to uint8 and a string array is rebuilt
-  over the SAME offsets — no per-row Python, no pandas conversion. Handles
-  arbitrary UTF-8. This is the north-rule "vectorized pandas/Arrow UDF" decode
-  shape; kept tested + selectable (``method="arrow"``).
-* ``decode_tokens_native`` — bare ``transform`` + ``char``: zero Python hop,
-  exact only for ASCII payloads (token == codepoint).
-* ``decode_tokens_pandas`` — Arrow-batched pandas UDF with per-row
-  ``bytes.decode`` (general fallback; the reference treats payloads as raw
-  bytes, core/models/RawEvent.h).
-
-All are tested to agree (incl. non-ASCII for auto/arrow/pandas). Encode
-(string → tokens) exists for round-trip verification of the per-row
-token-array-equality invariant.
+``decode_arrow`` is the vectorized reference for Arrow-side token work:
+one ``mapInArrow`` hop, fully vectorized in C (the list<int32> values buffer
+is cast to uint8 and a string array is rebuilt over the SAME offsets — no
+per-row Python, no pandas conversion). Both decodes are tested against
+Python's ``bytes.decode``. Encode (string → tokens) exists for
+round-trip verification of the per-row token-array-equality invariant.
 """
 
 from __future__ import annotations
@@ -81,16 +73,6 @@ def decode_arrow(
             yield b.add_column(idx, out, decoded)
 
     return df.mapInArrow(_decode, schema)
-
-
-def decode_tokens_native(tokens: Column | str) -> Column:
-    """array<int> byte-tokens → string, fully JVM-side (ASCII payloads).
-
-    ``char(n)`` maps codepoint→1-char string; for 0–127 byte==codepoint so this
-    is exact. Stays inside whole-stage codegen.
-    """
-    col = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.array_join(F.transform(col, lambda x: F.char(x)), "")
 
 
 def decode_tokens_utf8(tokens: Column | str, strict: bool = False) -> Column:
@@ -149,41 +131,13 @@ def decode_tokens_utf8(tokens: Column | str, strict: bool = False) -> Column:
     return out
 
 
-@pandas_udf(T.StringType())
-def decode_tokens_pandas(tokens: pd.Series) -> pd.Series:
-    """General UTF-8 decode of byte-token arrays (Arrow-batched)."""
-    return tokens.map(lambda t: bytes(bytearray(int(x) & 0xFF for x in t)).decode("utf-8", "replace"))
-
-
 @pandas_udf(T.ArrayType(T.IntegerType()))
 def encode_string_pandas(s: pd.Series) -> pd.Series:
     """string → byte-token array (inverse of decode; used in round-trip tests)."""
     return s.map(lambda v: list(v.encode("utf-8")) if v is not None else None)
 
 
-def with_content(
-    df,
-    tokens_col: str = "tokens",
-    out: str = "content",
-    method: str = "auto",  # auto | arrow | native | pandas
-    strict: bool = False,
-):
-    """Attach the decoded payload column, keeping ``tokens`` untouched.
-
-    ``auto`` (default) is the JVM-only UTF-8-correct hybrid — see module
-    docstring for the measured 25%+ flagship win and stability rationale vs
-    the Arrow hop; pass ``method="arrow"`` for the mapInArrow shape.
-    ``strict`` (auto path only) raises on tokens outside the [0,255] byte
-    contract instead of decoding them to garbage.
-    """
-    if method == "auto":
-        return df.withColumn(out, decode_tokens_utf8(tokens_col, strict=strict))
-    if method == "arrow":
-        return decode_arrow(df, tokens_col, out)
-    if method == "native":
-        return df.withColumn(out, decode_tokens_native(tokens_col))
-    if method == "pandas":
-        return df.withColumn(out, decode_tokens_pandas(F.col(tokens_col)))
-    raise ValueError(
-        f"with_content: unknown method {method!r} (expected auto|arrow|native|pandas)"
-    )
+def with_content(df: DataFrame, tokens_col: str = "tokens", out: str = "content") -> DataFrame:
+    """Attach the decoded payload column (``decode_tokens_utf8``), keeping
+    ``tokens`` untouched."""
+    return df.withColumn(out, decode_tokens_utf8(tokens_col))

@@ -71,10 +71,6 @@ def _empty_map() -> Column:
     return F.create_map().cast(_MAP_T)
 
 
-def _empty_entries() -> Column:
-    return F.expr(f"cast(array() as {_ENTRY_T})")
-
-
 def _n01(cond: Column) -> Column:
     """boolean → 0/1 int (the only conditional shape that stays cheap)."""
     return F.when(cond, F.lit(1)).otherwise(F.lit(0))

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..checkpoint import ResumableRun, _validate_stage, partition_lineage
 from ..operators.route import RouteRule, SinkCondition, check_distinct_sinks, with_sink_column
 from ..sources.io import read_sequences, sink_writer, write_staged
-from .pipeline import DEFAULT_ROUTES, ParserSpec, build_pipeline
+from .pipeline import DEFAULT_ROUTES, ParserSpec, build_pipeline, default_enrich
 
 _COUNTS_SCHEMA = pa.schema([("route", pa.string()), ("n_rows", pa.int64()), ("n_tok_sum", pa.int64())])
 
@@ -66,14 +66,14 @@ def _totals(files: list[dict]) -> tuple[int, int]:
     return sum(f["n_rows"] for f in files), sum(f["n_bytes"] for f in files)
 
 
-def _sink_stage(src: str | None, files: list[dict], plan: DataFrame, keep_tokens: bool):
+def _sink_stage(src: str | None, files: list[dict], plan: DataFrame):
     """The body of one sink's stage: rename its staged directory into the
     stage, or — for a condition sink that matched no row — write one zero-row
     file with the columns of the others (``limit(0)`` plans no scan)."""
 
     def _fn(inprog: str):
         if src is None:
-            sink_writer(plan.drop("_sink").limit(0), keep_tokens).mode("overwrite").parquet(inprog)
+            sink_writer(plan.drop("_sink").limit(0)).mode("overwrite").parquet(inprog)
         else:
             os.replace(src, inprog)
         return (*_totals(files), files)
@@ -90,18 +90,12 @@ def run_job(
     routes: list[RouteRule] | None = None,
     conditions: list[SinkCondition] | None = None,
     default_sink: str | None = "sink_default",
-    num_partitions: int | None = None,
-    keep_tokens: bool = False,
-    enrich: str | None = "default",
 ) -> dict:
     """Run (or resume) the flagship pipeline. Returns
     ``{"run_id", "sinks": {name: path}, "counts": {name: {n_rows, n_tok_sum}},
     "executed": [stage...]}`` — ``executed`` is empty on a fully-resumed run.
     """
-    from .pipeline import default_enrich
-
     names = _sink_names(routes, conditions, default_sink)
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism * 2
     run = ResumableRun(spark, out_root, run_id)
 
     # Fast resume: the counts stage commits LAST, so its presence means every
@@ -127,9 +121,9 @@ def run_job(
     # per-sink file lineage; an earlier attempt's sinks from their records
     files = {n: run.log.read(run.run_id, f"sink_{n}")["partitions"] for n in done}
     if pending:
-        enrich_fn = default_enrich(spark) if enrich == "default" else enrich
         routed = build_pipeline(
-            read_sequences(spark, input_path), parsers, routes, default_sink, enrich=enrich_fn
+            read_sequences(spark, input_path), parsers, routes, default_sink,
+            enrich=default_enrich(spark),
         )
         if conditions is None:
             plan = routed.withColumn("_sink", F.col("route"))
@@ -137,15 +131,13 @@ def run_job(
             plan = with_sink_column(routed, conditions)
         if done:
             plan = plan.filter(F.col("_sink").isin(pending))
-        staged = write_staged(
-            sink_writer(plan, keep_tokens, num_partitions, salt_buckets=64, source_col="_sink"),
-            staging, "_sink",
-        )
+        num_partitions = spark.sparkContext.defaultParallelism * 2
+        staged = write_staged(sink_writer(plan, num_partitions, source_col="_sink"), staging, "_sink")
         # route sinks exist once they have rows; condition sinks always do
         commit = sorted(staged) if conditions is None else pending
         for name in commit:
             src, files[name] = staged.get(name, (None, []))
-            run.stage(f"sink_{name}", _sink_stage(src, files[name], plan, keep_tokens))
+            run.stage(f"sink_{name}", _sink_stage(src, files[name], plan))
     shutil.rmtree(staging, ignore_errors=True)
     sinks = {n: run.stage_dir(f"sink_{n}") for n in files}
     counts = {n: dict(zip(("n_rows", "n_tok_sum"), _totals(fs))) for n, fs in files.items()}

@@ -200,7 +200,6 @@ def build_pipeline(
     parsers: dict[str, ParserSpec] | None = None,
     routes: list[RouteRule] | None = None,
     default_sink: str | None = "sink_default",
-    route_on_parse_fail: str | None = None,
     enrich=None,
 ) -> DataFrame:
     """decode → parse(by source) → [enrich] → route. ``tokens`` is carried
@@ -208,8 +207,6 @@ def build_pipeline(
 
     ``enrich`` is a DataFrame→DataFrame stage (see ``default_enrich``) applied
     between parse and route — the lookup / desensitize line.
-    ``route_on_parse_fail`` overrides the route for rows whose parse failed
-    (e.g. send malformed lines to a quarantine sink).
     """
     parsers = DEFAULT_PARSERS if parsers is None else parsers
     routes = DEFAULT_ROUTES if routes is None else routes
@@ -217,9 +214,4 @@ def build_pipeline(
     out = parse_by_source(out, parsers)
     if enrich is not None:
         out = enrich(out)
-    out = route_rows(out, routes, source_key="source", default_sink=default_sink)
-    if route_on_parse_fail is not None:
-        out = out.withColumn(
-            "route", F.when(~F.col(P.PARSE_OK), F.lit(route_on_parse_fail)).otherwise(F.col("route"))
-        )
-    return out
+    return route_rows(out, routes, source_key="source", default_sink=default_sink)

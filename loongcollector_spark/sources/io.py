@@ -3,20 +3,17 @@
 * ``read_sequences``  — the input_file / input_static_file analog: batch read of
   the tokenized-sequence table (Iceberg in production; parquet here — the code
   path is identical, ``format`` is a parameter).
-* ``write_fanout``    — the Router + flusher fan-out
-  (core/collection_pipeline/route/Router.cpp:50-82 and
-  core/plugin/flusher/*): one filtered write per sink over a persisted routed
-  DataFrame (a row may go to >1 sink, so partitionBy is wrong — SURVEY.md §7.4);
-  sink-affinity repartition on the salted key before each write.
-* ``write_routed_partitioned`` — fast path when sinks are DISJOINT (pure
-  row-level routing): single pass, ``partitionBy(route)``.
+* ``write_routed_partitioned`` — the one non-committing writer: a salted
+  shuffle into one ``partitionBy(route)`` write, sinks = directories.
 * ``sink_writer``     — the payload, file-sizing and compression choices every
   sink commit shares (``plans/job.py``'s one sink write, the stream fan-out in
   ``streaming/job.py`` and ``write_routed_partitioned``).
 * ``write_staged``    — the one commit write batch and stream share: one
   ``partitionBy`` write into a staging directory, then each value's directory
   and file lineage from the parquet footers. ``run_job`` renames each value's
-  directory into its sink stage; ``commit_batch`` moves its files into the
+  directory into its sink stage (the Router + flusher fan-out,
+  core/collection_pipeline/route/Router.cpp:50-82, a row in several condition
+  sinks written once per sink); ``commit_batch`` moves its files into the
   per-route sinks.
 
 Iceberg notes: on a real cluster, swap ``format('parquet')`` for
@@ -34,27 +31,19 @@ from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
 from .. import checkpoint
 from ..operators.aggregate import salted_repartition
-from ..operators.route import SinkCondition, fan_out
 
 
 def read_sequences(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     return spark.read.format(fmt).load(path)
 
 
-def sink_writer(
-    df: DataFrame,
-    keep_tokens: bool = False,
-    num_partitions: int | None = None,
-    compression: str = "zstd",
-    **salt,
-) -> DataFrameWriter:
+def sink_writer(df: DataFrame, num_partitions: int | None = None, **salt) -> DataFrameWriter:
     """The writer of one sink commit, with the choices all sinks share:
 
     * payload: ``content`` — byte-for-byte the token payload (the codec is
       bijective, tokens are bytes), so routed-row token-array equality stays
       exactly verifiable via re-encode while the sink avoids parquet-encoding
-      every token as an int32 (4× byte inflation, measured 8× slower write).
-      ``keep_tokens=True`` stores the raw int32 array too;
+      every token as an int32 (4× byte inflation, measured 8× slower write);
     * ``num_partitions``: a salted repartition first (``salted_repartition``;
       ``salt`` takes its ``salt_buckets``/``source_col``), after the drop so
       the shuffle never carries ``tokens``;
@@ -66,11 +55,11 @@ def sink_writer(
       analog, core/collection_pipeline/batch/FlushStrategy.h:31-104).
 
     The caller adds the save mode, ``partitionBy`` and the path."""
-    if not keep_tokens and "tokens" in df.columns and "content" in df.columns:
+    if "tokens" in df.columns and "content" in df.columns:
         df = df.drop("tokens")
     if num_partitions:
         df = salted_repartition(df, num_partitions, **salt)
-    return df.write.option("maxRecordsPerFile", 1_000_000).option("compression", compression)
+    return df.write.option("maxRecordsPerFile", 1_000_000).option("compression", "zstd")
 
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -98,17 +87,9 @@ def write_staged(writer: DataFrameWriter, stage_dir: str, col: str) -> dict:
     return out
 
 
-def write_routed_partitioned(
-    routed: DataFrame,
-    out_dir: str,
-    route_col: str = "route",
-    num_partitions: int | None = None,
-    salt_buckets: int = 64,
-    keep_tokens: bool = False,
-    compression: str = "zstd",
-) -> None:
-    """Disjoint-sink fast path: one shuffle, one write, sinks = directories.
-    Payload, compression and file sizing: ``sink_writer``.
+def write_routed_partitioned(routed: DataFrame, out_dir: str, num_partitions: int | None = None) -> None:
+    """Disjoint-sink writer with no commit: one shuffle, one write, sinks =
+    directories. Payload, compression and file sizing: ``sink_writer``.
 
     Salt on (route, hash(doc_id)): each task then holds rows of exactly ONE
     route, so partitionBy opens one parquet writer per task instead of one per
@@ -117,55 +98,6 @@ def write_routed_partitioned(
     spreads the hot route over many tasks (sink-affinity sharding,
     aggregator_shardhash.go:164-204 semantics).
     """
-    (
-        sink_writer(
-            routed, keep_tokens, num_partitions, compression,
-            salt_buckets=salt_buckets, source_col=route_col,
-        )
-        .mode("overwrite")
-        .partitionBy(route_col)
-        .parquet(out_dir)
-    )
+    w = sink_writer(routed, num_partitions, source_col="route")
+    w.mode("overwrite").partitionBy("route").parquet(out_dir)
 
-
-def write_fanout(
-    routed: DataFrame,
-    out_dir: str,
-    conditions: list[SinkCondition],
-    fmt: str = "parquet",
-    compression: str = "zstd",
-) -> dict[str, str]:
-    """Multi-sink duplication writer: persist once, one filtered write per sink.
-
-    Caching the routed plan means the parse stage runs once, not once per sink
-    (SURVEY.md §7.4 'Multi-sink duplication'). The per-sink writes are issued
-    CONCURRENTLY (Spark actions are thread-safe; concurrent jobs share the
-    executors) — sequential writes pay every job's straggler tail back-to-back,
-    while concurrent ones overlap tail with the next sink's scan, which is the
-    difference between ~1× and ~Nsinks× write wall on a 1000-executor cluster.
-    zstd sink default — see sink_writer.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    # Spark persistence is not ref-counted: if the CALLER already persisted
-    # this plan, persisting+unpersisting here would evict their cache. Only
-    # manage the lifecycle for a plan we cached ourselves.
-    we_persisted = not routed.storageLevel.useMemory and not routed.storageLevel.useDisk
-    if we_persisted:
-        routed = routed.persist()
-
-    def _write(sink: str, df: DataFrame) -> tuple[str, str]:
-        path = os.path.join(out_dir, sink)
-        w = df.write.mode("overwrite").format(fmt)
-        if fmt == "parquet":
-            w = w.option("compression", compression)
-        w.save(path)
-        return sink, path
-
-    try:
-        sinks = fan_out(routed, conditions)
-        with ThreadPoolExecutor(max_workers=min(8, max(1, len(sinks)))) as ex:
-            return dict(ex.map(lambda kv: _write(*kv), sinks.items()))
-    finally:
-        if we_persisted:
-            routed.unpersist()

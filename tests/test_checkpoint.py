@@ -353,12 +353,12 @@ def test_footer_file_lineage_matches_spark_grouping(spark, seq_path, tmp_path):
         "n_tok", F.when(F.col("n_tok") % 7 == 0, F.lit(None)).otherwise(F.col("n_tok"))
     )
     sink = str(tmp_path / "sink")
-    sink_writer(df, False, 8).mode("overwrite").parquet(sink)
+    sink_writer(df, 8).mode("overwrite").parquet(sink)
     got = file_lineage(sink)
     assert len(got) > 1
     assert got == _spark_file_lineage(spark, sink)
     assert sum(r["n_rows"] for r in got) == 5000
 
     bare = str(tmp_path / "bare")
-    sink_writer(df.drop("n_tok"), False, 4).mode("overwrite").parquet(bare)
+    sink_writer(df.drop("n_tok"), 4).mode("overwrite").parquet(bare)
     assert file_lineage(bare) == _spark_file_lineage(spark, bare)

@@ -1,13 +1,13 @@
-"""Token codec: native and pandas decode agree; encode round-trips exactly
-(the per-row token-array-equality invariant depends on this)."""
+"""Token codec: the JVM decode and the Arrow decode equal Python's
+``bytes.decode`` on every corpus row; encode round-trips exactly (the per-row
+token-array-equality invariant depends on this)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from loongcollector_spark.codec import (
-    decode_tokens_native,
-    decode_tokens_pandas,
+    decode_arrow,
     decode_tokens_utf8,
     encode_string_pandas,
     with_content,
@@ -15,24 +15,18 @@ from loongcollector_spark.codec import (
 from loongcollector_spark.oracle import decode as py_decode
 
 
-def test_native_matches_pandas(seq_df):
-    d = seq_df.withColumn("c1", decode_tokens_native("tokens")).withColumn(
-        "c2", decode_tokens_pandas(F.col("tokens"))
-    )
-    assert d.filter(F.col("c1") != F.col("c2")).count() == 0
-
-
 def test_decode_matches_python(seq_df):
-    rows = seq_df.withColumn("c", decode_tokens_native("tokens")).select("tokens", "c").head(50)
-    for r in rows:
-        assert r["c"] == py_decode(r["tokens"])
+    rows = seq_df.withColumn("c", decode_tokens_utf8("tokens")).select("tokens", "c").collect()
+    assert len(rows) == 2000
+    bad = [r["c"] for r in rows if r["c"] != py_decode(r["tokens"])]
+    assert not bad, bad[:3]
 
 
-def test_utf8_hybrid_matches_pandas_on_corpus(seq_df):
-    d = seq_df.withColumn("c1", decode_tokens_utf8("tokens")).withColumn(
-        "c2", decode_tokens_pandas(F.col("tokens"))
-    )
-    assert d.filter(F.col("c1") != F.col("c2")).count() == 0
+def test_arrow_matches_python_on_corpus(seq_df):
+    rows = decode_arrow(seq_df, "tokens", "c").select("tokens", "c").collect()
+    assert len(rows) == 2000
+    bad = [r["c"] for r in rows if r["c"] != py_decode(r["tokens"])]
+    assert not bad, bad[:3]
 
 
 def test_utf8_hybrid_non_ascii(spark):
@@ -51,7 +45,7 @@ def test_utf8_hybrid_non_ascii(spark):
     )
     got = [r.c for r in df.withColumn("c", decode_tokens_utf8("tokens")).collect()]
     assert got == samples + [None]
-    # with_content default ("auto") routes to the same hybrid
+    # with_content attaches the same decode
     got2 = [r.content for r in with_content(df).collect()]
     assert got2 == samples + [None]
 
@@ -66,7 +60,7 @@ def test_utf8_hybrid_stays_jvm_side(seq_df):
 
 def test_round_trip(seq_df):
     d = (
-        seq_df.withColumn("c", decode_tokens_native("tokens"))
+        seq_df.withColumn("c", decode_tokens_utf8("tokens"))
         .withColumn("t2", encode_string_pandas(F.col("c")))
         .filter(F.col("t2") != F.col("tokens"))
     )
@@ -89,16 +83,6 @@ def test_utf8_strict_contract(spark):
         bad.withColumn("c", decode_tokens_utf8("tokens", strict=True)).collect()
     # the documented non-strict hazard: same row silently decodes to garbage
     assert bad.withColumn("c", decode_tokens_utf8("tokens")).collect()[0].c is not None
-
-
-def test_with_content_rejects_unknown_method(spark):
-    import pytest
-
-    from loongcollector_spark.codec import with_content
-
-    df = spark.createDataFrame([([104, 105],)], "tokens array<int>")
-    with pytest.raises(ValueError, match="unknown method"):
-        with_content(df, method="natiive")
 
 
 def test_strict_decode_flags_null_tokens(spark):

@@ -86,11 +86,12 @@ def test_sink_counts_aggregate(spark, seq_df, seq_path):
     assert got == dict(exp)
 
 
-def test_multi_sink_duplication(spark, seq_df, tmp_path):
+def test_multi_sink_duplication(spark, seq_df, seq_path, tmp_path):
     """Router.cpp:50-82: an always-match audit sink receives a COPY of every row
-    while conditional sinks receive their subsets."""
+    while conditional sinks receive their subsets — all committed by run_job."""
+    from loongcollector_spark.checkpoint import CheckpointLog
     from loongcollector_spark.operators.route import SinkCondition
-    from loongcollector_spark.sources.io import write_fanout
+    from loongcollector_spark.plans.job import run_job
 
     routed = build_pipeline(seq_df)
     total = routed.count()
@@ -98,15 +99,21 @@ def test_multi_sink_duplication(spark, seq_df, tmp_path):
         SinkCondition(sink="audit", type="always"),
         SinkCondition(sink="nginx_only", type="route", value="sink_nginx"),
     ]
-    paths = write_fanout(routed, str(tmp_path), conditions)
-    audit = spark.read.parquet(paths["audit"])
-    nginx_only = spark.read.parquet(paths["nginx_only"])
+    out = str(tmp_path / "job")
+    res = run_job(spark, seq_path, out, run_id="dup", conditions=conditions)
+    audit = spark.read.parquet(res["sinks"]["audit"])
+    nginx_only = spark.read.parquet(res["sinks"]["nginx_only"])
     assert audit.count() == total
     assert nginx_only.count() == routed.filter(F.col("route") == "sink_nginx").count()
     # duplication: audit ∩ nginx_only is the full nginx set
     assert (
         audit.join(nginx_only, "doc_id", "inner").count() == nginx_only.count()
     )
+    # each sink's checkpoint record is what reads back from its sink
+    log = CheckpointLog(out + "/_checkpoint")
+    for name, sink in (("audit", audit), ("nginx_only", nginx_only)):
+        rec = log.read("dup", f"sink_{name}")
+        assert (rec["n_rows"], rec["n_bytes"]) == (sink.count(), sink.agg(F.sum("n_tok")).first()[0])
 
 
 def test_enriched_pipeline_matches_oracle(spark, seq_df, seq_path):
@@ -171,19 +178,6 @@ def test_parse_by_source_preserves_upstream_event_time(spark):
 
     with pytest.raises(ValueError, match="empty"):
         parse_by_source(df, {})
-
-
-def test_write_fanout_keeps_caller_cache(spark, tmp_path):
-    from loongcollector_spark.operators.route import SinkCondition
-    from loongcollector_spark.sources.io import write_fanout
-
-    df = spark.createDataFrame([(1, "a", 2)], "id int, route string, n_tok int").persist()
-    try:
-        df.count()
-        write_fanout(df, str(tmp_path / "s"), [SinkCondition(sink="all", type="always")])
-        assert df.storageLevel.useMemory  # caller's cache survives
-    finally:
-        df.unpersist()
 
 
 def test_base64_decode_skips_invalid(spark):

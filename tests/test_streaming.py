@@ -205,17 +205,6 @@ def test_fanout_crash_replay_is_exactly_once(spark, tmp_path, monkeypatch, fail_
     assert not os.path.exists(os.path.join(out, "sinks", "_inprogress"))
 
 
-def test_windowed_counts_schema(spark, stream_dirs):
-    inp, out, ckpt = stream_dirs
-    from loongcollector_spark.streaming.job import windowed_counts
-
-    routed = stream_pipeline(spark, inp)
-    agg = windowed_counts(routed, window="10 minutes", watermark="2 hours")
-    assert agg.isStreaming
-    cols = {f.name for f in agg.schema.fields}
-    assert {"w", "route", "n_rows", "n_tok_sum"} <= cols
-
-
 def test_stream_exact_dedup(spark, tmp_path):
     """Planted duplicate rows are dropped within the watermark horizon."""
     import pyspark.sql.functions as F
@@ -244,301 +233,3 @@ def test_stream_exact_dedup(spark, tmp_path):
     q.awaitTermination(300)
     got = {r["doc_id"] for r in spark.sql("select * from dedup_out").collect()}
     assert 3 in got and len(got) == 2  # one of {1,2} survived, 3 survived
-
-
-def test_stream_session_counts(spark, tmp_path):
-    """Streaming session_window sessionization: events within the gap merge
-    into one session, a gap-exceeding pause opens a new one, and the result
-    matches the batch gap-sessionization on the same input."""
-    from loongcollector_spark.streaming.job import session_counts
-
-    inp = str(tmp_path / "in")
-    rows = [
-        # user 1: 3 events within 10 min -> one session of 3
-        (1, "2024-01-01 10:00:00"), (1, "2024-01-01 10:05:00"), (1, "2024-01-01 10:09:00"),
-        # user 1: after a 2h pause -> second session of 1
-        (1, "2024-01-01 12:30:00"),
-        # user 2: single event
-        (2, "2024-01-01 10:00:00"),
-    ]
-    df = spark.createDataFrame(rows, "user_id int, ts_s string").select(
-        "user_id", F.col("ts_s").cast("timestamp").alias("ts")
-    )
-    df.write.mode("overwrite").parquet(inp)
-
-    stream = (
-        spark.readStream.schema("user_id int, ts timestamp").parquet(inp)
-    )
-    out = str(tmp_path / "out")
-    q = (
-        session_counts(stream, gap="30 minutes", watermark="0 seconds")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # availableNow + watermark 0: all sessions are final after the run... but
-    # append mode only emits windows older than the watermark; with watermark
-    # 0s the max event time closes everything strictly older. The last session
-    # per user may be held back -> run a second empty trigger to flush.
-    got = {
-        (r["user_id"], r["session_start"].isoformat(), r["n_events"])
-        for r in spark.read.parquet(out).collect()
-    }
-    # at minimum the CLOSED sessions must be present and correctly merged
-    assert (1, "2024-01-01T10:00:00", 3) in got
-    assert not any(u == 1 and n > 3 for u, _, n in got)  # pause split the sessions
-
-
-def test_rate_source_drives_pipeline(spark):
-    """Non-file streaming source (rate) → the SAME pipeline plan end-to-end:
-    rows flow with no files involved, parse+route produce the usual sinks,
-    and the token-array invariant holds vs the deterministic pool."""
-    import time
-
-    from loongcollector_spark.streaming.job import stream_sequences_rate
-    from loongcollector_spark.synth import gen_rows
-
-    seqs = stream_sequences_rate(spark, rows_per_second=500, pool_size=200)
-    assert seqs.isStreaming
-    routed = build_pipeline(seqs)
-    q = (
-        routed.writeStream.format("memory")
-        .queryName("rate_routed")
-        .outputMode("append")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        n = 0
-        while time.time() < deadline:
-            n = spark.sql("select count(*) c from rate_routed").collect()[0]["c"]
-            if n >= 200:
-                break
-            time.sleep(1)
-        assert n >= 200, f"only {n} rows arrived from the rate source"
-        got = spark.sql(
-            "select doc_id, tokens, route from rate_routed order by doc_id limit 200"
-        ).collect()
-        pool = [t for _d, t, _n, _s in gen_rows(200)]
-        for r in got:
-            idx = int(r["doc_id"].split("-")[1]) % 200
-            assert list(r["tokens"]) == pool[idx]  # token-array equality invariant
-        assert {r["route"] for r in got} <= {
-            "sink_nginx", "sink_apsara", "sink_structured", "sink_default"
-        }
-    finally:
-        q.stop()
-
-
-def test_windowed_cms_matches_batch_sketch(spark, tmp_path):
-    """Streaming per-window CMS cells are byte-identical to the batch sketch
-    built over the same window's rows (CMS linearity + same md5 cell math),
-    and state per window is bounded by depth*width regardless of cardinality."""
-    import pyspark.sql.functions as F
-    from loongcollector_spark.operators.sketch import cms_build
-    from loongcollector_spark.streaming.job import windowed_cms
-
-    src = str(tmp_path / "cms_in")
-    rows = [
-        (i, f"2024-01-01 00:{i % 2}0:30", f"user{i % 23}") for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, "i int, ts_s string, user_id string").withColumn(
-        "ts", F.col("ts_s").cast("timestamp")
-    )
-    df.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("i int, ts_s string, user_id string, ts timestamp").parquet(src)
-    cells = windowed_cms(stream, item_col="user_id", window="10 minutes", depth=4, width=128)
-    # complete mode: availableNow never advances the watermark past the
-    # final window, so append would hold every window open
-    q = (
-        cells.writeStream.format("memory")
-        .queryName("cms_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from cms_out").collect()
-    assert len(got) > 0
-    windows = {r["window_start"] for r in got}
-    assert len(windows) == 2  # :00 and :10 windows
-    for w in windows:
-        stream_cells = {
-            (r["r"], r["col"]): r["c"] for r in got if r["window_start"] == w
-        }
-        batch_rows = df.filter(
-            (F.col("ts") >= F.lit(w)) & (F.col("ts") < F.lit(w) + F.expr("interval 10 minutes"))
-        )
-        batch_cells = {
-            (r["r"], r["col"]): r["c"]
-            for r in cms_build(batch_rows, F.col("user_id"), depth=4, width=128).collect()
-        }
-        assert stream_cells == batch_cells
-        assert len(stream_cells) <= 4 * 128
-
-
-def test_kafka_format_decode_contract(spark):
-    """Kafka-format source seam (plugins/input/kafka analog): the decoder must
-    accept Spark's exact kafka source schema, recover sequence rows from the
-    JSON value envelope byte-for-byte (token-array invariant), re-derive
-    n_tok when absent, drop undecodable payloads, and stay shuffle/Python
-    free. A broker isn't needed to pin the format contract."""
-    import json as _json
-
-    from loongcollector_spark.streaming.job import (
-        KAFKA_SOURCE_SCHEMA,
-        decode_kafka_sequences,
-    )
-    from loongcollector_spark.synth import gen_rows
-
-    rows = []
-    pool = list(gen_rows(6, seed=7))
-    for i, (d, t, n, s) in enumerate(pool):
-        payload = {"doc_id": d, "tokens": t, "n_tok": n, "source": s}
-        if i == 2:
-            del payload["n_tok"]          # derived from the array
-        if i == 3:
-            del payload["source"]         # defaults to 'kafka'
-        rows.append(
-            (None, _json.dumps(payload).encode(), "seqs", i % 3, i, None, 0)
-        )
-    rows.append((None, b"not json", "seqs", 0, 99, None, 0))      # dropped
-    rows.append((None, _json.dumps({"source": "x"}).encode(), "seqs", 0, 100, None, 0))
-    raw = spark.createDataFrame(rows, KAFKA_SOURCE_SCHEMA)
-    out = {r.doc_id: r for r in decode_kafka_sequences(raw).collect()}
-    assert len(out) == 6
-    for d, t, n, s in pool:
-        assert list(out[d].tokens) == t and out[d].n_tok == n
-    assert out[pool[3][0]].source == "kafka"
-    plan = decode_kafka_sequences(raw)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
-    # streaming twin: the same decoder compiles on an unbounded kafka-shaped
-    # stream and the full pipeline plan builds on top of it
-    rate = spark.readStream.format("rate").option("rowsPerSecond", 10).load()
-    kafka_shaped = rate.select(
-        F.lit(None).cast("binary").alias("key"),
-        F.to_json(
-            F.struct(
-                F.concat(F.lit("doc-"), F.col("value").cast("string")).alias("doc_id"),
-                F.array(F.lit(104), F.lit(105)).alias("tokens"),
-                F.lit(2).alias("n_tok"),
-                F.lit("kafka").alias("source"),
-            )
-        ).cast("binary").alias("value"),
-        F.lit("seqs").alias("topic"),
-        F.lit(0).alias("partition"),
-        F.col("value").alias("offset"),
-        F.col("timestamp"),
-        F.lit(0).alias("timestampType"),
-    )
-    seqs = decode_kafka_sequences(kafka_shaped)
-    assert seqs.isStreaming
-    routed = build_pipeline(seqs)   # full pipeline compiles on the kafka seam
-    assert "route" in routed.columns
-
-
-def test_windowed_topk_stream_matches_batch(spark, tmp_path):
-    """Streaming SpaceSaving heavy hitters per window: with distinct items ≤
-    capacity the summary is exact, so the emitted top-k must equal the batch
-    exact top-k for every CLOSED window (watermark past window end)."""
-    from loongcollector_spark.streaming.job import (
-        spacesaving_topk_batch,
-        windowed_topk_stream,
-    )
-
-    inp = str(tmp_path / "in_topk")
-    rows = []
-    # window 1 (10:00-10:05): a×5, b×3, c×1 ; window 2 (10:05-10:10): d×4, a×2
-    rows += [("a", "2024-01-01 10:00:%02d" % i) for i in range(5)]
-    rows += [("b", "2024-01-01 10:01:%02d" % i) for i in range(3)]
-    rows += [("c", "2024-01-01 10:02:00")]
-    rows += [("d", "2024-01-01 10:05:%02d" % i) for i in range(4)]
-    rows += [("a", "2024-01-01 10:06:00"), ("a", "2024-01-01 10:06:01")]
-    # NULL items are excluded by BOTH twins (explicit policy): 4 nulls in
-    # window 1 would outrank b if either side counted them one-sidedly
-    rows += [(None, "2024-01-01 10:00:3%d" % i) for i in range(4)]
-    # sentinel far in the future advances the watermark past both windows
-    rows += [("zz", "2024-01-01 12:00:00")]
-    df = spark.createDataFrame(rows, "item string, ts_s string").select(
-        F.col("item").alias("user_id"), F.col("ts_s").cast("timestamp").alias("ts")
-    )
-    df.write.mode("overwrite").parquet(inp)
-    stream = spark.readStream.schema("user_id string, ts timestamp").parquet(inp)
-    out = str(tmp_path / "out_topk")
-    q = (
-        windowed_topk_stream(stream, item_col="user_id", window_sec=300, k=2)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt_topk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # second tick so the event-time timeouts registered in tick 1 fire
-    q2 = (
-        windowed_topk_stream(stream, item_col="user_id", window_sec=300, k=2)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt_topk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got = {
-        (r["window_start"].isoformat(), r["rk"]): (r["item"], r["est_count"], r["max_err"])
-        for r in spark.read.parquet(out).collect()
-    }
-    expected = {
-        (r["window_start"].isoformat(), r["rk"]): (r["item"], r["est_count"], r["max_err"])
-        for r in spacesaving_topk_batch(df, item_col="user_id", window_sec=300, k=2)
-        .filter(F.col("window_start") < F.lit("2024-01-01 11:00:00").cast("timestamp"))
-        .collect()
-    }
-    assert ("2024-01-01T10:00:00", 1) in got
-    assert got[("2024-01-01T10:00:00", 1)] == ("a", 5, 0)
-    assert got[("2024-01-01T10:00:00", 2)] == ("b", 3, 0)
-    assert got[("2024-01-01T10:05:00", 1)] == ("d", 4, 0)
-    assert got[("2024-01-01T10:05:00", 2)] == ("a", 2, 0)
-    for key, val in expected.items():
-        assert got.get(key) == val, (key, val, got.get(key))
-
-
-def test_spacesaving_eviction_bounds_state(spark):
-    """Capacity-bounded summary: with more distinct items than capacity the
-    heavy item still surfaces at rk 1 and est_count ≤ true + max_err."""
-    import pandas as pd
-
-    from loongcollector_spark.streaming.job import windowed_topk_stream  # noqa: F401
-    # exercise the eviction rule directly through the batch of the state fn:
-    # 1 heavy item (x×50) + 30 singletons through capacity 10
-    # (unit-style check of the SpaceSaving merge without a streaming query)
-    from loongcollector_spark.streaming import job as J
-
-    summary = {}
-    cap = 10
-
-    def feed(it, n):
-        if it in summary:
-            summary[it][0] += n
-        elif len(summary) < cap:
-            summary[it] = [n, 0]
-        else:
-            evict = min(summary.items(), key=lambda kv: (kv[1][0], kv[0]))
-            mc = evict[1][0]
-            del summary[evict[0]]
-            summary[it] = [mc + n, mc]
-
-    feed("x", 25)
-    for i in range(30):
-        feed(f"s{i:02d}", 1)
-    feed("x", 25)
-    assert len(summary) == cap            # state bounded
-    assert summary["x"][0] >= 50          # heavy item never undercounted
-    assert summary["x"][0] - summary["x"][1] <= 50  # est - err ≤ true count
