@@ -143,11 +143,11 @@ def partition_lineage(files: Iterable[dict]) -> list[dict]:
     return [{"partition_id": p, "n_rows": n, "n_bytes": b} for p, (n, b) in sorted(acc.items())]
 
 
-def file_lineage(sink_dir: str, bytes_col: str = "n_tok") -> list[dict]:
+def file_lineage(sink_dir: str) -> list[dict]:
     """Per-output-file lineage of a written parquet sink (file == sink-table
     partition unit; the Iceberg manifest analog), read on the driver from the
     files themselves — row counts from each footer, bytes from the one
-    ``bytes_col`` column chunk — with no Spark job. Covers the files a Spark
+    ``n_tok`` column chunk — with no Spark job. Covers the files a Spark
     read would (not ``_``/``.``-prefixed) that hold rows."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -163,8 +163,8 @@ def file_lineage(sink_dir: str, bytes_col: str = "n_tok") -> list[dict]:
             if n_rows == 0:
                 continue
             n_bytes = (
-                pc.sum(pf.read(columns=[bytes_col]).column(0)).as_py()
-                if bytes_col in pf.schema_arrow.names
+                pc.sum(pf.read(columns=["n_tok"]).column(0)).as_py()
+                if "n_tok" in pf.schema_arrow.names
                 else 0
             )
             out.append({"file": name, "n_rows": n_rows, "n_bytes": int(n_bytes or 0)})

@@ -137,7 +137,7 @@ def encode_string_pandas(s: pd.Series) -> pd.Series:
     return s.map(lambda v: list(v.encode("utf-8")) if v is not None else None)
 
 
-def with_content(df: DataFrame, tokens_col: str = "tokens", out: str = "content") -> DataFrame:
+def with_content(df: DataFrame) -> DataFrame:
     """Attach the decoded payload column (``decode_tokens_utf8``), keeping
     ``tokens`` untouched."""
-    return df.withColumn(out, decode_tokens_utf8(tokens_col))
+    return df.withColumn("content", decode_tokens_utf8("tokens"))

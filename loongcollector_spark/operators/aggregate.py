@@ -20,23 +20,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def content_value_group(
-    df: DataFrame,
-    group_keys: list[str],
-    fields_col: str = "fields",
-    count_col: str = "n_events",
-    bytes_col: str = "n_tok_sum",
-) -> DataFrame:
+def content_value_group(df: DataFrame, group_keys: list[str]) -> DataFrame:
     """Group events by field values; emit per-group event count + token bytes.
 
     Keys resolve against promoted columns first, else the fields map — promoted
     keys let Catalyst push the shuffle key into the scan.
     """
     keys = [
-        (F.col(k) if k in df.columns else F.col(fields_col)[k]).alias(k) for k in group_keys
+        (F.col(k) if k in df.columns else F.col("fields")[k]).alias(k) for k in group_keys
     ]
     return df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias(count_col), F.sum("n_tok").alias(bytes_col)
+        F.count(F.lit(1)).alias("n_events"), F.sum("n_tok").alias("n_tok_sum")
     )
 
 
@@ -45,7 +39,6 @@ def shard_hash(
     source_keys: list[str],
     shard_count: int,
     connector: str = "_",
-    tag_col: str = "__shardhash__",
 ) -> DataFrame:
     """md5-bucket rows into ``shard_count`` (power of 2) shards on the concat of
     source key values; emits the shard id and repartitions on it so co-located
@@ -54,27 +47,25 @@ def shard_hash(
     concat = F.concat_ws(connector, *[F.col(k).cast("string") for k in source_keys])
     # top bits of md5 → shard, mirroring aggregator_shardhash.go:164-204
     shard = (F.conv(F.substring(F.md5(concat.cast("binary")), 1, 8), 16, 10).cast("long") % shard_count).cast("int")
-    out = df.withColumn(tag_col, shard)
-    return out.repartition(shard_count, F.col(tag_col))
+    out = df.withColumn("__shardhash__", shard)
+    return out.repartition(shard_count, F.col("__shardhash__"))
 
 
-def salted_repartition(
-    df: DataFrame, num_partitions: int, salt_buckets: int = 64, doc_id_col: str = "doc_id", source_col: str = "source"
-) -> DataFrame:
-    """Salted (source, xxhash64(doc_id) % S) repartition.
+def salted_repartition(df: DataFrame, num_partitions: int, source_col: str = "source") -> DataFrame:
+    """Salted (source, xxhash64(doc_id) % 64) repartition.
 
     A single hot source (the synth makes one ~70% of rows) would otherwise hash
-    to one shuffle partition; the salt spreads it over ``salt_buckets`` while
+    to one shuffle partition; the salt spreads it over 64 buckets while
     keeping co-location per (source, salt) for downstream per-source writes.
     """
-    salt = F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(64))
     return df.repartition(num_partitions, F.col(source_col), salt)
 
 
-def sink_counts(routed: DataFrame, route_col: str = "route") -> DataFrame:
+def sink_counts(routed: DataFrame) -> DataFrame:
     """Per-sink aggregate counts: rows + token sum (the per-sink
     OUT_SUCCESSFUL_EVENTS_TOTAL counters)."""
-    return routed.groupBy(route_col).agg(
+    return routed.groupBy("route").agg(
         F.count(F.lit(1)).alias("n_rows"), F.sum("n_tok").alias("n_tok_sum")
     )
 
@@ -84,8 +75,6 @@ def metadata_group(
     group_keys: list[str],
     max_group_events: int = 1024,
     order_col: str | None = None,
-    tags_col: str = "tags",
-    group_col: str = "__group_seq__",
 ) -> DataFrame:
     """aggregator_metadata_group (plugins/aggregator/metadatagroup/
     aggregator_metadata_group.go:48-120,203-240): regroup events by selected
@@ -99,7 +88,7 @@ def metadata_group(
     from pyspark.sql.window import Window
 
     keys = [
-        (F.col(k) if k in df.columns else F.col(tags_col)[k]).alias(f"__mg_{k}")
+        (F.col(k) if k in df.columns else F.col("tags")[k]).alias(f"__mg_{k}")
         for k in group_keys
     ]
     tagged = df.select("*", *keys)
@@ -107,7 +96,7 @@ def metadata_group(
     w = Window.partitionBy(*[f"__mg_{k}" for k in group_keys]).orderBy(*order)
     seq = F.row_number().over(w)
     return tagged.withColumn(
-        group_col, F.floor((seq - F.lit(1)) / F.lit(max_group_events)).cast("long")
+        "__group_seq__", F.floor((seq - F.lit(1)) / F.lit(max_group_events)).cast("long")
     )
 
 
@@ -116,11 +105,10 @@ def metadata_group_counts(
     group_keys: list[str],
     max_group_events: int = 1024,
     order_col: str | None = None,
-    tags_col: str = "tags",
 ) -> DataFrame:
     """Per-(metadata, batch) sizes — the observable contract of
     aggregator_metadata_group for the correctness gate."""
-    g = metadata_group(df, group_keys, max_group_events, order_col, tags_col)
+    g = metadata_group(df, group_keys, max_group_events, order_col)
     return (
         g.groupBy(*[F.col(f"__mg_{k}").alias(k) for k in group_keys], "__group_seq__")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -178,7 +166,6 @@ def context_pack(
     source_col: str = "source",
     max_log_count: int = 1024,
     config_name: str = "pipeline",
-    pack_col: str = "__pack_id__",
 ) -> DataFrame:
     """aggregator_context (plugins/aggregator/context/aggregator_context.go:
     30-140): per-source order preservation + ``__pack_id__`` lineage tag.
@@ -203,7 +190,7 @@ def context_pack(
     seq = F.row_number().over(w)
     pack_seq = (F.floor((seq - F.lit(1)) / F.lit(max_log_count)) + F.lit(1)).cast("long")
     pack_id = F.concat(prefix, F.lit("-"), F.upper(F.hex(pack_seq)))
-    out = df.withColumn(pack_col, pack_id)
+    out = df.withColumn("__pack_id__", pack_id)
     return out.repartition(F.col(source_col)).sortWithinPartitions(source_col, order_col)
 
 

@@ -29,11 +29,7 @@ from pyspark.sql.window import Window
 from .dedup import cosine
 
 
-def quantize_int8(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization (the standard ANN-index /
     embedding-store compression): scale = max|x| / 127,
     q_i = floor(x_i · 127 / max|x| + 0.5) ∈ [-127, 127].
@@ -47,12 +43,12 @@ def quantize_int8(
 
     Scale shape: pure per-row array projection (transform/aggregate lambdas,
     whole-stage codegen) — rides the scan, no shuffle, no Python."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     m = F.greatest(F.array_max(F.transform(v, F.abs)), F.lit(1e-12))
     q = F.transform(v, lambda x: F.floor(x * F.lit(127.0) / m + F.lit(0.5)).cast("long"))
     return df.select(
-        F.col(id_col),
-        F.size(F.col(vec_col)).alias("dim"),
+        F.col("vec_id"),
+        F.size(F.col("embedding")).alias("dim"),
         F.round(m / F.lit(127.0), 6).alias("scale6"),
         F.aggregate(q, F.lit(0).cast("long"), lambda acc, x: acc + x).alias("q_sum"),
         F.array_min(q).alias("q_min"),
@@ -60,20 +56,15 @@ def quantize_int8(
     )
 
 
-def ivf_assign(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """(id, centroid_id) inverted-list assignment: argmax cosine over the
     broadcast centroid set, ties broken by lowest centroid id."""
     c = F.broadcast(
         centroids.select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).cast("array<double>").alias("c_vec")
+            F.col("vec_id").alias("centroid_id"), F.col("embedding").cast("array<double>").alias("c_vec")
         )
     )
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    v = df.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     scored = v.join(c).withColumn("c_cos", F.round(cosine(F.col("v"), F.col("c_vec")), 6))
     # argmax as a hash aggregate (max_by) rather than a row_number window: the
     # window sorts all N·K fan-out rows inside each shuffle partition; the agg
@@ -98,8 +89,6 @@ def ann_ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k: (query_id, neighbor_id, cos6, rk) for each query id.
 
@@ -107,9 +96,9 @@ def ann_ivf_topk(
     missed) — but the WHOLE path (quantizer, assignment, probe ranking,
     candidate scan) is deterministic, so the oracle checks the exact output,
     and recall vs brute force is a measured number, not a hope."""
-    centroids = df.filter(F.col(id_col).isin(*[int(q) for q in range(n_centroids)]))
-    assign = ivf_assign(df, centroids, id_col, vec_col)
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    centroids = df.filter(F.col("vec_id").isin(*[int(q) for q in range(n_centroids)]))
+    assign = ivf_assign(df, centroids)
+    v = df.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     corpus = v.join(assign, "id")
 
     q = v.filter(F.col("id").isin(*[int(x) for x in query_ids])).select(
@@ -118,7 +107,7 @@ def ann_ivf_topk(
     # rank centroids per query, keep nprobe
     c = F.broadcast(
         centroids.select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).cast("array<double>").alias("c_vec")
+            F.col("vec_id").alias("centroid_id"), F.col("embedding").cast("array<double>").alias("c_vec")
         )
     )
     qc = q.join(c).withColumn("c_cos", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
@@ -159,14 +148,14 @@ def _dist2(a, b) -> F.Column:
     return F.round(_raw_dist2(a, b), 9)
 
 
-def _pq_codebook_row(df: DataFrame, m: int, k: int, id_col: str, vec_col: str):
+def _pq_codebook_row(df: DataFrame, m: int, k: int):
     """ONE broadcastable row holding all m·k codebook entries as
     ``cbs: array<array<array<double>>>`` (cbs[j][c] = code c of subspace j).
     Deterministic 'training': the k lowest-id vectors' sub-slices are the
     codes — same rationale as ivf_assign's quantizer (a DuckDB oracle must
     replay the index bit-for-bit; production would Lloyd-train per subspace
     with the semdedup machinery, which changes only this function)."""
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    v = df.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     base = v.orderBy("id").limit(k)
     row = base.agg(
         F.array_sort(
@@ -194,8 +183,6 @@ def pq_encode(
     df: DataFrame,
     m: int = 4,
     k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: DataFrame | None = None,
 ) -> DataFrame:
     """PQ encode: each vector → ``codes array<int>`` of length m (code j =
@@ -212,8 +199,8 @@ def pq_encode(
     ``codebook``: pass a precomputed ``_pq_codebook_row`` result to avoid
     re-deriving it (pq_ann_topk shares one codebook between encode and the
     query LUTs — one corpus pass instead of two)."""
-    cb = codebook if codebook is not None else _pq_codebook_row(df, m, k, id_col, vec_col)
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    cb = codebook if codebook is not None else _pq_codebook_row(df, m, k)
+    v = df.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     sd = (F.size(F.col("v")) / m).cast("int")
 
     def code_for(j):
@@ -238,8 +225,6 @@ def pq_ann_topk(
     topk: int = 10,
     m: int = 4,
     k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k: per query, distance to every
     corpus vector is approximated as Σ_j lut[j][codes[j]] where lut[j][c] =
@@ -257,9 +242,9 @@ def pq_ann_topk(
     (Q·m·k doubles), the scan computes Σ lut lookups per row (O(m), not
     O(dim)) inside codegen, and per-query top-k is a window over the scored
     stream. No pairwise vector math at query time — the PQ design point."""
-    cb = _pq_codebook_row(df, m, k, id_col, vec_col)
-    codes = pq_encode(df, m, k, id_col, vec_col, codebook=cb)
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    cb = _pq_codebook_row(df, m, k)
+    codes = pq_encode(df, m, k, codebook=cb)
+    v = df.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     q = (
         v.filter(F.col("id").isin(*[int(x) for x in query_ids]))
         .select(F.col("id").alias("query_id"), F.col("v").alias("qv"))

@@ -144,21 +144,20 @@ def _docker_json_cols(c: Column) -> dict[str, Column]:
 def parse_container_log(
     df: DataFrame,
     fmt: str = CONTAINERD_TEXT,
-    source_col: str = "content",
     ignoring_stdout: bool = False,
     ignoring_stderr: bool = False,
     keeping_source: bool = True,
 ) -> DataFrame:
     """Parse raw container runtime stdout lines. Adds ``_time_``,
-    ``_source_``, ``is_partial``, ``parse_ok`` and REPLACES ``source_col``
+    ``_source_``, ``is_partial``, ``parse_ok`` and REPLACES ``content``
     with the extracted payload (raw line kept on failure when
     ``keeping_source``); drops ignored-stream rows and, when
     ``keeping_source=False``, failed rows. All other columns pass through."""
     if fmt not in (CONTAINERD_TEXT, DOCKER_JSON_FILE):
         raise ValueError(f"fmt must be {CONTAINERD_TEXT!r} or {DOCKER_JSON_FILE!r}")
-    c = F.col(source_col)
+    c = F.col("content")
     d = _containerd_cols(c) if fmt == CONTAINERD_TEXT else _docker_json_cols(c)
-    keep = [col for col in df.columns if col != source_col]
+    keep = [col for col in df.columns if col != "content"]
     clash = sorted(set(keep) & {"_time_", "_source_", "is_partial", "parse_ok"})
     if clash:
         raise ValueError(
@@ -171,7 +170,7 @@ def parse_container_log(
         *keep,
         F.when(d["ok"], d["time"]).alias("_time_"),
         F.when(d["ok"], d["source"]).alias("_source_"),
-        F.when(d["ok"], d["content"]).otherwise(c).alias(source_col),
+        F.when(d["ok"], d["content"]).otherwise(c).alias("content"),
         F.coalesce(d["ok"] & d["partial"], F.lit(False)).alias("is_partial"),
         F.coalesce(d["ok"], F.lit(False)).alias("parse_ok"),
     )
@@ -188,8 +187,6 @@ def merge_container_partials(
     df: DataFrame,
     stream_col: str = "stream_id",
     order_col: str = "line_no",
-    content_col: str = "content",
-    partial_col: str = "is_partial",
 ) -> DataFrame:
     """Stitch ``P``-flagged partial lines — MergeLogsByFlag
     (ProcessorMergeMultilineLogNative.cpp:113-158): a run of consecutive
@@ -209,7 +206,7 @@ def merge_container_partials(
     keeps its timestamp and stream metadata), ``complete`` is False for a
     flushed trailing partial run."""
     w = Window.partitionBy(stream_col).orderBy(order_col)
-    ender = F.when(~F.col(partial_col), 1).otherwise(0)
+    ender = F.when(~F.col("is_partial"), 1).otherwise(0)
     seq = F.coalesce(
         F.sum(ender).over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
     )
@@ -217,7 +214,7 @@ def merge_container_partials(
     carry = [
         f.name
         for f in df.schema.fields
-        if f.name not in (stream_col, order_col, content_col, partial_col)
+        if f.name not in (stream_col, order_col, "content", "is_partial")
     ]
     return (
         tagged.groupBy(stream_col, "_evt")
@@ -228,15 +225,15 @@ def merge_container_partials(
                 F.transform(
                     F.array_sort(
                         F.collect_list(
-                            F.struct(F.col(order_col).alias("o"), F.col(content_col).alias("c"))
+                            F.struct(F.col(order_col).alias("o"), F.col("content").alias("c"))
                         )
                     ),
                     lambda s: s["c"],
                 ),
                 "",
-            ).alias(content_col),
+            ).alias("content"),
             F.count(F.lit(1)).alias("n_parts"),
-            F.max(~F.col(partial_col)).alias("complete"),
+            F.max(~F.col("is_partial")).alias("complete"),
         )
         .withColumnRenamed("_evt", "event_seq")
     )

@@ -22,13 +22,7 @@ from pyspark.sql import functions as F
 from loongcollector_spark.operators.dedup import word_ngrams
 
 
-def ngram_contamination(
-    train: DataFrame,
-    bench: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_contamination(train: DataFrame, bench: DataFrame, n: int = 13) -> DataFrame:
     """Contaminated training docs: (doc_id, hit_grams, bench_docs).
 
     ``hit_grams`` = distinct n-grams of the doc that appear in ANY benchmark
@@ -37,12 +31,12 @@ def ngram_contamination(
     scan stage, the broadcast hash join discards them map-side).
     """
     tg = train.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_ngrams(F.col(text_col), n)).alias("gram"),
+        F.col("doc_id"),
+        F.explode(word_ngrams(F.col("text"), n)).alias("gram"),
     )
     bg = bench.select(
-        F.col(id_col).alias("bench_id"),
-        F.explode(word_ngrams(F.col(text_col), n)).alias("gram"),
+        F.col("doc_id").alias("bench_id"),
+        F.explode(word_ngrams(F.col("text"), n)).alias("gram"),
     )
     return (
         tg.join(F.broadcast(bg), "gram")
@@ -54,16 +48,8 @@ def ngram_contamination(
     )
 
 
-def decontaminate(
-    train: DataFrame,
-    bench: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def decontaminate(train: DataFrame, bench: DataFrame, n: int = 13) -> DataFrame:
     """The clean corpus: ``train`` minus every contaminated doc — a broadcast
     left-anti join against the (small) contaminated-id set."""
-    bad = ngram_contamination(train, bench, n, text_col, id_col).select("doc_id")
-    return train.join(
-        F.broadcast(bad).withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-    )
+    bad = ngram_contamination(train, bench, n).select("doc_id")
+    return train.join(F.broadcast(bad), "doc_id", "left_anti")

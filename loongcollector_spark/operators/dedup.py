@@ -16,8 +16,9 @@ Spark-first:
                            Candidate pairs verified with exact Jaccard.
 * ``simhash64``          — 64-bit SimHash over word tokens (Arrow-batched
                            numpy UDF — bit-parallel majority vote).
-* ``embedding_dup_pairs``— cosine ≥ τ near-dup pairs over embeddings with
-                           band-bucketed blocking (brute-force within block).
+* ``embedding_dup_pairs``— cosine ≥ τ near-dup pairs over embeddings,
+                           brute-force (the exact reference for the GEMM and
+                           LSH variants).
 
 Scale notes: every pair-generating operator blocks/buckets BEFORE joining —
 the joins are equi-joins on (gram | band-hash | block key), so Spark shuffles
@@ -69,14 +70,12 @@ def normalize_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", keep: str = "min"
-) -> DataFrame:
+def exact_dedup(df: DataFrame, id_col: str = "doc_id", keep: str = "min") -> DataFrame:
     """Exact dedup on normalized text: one row per duplicate class with the
     representative id and the class size. ``keep``: min|max id wins."""
     agg_id = F.min(id_col) if keep == "min" else F.max(id_col)
     return (
-        df.groupBy(normalize_text(F.col(text_col)).alias("dup_key"))
+        df.groupBy(normalize_text(F.col("text")).alias("dup_key"))
         .agg(agg_id.alias("rep_id"), F.count(F.lit(1)).alias("dup_cnt"))
     )
 
@@ -105,8 +104,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     n: int = 2,
     threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_doc_grams: int | None = None,
 ) -> DataFrame:
     """Jaccard-similar pairs via gram-inverted-index join:
@@ -123,7 +120,7 @@ def ngram_jaccard_pairs(
     true Jaccard over the reduced vocabulary (and a DuckDB oracle can mirror
     it with the same df-filter CTE)."""
     grams = df.select(
-        F.col(id_col).alias("id"), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+        F.col("doc_id").alias("id"), F.explode(word_ngrams(F.col("text"), n)).alias("gram")
     )
     if max_doc_grams is not None:
         hot = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df_cnt")).filter(
@@ -154,16 +151,14 @@ def charset_jaccard_pairs(
     df: DataFrame,
     block_col: str = "lang",
     threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Character-set Jaccard for pairs sharing a blocking key (cheap blocked
     pairwise — use only when blocks are small; the SQL-oracle-friendly twin of
     ``ngram_jaccard_pairs``)."""
     chars = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.col(block_col).alias("blk"),
-        F.array_distinct(F.split(F.col(text_col), "", -1)).alias("cs"),
+        F.array_distinct(F.split(F.col("text"), "", -1)).alias("cs"),
     )
     a, b = chars.alias("a"), chars.alias("b")
     jac = F.size(F.array_intersect(F.col("a.cs"), F.col("b.cs"))) / F.size(
@@ -188,8 +183,6 @@ def _verify_candidates_jaccard(
     df: DataFrame,
     cands: DataFrame,
     n: int,
-    text_col: str,
-    id_col: str,
     threshold: float,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs via the COUNTING
@@ -199,7 +192,7 @@ def _verify_candidates_jaccard(
     over ~50-element arrays). Pairs with zero shared grams drop out, which a
     positive threshold filters anyway."""
     grams = df.select(
-        F.col(id_col).alias("id"), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+        F.col("doc_id").alias("id"), F.explode(word_ngrams(F.col("text"), n)).alias("gram")
     )
     sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     ga = grams.select(F.col("id").alias("id_a"), "gram")
@@ -222,13 +215,7 @@ def _verify_candidates_jaccard(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 32,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int = 32, n: int = 2) -> DataFrame:
     """K-permutation MinHash signature per doc: sig[j] = min over grams of
     xxhash64(gram, seed=j).
 
@@ -238,7 +225,7 @@ def minhash_signatures(
     re-evaluates the gram build). Docs with zero grams drop out (no sig → no
     pairs), identical final pair-set semantics."""
     grams = df.select(
-        F.col(id_col).alias("id"), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+        F.col("doc_id").alias("id"), F.explode(word_ngrams(F.col("text"), n)).alias("gram")
     )
     aggs = [F.min(F.xxhash64(F.col("gram"), F.lit(j))).alias(f"h{j}") for j in range(num_hashes)]
     return (
@@ -256,18 +243,12 @@ def _md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("long")
 
 
-def minhash_signatures_md5(
-    df: DataFrame,
-    num_hashes: int = 16,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_signatures_md5(df: DataFrame, num_hashes: int = 16, n: int = 2) -> DataFrame:
     """MinHash signatures with the md5 family: sig[j] = min over grams of
     md5_long(gram || '#' || j). Explode+aggregate form (see
     minhash_signatures) — the K md5 columns stay inside whole-stage codegen."""
     grams = df.select(
-        F.col(id_col).alias("id"), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+        F.col("doc_id").alias("id"), F.explode(word_ngrams(F.col("text"), n)).alias("gram")
     )
     aggs = [
         F.min(_md5_long(F.concat(F.col("gram"), F.lit(f"#{j}")))).alias(f"h{j}")
@@ -286,8 +267,6 @@ def minhash_lsh_pairs_md5(
     bands: int = 8,
     n: int = 2,
     threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket_size: int | None = None,
     persist_buckets: bool = False,
 ) -> DataFrame:
@@ -299,7 +278,7 @@ def minhash_lsh_pairs_md5(
     (_maybe_persist_buckets)."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sigs = minhash_signatures_md5(df, num_hashes, n, text_col, id_col)
+    sigs = minhash_signatures_md5(df, num_hashes, n)
     banded = sigs.select(
         "id",
         F.explode(
@@ -342,7 +321,7 @@ def minhash_lsh_pairs_md5(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    out = _verify_candidates_jaccard(df, cands, n, text_col, id_col, threshold)
+    out = _verify_candidates_jaccard(df, cands, n, threshold)
     if persist_buckets:
         out._lsh_buckets = _cached_buckets  # unpersist handle (see _maybe_persist_buckets)
     return out
@@ -354,8 +333,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     n: int = 2,
     threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket_size: int | None = None,
     persist_buckets: bool = False,
 ) -> DataFrame:
@@ -368,7 +345,7 @@ def minhash_lsh_pairs(
     compute signatures once at 100 TB scale (_maybe_persist_buckets)."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sigs = minhash_signatures(df, num_hashes, n, text_col, id_col)
+    sigs = minhash_signatures(df, num_hashes, n)
     banded = sigs.select(
         "id",
         F.explode(
@@ -411,7 +388,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    out = _verify_candidates_jaccard(df, cands, n, text_col, id_col, threshold)
+    out = _verify_candidates_jaccard(df, cands, n, threshold)
     if persist_buckets:
         out._lsh_buckets = _cached_buckets  # unpersist handle (see _maybe_persist_buckets)
     return out
@@ -421,9 +398,7 @@ def minhash_lsh_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def _simhash_native(
-    df: DataFrame, text_col: str, out: str, nbits: int, token_hash, id_cols: list[str]
-) -> DataFrame:
+def _simhash_native(df: DataFrame, nbits: int, token_hash, id_col: str) -> DataFrame:
     """SimHash signatures as a PURE Catalyst plan — no Python in the hot path:
     tokenize with split, explode, hash each token with a native expression
     (``token_hash``: Column→Column), then majority-vote the bits with ONE
@@ -439,15 +414,14 @@ def _simhash_native(
     ``string_split_regex(trim(lower(text)), '\\s+')``: trim, lower, split on
     whitespace runs; empty/whitespace-only/null text → signature 0.
 
-    Returns ``(*id_cols, out)`` only — the vote aggregate groups by the NARROW
-    id key (``id_cols``, unique per row); grouping by the full row would
+    Returns ``(id_col, simhash)`` only — the vote aggregate groups by the
+    NARROW id key (``id_col``, unique per row); grouping by the full row would
     re-hash the text per exploded token inside the hash aggregate, which
     measured 4–5× slower.  Callers join the signature back if they need it
     alongside other columns.
     """
     from functools import reduce as _reduce
 
-    keep = list(id_cols)
     # array_remove drops the empty edge tokens regex-split leaves when the
     # text starts/ends with NON-SPACE whitespace: F.trim strips only 0x20, so
     # "\tword" split on \s+ is ["", "word"] and a whitespace-only "\t" text is
@@ -455,15 +429,15 @@ def _simhash_native(
     # (a "\t"-only doc got sig=md5("") instead of the documented 0; found by
     # the algorithmic differential vs Python text.lower().split()).
     toks = F.when(
-        F.length(F.trim(F.col(text_col))) > 0,
-        F.array_remove(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""),
+        F.length(F.trim(F.col("text"))) > 0,
+        F.array_remove(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), ""),
     ).otherwise(F.array().cast("array<string>"))
     # Cap the vote at the packed counters' 21-bit field capacity: a >2M-token
     # doc would carry a bit's ones-count into its neighbor's field (silently
     # wrong signature). The signature of a pathological doc is computed over
     # its first 2^21-1 tokens — documented approximation, never corruption.
     toks = F.slice(toks, 1, (1 << 21) - 1)
-    ex = df.select(*keep, F.explode_outer(toks).alias("_tok")).withColumn(
+    ex = df.select(id_col, F.explode_outer(toks).alias("_tok")).withColumn(
         # null-safe: the explode_outer row of an EMPTY token array must not
         # vote — xxhash64(null) is the seed (42), whose bits would win every
         # 2·ones > n=0 vote and yield signature 42 instead of the documented 0
@@ -488,7 +462,7 @@ def _simhash_native(
             terms.append(F.shiftleft(one, j * FIELD) if j else one)
         return F.coalesce(F.sum(_reduce(lambda a, x: a + x, terms)), F.lit(0).cast("long"))
 
-    g = ex.groupBy(*keep).agg(
+    g = ex.groupBy(id_col).agg(
         F.count("_tok").cast("long").alias("_n"),
         *[_packed(p).alias(f"_p{p}") for p in range(npack)],
     )
@@ -503,23 +477,19 @@ def _simhash_native(
         )
 
     sig = _reduce(lambda a, x: a.bitwiseOR(x), [_bit(b) for b in range(nbits)])
-    return g.select(*keep, sig.alias(out))
+    return g.select(id_col, sig.alias("simhash"))
 
 
-def simhash60_md5(
-    df: DataFrame, text_col: str = "text", out: str = "simhash", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash60_md5(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """60-bit SimHash with md5-derived token hashes — the oracle-replayable
     family (DuckDB: ('0x'||substr(md5(tok),1,15))::bigint then per-bit
     majority votes via unnest(range(60))). Native md5 + conv, no UDF.
-    Returns (id_col, out)."""
+    Returns (id_col, simhash)."""
     return _simhash_native(
         df,
-        text_col,
-        out,
         60,
         lambda t: F.conv(F.substring(F.md5(F.encode(t, "utf-8")), 1, 15), 16, 10).cast("long"),
-        [id_col],
+        id_col,
     )
 
 
@@ -593,8 +563,6 @@ def _simhash_block_pairs(
 def simhash_dup_pairs_md5(
     df: DataFrame,
     max_hamming: int = 7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket_size: int | None = None,
     persist_buckets: bool = False,
 ) -> DataFrame:
@@ -606,25 +574,21 @@ def simhash_dup_pairs_md5(
     caps degenerate hot buckets (see _simhash_block_pairs)."""
     nblocks = max_hamming + 1
     width = 60 // nblocks
-    sh = simhash60_md5(df.select(F.col(id_col).alias("id"), text_col), text_col, id_col="id")
+    sh = simhash60_md5(df.select(F.col("doc_id").alias("id"), "text"), id_col="id")
     return _simhash_block_pairs(sh, nblocks, width, max_hamming, max_bucket_size, persist_buckets)
 
 
-def simhash64(
-    df: DataFrame, text_col: str = "text", out: str = "simhash", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash64(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash, fast production family: native xxhash64 token hashes
     (seed 42, deterministic across executors) — same codegen explode-agg plan
     as the md5 twin. Replaced the FNV-1a-in-Python pandas UDF.
-    Returns (id_col, out)."""
-    return _simhash_native(df, text_col, out, 64, lambda t: F.xxhash64(t), [id_col])
+    Returns (id_col, simhash)."""
+    return _simhash_native(df, 64, lambda t: F.xxhash64(t), id_col)
 
 
 def simhash_dup_pairs(
     df: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket_size: int | None = None,
     persist_buckets: bool = False,
 ) -> DataFrame:
@@ -634,7 +598,7 @@ def simhash_dup_pairs(
     ``max_bucket_size`` caps degenerate hot buckets (_simhash_block_pairs)."""
     nblocks = max_hamming + 1
     width = 64 // nblocks
-    sh = simhash64(df.select(F.col(id_col).alias("id"), text_col), text_col, id_col="id")
+    sh = simhash64(df.select(F.col("doc_id").alias("id"), "text"), id_col="id")
     return _simhash_block_pairs(sh, nblocks, width, max_hamming, max_bucket_size, persist_buckets)
 
 
@@ -655,8 +619,6 @@ def cosine(a: Column, b: Column) -> Column:
 def embedding_dup_pairs_exact(
     df: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     target_chunk: int = 1024,
     n_chunks: int | None = None,
 ) -> DataFrame:
@@ -692,11 +654,11 @@ def embedding_dup_pairs_exact(
         # select(lit(1)) guarantees the scan is column-pruned to zero data
         # columns whatever projections sit on df
         n_chunks = max(1, math.ceil(df.select(F.lit(1)).count() / target_chunk))
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(df.dtypes)["vec_id"]
     v = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_chunks)).cast("int").alias("ck"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+        F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(n_chunks)).cast("int").alias("ck"),
     )
     # each row fans out to every task that touches its chunk: (min(ck,o), max(ck,o))
     tasks = F.transform(
@@ -711,7 +673,7 @@ def embedding_dup_pairs_exact(
     )
     out_schema = f"id_a {id_type}, id_b {id_type}, cos double"
 
-    def compute(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compute(key, pdf):
         i, j = key
         A = pdf[pdf.ck == i]
         B = pdf[pdf.ck == j] if j != i else A
@@ -753,8 +715,6 @@ def hyperplane_buckets(
     bands: int = 8,
     planes_per_band: int = 8,
     seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, band, bucket) sign-bit LSH rows: bucket = Σ_j [v·p_bj ≥ 0]·2^j.
 
@@ -780,8 +740,8 @@ def hyperplane_buckets(
 
     return (
         df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(buckets_udf(F.col(vec_col).cast("array<double>"))).alias(
+            F.col("vec_id").alias("id"),
+            F.posexplode(buckets_udf(F.col("embedding").cast("array<double>"))).alias(
                 "band", "bucket"
             ),
         )
@@ -815,8 +775,6 @@ def embedding_dup_pairs_lsh(
     planes_per_band: int = 8,
     seed: int = 7,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """APPROXIMATE cosine ≥ τ pairs, truly sub-quadratic: candidates collide in
     ≥1 hyperplane band (equi-join on (band, bucket) — shuffle by bucket, no
@@ -828,7 +786,7 @@ def embedding_dup_pairs_lsh(
     regime tool; use embedding_dup_pairs_exact when τ is low. Random-pair
     collision is 2^-H per band, so candidate volume ≈ B·N²/2^H only for the
     tiny cosine-~0 mass, i.e. ~linear for clustered corpora."""
-    bk = hyperplane_buckets(df, dim, bands, planes_per_band, seed, id_col, vec_col)
+    bk = hyperplane_buckets(df, dim, bands, planes_per_band, seed)
     a, b = bk.alias("a"), bk.alias("b")
     cands = (
         a.join(
@@ -840,7 +798,7 @@ def embedding_dup_pairs_lsh(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    vecs = df.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     va = vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
     vb = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
     cos = cosine(F.col("v_a"), F.col("v_b"))
@@ -853,30 +811,20 @@ def embedding_dup_pairs_lsh(
     )
 
 
-def embedding_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = None,
-) -> DataFrame:
-    """Cosine ≥ τ near-duplicate pairs. With ``block_col`` (e.g. a coarse
-    cluster/LSH bucket from hyperplane_buckets) the join is blocked; otherwise
-    brute-force pairwise — only for small corpora or as the verification stage
-    after ANN blocking. Prefer embedding_dup_pairs_exact (chunked GEMM) or
-    embedding_dup_pairs_lsh (sub-quadratic) at scale."""
+def embedding_dup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """Cosine ≥ τ near-duplicate pairs, brute-force pairwise — only for small
+    corpora or as the verification stage after ANN blocking (and the exact
+    reference the scalable variants are tested against). Prefer
+    embedding_dup_pairs_exact (chunked GEMM) or embedding_dup_pairs_lsh
+    (sub-quadratic) at scale."""
     v = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     a, b = v.alias("a"), v.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    if block_col:
-        cond = cond & (F.col("a.blk") == F.col("b.blk"))
     cos = cosine(F.col("a.v"), F.col("b.v"))
     return (
-        a.join(b, cond)
+        a.join(b, F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), F.round(cos, 4).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
@@ -1045,12 +993,7 @@ def dup_clusters(
     )
 
 
-def segment_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seg_words: int = 10,
-) -> DataFrame:
+def segment_dedup(df: DataFrame, seg_words: int = 10) -> DataFrame:
     """Sub-document (paragraph-granularity) exact dedup: split each document
     into fixed ``seg_words``-word segments, keep only each segment's globally
     FIRST occurrence (ordered by (doc_id, position) — deterministic), and
@@ -1068,25 +1011,25 @@ def segment_dedup(
     pos)) — map-side combinable, no window over the corpus) → equi-join back
     on (segment, id, pos) → ONE hash agg keyed by doc to reassemble.
     array_sort on the per-doc kept list is per-row work bounded by doc size."""
-    words = F.split(normalize_text(F.col(text_col)), " ", -1)
+    words = F.split(normalize_text(F.col("text")), " ", -1)
     n_segs = F.ceil(F.size(words) / F.lit(seg_words)).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), n_segs - F.lit(1)),
         lambda i: F.array_join(F.slice(words, i * seg_words + 1, seg_words), " "),
     )
     seg_rows = df.select(
-        F.col(id_col), F.posexplode(segs).alias("pos", "seg")
+        F.col("doc_id"), F.posexplode(segs).alias("pos", "seg")
     )
     first = seg_rows.groupBy("seg").agg(
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("_first")
+        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("_first")
     )
     kept = (
         seg_rows.join(first, "seg")
         .filter(
-            (F.col(id_col) == F.col(f"_first.{id_col}"))
+            (F.col("doc_id") == F.col("_first.doc_id"))
             & (F.col("pos") == F.col("_first.pos"))
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),
             F.array_join(
@@ -1098,11 +1041,11 @@ def segment_dedup(
             ).alias("text_clean"),
         )
     )
-    base = df.select(F.col(id_col), n_segs.alias("n_segs"))
+    base = df.select(F.col("doc_id"), n_segs.alias("n_segs"))
     return (
-        base.join(kept, id_col, "left")
+        base.join(kept, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_segs",
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
             F.coalesce("text_clean", F.lit("")).alias("text_clean"),
@@ -1110,18 +1053,13 @@ def segment_dedup(
     )
 
 
-def line_dedup(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "doc_id",
-    sep: str = "\n",
-) -> DataFrame:
+def line_dedup(df: DataFrame, sep: str = "\n") -> DataFrame:
     """WITHIN-document repeated-line removal (Gopher's intra-doc twin of
     ``segment_dedup``'s corpus-global keep-first): drop every line after its
     first occurrence inside the SAME document, rebuild the text in original
     line order. Kills per-page repeated nav blocks / pagination artifacts
     without touching other documents' copies (that's segment_dedup's job).
-    Rows: (id_col, n_lines, n_removed, content_clean).
+    Rows: (doc_id, n_lines, n_removed, content_clean).
 
     Scale shape: ZERO shuffle — the dedup scope is one row, so the whole
     operator is a codegen projection: ``filter(lines, (x, i) ->
@@ -1134,12 +1072,12 @@ def line_dedup(
 
     # F.split takes a REGEX but array_join emits the literal — escape so a
     # metachar separator ('.', '|') splits on the same literal it rejoins with
-    lines = F.split(F.col(content_col), _re.escape(sep), -1)
+    lines = F.split(F.col("content"), _re.escape(sep), -1)
     kept = F.filter(
         lines, lambda x, i: F.array_position(lines, x) == (i + F.lit(1)).cast("bigint")
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(lines).alias("n_lines"),
         (F.size(lines) - F.size(kept)).alias("n_removed"),
         F.array_join(kept, sep).alias("content_clean"),
@@ -1147,20 +1085,14 @@ def line_dedup(
 
 
 # ---------------------------------------------------------------------------
-# streaming dedup
+# winnowing, incremental and Bloom-filter dedup
 # ---------------------------------------------------------------------------
 
 _WINNOW_POSCAP = 1_000_000  # max gram positions per doc the key packing holds
 _WINNOW_HMOD = 1 << 40  # fingerprint hash space (2^40 · 10^6 fits int64)
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     """MOSS-style winnowing (Schleimer/Wilkerson/Aiken, SIGMOD'03): hash every
     word ``k``-gram, slide a window of ``w`` consecutive hashes, keep each
     window's minimum (rightmost on ties) — the classic position-robust LOCAL
@@ -1178,20 +1110,20 @@ def winnow_fingerprints(
     (partitions are single documents — bounded, never corpus-wide) → distinct.
     Docs shorter than w grams keep their global minimum (one fingerprint),
     per the winnowing paper's boundary convention."""
-    words = F.split(normalize_text(F.col(text_col)), " ", -1)
+    words = F.split(normalize_text(F.col("text")), " ", -1)
     cnt = F.greatest(F.size(words) - F.lit(k - 1), F.lit(0))
     grams = F.slice(words, 1, cnt)
     for j in range(2, k + 1):
         grams = F.zip_with(
             grams, F.slice(words, j, cnt), lambda a, b: F.concat(a, F.lit(" "), b)
         )
-    g = df.select(F.col(id_col), F.posexplode(grams).alias("pos", "gram"))
+    g = df.select(F.col("doc_id"), F.posexplode(grams).alias("pos", "gram"))
     h = _md5_long(F.col("gram")) % F.lit(_WINNOW_HMOD)
     key = h * F.lit(_WINNOW_POSCAP) + (F.lit(_WINNOW_POSCAP - 1) - F.col("pos"))
-    win = Window.partitionBy(id_col).orderBy("pos").rowsBetween(-(w - 1), 0)
-    part = Window.partitionBy(id_col)
+    win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(w - 1), 0)
+    part = Window.partitionBy("doc_id")
     sel = g.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("pos"),
         F.min(key).over(win).alias("skey"),
         F.max("pos").over(part).alias("maxpos"),
@@ -1199,7 +1131,7 @@ def winnow_fingerprints(
     # integer `div`, NOT `/`: skey reaches ~2^60 and a double round-trip
     # (plain division) loses bits above 2^53
     return sel.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.expr(f"skey div {_WINNOW_POSCAP}").alias("fp"),
         (F.lit(_WINNOW_POSCAP - 1) - F.col("skey") % F.lit(_WINNOW_POSCAP)).alias("fp_pos"),
     ).distinct()
@@ -1207,8 +1139,6 @@ def winnow_fingerprints(
 
 def winnow_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     w: int = 4,
     min_shared: int = 2,
@@ -1221,7 +1151,7 @@ def winnow_pairs(
     broadcast anti-join BEFORE the self-join (the same stop-gram treatment as
     ``ngram_jaccard_pairs`` — at web scale a viral footer fingerprint would
     otherwise emit a quadratic bucket)."""
-    fps = winnow_fingerprints(df, text_col, id_col, k, w).select(id_col, "fp").distinct()
+    fps = winnow_fingerprints(df, k, w).select("doc_id", "fp").distinct()
     hot = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_df")).filter(
         F.col("_df") > max_fp_docs
     ).select("fp")
@@ -1229,9 +1159,9 @@ def winnow_pairs(
     a = cold.alias("a")
     b = cold.alias("b")
     return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -1241,8 +1171,6 @@ def winnow_pairs(
 def incremental_dedup(
     new_df: DataFrame,
     corpus_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     within_batch: bool = True,
 ) -> DataFrame:
     """Incremental ingest dedup: drop new documents whose normalized text
@@ -1256,7 +1184,7 @@ def incremental_dedup(
     combined agg); the check is a left-anti equi-join on the key — when the
     new batch is small relative to the corpus, Spark builds the hash side
     from the BATCH, so the corpus streams through unbuffered. No window."""
-    key = F.md5(normalize_text(F.col(text_col)).cast("binary"))
+    key = F.md5(normalize_text(F.col("text")).cast("binary"))
     corpus_keys = corpus_df.select(key.alias("dup_key")).distinct()
     fresh = new_df.withColumn("dup_key", key).join(
         corpus_keys, "dup_key", "left_anti"
@@ -1267,34 +1195,10 @@ def incremental_dedup(
         # untouched; there is nothing to dedup a null payload against.
         nulls = fresh.filter(F.col("dup_key").isNull())
         keyed = fresh.filter(F.col("dup_key").isNotNull())
-        reps = keyed.groupBy("dup_key").agg(F.min(id_col).alias("_rep"))
-        keyed = keyed.join(reps, "dup_key").filter(F.col(id_col) == F.col("_rep")).drop("_rep")
+        reps = keyed.groupBy("dup_key").agg(F.min("doc_id").alias("_rep"))
+        keyed = keyed.join(reps, "dup_key").filter(F.col("doc_id") == F.col("_rep")).drop("_rep")
         fresh = keyed.unionByName(nulls)
     return fresh
-
-
-def stream_exact_dedup(
-    df: "DataFrame",
-    time_col: str = "event_time",
-    watermark: str = "1 hour",
-    key_cols: list[str] | None = None,
-    text_col: str = "text",
-) -> "DataFrame":
-    """Streaming exact dedup: drop rows whose normalized-text key (or explicit
-    ``key_cols``) was already seen within the watermark horizon.
-
-    ``dropDuplicatesWithinWatermark`` keeps dedup state BOUNDED — keys older
-    than the watermark are evicted, which is the only way streaming dedup
-    survives an unbounded corpus (the batch twin, exact_dedup, keeps the whole
-    key space because a batch is finite). At-least-once semantics across
-    restarts: the streaming checkpoint replays the source offsets and the
-    state store restores seen-keys."""
-    keyed = df
-    if key_cols is None:
-        keyed = df.withColumn("__dedup_key__", normalize_text(F.col(text_col)))
-        key_cols = ["__dedup_key__"]
-    out = keyed.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-    return out.drop("__dedup_key__") if "__dedup_key__" in out.columns else out
 
 
 def _bloom_positions(key: Column, m_bits: int, k: int) -> list[Column]:
@@ -1309,12 +1213,7 @@ def _bloom_positions(key: Column, m_bits: int, k: int) -> list[Column]:
     ]
 
 
-def bloom_bitmap(
-    corpus_df: DataFrame,
-    text_col: str = "text",
-    m_bits: int = 16384,
-    k: int = 3,
-) -> DataFrame:
+def bloom_bitmap(corpus_df: DataFrame, m_bits: int = 16384, k: int = 3) -> DataFrame:
     """Build a packed Bloom-filter bitmap over the corpus's normalized-text
     keys as a DataFrame of (word_idx, mask) rows — ≤ ceil(m/63) rows total
     REGARDLESS of corpus size, so the membership side always broadcasts.
@@ -1327,7 +1226,7 @@ def bloom_bitmap(
     the price of a deterministic false-positive rate — the classic
     dedup-at-ingest tradeoff (maybe-dup rows go to the exact checker;
     definitely-new rows skip it)."""
-    key = F.md5(normalize_text(F.col(text_col)).cast("binary"))
+    key = F.md5(normalize_text(F.col("text")).cast("binary"))
     pos = F.explode(F.array(*_bloom_positions(key, m_bits, k))).alias("pos")
     return (
         corpus_df.select(pos)
@@ -1343,11 +1242,8 @@ def bloom_bitmap(
 def bloom_membership(
     batch_df: DataFrame,
     bitmap_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     m_bits: int = 16384,
     k: int = 3,
-    out: str = "maybe_dup",
 ) -> DataFrame:
     """Probe a ``bloom_bitmap`` with a new ingest batch: a row is
     ``maybe_dup`` iff ALL k of its key's bit positions are set (Bloom
@@ -1358,41 +1254,36 @@ def bloom_membership(
     bitmap on word_idx (the bitmap is ≤ m/63 rows by construction), and one
     map-side-combined min() agg per doc ANDs the k probes back together — the
     corpus itself is never touched."""
-    key = F.md5(normalize_text(F.col(text_col)).cast("binary"))
+    key = F.md5(normalize_text(F.col("text")).cast("binary"))
     probes = batch_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.array(*_bloom_positions(key, m_bits, k))).alias("pos"),
     ).select(
-        id_col,
+        "doc_id",
         (F.col("pos") / 63).cast("long").alias("word_idx"),
         (F.col("pos") % 63).cast("int").alias("bit"),
     )
     hit = (
         probes.join(F.broadcast(bitmap_df), "word_idx", "left")
         .select(
-            id_col,
+            "doc_id",
             F.expr(
                 "case when (shiftright(coalesce(mask, cast(0 as bigint)), bit) & 1) = 1"
                 " then 1 else 0 end"
             ).alias("_hit"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.min("_hit").alias("_all_hit"))
     )
-    return batch_df.join(hit, id_col).withColumn(
-        out, F.col("_all_hit") == 1
+    return batch_df.join(hit, "doc_id").withColumn(
+        "maybe_dup", F.col("_all_hit") == 1
     ).drop("_all_hit")
 
 
-def cluster_survivors(
-    clusters: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "n_chars",
-) -> DataFrame:
+def cluster_survivors(clusters: DataFrame, docs: DataFrame) -> DataFrame:
     """Keep-one policy over resolved dup clusters — the step an actual dedup
     pipeline runs after ``dup_clusters``: per cluster, the survivor is the
-    highest-``score_col`` member (ties: smallest id); every other member is
+    highest-``n_chars`` member (ties: smallest id); every other member is
     marked ``is_drop``. Rows: (doc_id, rep_doc_id, survivor_doc_id,
     survivor_score, is_drop).
 
@@ -1400,25 +1291,25 @@ def cluster_survivors(
     the label — all partial-aggregated map-side; no window (the classic
     ``row_number() over (partition by cluster order by score)`` form sorts
     every cluster; max-then-min-id does not)."""
-    m = clusters.select(id_col, "rep_doc_id").join(
-        docs.select(id_col, score_col), id_col
+    m = clusters.select("doc_id", "rep_doc_id").join(
+        docs.select("doc_id", "n_chars"), "doc_id"
     )
-    best = m.groupBy("rep_doc_id").agg(F.max(score_col).alias("survivor_score"))
+    best = m.groupBy("rep_doc_id").agg(F.max("n_chars").alias("survivor_score"))
     surv = (
         m.join(best, "rep_doc_id")
-        .filter(F.col(score_col) == F.col("survivor_score"))
+        .filter(F.col("n_chars") == F.col("survivor_score"))
         .groupBy("rep_doc_id")
-        .agg(F.min(id_col).alias("survivor_doc_id"))
+        .agg(F.min("doc_id").alias("survivor_doc_id"))
     )
     return (
         m.join(best, "rep_doc_id")
         .join(surv, "rep_doc_id")
         .select(
-            id_col,
+            "doc_id",
             "rep_doc_id",
             "survivor_doc_id",
             F.col("survivor_score").cast("long").alias("survivor_score"),
-            (F.col(id_col) != F.col("survivor_doc_id")).alias("is_drop"),
+            (F.col("doc_id") != F.col("survivor_doc_id")).alias("is_drop"),
         )
     )
 
@@ -1428,8 +1319,6 @@ def semdedup(
     k: int = 8,
     iters: int = 1,
     tau: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cache: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup via k-means clustering of
@@ -1467,7 +1356,7 @@ def semdedup(
     ``cache=False`` to recompute instead of caching (ADVICE r4: repeated
     calls otherwise accumulate executor storage for the session lifetime)."""
     v = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_e")
+        F.col("vec_id").alias("_id"), F.col("embedding").cast("array<double>").alias("_e")
     )
     l2 = F.sqrt(F.aggregate("_e", F.lit(0.0), lambda a, x: a + x * x))
     v = v.select("_id", F.transform("_e", lambda x: x / l2).alias("_v"))
@@ -1532,7 +1421,7 @@ def semdedup(
     out = (
         final.join(best, (final["_id"] == best["_id_b"]) & (final["_cid"] == best["_cid"]), "left")
         .select(
-            final["_id"].alias(id_col),
+            final["_id"].alias("vec_id"),
             final["_cid"].alias("cluster"),
             F.coalesce(F.col("max_earlier_cos") >= F.lit(tau), F.lit(False)).alias("is_dup"),
             "max_earlier_cos",

@@ -64,7 +64,6 @@ def dict_map(
     dest_key: str,
     missing: str | None = None,
     mode: str = "overwrite",  # overwrite | fill (only-if-absent)
-    fields_col: str = "fields",
     source_is_field: bool = True,
 ) -> DataFrame:
     """Lookup-table enrich from ``lookup``: a Python ``dict`` or a
@@ -78,7 +77,7 @@ def dict_map(
     ``dest_key`` is absent; ``missing`` is the HandleMissing default
     (.go:148-186; None → leave row unenriched).
     """
-    src = F.col(fields_col)[source_key] if source_is_field else F.col(source_key)
+    src = F.col("fields")[source_key] if source_is_field else F.col(source_key)
     if isinstance(lookup, dict):
         pairs = [F.lit(x) for kv in lookup.items() if kv[0] is not None for x in kv]
         joined, mapped = df, F.create_map(*pairs)[src] if pairs else F.lit(None).cast("string")
@@ -89,44 +88,40 @@ def dict_map(
     if missing is not None:
         # HandleMissing fills only rows that HAVE the source key
         mapped = F.when(src.isNotNull(), F.coalesce(mapped, F.lit(missing)))
-    base = F.col(fields_col)
+    base = F.col("fields")
     if mode == "fill":
         new_val = F.coalesce(base[dest_key], mapped)
     else:
         new_val = mapped
     out_map = _set_field(base, dest_key, new_val, new_val.isNotNull())
-    return joined.withColumn(fields_col, out_map).drop("__dm_key", "__dm_val")
+    return joined.withColumn("fields", out_map).drop("__dm_key", "__dm_val")
 
 
-def rename_keys(
-    df: DataFrame, source_keys: list[str], dest_keys: list[str], fields_col: str = "fields"
-) -> DataFrame:
+def rename_keys(df: DataFrame, source_keys: list[str], dest_keys: list[str]) -> DataFrame:
     """processor_rename: positional key rename inside the fields map."""
     mapping = dict(zip(source_keys, dest_keys))
     pairs = [x for kv in mapping.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
     lookup = F.create_map(*pairs)
     renamed = F.transform(
-        F.map_entries(F.col(fields_col)),
+        F.map_entries(F.col("fields")),
         lambda e: F.struct(
             F.coalesce(lookup[e["key"]], e["key"]).alias("key"), e["value"].alias("value")
         ),
     )
     # renaming onto an existing key must not crash map construction → last-wins
-    return df.withColumn(fields_col, F.map_from_entries(_dedup_entries_last_wins(renamed)))
+    return df.withColumn("fields", F.map_from_entries(_dedup_entries_last_wins(renamed)))
 
 
-def add_fields(
-    df: DataFrame, fields: dict[str, str], ignore_if_exist: bool = False, fields_col: str = "fields"
-) -> DataFrame:
+def add_fields(df: DataFrame, fields: dict[str, str], ignore_if_exist: bool = False) -> DataFrame:
     """processor_add_fields: append constant fields."""
     add = F.create_map(*[F.lit(x) for kv in fields.items() for x in kv])
-    base = F.col(fields_col)
+    base = F.col("fields")
     if ignore_if_exist:
         # keys already in base are filtered from `add` → concat stays disjoint
         # (key-presence check, not value-null check: null-valued keys count)
         add = F.map_filter(add, lambda k, _: ~F.array_contains(F.map_keys(base), k))
-        return df.withColumn(fields_col, F.map_concat(base, add))
-    return df.withColumn(fields_col, merge_maps(base, add))
+        return df.withColumn("fields", F.map_concat(base, add))
+    return df.withColumn("fields", merge_maps(base, add))
 
 
 # processor_appender / processor_cloud_meta metadata source. The reference
@@ -197,7 +192,6 @@ def appender(
     df: DataFrame,
     key: str,
     value: str,
-    fields_col: str = "fields",
     sort_labels: bool = False,
     template_vars: dict | None = None,
 ) -> DataFrame:
@@ -207,11 +201,11 @@ def appender(
     resulting ``k#$#v|…`` label string by key (.go:93-105)."""
     if "{{" in value:
         value = expand_appender_template(value, **(template_vars or {}))
-    base = F.col(fields_col)
+    base = F.col("fields")
     new = F.concat(F.coalesce(base[key], F.lit("")), F.lit(value))
     if sort_labels:
         new = sort_labels_value(new)
-    return df.withColumn(fields_col, _set_field(base, key, new, F.lit(True)))
+    return df.withColumn("fields", _set_field(base, key, new, F.lit(True)))
 
 
 def desensitize_const(
@@ -220,7 +214,6 @@ def desensitize_const(
     regex: str,
     replacement: str,
     replace_all: bool = True,
-    fields_col: str = "fields",
     source_is_field: bool = True,
 ) -> DataFrame:
     """processor_desensitize const mode: regex redaction → constant
@@ -241,10 +234,10 @@ def desensitize_const(
         return F.when(pos > 0, stitched).otherwise(cur)
 
     if source_is_field:
-        base = F.col(fields_col)
+        base = F.col("fields")
         cur = base[key]
         new = F.regexp_replace(cur, regex, replacement) if replace_all else first_only(cur)
-        return df.withColumn(fields_col, _set_field(base, key, new, cur.isNotNull()))
+        return df.withColumn("fields", _set_field(base, key, new, cur.isNotNull()))
     new = F.regexp_replace(F.col(key), regex, replacement) if replace_all else first_only(F.col(key))
     return df.withColumn(key, new)
 
@@ -259,7 +252,7 @@ def _md5_sub(series: pd.Series, pattern: str) -> pd.Series:
 
 
 def desensitize_md5(
-    df: DataFrame, key: str, regex: str, fields_col: str = "fields", source_is_field: bool = True
+    df: DataFrame, key: str, regex: str, source_is_field: bool = True
 ) -> DataFrame:
     """processor_desensitize md5 mode: matched segment → md5 hex
     (ProcessorDesensitizeNative.cpp:208-248). Pandas UDF (needs callback sub)."""
@@ -272,10 +265,10 @@ def desensitize_md5(
         # the UDF result must land in a real column first: Spark forbids
         # Python-UDF references inside higher-order-function lambdas, and
         # _set_field's structural filter is one
-        out = df.withColumn("__dsm_val__", md5_sub_udf(F.col(fields_col)[key]))
-        base = F.col(fields_col)
+        out = df.withColumn("__dsm_val__", md5_sub_udf(F.col("fields")[key]))
+        base = F.col("fields")
         return out.withColumn(
-            fields_col, _set_field(base, key, F.col("__dsm_val__"), base[key].isNotNull())
+            "fields", _set_field(base, key, F.col("__dsm_val__"), base[key].isNotNull())
         ).drop("__dsm_val__")
     return df.withColumn(key, md5_sub_udf(F.col(key)))
 
@@ -287,11 +280,10 @@ def string_replace(
     match: str = "",
     replacement: str = "",
     dest_key: str | None = None,
-    fields_col: str = "fields",
 ) -> DataFrame:
     """processor_string_replace: regex | const | unquote
     (plugins/processor/stringreplace/processor_string_replace.go:41-55)."""
-    base = F.col(fields_col)
+    base = F.col("fields")
     cur = base[key]
     if method == "regex":
         new = F.regexp_replace(cur, match, replacement)
@@ -302,7 +294,7 @@ def string_replace(
     else:
         raise ValueError(f"unknown method {method!r}")
     dk = dest_key or key
-    return df.withColumn(fields_col, _set_field(base, dk, new, cur.isNotNull()))
+    return df.withColumn("fields", _set_field(base, dk, new, cur.isNotNull()))
 
 
 # Go base64.StdEncoding shape: 4-char groups, exact '='/'==' tail padding.
@@ -310,7 +302,7 @@ def string_replace(
 _B64_STRICT = r"(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?"
 
 
-def base64_field(df: DataFrame, key: str, dest_key: str, decode: bool = False, fields_col: str = "fields") -> DataFrame:
+def base64_field(df: DataFrame, key: str, dest_key: str, decode: bool = False) -> DataFrame:
     """processor_base64_encoding/_decoding.
 
     Encode strips the CRLF chunking Spark's ``base64`` inserts every 76 chars
@@ -325,7 +317,7 @@ def base64_field(df: DataFrame, key: str, dest_key: str, decode: bool = False, f
     Spark's own base64 parser is MIME-lenient (skips ALL whitespace, accepts
     missing padding; probed) and ``unbase64`` is worse (decodes invalid
     input to garbage bytes)."""
-    base = F.col(fields_col)
+    base = F.col("fields")
     cur = base[key]
     if decode:
         cleaned = F.regexp_replace(cur, "[\r\n]", "")
@@ -335,23 +327,23 @@ def base64_field(df: DataFrame, key: str, dest_key: str, decode: bool = False, f
         )
     else:
         new = F.regexp_replace(F.base64(cur.cast("binary")), "[\r\n]", "")
-    return df.withColumn(fields_col, _set_field(base, dest_key, new, cur.isNotNull()))
+    return df.withColumn("fields", _set_field(base, dest_key, new, cur.isNotNull()))
 
 
-def md5_field(df: DataFrame, key: str, dest_key: str, fields_col: str = "fields") -> DataFrame:
+def md5_field(df: DataFrame, key: str, dest_key: str) -> DataFrame:
     """processor_md5: md5 hex of field value."""
-    base = F.col(fields_col)
+    base = F.col("fields")
     cur = base[key]
     return df.withColumn(
-        fields_col, _set_field(base, dest_key, F.md5(cur.cast("binary")), cur.isNotNull())
+        "fields", _set_field(base, dest_key, F.md5(cur.cast("binary")), cur.isNotNull())
     )
 
 
-def pack_json(df: DataFrame, source_keys: list[str], dest_key: str, fields_col: str = "fields") -> DataFrame:
+def pack_json(df: DataFrame, source_keys: list[str], dest_key: str) -> DataFrame:
     """processor_packjson: pack listed fields into one JSON object string."""
-    base = F.col(fields_col)
+    base = F.col("fields")
     obj = F.to_json(F.struct(*[base[k].alias(k) for k in source_keys]))
-    return df.withColumn(fields_col, _set_field(base, dest_key, obj, F.lit(True)))
+    return df.withColumn("fields", _set_field(base, dest_key, obj, F.lit(True)))
 
 
 def gotime(
@@ -362,9 +354,7 @@ def gotime(
     dest_format: str,
     source_tz: str = "UTC",
     dest_tz: str = "UTC",
-    fields_col: str = "fields",
     set_time: bool = True,
-    time_col: str = "event_time",
     go_layout: bool = False,
 ) -> DataFrame:
     """processor_gotime: parse SourceKey with a time format, reformat into
@@ -373,7 +363,7 @@ def gotime(
     ``go_layout=True`` the formats are Go reference layouts exactly as a
     reference config writes them (``"2006-01-02 15:04:05"``), translated via
     :mod:`.gotime_layout`; otherwise raw Spark/JDK patterns."""
-    base = F.col(fields_col)
+    base = F.col("fields")
     src_val = base[source_key]
     if go_layout:
         from .gotime_layout import (
@@ -394,10 +384,10 @@ def gotime(
         dest_format = go_layout_to_spark(dest_format)
     ts = F.to_utc_timestamp(F.try_to_timestamp(src_val, F.lit(source_format)), source_tz)
     formatted = F.date_format(F.from_utc_timestamp(ts, dest_tz), dest_format)
-    out = df.withColumn(fields_col, _set_field(base, dest_key, formatted, formatted.isNotNull()))
+    out = df.withColumn("fields", _set_field(base, dest_key, formatted, formatted.isNotNull()))
     if set_time:
-        prev = F.col(time_col) if time_col in df.columns else F.lit(None).cast("timestamp")
-        out = out.withColumn(time_col, F.coalesce(ts, prev))
+        prev = F.col("event_time") if "event_time" in df.columns else F.lit(None).cast("timestamp")
+        out = out.withColumn("event_time", F.coalesce(ts, prev))
     return out
 
 
@@ -405,16 +395,15 @@ def anchor(
     df: DataFrame,
     anchors: list[dict],
     source_key: str = "content",
-    fields_col: str = "fields",
     source_is_field: bool = False,
 ) -> DataFrame:
     """processor_anchor: substring extraction between Start/Stop anchor strings
     per ``{"start":…, "stop":…, "field":…}`` (plugins/processor/anchor/
     anchor.go:46). Empty start → begin of line; empty stop → end of line."""
-    src = F.col(fields_col)[source_key] if source_is_field else F.col(source_key)
+    src = F.col("fields")[source_key] if source_is_field else F.col(source_key)
     base = (
-        F.coalesce(F.col(fields_col), F.create_map().cast("map<string,string>"))
-        if fields_col in df.columns
+        F.coalesce(F.col("fields"), F.create_map().cast("map<string,string>"))
+        if "fields" in df.columns
         else F.create_map().cast("map<string,string>")
     )
     pairs = []
@@ -450,18 +439,18 @@ def anchor(
         F.map_from_entries(_dedup_entries_last_wins(arr)),
         F.create_map().cast("map<string,string>"),
     )
-    return df.withColumn(fields_col, merge_maps(base, add))
+    return df.withColumn("fields", merge_maps(base, add))
 
 
 def encrypt_fields(
-    df: DataFrame, keys: list[str], key_hex: str, iv_hex: str | None = None, fields_col: str = "fields"
+    df: DataFrame, keys: list[str], key_hex: str, iv_hex: str | None = None
 ) -> DataFrame:
     """processor_encrypt: AES-CBC encrypt listed fields, hex output
     (plugins/processor/encrypt/processor_encrypt.go:41). Native aes_encrypt.
     NOTE: Spark prepends the IV to CBC output — the bytes after the 16-byte
     prefix are the OpenSSL-compatible ciphertext (known-answer test in
     tests/test_parsers.py::test_encrypt_known_answer)."""
-    base = F.col(fields_col)
+    base = F.col("fields")
     key_b = F.unhex(F.lit(key_hex))
     iv_b = F.unhex(F.lit(iv_hex)) if iv_hex else F.lit(b"")
     m = base
@@ -469,19 +458,19 @@ def encrypt_fields(
         cur = m[k]
         enc = F.hex(F.aes_encrypt(cur.cast("binary"), key_b, F.lit("CBC"), F.lit("PKCS"), iv_b))
         m = _set_field(m, k, enc, cur.isNotNull())
-    return df.withColumn(fields_col, m)
+    return df.withColumn("fields", m)
 
 
-def add_tags(df: DataFrame, tags: dict[str, str], tags_col: str = "tags") -> DataFrame:
+def add_tags(df: DataFrame, tags: dict[str, str]) -> DataFrame:
     """processor_tag_native: inject host/env tags as group tags
     (core/plugin/processor/inner/ProcessorTagNative.cpp:44-120)."""
     add = F.create_map(*[F.lit(x) for kv in tags.items() for x in kv])
-    if tags_col in df.columns:
+    if "tags" in df.columns:
         return df.withColumn(
-            tags_col,
-            merge_maps(F.coalesce(F.col(tags_col), F.create_map().cast("map<string,string>")), add),
+            "tags",
+            merge_maps(F.coalesce(F.col("tags"), F.create_map().cast("map<string,string>")), add),
         )
-    return df.withColumn(tags_col, add)
+    return df.withColumn("tags", add)
 
 
 def log_to_metric(
@@ -489,12 +478,11 @@ def log_to_metric(
     metric_values: dict[str, str],  # name field -> value field (or name literal -> value field)
     label_keys: list[str],
     time_key: str | None = None,
-    fields_col: str = "fields",
 ) -> DataFrame:
     """processor_log_to_sls_metric: reshape log rows into metric rows with
     ``__name__``, ``__value__``, sorted ``__labels__`` (k#$#v|...), ``__time_nano__``.
     Name/label validation regexes mirror .go:32-56."""
-    base = F.col(fields_col)
+    base = F.col("fields")
     labels = F.array_join(
         F.array_sort(F.array(*[F.concat(F.lit(k), F.lit("#$#"), F.coalesce(base[k], F.lit(""))) for k in label_keys])),
         "|",
@@ -554,7 +542,6 @@ def geoip(
     keep_source: bool = True,
     ip_value_flag: bool = False,
     no_coordinate: bool = False,
-    fields_col: str = "fields",
     source_is_field: bool = True,
 ) -> DataFrame:
     """processor_geoip (plugins/processor/geoip/processor_geoip.go:35-165)
@@ -572,7 +559,7 @@ def geoip(
     only when the geo column is non-null. ``ip_value_flag`` treats the source
     as a LITTLE-endian decimal IP (inetNtoa, .go:113-121);
     ``keep_source=False`` drops the source key (.go:98-104)."""
-    src = F.col(fields_col)[source_key] if source_is_field else F.col(source_key)
+    src = F.col("fields")[source_key] if source_is_field else F.col(source_key)
     if ip_value_flag:
         n = src.try_cast("long")  # non-numeric → null (ANSI mode), mirrors inetNtoa's Atoi
         ip_long = F.when(
@@ -615,13 +602,13 @@ def geoip(
             (f"{source_key}_longitude_", coord("longitude")),
             (f"{source_key}_latitude_", coord("latitude")),
         ]
-    base = F.coalesce(F.col(fields_col), F.create_map().cast("map<string,string>"))
+    base = F.coalesce(F.col("fields"), F.create_map().cast("map<string,string>"))
     if source_is_field and not keep_source:
         base = F.map_from_entries(
             F.filter(F.map_entries(base), lambda e: e["key"] != F.lit(source_key))
         )
     add = _entries_map(*[_opt_entry(k, v, v.isNotNull()) for k, v in emit])
-    out = joined.withColumn(fields_col, merge_maps(base, add))
+    out = joined.withColumn("fields", merge_maps(base, add))
     return out.drop("__geo", "__blk", "__ip_long", "__ip_blk")
 
 
@@ -631,7 +618,6 @@ def cloud_meta(
     rename: dict[str, str] | None = None,
     json_path: str | None = None,
     provider: dict[str, str] | None = None,
-    fields_col: str = "fields",
 ) -> DataFrame:
     """processor_cloud_meta (plugins/processor/cloudmeta/cloud_meta.go:33-140).
 
@@ -650,9 +636,9 @@ def cloud_meta(
     rename = rename or {}
     meta = {rename.get(k, k): src[k] for k in metadata if k in src}
     add = F.create_map(*[F.lit(x) for kv in meta.items() for x in kv])
-    base = F.coalesce(F.col(fields_col), F.create_map().cast("map<string,string>"))
+    base = F.coalesce(F.col("fields"), F.create_map().cast("map<string,string>"))
     if json_path is None:
-        return df.withColumn(fields_col, merge_maps(base, add))
+        return df.withColumn("fields", merge_maps(base, add))
     field_key, *inner_path = json_path.split(".")
     if not inner_path:
         obj = F.coalesce(
@@ -660,7 +646,7 @@ def cloud_meta(
             F.create_map().cast("map<string,string>"),
         )
         packed = F.to_json(merge_maps(obj, add))
-        return df.withColumn(fields_col, _set_field(base, field_key, packed, F.lit(True)))
+        return df.withColumn("fields", _set_field(base, field_key, packed, F.lit(True)))
 
     import json as _json
 
@@ -692,5 +678,5 @@ def cloud_meta(
     tmp = "__cloud_meta_packed__"
     out = df.withColumn(tmp, insert_nested(base[field_key]))
     return out.withColumn(
-        fields_col, _set_field(base, field_key, F.col(tmp), F.lit(True))
+        "fields", _set_field(base, field_key, F.col(tmp), F.lit(True))
     ).drop(tmp)

@@ -68,23 +68,22 @@ def compile_condition(node: dict, fields_col: str = "fields", df_cols: list[str]
     return val.isNotNull() & val.rlike(node["exp"])
 
 
-def filter_expression(df: DataFrame, tree: dict, fields_col: str = "fields") -> DataFrame:
-    return df.filter(compile_condition(tree, fields_col, df.columns))
+def filter_expression(df: DataFrame, tree: dict) -> DataFrame:
+    return df.filter(compile_condition(tree, "fields", df.columns))
 
 
 def filter_include_exclude(
     df: DataFrame,
     include: dict[str, str] | None = None,
     exclude: dict[str, str] | None = None,
-    fields_col: str = "fields",
 ) -> DataFrame:
     """Keep rows where all Include key→regex match and no Exclude matches."""
     cond = F.lit(True)
     for k, r in (include or {}).items():
-        v = _field(fields_col, k, df.columns)
+        v = _field("fields", k, df.columns)
         cond = cond & v.isNotNull() & v.rlike(r)
     for k, r in (exclude or {}).items():
-        v = _field(fields_col, k, df.columns)
+        v = _field("fields", k, df.columns)
         cond = cond & ~(v.isNotNull() & v.rlike(r))
     return df.filter(cond)
 
@@ -93,13 +92,12 @@ def filter_key_regex(
     df: DataFrame,
     include: list[str] | None = None,
     exclude: list[str] | None = None,
-    fields_col: str = "fields",
 ) -> DataFrame:
     """Keep row iff every include regex matches SOME key name, none match
     exclude. Each ``exists`` is coalesced to False: on a NULL fields map the
     bare expression is NULL, and under an exclude-only config ``True & ~NULL``
     is NULL — the filter then DROPPED a row no exclude regex matched."""
-    keys = F.map_keys(F.col(fields_col))
+    keys = F.map_keys(F.col("fields"))
     cond = F.lit(True)
     for r in include or []:
         cond = cond & F.coalesce(F.exists(keys, lambda k: k.rlike(r)), F.lit(False))
@@ -166,11 +164,11 @@ def sanitize_non_utf8(df: DataFrame, col: str = "content") -> DataFrame:
     return df.withColumn(col, fix_bytes(F.col(col)))
 
 
-def drop_keys(df: DataFrame, keys: list[str], fields_col: str = "fields") -> DataFrame:
+def drop_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     """processor_drop: remove listed keys from the fields map."""
     key_arr = F.array(*[F.lit(k) for k in keys])
     return df.withColumn(
-        fields_col, F.map_filter(F.col(fields_col), lambda k, _: ~F.array_contains(key_arr, k))
+        "fields", F.map_filter(F.col("fields"), lambda k, _: ~F.array_contains(key_arr, k))
     )
 
 
@@ -178,33 +176,32 @@ def pick_keys(
     df: DataFrame,
     include: list[str] | None = None,
     exclude: list[str] | None = None,
-    fields_col: str = "fields",
     drop_empty_rows: bool = True,
 ) -> DataFrame:
     """processor_pick_key: whitelist then blacklist keys; drop rows left empty
     (processor_pick_key.go:67-96)."""
-    m = F.col(fields_col)
+    m = F.col("fields")
     if include:
         inc = F.array(*[F.lit(k) for k in include])
         m = F.map_filter(m, lambda k, _: F.array_contains(inc, k))
     if exclude:
         exc = F.array(*[F.lit(k) for k in exclude])
         m = F.map_filter(m, lambda k, _: ~F.array_contains(exc, k))
-    out = df.withColumn(fields_col, m)
+    out = df.withColumn("fields", m)
     if drop_empty_rows:
-        out = out.filter(F.size(F.col(fields_col)) > 0)
+        out = out.filter(F.size(F.col("fields")) > 0)
     return out
 
 
-def drop_last_key(df: DataFrame, drop_key: str, include: list[str], fields_col: str = "fields") -> DataFrame:
+def drop_last_key(df: DataFrame, drop_key: str, include: list[str]) -> DataFrame:
     """processor_drop_last_key: drop ``drop_key`` (typically raw) once all
     ``include`` keys exist (processor_drop_last_key.go:26)."""
-    m = F.col(fields_col)
+    m = F.col("fields")
     have_all = F.lit(True)
     for k in include:
         have_all = have_all & m[k].isNotNull()
     return df.withColumn(
-        fields_col,
+        "fields",
         F.when(have_all, F.map_filter(m, lambda k, _: k != F.lit(drop_key))).otherwise(m),
     )
 
@@ -213,7 +210,6 @@ def fields_with_condition(
     df: DataFrame,
     cases: list[dict],
     drop_if_not_match: bool = False,
-    fields_col: str = "fields",
 ) -> DataFrame:
     """processor_fields_with_condition: first matching case applies field actions.
 
@@ -225,7 +221,7 @@ def fields_with_condition(
     condition, logical combines them; defaults equals/and). Compiled to one
     chained when/otherwise over the fields map.
     """
-    base = F.col(fields_col)
+    base = F.col("fields")
 
     def case_cond(c: dict) -> Column:
         rel = c.get("relation_operator", "equals")
@@ -284,4 +280,4 @@ def fields_with_condition(
         for c in cases:
             keep = keep | case_cond(c)
         out = out.filter(keep)
-    return out.withColumn(fields_col, new_map)
+    return out.withColumn("fields", new_map)

@@ -291,7 +291,6 @@ def parse_grok(
     df: DataFrame,
     match_patterns: list[str],
     source_col: str = "content",
-    fields_col: str = "fields",
     lib: dict[str, str] | None = None,
     full_match: bool = False,
     opts: P.ParserOptions = P.ParserOptions(keep_source_on_success=True),
@@ -304,7 +303,7 @@ def parse_grok(
     the fields map stays string-typed (LogContents are strings), the typed
     projection is the Spark-native reading of the hint."""
     m, ok = grok_fields(F.col(source_col), match_patterns, lib, full_match, opts)
-    out = P._finalize_fields(df, m, ok, fields_col, opts)
+    out = P._finalize_fields(df, m, ok, opts)
     if not ignore_parse_failure:
         out = out.filter(F.col(P.PARSE_OK))
     if typed_columns:
@@ -315,5 +314,5 @@ def parse_grok(
         for f, t in hinted.items():
             # try_cast: a hinted field that fails the cast yields null rather
             # than an ANSI error (Spark 4 default ANSI mode)
-            out = out.withColumn(f, F.col(fields_col)[f].try_cast(t))
+            out = out.withColumn(f, F.col("fields")[f].try_cast(t))
     return out

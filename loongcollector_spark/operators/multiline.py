@@ -31,17 +31,14 @@ from pyspark.sql.window import Window
 def merge_multiline(
     df: DataFrame,
     start_pattern: str,
-    stream_col: str = "stream_id",
-    order_col: str = "line_no",
-    content_col: str = "content",
     unmatched: str = "single_line",  # single_line | discard
     joiner: str = "\n",
 ) -> DataFrame:
     """Merge continuation lines into events. Returns
     ``(stream_id, event_seq, line_no, content, n_lines)`` — ``line_no`` is the
     leader's line number, ``content`` the joined event text."""
-    is_start = F.col(content_col).rlike(start_pattern)
-    w = Window.partitionBy(stream_col).orderBy(order_col)
+    is_start = F.col("content").rlike(start_pattern)
+    w = Window.partitionBy("stream_id").orderBy("line_no")
     seq = F.sum(F.when(is_start, 1).otherwise(0)).over(
         w.rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -52,22 +49,22 @@ def merge_multiline(
         # single_line: each line BEFORE the first start match is its own event
         # (UnmatchedContentTreatment::SINGLE_LINE) — key those by line number
         tagged = tagged.withColumn(
-            "_solo", F.when(F.col("_evt") == 0, F.col(order_col)).otherwise(F.lit(None))
+            "_solo", F.when(F.col("_evt") == 0, F.col("line_no")).otherwise(F.lit(None))
         )
-    group_keys = [stream_col, "_evt"] + (["_solo"] if unmatched != "discard" else [])
+    group_keys = ["stream_id", "_evt"] + (["_solo"] if unmatched != "discard" else [])
     merged = (
         tagged.groupBy(*group_keys)
         .agg(
-            F.min(order_col).alias(order_col),
+            F.min("line_no").alias("line_no"),
             F.array_join(
                 F.transform(
                     F.array_sort(
-                        F.collect_list(F.struct(F.col(order_col).alias("o"), F.col(content_col).alias("c")))
+                        F.collect_list(F.struct(F.col("line_no").alias("o"), F.col("content").alias("c")))
                     ),
                     lambda s: s["c"],
                 ),
                 joiner,
-            ).alias(content_col),
+            ).alias("content"),
             F.count(F.lit(1)).alias("n_lines"),
         )
         .withColumnRenamed("_evt", "event_seq")
@@ -75,12 +72,7 @@ def merge_multiline(
     return merged.drop("_solo")
 
 
-def split_lines(
-    df: DataFrame,
-    content_col: str = "content",
-    stream_col: str = "stream_id",
-    split_char: str = "\n",
-) -> DataFrame:
+def split_lines(df: DataFrame, stream_col: str = "stream_id", split_char: str = "\n") -> DataFrame:
     """processor_split_string_native
     (core/plugin/processor/inner/ProcessorSplitLogStringNative.cpp:74-176):
     one event per line, line number preserved for downstream merge/order."""
@@ -88,14 +80,14 @@ def split_lines(
 
     # the reference splits on a LITERAL SplitChar; F.split takes a regex —
     # escape so '.', '|' etc. split on the character, not match-anything
-    lines = F.split(F.col(content_col), _re.escape(split_char), -1)
+    lines = F.split(F.col("content"), _re.escape(split_char), -1)
     exploded = df.withColumn(
         "_ln", F.explode(F.arrays_zip(F.sequence(F.lit(1), F.size(lines)).alias("line_no"), lines.alias("line")))
     )
     return (
-        exploded.drop(content_col)
+        exploded.drop("content")
         .withColumn("line_no", F.col("_ln.line_no"))
-        .withColumn(content_col, F.col("_ln.line"))
+        .withColumn("content", F.col("_ln.line"))
         .drop("_ln")
     )
 
@@ -103,7 +95,6 @@ def split_lines(
 def split_log_regex(
     df: DataFrame,
     split_regex: str,
-    content_col: str = "content",
     preserve_others: bool = True,
     joiner: str = "\n",
 ) -> DataFrame:
@@ -124,8 +115,8 @@ def split_log_regex(
     if not anchored.endswith("$"):
         anchored = anchored + "$"
     rid = F.monotonically_increasing_id()
-    lines = F.split(F.col(content_col), "\n", -1)
-    others = [c for c in df.columns if c != content_col] if preserve_others else []
+    lines = F.split(F.col("content"), "\n", -1)
+    others = [c for c in df.columns if c != "content"] if preserve_others else []
     exploded = (
         df.withColumn("__rid", rid)
         .select(
@@ -154,7 +145,7 @@ def split_log_regex(
                     lambda s: s["c"],
                 ),
                 joiner,
-            ).alias(content_col),
+            ).alias("content"),
             F.count(F.lit(1)).alias("n_lines"),
         )
         .withColumnRenamed("__evt", "event_seq")

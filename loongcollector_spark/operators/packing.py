@@ -27,20 +27,18 @@ def pack_chunks(
     ctx_len: int,
     count_col: str = "n_tok",
     shard_col: str = "source",
-    order_col: str = "doc_id",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-doc packing assignment: (id, shard, start_off, chunk_first,
     chunk_last, n_chunks).
 
     ``start_off`` is the document's first-token offset in its shard's
-    concatenated token stream (docs ordered by ``order_col``); chunk ids are
+    concatenated token stream (docs ordered by ``doc_id``); chunk ids are
     ``floor(offset / ctx_len)`` — a doc spans ``chunk_first..chunk_last``
     and contributes to ``n_chunks`` contexts. Deterministic: a pure function
     of (shard, order, counts), so reruns and the SQL oracle agree exactly."""
     w = (
         Window.partitionBy(shard_col)
-        .orderBy(order_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     start = F.coalesce(F.sum(count_col).over(w), F.lit(0)).cast("long")
@@ -52,7 +50,7 @@ def pack_chunks(
         .withColumn("chunk_last", F.floor(end / ctx_len))
     )
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(shard_col).alias("shard"),
         "start_off",
         "chunk_first",
@@ -61,14 +59,7 @@ def pack_chunks(
     )
 
 
-def chunk_sliding(
-    df: DataFrame,
-    window: int,
-    stride: int,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-    min_len: int = 1,
-) -> DataFrame:
+def chunk_sliding(df: DataFrame, window: int, stride: int, min_len: int = 1) -> DataFrame:
     """Sliding-window token chunking with overlap (the long-document
     alternative to concat-and-chunk packing: each document is cut into
     ``window``-token chunks every ``stride`` tokens, so consecutive chunks
@@ -87,7 +78,7 @@ def chunk_sliding(
     """
     if window < 1 or stride < 1:
         raise ValueError("window and stride must be >= 1")
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     if min_len > window:
         raise ValueError("min_len > window would reject every chunk")
     # the stride grid 1, 1+S, … capped at len enumerates every chunk start;
@@ -103,12 +94,12 @@ def chunk_sliding(
         ),
     ).otherwise(F.array().cast("array<int>"))
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(starts).alias("chunk_id", "chunk_start"),
         toks.alias("_t"),
     )
     return out.select(
-        id_col,
+        "doc_id",
         "chunk_id",
         "chunk_start",
         F.slice(F.col("_t"), F.col("chunk_start"), window).alias("chunk"),

@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 # data may contain \x01).
 _SEP = "\x01"
 
-PARSE_OK = "_parse_ok"  # transient bookkeeping column, dropped by finalize
+PARSE_OK = "_parse_ok"  # per-row parse outcome column
 
 _MAP_T = "map<string,string>"
 _ENTRY_T = "array<struct<key:string,value:string>>"
@@ -166,12 +166,12 @@ def _policy_entries(src: Column, ok: Column, enabled: Column | None, opts: Parse
 
 
 def _finalize_fields(
-    df: DataFrame, fields_map: Column, ok: Column, fields_col: str, opts: ParserOptions
+    df: DataFrame, fields_map: Column, ok: Column, opts: ParserOptions
 ) -> DataFrame:
-    if fields_col in df.columns:
+    if "fields" in df.columns:
         # chained parse: later parser's keys overwrite (last-wins, conf-free)
-        fields_map = merge_maps(F.coalesce(F.col(fields_col), _empty_map()), fields_map)
-    out = df.withColumn(fields_col, fields_map).withColumn(PARSE_OK, ok)
+        fields_map = merge_maps(F.coalesce(F.col("fields"), _empty_map()), fields_map)
+    out = df.withColumn("fields", fields_map).withColumn(PARSE_OK, ok)
     if not opts.keep_source_on_fail:
         out = out.filter(F.col(PARSE_OK))  # ShouldEraseEvent → drop unparseable rows
     return out
@@ -244,11 +244,10 @@ def parse_regex(
     regex: str,
     keys: list[str],
     source_col: str = "content",
-    fields_col: str = "fields",
     opts: ParserOptions = ParserOptions(),
 ) -> DataFrame:
     m, ok = regex_fields(F.col(source_col), regex, list(keys), opts)
-    return _finalize_fields(df, m, ok, fields_col, opts)
+    return _finalize_fields(df, m, ok, opts)
 
 
 # ---------------------------------------------------------------------------
@@ -281,11 +280,10 @@ def json_fields(
 def parse_json(
     df: DataFrame,
     source_col: str = "content",
-    fields_col: str = "fields",
     opts: ParserOptions = ParserOptions(),
 ) -> DataFrame:
     m, ok = json_fields(F.col(source_col), opts)
-    return _finalize_fields(df, m, ok, fields_col, opts)
+    return _finalize_fields(df, m, ok, opts)
 
 
 # ---------------------------------------------------------------------------
@@ -378,7 +376,6 @@ def parse_delimiter(
     keys: list[str],
     separator: str = "|",
     source_col: str = "content",
-    fields_col: str = "fields",
     overflow: str = "extend",
     allow_shortened: bool = False,
     quote: str | None = None,
@@ -392,7 +389,7 @@ def parse_delimiter(
             F.col(source_col), list(keys), separator, overflow, allow_shortened,
             max_extend_cols, opts,
         )
-    return _finalize_fields(df, m, ok, fields_col, opts)
+    return _finalize_fields(df, m, ok, opts)
 
 
 # ---------------------------------------------------------------------------
@@ -543,17 +540,11 @@ def apsara_fields(
     return _let(parts0, build_map), matched, ts
 
 
-def parse_apsara(
-    df: DataFrame,
-    source_col: str = "content",
-    fields_col: str = "fields",
-    time_col: str = "event_time",
-    opts: ParserOptions = ParserOptions(),
-) -> DataFrame:
-    m, ok, ts = apsara_fields(F.col(source_col), opts)
-    prev_ts = F.col(time_col) if time_col in df.columns else F.lit(None).cast("timestamp")
-    out = _finalize_fields(df, m, ok, fields_col, opts)
-    return out.withColumn(time_col, F.when(ok, ts).otherwise(prev_ts))
+def parse_apsara(df: DataFrame, opts: ParserOptions = ParserOptions()) -> DataFrame:
+    m, ok, ts = apsara_fields(F.col("content"), opts)
+    prev_ts = F.col("event_time") if "event_time" in df.columns else F.lit(None).cast("timestamp")
+    out = _finalize_fields(df, m, ok, opts)
+    return out.withColumn("event_time", F.when(ok, ts).otherwise(prev_ts))
 
 
 # ---------------------------------------------------------------------------
@@ -565,19 +556,17 @@ def parse_timestamp(
     source_key: str,
     fmt: str,
     source_is_field: bool = True,
-    fields_col: str = "fields",
-    time_col: str = "event_time",
     discard_before: str | None = None,
 ) -> DataFrame:
     """strptime SourceKey → event timestamp; ``discard_before`` mirrors dropping
     events older than ilogtail_discard_interval
     (ProcessorParseTimestampNative.cpp:125-171)."""
-    src = F.col(fields_col)[source_key] if source_is_field else F.col(source_key)
+    src = F.col("fields")[source_key] if source_is_field else F.col(source_key)
     ts = F.try_to_timestamp(src, F.lit(fmt))
-    prev = F.col(time_col) if time_col in df.columns else F.lit(None).cast("timestamp")
-    out = df.withColumn(time_col, F.coalesce(ts, prev))
+    prev = F.col("event_time") if "event_time" in df.columns else F.lit(None).cast("timestamp")
+    out = df.withColumn("event_time", F.coalesce(ts, prev))
     if discard_before is not None:
-        out = out.filter(F.col(time_col) >= F.lit(discard_before).cast("timestamp"))
+        out = out.filter(F.col("event_time") >= F.lit(discard_before).cast("timestamp"))
     return out
 
 
@@ -664,17 +653,11 @@ def kv_fields(
     )
 
 
-def split_key_value(
-    df: DataFrame,
-    delimiter: str = "\t",
-    separator: str = ":",
-    source_col: str = "content",
-    fields_col: str = "fields",
-) -> DataFrame:
-    parsed, matched = kv_fields(F.col(source_col), delimiter, separator)
-    if fields_col in df.columns:
-        parsed = merge_maps(F.coalesce(F.col(fields_col), _empty_map()), parsed)
-    return df.withColumn(fields_col, parsed).withColumn(PARSE_OK, matched)
+def split_key_value(df: DataFrame, delimiter: str = "\t", separator: str = ":") -> DataFrame:
+    parsed, matched = kv_fields(F.col("content"), delimiter, separator)
+    if "fields" in df.columns:
+        parsed = merge_maps(F.coalesce(F.col("fields"), _empty_map()), parsed)
+    return df.withColumn("fields", parsed).withColumn(PARSE_OK, matched)
 
 
 # ---------------------------------------------------------------------------
@@ -683,8 +666,6 @@ def split_key_value(
 
 def json_flatten(
     df: DataFrame,
-    source_col: str = "content",
-    fields_col: str = "fields",
     expand_depth: int = 0,  # 0 = unlimited (processor_json.go:29-41)
     connector: str = "_",
     prefix: str = "",
@@ -741,28 +722,22 @@ def json_flatten(
 
         return s.map(one)
 
-    if fields_col in df.columns:
+    if "fields" in df.columns:
         # merge_maps, not map_concat: a flattened key that collides with an
         # existing field must last-win structurally, not throw under the
         # driver's vanilla mapKeyDedupPolicy=EXCEPTION session. The UDF result
         # must land in a real column first — Spark rejects Python-UDF
         # references inside merge_maps' higher-order-function lambdas.
         tmp = "__json_flat__"
-        out = df.withColumn(tmp, _flatten(F.col(source_col)))
+        out = df.withColumn(tmp, _flatten(F.col("content")))
         ok = F.col(tmp).isNotNull()
         merged = merge_maps(
-            F.coalesce(F.col(fields_col), _empty_map()),
+            F.coalesce(F.col("fields"), _empty_map()),
             F.coalesce(F.col(tmp), _empty_map()),
         )
         return (
-            out.withColumn(fields_col, merged).withColumn(PARSE_OK, ok).drop(tmp)
+            out.withColumn("fields", merged).withColumn(PARSE_OK, ok).drop(tmp)
         )
-    parsed = _flatten(F.col(source_col))
+    parsed = _flatten(F.col("content"))
     ok = parsed.isNotNull()
-    return df.withColumn(fields_col, F.coalesce(parsed, _empty_map())).withColumn(PARSE_OK, ok)
-
-
-def finalize(df: DataFrame) -> DataFrame:
-    """Drop transient bookkeeping columns after the parse stage."""
-    drops = [c for c in df.columns if c == PARSE_OK]
-    return df.drop(*drops) if drops else df
+    return df.withColumn("fields", F.coalesce(parsed, _empty_map())).withColumn(PARSE_OK, ok)

@@ -77,16 +77,11 @@ def _unescape(v: Column) -> Column:
     return F.replace(s, F.lit(_SENTINEL + "2"), F.lit(_SENTINEL))
 
 
-def prom_parse(
-    df: DataFrame,
-    content_col: str = "content",
-    default_ts_ms: int = 0,
-    honor_timestamps: bool = True,
-) -> DataFrame:
+def prom_parse(df: DataFrame, default_ts_ms: int = 0, honor_timestamps: bool = True) -> DataFrame:
     """Parse one exposition line per row into
     ``(name, labels map<string,string>, value double, ts_ms bigint)``,
     dropping comment/blank/invalid lines; all other columns pass through."""
-    c = F.col(content_col)
+    c = F.col("content")
     stripped = F.regexp_replace(c, r"^[ \t]+", "")
     is_metric = (F.length(stripped) > 0) & ~stripped.startswith("#")
     shape_ok = c.rlike(_LINE)
@@ -135,7 +130,7 @@ def prom_parse(
         ts_ms = F.lit(default_ts_ms).cast("long")
 
     ok = is_metric & shape_ok & value.isNotNull() & (~has_ts | ts_ok)
-    keep = [col for col in df.columns if col != content_col]
+    keep = [col for col in df.columns if col != "content"]
     clash = sorted(set(keep) & {"name", "labels", "value", "ts_ms"})
     if clash:
         raise ValueError(
@@ -259,9 +254,7 @@ def _src_val(labels: Column, rule: RelabelRule) -> Column:
     return F.concat_ws(rule.separator, *vals)
 
 
-def prom_relabel(
-    df: DataFrame, rules: list[RelabelRule], labels_col: str = "labels"
-) -> DataFrame:
+def prom_relabel(df: DataFrame, rules: list[RelabelRule]) -> DataFrame:
     """Apply relabel rules in order (Relabel.cpp:141-252). Row-dropping
     actions (keep/drop/keepequal/dropequal/dropmetric) become filters; label
     rewrites fold into one map expression per rule.
@@ -356,9 +349,9 @@ def prom_relabel(
         full = f"^(?:{rule.regex})$"
         a = rule.action
         if a in ("keep", "drop", "keepequal", "dropequal", "dropmetric"):
-            out = out.filter(_let(F.col(labels_col), condition(rule, a, full)))
+            out = out.filter(_let(F.col("labels"), condition(rule, a, full)))
         else:
             out = out.withColumn(
-                labels_col, _let(F.col(labels_col), rewrite(rule, a, full))
+                "labels", _let(F.col("labels"), rewrite(rule, a, full))
             )
     return out

@@ -3,24 +3,15 @@ processor_rate_limit.go:26, token bucket plugins/processor/ratelimit/
 token_bucket.go:83-127): per distinct value-combination of ``Fields``, pass at
 most ``rate`` events per second.
 
-Two Spark-native forms:
-
-* ``rate_limit_batch`` — deterministic batch analog: at most N rows per key
-  per event-time window, earliest-first (row_number over (key, window)).
-  One shuffle on (key) — the window lives inside the partition ordering.
-* ``rate_limit_stream`` — true stateful streaming token bucket via
-  ``applyInPandasWithState``: state = (tokens, last_refill_ts) per key,
-  refilled from event-time deltas so replays are deterministic.
+``rate_limit_batch`` is the deterministic batch analog: at most N rows per
+key per event-time window, earliest-first (row_number over (key, window)).
+One shuffle on (key) — the window lives inside the partition ordering.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
@@ -42,55 +33,4 @@ def rate_limit_batch(
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= limit_per_window)
         .drop("_rn")
-    )
-
-
-def rate_limit_stream(
-    df: DataFrame,
-    key_cols: list[str],
-    rate_per_sec: float,
-    burst: float | None = None,
-    ts_col: str = "ts",
-):
-    """Streaming token bucket (token_bucket.go:83-127 semantics): bucket of
-    capacity ``burst`` (default = rate) refilled at ``rate_per_sec`` from
-    event-time progress; a row passes iff a token is available.
-
-    Returns the passed rows (same schema). State per key survives across
-    micro-batches via applyInPandasWithState."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    cap = burst if burst is not None else rate_per_sec
-    out_schema = df.schema
-    state_schema = T.StructType(
-        [T.StructField("tokens", T.DoubleType()), T.StructField("last_us", T.LongType())]
-    )
-
-    def _bucket(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            tokens, last_us = state.get
-        else:
-            tokens, last_us = float(cap), None
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            keep = []
-            for t in pd.to_datetime(pdf[ts_col]):
-                t_us = int(t.value // 1000)
-                if last_us is not None and t_us > last_us:
-                    tokens = min(cap, tokens + (t_us - last_us) / 1e6 * rate_per_sec)
-                last_us = t_us if last_us is None else max(last_us, t_us)
-                if tokens >= 1.0:
-                    tokens -= 1.0
-                    keep.append(True)
-                else:
-                    keep.append(False)
-            out = pdf[pd.Series(keep, index=pdf.index)]
-            if len(out):
-                yield out
-        state.update((float(tokens), int(last_us if last_us is not None else 0)))
-
-    return df.groupBy(*[F.col(k) for k in key_cols]).applyInPandasWithState(
-        _bucket, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

@@ -41,15 +41,13 @@ def route_rows(
     rules: list[RouteRule],
     source_key: str = "source",
     default_sink: str | None = "default",
-    route_col: str = "route",
-    fields_col: str = "fields",
 ) -> DataFrame:
     """First-match-wins anchored regex routing into a ``route`` column.
 
     ``default_sink=None`` reproduces DropDisMatch (aggregator_router.go:97-133):
     non-matching rows are dropped.
     """
-    src = F.col(source_key) if source_key in df.columns else F.col(fields_col)[source_key]
+    src = F.col(source_key) if source_key in df.columns else F.col("fields")[source_key]
     expr: Column | None = None
     for rule in rules:
         cond = src.isNotNull() & src.rlike(_anchor(rule.regex))
@@ -58,9 +56,9 @@ def route_rows(
         expr = F.lit(default_sink)
     else:
         expr = expr.otherwise(F.lit(default_sink))
-    out = df.withColumn(route_col, expr)
+    out = df.withColumn("route", expr)
     if default_sink is None:
-        out = out.filter(F.col(route_col).isNotNull())
+        out = out.filter(F.col("route").isNotNull())
     return out
 
 

@@ -77,7 +77,6 @@ def hash_split(
     df: DataFrame,
     key_col: str,
     splits: dict[str, float] | None = None,
-    out: str = "split",
     buckets: int = 10_000,
 ) -> DataFrame:
     """Deterministic train/val/test assignment: each row's split is a pure
@@ -98,12 +97,10 @@ def hash_split(
         thr = int(round(cum * buckets))
         cond = b < F.lit(thr)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return df.withColumn(out, expr.otherwise(F.lit(names[-1])))
+    return df.withColumn("split", expr.otherwise(F.lit(names[-1])))
 
 
-def deterministic_shuffle(
-    df: DataFrame, key_col: str, seed: int = 42, out: str = "shuffle_rank"
-) -> DataFrame:
+def deterministic_shuffle(df: DataFrame, key_col: str, seed: int = 42) -> DataFrame:
     """Seeded pseudo-random global permutation for training-data loaders:
     rank rows by md5(seed ‖ key) — reproducible across reruns/engines, unlike
     ``orderBy(rand())``. Ties (astronomically unlikely 60-bit collisions)
@@ -120,7 +117,7 @@ def deterministic_shuffle(
         10,
     ).cast("long")
     w = Window.orderBy(rank_key, F.col(key_col).cast("string"))
-    return df.withColumn(out, F.row_number().over(w))
+    return df.withColumn("shuffle_rank", F.row_number().over(w))
 
 
 def percentile_band_filter(
@@ -231,8 +228,6 @@ def token_budget_sample(
     default_budget: int,
     budgets: dict[str, int] | None = None,
     strata_col: str = "source",
-    count_col: str = "n_tok",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-source token-budget selection: within each stratum, documents are
     visited in deterministic hash order (md5 of the id — a reproducible
@@ -260,12 +255,12 @@ def token_budget_sample(
     Deterministic end-to-end, so the DuckDB oracle (one plain window) agrees
     row-for-row with the salted three-step plan.
     """
-    h = F.md5(F.col(id_col).cast("string"))
+    h = F.md5(F.col("doc_id").cast("string"))
     bucket = F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(strata_col).alias("stratum"),
-        F.col(count_col).cast("long").alias("_c"),
+        F.col("n_tok").cast("long").alias("_c"),
         h.alias("_h"),
         bucket.alias("_b"),
     )
@@ -297,5 +292,5 @@ def token_budget_sample(
         base.join(F.broadcast(offsets), ["stratum", "_b"])
         .withColumn("cum_tok", (F.col("_off") + F.sum("_c").over(w_in)).cast("long"))
         .filter(F.col("cum_tok") <= budget)
-        .select(id_col, "stratum", F.col("_c").alias(count_col), "cum_tok")
+        .select("doc_id", "stratum", F.col("_c").alias("n_tok"), "cum_tok")
     )

@@ -216,12 +216,12 @@ PB_LOG_SCHEMA = T.StructType(
 )
 
 
-def parse_sls_pb(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def parse_sls_pb(df: DataFrame) -> DataFrame:
     """Decode a binary column of serialized ``LogGroup`` blobs → one row per
     contained ``Log`` (group metadata denormalized onto every row, the
     PipelineEventGroup→rows mapping of SURVEY §1.1). Carries every other
     input column through; undecodable blobs are dropped."""
-    carry = [f for f in df.schema.fields if f.name != payload_col]
+    carry = [f for f in df.schema.fields if f.name != "payload"]
     pb_names = {f.name for f in PB_LOG_SCHEMA.fields}
     clash = sorted({f.name for f in carry} & pb_names)
     if clash:
@@ -239,7 +239,7 @@ def parse_sls_pb(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
-                blob = r[payload_col]
+                blob = r["payload"]
                 try:
                     g = decode_log_group(bytes(blob))
                 except Exception:

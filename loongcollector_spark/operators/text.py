@@ -32,18 +32,13 @@ def _words(col: Column) -> Column:
     return F.array_remove(F.split(F.trim(F.lower(col)), r"\s+", -1), "")
 
 
-def language_id(
-    df: DataFrame,
-    text_col: str = "text",
-    out: str = "lang_pred",
-    stopwords: dict[str, list[str]] | None = None,
-) -> DataFrame:
+def language_id(df: DataFrame, stopwords: dict[str, list[str]] | None = None) -> DataFrame:
     """Stopword-vote language ID: the language whose stopword list intersects
     the document's word set most wins; ties and zero hits → 'und'.
 
     One pass, native set ops — at 100 TB this is a projection, no shuffle."""
     sw = stopwords or STOPWORDS
-    words = F.array_distinct(_words(F.col(text_col)))
+    words = F.array_distinct(_words(F.col("text")))
     scores = {
         lang: F.size(F.array_intersect(words, F.array(*[F.lit(w) for w in lst])))
         for lang, lst in sw.items()
@@ -53,7 +48,7 @@ def language_id(
     pred = F.lit("und")
     for lang in reversed(list(scores)):
         pred = F.when((scores[lang] > 0) & (scores[lang] == best_score), F.lit(lang)).otherwise(pred)
-    return df.withColumn(out, pred)
+    return df.withColumn("lang_pred", pred)
 
 
 def quality_features(text: Column) -> dict[str, Column]:
@@ -76,10 +71,10 @@ def quality_features(text: Column) -> dict[str, Column]:
     }
 
 
-def quality_score(df: DataFrame, text_col: str = "text", out: str = "quality") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Composite [0,1] quality score: rewards stopword presence and moderate
     word length, penalizes punctuation soup and degenerate lengths."""
-    ft = quality_features(F.col(text_col))
+    ft = quality_features(F.col("text"))
     len_ok = (ft["n_words"] >= 5) & (ft["mean_word_len"] >= 2) & (ft["mean_word_len"] <= 12)
     score = (
         F.lit(0.4) * ft["stopword_ratio"] * 2.5
@@ -90,26 +85,22 @@ def quality_score(df: DataFrame, text_col: str = "text", out: str = "quality") -
     for name, expr in ft.items():
         if name not in df.columns:
             out_df = out_df.withColumn(name, expr)
-    return out_df.withColumn(out, F.round(F.least(score, F.lit(1.0)), 6))
+    return out_df.withColumn("quality", F.round(F.least(score, F.lit(1.0)), 6))
 
 
 # BPE-ish subword pieces: word chunks of up to 4 chars + single non-word marks.
 BPE_ISH = r"[A-Za-z0-9]{1,4}|[^A-Za-z0-9\s]"
 
 
-def token_count(
-    df: DataFrame, text_col: str = "text", ws_out: str = "n_ws_tokens", bpe_out: str = "n_bpe_tokens"
-) -> DataFrame:
+def token_count(df: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish subword count (regex piece model —
     deterministic stand-in for a real tokenizer's piece count)."""
-    return df.withColumn(ws_out, F.size(_words(F.col(text_col)))).withColumn(
-        bpe_out, F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH), 0))
+    return df.withColumn("n_ws_tokens", F.size(_words(F.col("text")))).withColumn(
+        "n_bpe_tokens", F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH), 0))
     )
 
 
-def vocab_topk(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 100
-) -> DataFrame:
+def vocab_topk(df: DataFrame, k: int = 100) -> DataFrame:
     """Corpus vocabulary: top-k words by total frequency with document
     frequency and a dense 1..k rank. Rows: (word, cnt, df_cnt, rank).
 
@@ -121,8 +112,8 @@ def vocab_topk(
     only, so its single-partition stage is k rows, never corpus-sized.
     Ties break on the word itself for determinism."""
     words = df.select(
-        F.col(id_col).alias("_doc"),
-        F.explode(F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ", -1)).alias("word"),
+        F.col("doc_id").alias("_doc"),
+        F.explode(F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ", -1)).alias("word"),
     ).filter(F.col("word") != "")
     vocab = words.groupBy("word").agg(
         F.count(F.lit(1)).alias("cnt"), F.countDistinct("_doc").alias("df_cnt")
@@ -143,29 +134,22 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def pii_redact(
-    df: DataFrame, text_col: str = "text", out: str = "text_redacted"
-) -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Scrub emails / IPv4s / international phone numbers, appending a
     per-category hit count. Pure chained ``regexp_replace`` +
     ``regexp_extract_all`` projections — scan-side at 100 TB, no shuffle, no
     Python. Counts are taken on the ORIGINAL text (before any replacement)
     so categories don't see each other's placeholder tokens."""
-    red = F.col(text_col)
+    red = F.col("text")
     for name, pat, repl in PII_PATTERNS:
         df = df.withColumn(
-            f"n_{name}", F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), 0))
+            f"n_{name}", F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 0))
         )
         red = F.regexp_replace(red, pat, repl)
-    return df.withColumn(out, red)
+    return df.withColumn("text_redacted", red)
 
 
-def repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
-) -> DataFrame:
+def repetition_stats(df: DataFrame, n: int = 2) -> DataFrame:
     """Gopher-style per-document repetition features over word ``n``-grams:
 
     * ``n_grams``       — total n-gram occurrences in the doc
@@ -185,24 +169,24 @@ def repetition_stats(
 
     # every occurrence (NOT dedup.word_ngrams, which is array_distinct'd):
     # zip_with over shifted slices = one linear pass per extra word of n
-    words = F.split(normalize_text(F.col(text_col)), " ", -1)
+    words = F.split(normalize_text(F.col("text")), " ", -1)
     cnt = F.greatest(F.size(words) - F.lit(n - 1), F.lit(0))
     gram_arr = F.slice(words, 1, cnt)
     for k in range(2, n + 1):
         gram_arr = F.zip_with(
             gram_arr, F.slice(words, k, cnt), lambda a, b: F.concat(a, F.lit(" "), b)
         )
-    grams = df.select(F.col(id_col), F.explode(gram_arr).alias("gram"))
-    per_gram = grams.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("cnt"))
+    grams = df.select(F.col("doc_id"), F.explode(gram_arr).alias("gram"))
+    per_gram = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
     return (
-        per_gram.groupBy(id_col)
+        per_gram.groupBy("doc_id")
         .agg(
             F.sum("cnt").alias("n_grams"),
             (F.sum("cnt") - F.count(F.lit(1))).alias("_n_dup"),
             F.max("cnt").alias("_top_cnt"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             F.round(F.col("_n_dup") / F.col("n_grams"), 6).alias("dup_gram_frac"),
             F.round(F.col("_top_cnt") / F.col("n_grams"), 6).alias("top_gram_frac"),
@@ -212,8 +196,6 @@ def repetition_stats(
 
 def repetition_filter(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 2,
     max_dup_frac: float = 0.5,
     max_top_frac: float = 0.12,
@@ -221,18 +203,14 @@ def repetition_filter(
     """Keep documents whose n-gram repetition is below the thresholds
     (Gopher-style quality cut); broadcast-free — the stats join back to the
     corpus on the id key."""
-    stats = repetition_stats(df, text_col, id_col, n)
+    stats = repetition_stats(df, n)
     ok = stats.filter(
         (F.col("dup_gram_frac") <= max_dup_frac) & (F.col("top_gram_frac") <= max_top_frac)
-    ).select(id_col, "dup_gram_frac", "top_gram_frac")
-    return df.join(ok, id_col)
+    ).select("doc_id", "dup_gram_frac", "top_gram_frac")
+    return df.join(ok, "doc_id")
 
 
-def unigram_logprob(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def unigram_logprob(df: DataFrame) -> DataFrame:
     """Corpus-unigram language-model quality score: per document, the mean
     negative log-probability (nats) of its words under an add-one-smoothed
     unigram LM fit on the corpus itself — the classic cheap perplexity proxy
@@ -246,9 +224,9 @@ def unigram_logprob(
     doc. The corpus totals are a 1-row aggregate cross-joined in. No window,
     no Python."""
     words = df.select(
-        F.col(id_col), F.explode(_words(F.col(text_col))).alias("word")
+        F.col("doc_id"), F.explode(_words(F.col("text"))).alias("word")
     ).filter(F.col("word") != "")
-    per = words.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
+    per = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     lm = per.groupBy("word").agg(F.sum("tf").alias("cnt"))
     tot = lm.agg(
         F.sum("cnt").alias("_tot"), F.count(F.lit(1)).alias("_vocab")
@@ -265,7 +243,7 @@ def unigram_logprob(
     )
     return (
         per.join(lmp, "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_words"),
             F.round(-F.sum(F.col("tf") * F.col("_lp")) / F.sum("tf"), 6).alias("avg_nll"),
@@ -273,12 +251,7 @@ def unigram_logprob(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-``k`` TF-IDF terms per document (the classic keyword extractor):
     score = tf(doc, w) · ln(N / df(w)). Rows: (doc_id, term, score, rk).
     Ordering decisions happen on the 6-digit-rounded score with the term
@@ -289,11 +262,11 @@ def tfidf_top_terms(
     → per-doc row_number window whose partitions are single documents (each a
     few hundred distinct terms), never corpus-wide."""
     words = df.select(
-        F.col(id_col), F.explode(_words(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(_words(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
-    per = words.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    per = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = per.groupBy("term").agg(F.count(F.lit(1)).alias("df_cnt"))
-    n_docs = df.agg(F.countDistinct(id_col).alias("_n"))
+    n_docs = df.agg(F.countDistinct("doc_id").alias("_n"))
     scored = (
         per.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(n_docs))
@@ -304,33 +277,25 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
-        .select(id_col, "term", "score", "rk")
+        .select("doc_id", "term", "score", "rk")
     )
 
 
-def fingerprint(
-    df: DataFrame, text_col: str = "text", out: str = "fp_md5", out_int: str = "fp64"
-) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Content fingerprint: md5 of normalized text; fp64 = first 16 hex digits
     as a join/partition-friendly bigint."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     md5 = F.md5(norm.cast("binary"))
-    return df.withColumn(out, md5).withColumn(
-        out_int, F.conv(F.substring(md5, 1, 15), 16, 10).cast("long")
+    return df.withColumn("fp_md5", md5).withColumn(
+        "fp64", F.conv(F.substring(md5, 1, 15), 16, 10).cast("long")
     )
 
 
-def boilerplate_strip(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span: int = 8,
-    min_docs: int = 20,
-) -> DataFrame:
+def boilerplate_strip(df: DataFrame, span: int = 8, min_docs: int = 20) -> DataFrame:
     """CCNet-style boilerplate removal: segment every document into fixed
     ``span``-word spans, count how many DISTINCT documents each normalized
     span appears in across the corpus, and strip spans that occur in
@@ -347,7 +312,7 @@ def boilerplate_strip(
     by construction (only spans repeated across ≥min_docs docs) and
     BROADCASTS into a left-anti join that rides the scan → ONE hash agg keyed
     doc to reassemble. No window, no Python."""
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     n_seg = F.ceil(F.size(words) / F.lit(span)).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), n_seg - 1),
@@ -356,11 +321,11 @@ def boilerplate_strip(
             F.array_join(F.slice(words, i * span + 1, span), " ").alias("seg"),
         ),
     )
-    exploded = df.select(F.col(id_col), F.explode(segs).alias("s")).select(
-        id_col, F.col("s.pos").alias("pos"), F.col("s.seg").alias("seg")
+    exploded = df.select(F.col("doc_id"), F.explode(segs).alias("s")).select(
+        "doc_id", F.col("s.pos").alias("pos"), F.col("s.seg").alias("seg")
     )
     hot = (
-        exploded.select("seg", id_col)
+        exploded.select("seg", "doc_id")
         .distinct()
         .groupBy("seg")
         .agg(F.count(F.lit(1)).alias("_nd"))
@@ -368,7 +333,7 @@ def boilerplate_strip(
         .select("seg")
     )
     kept = exploded.join(F.broadcast(hot), "seg", "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.array_join(
             F.transform(
@@ -378,11 +343,11 @@ def boilerplate_strip(
             " ",
         ).alias("text_clean"),
     )
-    totals = exploded.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_segs"))
+    totals = exploded.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_segs"))
     return (
-        totals.join(rebuilt, id_col, "left")
+        totals.join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_segs",
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
             F.coalesce("text_clean", F.lit("")).alias("text_clean"),
@@ -390,13 +355,7 @@ def boilerplate_strip(
     )
 
 
-def hashed_ngram_classifier(
-    df: DataFrame,
-    text_col: str = "text",
-    out: str = "clf_score",
-    buckets: int = 1024,
-    seed: str = "q",
-) -> DataFrame:
+def hashed_ngram_classifier(df: DataFrame, buckets: int = 1024, seed: str = "q") -> DataFrame:
     """fastText-style linear quality classifier over hashed word uni+bigram
     features: bucket = md5(seed‖gram) % buckets, fixed deterministic weight
     per bucket, document score = sigmoid(mean weight). The weight table here
@@ -408,8 +367,8 @@ def hashed_ngram_classifier(
     Gram weights are summed as exact INTEGERS (order-independent) and divided
     once at the end, so Spark and any SQL oracle agree bit-for-bit.
 
-    Rows: input columns + (n_grams, out)."""
-    words = _words(F.col(text_col))
+    Rows: input columns + (n_grams, clf_score)."""
+    words = _words(F.col("text"))
     n = F.size(words)
     bigrams = F.when(
         n >= 2,
@@ -439,16 +398,11 @@ def hashed_ngram_classifier(
         + F.exp(-(wsum.cast("double") / (F.lit(498.0) * n_grams)))
     )
     return df.withColumn("n_grams", n_grams).withColumn(
-        out, F.round(score, 6)
+        "clf_score", F.round(score, 6)
     )
 
 
-def bigram_logprob(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lam: float = 0.7,
-) -> DataFrame:
+def bigram_logprob(df: DataFrame, lam: float = 0.7) -> DataFrame:
     """Interpolated bigram-LM quality score (the CCNet perplexity proxy one
     order up from ``unigram_logprob``): per document, mean NLL of its word
     bigrams under p(w2|w1) = λ·c(w1w2)/c(w1•) + (1−λ)·(c(w2)+1)/(N+V), both
@@ -462,9 +416,9 @@ def bigram_logprob(
     production it is pruned to the top-M bigrams with the unigram term as
     backoff for the tail. No window, no Python."""
     words = df.select(
-        F.col(id_col), _words(F.col(text_col)).alias("_ws")
+        F.col("doc_id"), _words(F.col("text")).alias("_ws")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.zip_with(
                 F.slice(F.col("_ws"), 1, F.greatest(F.size("_ws") - 1, F.lit(0))),
@@ -472,8 +426,8 @@ def bigram_logprob(
                 lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
             )
         ).alias("bg"),
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    per = words.groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("tf"))
+    ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    per = words.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("tf"))
     big = per.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
     hist = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     uni = big.groupBy("w2").agg(F.sum("c12").alias("c2"))
@@ -495,7 +449,7 @@ def bigram_logprob(
     )
     return (
         per.join(lm, ["w1", "w2"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_bigrams"),
             F.round(-F.sum(F.col("tf") * F.col("_lp")) / F.sum("tf"), 6).alias("avg_nll"),
@@ -503,13 +457,7 @@ def bigram_logprob(
     )
 
 
-def vocab_encode(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_size: int = 1000,
-    head: int = 16,
-) -> DataFrame:
+def vocab_encode(df: DataFrame, vocab_size: int = 1000, head: int = 16) -> DataFrame:
     """Tokenize-to-ids: build a frequency-ranked word vocabulary of size
     ``vocab_size`` (rank 1 = most frequent; ties break on the word; id 0 =
     OOV/unk) and encode every document — the loader step that produces
@@ -523,16 +471,16 @@ def vocab_encode(
     vocab rows only → vocab BROADCASTS into the encode join → ONE hash agg
     keyed doc to reassemble in position order. No corpus-wide window."""
     toks = df.select(
-        F.col(id_col), F.posexplode(_words(F.col(text_col))).alias("pos", "word")
+        F.col("doc_id"), F.posexplode(_words(F.col("text"))).alias("pos", "word")
     ).filter(F.col("word") != "")
     freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     topk = freq.orderBy(F.col("cnt").desc(), F.col("word")).limit(vocab_size)
     w = Window.orderBy(F.col("cnt").desc(), F.col("word"))
     vocab = topk.withColumn("tok_id", F.row_number().over(w)).select("word", "tok_id")
     enc = toks.join(F.broadcast(vocab), "word", "left").select(
-        id_col, "pos", F.coalesce("tok_id", F.lit(0)).alias("tok_id")
+        "doc_id", "pos", F.coalesce("tok_id", F.lit(0)).alias("tok_id")
     )
-    return enc.groupBy(id_col).agg(
+    return enc.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tok"),
         F.sum(F.when(F.col("tok_id") == 0, 1).otherwise(0)).alias("n_oov"),
         F.round(
@@ -554,9 +502,7 @@ def vocab_encode(
     )
 
 
-def char_entropy(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def char_entropy(df: DataFrame) -> DataFrame:
     """Per-document character-distribution Shannon entropy (nats) — the
     classic gibberish/binary-junk detector (random bytes ≈ ln(alphabet)
     entropy; repeated-char spam ≈ 0). Rows: (doc_id, n_chars_t, entropy).
@@ -566,13 +512,13 @@ def char_entropy(
     collapses hard — → doc totals + entropy in one more keyed agg pair. No
     window, no Python."""
     chars = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), "", -1)).alias("ch")
+        F.col("doc_id"), F.explode(F.split(F.col("text"), "", -1)).alias("ch")
     ).filter(F.col("ch") != "")
-    per = chars.groupBy(id_col, "ch").agg(F.count(F.lit(1)).alias("cnt"))
-    tot = per.groupBy(id_col).agg(F.sum("cnt").alias("n"))
+    per = chars.groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("cnt"))
+    tot = per.groupBy("doc_id").agg(F.sum("cnt").alias("n"))
     return (
-        per.join(tot, id_col)
-        .groupBy(id_col)
+        per.join(tot, "doc_id")
+        .groupBy("doc_id")
         .agg(
             F.max("n").alias("n_chars_t"),
             F.round(
@@ -588,8 +534,6 @@ def char_entropy(
 
 def gopher_rules(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 20,
     max_words: int = 120,
     min_mean_word_len: float = 2.0,
@@ -609,13 +553,13 @@ def gopher_rules(
 
     Scale shape: a pure per-row projection — no shuffle, no join, no Python;
     whole-stage-codegen'd array expressions over the split words."""
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     n_words = F.size(words)
     wl_sum = F.aggregate(
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
     )
     mean_wl = F.round(wl_sum / F.greatest(n_words, F.lit(1)).cast("double"), 6)
-    punct = F.length(F.regexp_replace(F.col(text_col), r"[^!-/:-@\[-`{-~]", ""))
+    punct = F.length(F.regexp_replace(F.col("text"), r"[^!-/:-@\[-`{-~]", ""))
     alpha_words = F.size(F.filter(words, lambda w: w.rlike("[a-z]")))
     en_sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     sw_hits = F.size(F.array_intersect(F.array_distinct(words), en_sw))
@@ -625,7 +569,7 @@ def gopher_rules(
     r_alpha = F.round(alpha_words / F.greatest(n_words, F.lit(1)).cast("double"), 6) >= min_alpha_word_frac
     r_sw = sw_hits >= min_stopword_hits
     return df.select(
-        id_col,
+        "doc_id",
         n_words.alias("n_words"),
         mean_wl.alias("mean_word_len"),
         r_wc.alias("r_word_count"),
@@ -647,12 +591,7 @@ KEYWORD_TAXONOMY: dict[str, list[str]] = {
 }
 
 
-def keyword_tag(
-    df: DataFrame,
-    taxonomy: dict[str, list[str]] | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def keyword_tag(df: DataFrame, taxonomy: dict[str, list[str]] | None = None) -> DataFrame:
     """Taxonomy tagging: count keyword OCCURRENCES (not distinct) per topic
     and pick the winning topic (most hits; ties break on taxonomy declaration
     order). Rows: (doc_id, <topic>_hits per topic, total_hits, top_topic —
@@ -663,7 +602,7 @@ def keyword_tag(
     greatest/when chain. No shuffle, no join, no Python, and the keyword
     lists live in the plan as literals (nothing to broadcast)."""
     tax = taxonomy if taxonomy is not None else KEYWORD_TAXONOMY
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     hit_cols = {}
     for topic, kws in tax.items():
         arr = F.array(*[F.lit(k) for k in kws])
@@ -676,18 +615,14 @@ def keyword_tag(
     for topic in reversed(list(tax)):  # earlier topics win ties -> apply last
         top = F.when((hit_cols[topic] > 0) & (hit_cols[topic] == best), topic).otherwise(top)
     return df.select(
-        id_col,
+        "doc_id",
         *[hit_cols[t].cast("long").alias(f"{t}_hits") for t in tax],
         total.cast("long").alias("total_hits"),
         top.alias("top_topic"),
     )
 
 
-def zipf_fit(
-    df: DataFrame,
-    text_col: str = "text",
-    top_v: int = 50,
-) -> DataFrame:
+def zipf_fit(df: DataFrame, top_v: int = 50) -> DataFrame:
     """Zipf power-law fit over the corpus vocabulary: regress ln(freq) on
     ln(rank) for the ``top_v`` most frequent words — natural text sits near
     slope −1; synthetic/templated corpora (like this one) flatten toward 0,
@@ -697,7 +632,7 @@ def zipf_fit(
     Scale shape: one map-side-combined word-count agg → distributed
     TakeOrdered ``top_v`` (never a corpus-wide sort) → rank window + regr_*
     aggregates over the ``top_v`` rows only."""
-    toks = df.select(F.explode(_words(F.col(text_col))).alias("word")).filter(
+    toks = df.select(F.explode(_words(F.col("text"))).alias("word")).filter(
         F.col("word") != ""
     )
     freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
@@ -717,13 +652,7 @@ def zipf_fit(
 DATASET_CARD_LANGS = ["en", "fr", "es", "de", "zh"]
 
 
-def dataset_card(
-    df: DataFrame,
-    source_col: str = "source",
-    lang_col: str = "lang",
-    text_col: str = "text",
-    langs: list[str] | None = None,
-) -> DataFrame:
+def dataset_card(df: DataFrame, langs: list[str] | None = None) -> DataFrame:
     """Per-source dataset card — the summary table a data curator publishes
     with a training mix: doc/word/char volumes, length spread, and the
     language composition as fixed per-lang doc counts (fixed column set =
@@ -733,27 +662,23 @@ def dataset_card(
     projections (word counts via size(split), lang indicator sums) — a
     100 TB corpus reduces to |sources| rows in a single shuffle."""
     ls = langs if langs is not None else DATASET_CARD_LANGS
-    n_words = F.size(_words(F.col(text_col)))
+    n_words = F.size(_words(F.col("text")))
     aggs = [
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(n_words).alias("n_words"),
-        F.sum(F.length(text_col)).alias("n_chars"),
+        F.sum(F.length("text")).alias("n_chars"),
         F.min(n_words).alias("min_words"),
         F.max(n_words).alias("max_words"),
         F.round(F.avg(n_words), 6).alias("avg_words"),
     ]
     for lang in ls:
         aggs.append(
-            F.sum(F.when(F.col(lang_col) == lang, 1).otherwise(0)).alias(f"docs_{lang}")
+            F.sum(F.when(F.col("lang") == lang, 1).otherwise(0)).alias(f"docs_{lang}")
         )
-    return df.groupBy(F.col(source_col).alias("source")).agg(*aggs)
+    return df.groupBy("source").agg(*aggs)
 
 
-def threshold_sweep(
-    df: DataFrame,
-    thresholds: list[int],
-    text_col: str = "text",
-) -> DataFrame:
+def threshold_sweep(df: DataFrame, thresholds: list[int]) -> DataFrame:
     """Curation-planning sweep: for each candidate minimum-word-count
     threshold, how many documents and words survive?  The table a curator
     reads before committing a filter to a 100 TB run — pick the knee of the
@@ -766,7 +691,7 @@ def threshold_sweep(
     once, never once-per-threshold."""
     spark = df.sparkSession
     thr = spark.createDataFrame([(int(t),) for t in thresholds], "threshold int")
-    per_doc = df.select(F.size(_words(F.col(text_col))).alias("nw"))
+    per_doc = df.select(F.size(_words(F.col("text"))).alias("nw"))
     joined = per_doc.crossJoin(F.broadcast(thr))
     keep = F.col("nw") >= F.col("threshold")
     return (
@@ -793,7 +718,6 @@ def length_histogram(
     lo: int,
     hi: int,
     n_bins: int = 10,
-    text_col: str = "text",
     group_col: str | None = None,
 ) -> DataFrame:
     """Fixed-width word-count histogram — the length-distribution panel on a
@@ -808,7 +732,7 @@ def length_histogram(
     if hi <= lo or n_bins < 1:
         raise ValueError("need hi > lo and n_bins >= 1")
     width = (hi - lo) / n_bins
-    nw = F.size(_words(F.col(text_col)))
+    nw = F.size(_words(F.col("text")))
     raw_bin = F.floor((nw - F.lit(lo)) / F.lit(width)).cast("int")
     bin_ = F.least(F.greatest(raw_bin, F.lit(0)), F.lit(n_bins - 1))
     keys = ([F.col(group_col)] if group_col else []) + [bin_.alias("bin")]

@@ -52,16 +52,10 @@ def _gram_key(gram: Column, method: str = "md5") -> Column:
     return F.md5(F.array_join(F.transform(gram, lambda x: x.cast("string")), ","))
 
 
-def token_ngram_dup_stats(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-    k: int = 8,
-    hash_method: str = "md5",
-) -> DataFrame:
+def token_ngram_dup_stats(df: DataFrame, k: int = 8, hash_method: str = "md5") -> DataFrame:
     """Per-sequence corpus-duplicated k-gram profile.
 
-    Rows: ``(id_col, n_grams, n_dup_grams, dup_rate)`` where ``n_grams`` is
+    Rows: ``(doc_id, n_grams, n_dup_grams, dup_rate)`` where ``n_grams`` is
     the sequence's k-gram position count (``max(len-k+1, 0)``), a position is
     *duplicated* when its k-gram occurs in at least 2 DISTINCT sequences
     (within-sequence repeats alone don't count), and ``dup_rate`` is the
@@ -81,11 +75,11 @@ def token_ngram_dup_stats(
          hot gram fans out to its own positions only, which is the input
          size), unlike pair-generating self-joins.
     """
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     n_grams = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(0))
     grams = (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.when(
                     F.size(toks) >= k,
@@ -96,14 +90,14 @@ def token_ngram_dup_stats(
                 ).otherwise(F.array().cast("array<array<int>>"))
             ).alias("_gram"),
         )
-        .select(F.col(id_col), _gram_key(F.col("_gram"), hash_method).alias("_key"))
-        .groupBy(id_col, "_key")
+        .select(F.col("doc_id"), _gram_key(F.col("_gram"), hash_method).alias("_key"))
+        .groupBy("doc_id", "_key")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     gram_docs = grams.groupBy("_key").agg(F.count(F.lit(1)).alias("_n_docs"))
     per_doc = (
         grams.join(gram_docs, "_key")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_c").alias("n_grams"),
             F.sum(F.when(F.col("_n_docs") >= 2, F.col("_c")).otherwise(0)).alias(
@@ -111,9 +105,9 @@ def token_ngram_dup_stats(
             ),
         )
     )
-    base = df.select(F.col(id_col), n_grams.cast("bigint").alias("_n_pos"))
-    return base.join(per_doc, id_col, "left").select(
-        id_col,
+    base = df.select(F.col("doc_id"), n_grams.cast("bigint").alias("_n_pos"))
+    return base.join(per_doc, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("n_grams", F.col("_n_pos")).alias("n_grams"),
         F.coalesce("n_dup_grams", F.lit(0)).alias("n_dup_grams"),
         F.when(
@@ -165,14 +159,7 @@ def quota_cap(
     )
 
 
-def token_integrity(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    n_tok_col: str = "n_tok",
-    source_col: str = "source",
-    vocab_size: int = 512,
-    eos_id: int = 511,
-) -> DataFrame:
+def token_integrity(df: DataFrame, vocab_size: int = 512, eos_id: int = 511) -> DataFrame:
     """Per-source tokenized-table audit — the invariants a training loader
     assumes, checked in one pass before a run consumes the table.
 
@@ -194,11 +181,11 @@ def token_integrity(
     predicate runs inside the array, emitting one boolean per row, not one
     row per token), no join, no Python.
     """
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     bad_range = F.exists(toks, lambda x: (x < 0) | (x >= F.lit(vocab_size)))
     flags = df.select(
-        F.col(source_col).alias("source"),
-        (F.col(n_tok_col) != F.size(toks)).cast("int").alias("_mis"),
+        F.col("source"),
+        (F.col("n_tok") != F.size(toks)).cast("int").alias("_mis"),
         bad_range.cast("int").alias("_oor"),
         (
             (F.size(toks) == 0)
@@ -222,11 +209,7 @@ def token_integrity(
     )
 
 
-def source_drift(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    strata_col: str = "source",
-) -> DataFrame:
+def source_drift(df: DataFrame, strata_col: str = "source") -> DataFrame:
     """Per-source token-distribution drift vs the corpus mixture: the
     Jensen–Shannon divergence (natural log; 0 ≤ JS ≤ ln 2) between each
     source's unigram token distribution P and the whole-corpus distribution
@@ -246,7 +229,7 @@ def source_drift(
     form ln2·(1 − Σ_present q) instead of materializing S×V zero rows.
     """
     tok = (
-        df.select(F.col(strata_col).alias("stratum"), F.explode(tokens_col).alias("_t"))
+        df.select(F.col(strata_col).alias("stratum"), F.explode("tokens").alias("_t"))
         .groupBy("stratum", "_t")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
@@ -282,13 +265,7 @@ def source_drift(
     )
 
 
-def source_overlap_matrix(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    strata_col: str = "source",
-    k: int = 6,
-    hash_method: str = "md5",
-) -> DataFrame:
+def source_overlap_matrix(df: DataFrame, k: int = 6, hash_method: str = "md5") -> DataFrame:
     """Cross-source contamination matrix: token k-gram Jaccard overlap
     between every pair of sources — the corpus-level leakage audit ("how much
     of benchmark-source B's content appears in crawl-source A") that runs
@@ -304,10 +281,10 @@ def source_overlap_matrix(
     size; per-source set sizes come from the same aggregate. No window, no
     Python, no quadratic blowup in documents.
     """
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     grams = (
         df.select(
-            F.col(strata_col).alias("_s"),
+            F.col("source").alias("_s"),
             F.explode(
                 F.when(
                     F.size(toks) >= k,
@@ -350,13 +327,7 @@ def source_overlap_matrix(
     )
 
 
-def dup_span_strip(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-    k: int = 8,
-    hash_method: str = "md5",
-) -> DataFrame:
+def dup_span_strip(df: DataFrame, k: int = 8, hash_method: str = "md5") -> DataFrame:
     """Corpus-duplicated span REMOVAL (the actionable twin of
     ``token_ngram_dup_stats``): strip every token position covered by a
     k-gram that occurs in ≥ 2 distinct documents. This is exactly the
@@ -390,9 +361,9 @@ def dup_span_strip(
     a ~N²·2⁻⁶⁴ false-strip probability over N distinct grams is acceptable
     (ADVICE r4).
     """
-    toks = F.col(tokens_col)
+    toks = F.col("tokens")
     pos_grams = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.when(
                 F.size(toks) >= k,
@@ -402,8 +373,8 @@ def dup_span_strip(
                 ),
             ).otherwise(F.array().cast("array<array<int>>"))
         ).alias("_p0", "_gram"),
-    ).select(F.col(id_col), (F.col("_p0") + 1).alias("_pos"), _gram_key(F.col("_gram"), hash_method).alias("_key"))
-    doc_keys = pos_grams.select(id_col, "_key").distinct()
+    ).select(F.col("doc_id"), (F.col("_p0") + 1).alias("_pos"), _gram_key(F.col("_gram"), hash_method).alias("_key"))
+    doc_keys = pos_grams.select("doc_id", "_key").distinct()
     dup_keys = (
         doc_keys.groupBy("_key")
         .agg(F.count(F.lit(1)).alias("_n_docs"))
@@ -413,16 +384,16 @@ def dup_span_strip(
     covered = (
         pos_grams.join(dup_keys, "_key")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(F.sequence(F.col("_pos"), F.col("_pos") + F.lit(k - 1))).alias("_cp"),
         )
         .distinct()
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("_cp").alias("_cov"))
     )
-    base = df.select(F.col(id_col), toks.alias("_t"))
-    joined = base.join(covered, id_col, "left").select(
-        id_col,
+    base = df.select(F.col("doc_id"), toks.alias("_t"))
+    joined = base.join(covered, "doc_id", "left").select(
+        "doc_id",
         "_t",
         F.coalesce("_cov", F.array().cast("array<int>")).alias("_cov"),
     )
@@ -432,19 +403,14 @@ def dup_span_strip(
     ).otherwise(F.array().cast("array<int>"))
     kept = F.transform(kept_pos, lambda p: F.element_at(F.col("_t"), p))
     return joined.select(
-        id_col,
+        "doc_id",
         F.size("_t").cast("bigint").alias("n_tok"),
         F.size("_cov").cast("bigint").alias("n_removed"),
         kept.alias("tokens_clean"),
     )
 
 
-def tokenizer_fertility(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    text_col: str = "text",
-    strata_col: str = "source",
-) -> DataFrame:
+def tokenizer_fertility(df: DataFrame) -> DataFrame:
     """Per-source tokenizer fertility audit: tokens-per-character and
     tokens-per-word ratios — the standard tokenizer-QA panel (a source whose
     fertility spikes is being shredded by the tokenizer: wrong script,
@@ -461,12 +427,12 @@ def tokenizer_fertility(
     # array_remove: F.trim strips only 0x20, so tab/newline text EDGES split
     # to phantom "" words (same class as text.py::_words — Python .split()
     # never yields empties); the fertility denominator must not inflate.
-    words = F.size(F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), ""))
+    words = F.size(F.array_remove(F.split(F.trim(F.col("text")), r"\s+"), ""))
     base = df.select(
-        F.col(strata_col).alias("stratum"),
-        F.size(tokens_col).cast("bigint").alias("_t"),
-        F.length(text_col).cast("bigint").alias("_c"),
-        F.when(F.length(F.trim(F.col(text_col))) > 0, words)
+        F.col("source").alias("stratum"),
+        F.size("tokens").cast("bigint").alias("_t"),
+        F.length("text").cast("bigint").alias("_c"),
+        F.when(F.length(F.trim(F.col("text"))) > 0, words)
         .otherwise(F.lit(0))
         .cast("bigint")
         .alias("_w"),

@@ -62,21 +62,15 @@ def canonical_url(url: Column) -> Column:
     )
 
 
-def url_canonicalize(
-    df: DataFrame, url_col: str = "url", out: str = "url_canon"
-) -> DataFrame:
+def url_canonicalize(df: DataFrame) -> DataFrame:
     """Append the canonical URL column. Pure projection — no shuffle."""
-    return df.withColumn(out, canonical_url(F.col(url_col)))
+    return df.withColumn("url_canon", canonical_url(F.col("url")))
 
 
-def url_dedup(
-    df: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """Canonical-URL dedup: canonicalize, then keep each canonical URL's
-    lowest-``id_col`` document. Rows: one per INPUT row —
-    ``(id_col, url_canon, is_kept, n_dups)`` where ``is_kept`` marks the
+    lowest-``doc_id`` document. Rows: one per INPUT row —
+    ``(doc_id, url_canon, is_kept, n_dups)`` where ``is_kept`` marks the
     survivor and ``n_dups`` is the canonical group's size (survivors of
     singleton groups have n_dups=1). Keeping per-row output (vs survivor
     list) lets the caller route duplicates to a quarantine sink unchanged.
@@ -86,30 +80,30 @@ def url_dedup(
     key. Group count ~ page count, far too large to broadcast at crawl
     scale — the join is the standard sort-merge/shuffled-hash co-location.
     """
-    canon = url_canonicalize(df, url_col).select(
-        F.col(id_col), F.col("url_canon")
+    canon = url_canonicalize(df).select(
+        F.col("doc_id"), F.col("url_canon")
     )
     # NULL URLs canonicalize to NULL, which a null-unsafe equi-join would
     # silently DROP (breaking the one-row-per-input-row contract). A null URL
     # is unknown, not identical to other null URLs — each is its own
     # singleton survivor, routed around the join.
     nulls = canon.filter(F.col("url_canon").isNull()).select(
-        id_col,
+        "doc_id",
         "url_canon",
         F.lit(True).alias("is_kept"),
         F.lit(1).cast("long").alias("n_dups"),
     )
     nn = canon.filter(F.col("url_canon").isNotNull())
     groups = nn.groupBy("url_canon").agg(
-        F.min(id_col).alias("_keep_id"),
+        F.min("doc_id").alias("_keep_id"),
         F.count(F.lit(1)).alias("n_dups"),
     )
     return (
         nn.join(groups, "url_canon")
         .select(
-            id_col,
+            "doc_id",
             "url_canon",
-            (F.col(id_col) == F.col("_keep_id")).alias("is_kept"),
+            (F.col("doc_id") == F.col("_keep_id")).alias("is_kept"),
             "n_dups",
         )
         .unionByName(nulls)

@@ -69,14 +69,7 @@ def _branch_fields(
     raise ValueError(f"unknown parser kind {spec.kind!r}")
 
 
-def parse_by_source(
-    df: DataFrame,
-    parsers: dict[str, ParserSpec],
-    source_col: str = "source",
-    content_col: str = "content",
-    fields_col: str = "fields",
-    time_col: str = "event_time",
-) -> DataFrame:
+def parse_by_source(df: DataFrame, parsers: dict[str, ParserSpec]) -> DataFrame:
     """Dispatch parsers per source value in one projection (single scan).
 
     The fields map is a ``map_concat`` of per-source MASKED maps (empty for
@@ -88,22 +81,22 @@ def parse_by_source(
 
     Rows whose source has no configured parser keep an empty fields map and
     ``_parse_ok = false`` (they still flow — routing decides their sink).
-    A pre-existing ``time_col`` is PRESERVED whenever the row's parser emits
+    A pre-existing ``event_time`` is PRESERVED whenever the row's parser emits
     no timestamp (timestamp-less parser kind, or a failed parse) — a parser
     only ever overwrites event time with a value it actually extracted.
     """
     if not parsers:
         raise ValueError("parse_by_source: parsers dict is empty — configure at least one source")
-    src = F.col(content_col)
+    src = F.col("content")
     empty = F.create_map().cast("map<string,string>")
-    base = F.coalesce(F.col(fields_col), empty) if fields_col in df.columns else None
+    base = F.coalesce(F.col("fields"), empty) if "fields" in df.columns else None
 
     maps: list[Column] = []
     ok_expr: Column | None = None
     ts_expr: Column | None = None
-    prev_ts = F.col(time_col) if time_col in df.columns else F.lit(None).cast("timestamp")
+    prev_ts = F.col("event_time") if "event_time" in df.columns else F.lit(None).cast("timestamp")
     for source_val, spec in parsers.items():
-        cond = F.col(source_col) == F.lit(source_val)
+        cond = F.col("source") == F.lit(source_val)
         parsed, matched, ts = _branch_fields(spec, src, cond)
         maps.append(parsed)
         ok_expr = F.when(cond, matched) if ok_expr is None else ok_expr.when(cond, matched)
@@ -124,9 +117,9 @@ def parse_by_source(
     # mapKeyDedupPolicy=EXCEPTION.
     parsed_expr = maps[0] if len(maps) == 1 else F.map_concat(*maps)
     return df.withColumns({
-        fields_col: parsed_expr if base is None else P.merge_maps(base, parsed_expr),
+        "fields": parsed_expr if base is None else P.merge_maps(base, parsed_expr),
         P.PARSE_OK: F.coalesce(ok_expr.otherwise(F.lit(False)), F.lit(False)),
-        time_col: ts_expr.otherwise(prev_ts),
+        "event_time": ts_expr.otherwise(prev_ts),
     })
 
 

@@ -21,28 +21,3 @@ SEQUENCE_SCHEMA = T.StructType(
         T.StructField("source", T.StringType(), False),
     ]
 )
-
-# ---- event row flowing through the pipeline --------------------------------
-# tokens is carried untouched end-to-end (per-row invariant: token-array equality
-# between input and routed output).
-EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("n_tok", T.IntegerType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("content", T.StringType(), True),  # decoded token payload
-        T.StructField("event_time", T.TimestampType(), True),
-        T.StructField("fields", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("route", T.StringType(), True),
-    ]
-)
-
-# Reserved keys mirroring the reference's bookkeeping fields.
-RAW_LOG_KEY = "content"  # DEFAULT_CONTENT_KEY, core/plugin/processor/CommonParserOptions.h
-RENAMED_SOURCE_KEY = "__raw__"  # default rename target for kept raw
-LEVEL_KEY = "__LEVEL__"
-THREAD_KEY = "__THREAD__"
-FILE_KEY = "__FILE__"
-LINE_KEY = "__LINE__"

@@ -31,32 +31,20 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.pipeline import ParserSpec, build_pipeline
-from ..operators.route import RouteRule
+from ..plans.pipeline import build_pipeline
 from ..schema import SEQUENCE_SCHEMA
 from ..sources.io import sink_writer, write_staged
 
 
-def stream_sequences(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    r = spark.readStream.schema(SEQUENCE_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(input_dir)
+def stream_sequences(spark: SparkSession, input_dir: str) -> DataFrame:
+    return spark.readStream.schema(SEQUENCE_SCHEMA).parquet(input_dir)
 
 
-def stream_pipeline(
-    spark: SparkSession,
-    input_dir: str,
-    parsers: dict[str, ParserSpec] | None = None,
-    routes: list[RouteRule] | None = None,
-    **kwargs,
-) -> DataFrame:
+def stream_pipeline(spark: SparkSession, input_dir: str) -> DataFrame:
     """The batch pipeline, streaming: decode → parse → route on a readStream.
     All pipeline stages are stateless projections/filters, so the SAME plan
     builder works unchanged on an unbounded input."""
-    return build_pipeline(stream_sequences(spark, input_dir), parsers, routes, **kwargs)
+    return build_pipeline(stream_sequences(spark, input_dir))
 
 
 _LEDGER_SCHEMA = pa.schema(

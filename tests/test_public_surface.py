@@ -1,18 +1,22 @@
 """The library names that the benchmark (``perfbench/``, ``bench.py``), the
 query entry point (``__spark_entry__.py``) and ``tools/`` use still exist, and
-still take the keywords those callers pass.
+still take the keywords those callers pass; and every column-name parameter of
+the library is set by some call.
 
 Those files import from ``loongcollector_spark`` at module level and inside
 functions, so a library change that drops a name or a keyword they use would
-otherwise fail only when the benchmark or those queries run. Checked statically:
-the callers are parsed with ``ast``, only the library is imported, and no
-Spark session starts.
+otherwise fail only when the benchmark or those queries run. The row schema
+(SURVEY.md §1.2) is fixed, so a parameter that names one of its columns but
+that no call sets is a configuration nothing runs. Checked statically: the
+callers are parsed with ``ast``, only the library is imported, and no Spark
+session starts.
 """
 
 from __future__ import annotations
 
 import ast
 import importlib
+import importlib.util
 import inspect
 from pathlib import Path
 
@@ -24,6 +28,8 @@ CALLERS = [
     ROOT / "__spark_entry__.py",
     *sorted(ROOT.glob("tools/*.py")),
 ]
+LIBRARY = sorted((ROOT / PKG).rglob("*.py"))
+TESTS = sorted(ROOT.glob("tests/*.py"))
 
 
 def _is_lib(module: str | None) -> bool:
@@ -55,11 +61,27 @@ def _own_nodes(scope: ast.AST) -> list[ast.AST]:
     return out
 
 
-def _scoped(scope: ast.AST, inherited: dict):
-    """``(node, aliases)`` for every node of ``scope`` and of the functions
-    in it, ``aliases`` mapping each local name bound to the library to
-    ``(module, attribute path)``: imports at module level and inside
-    functions, minus names a function rebinds to something else."""
+def _module_of(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _from_module(node: ast.ImportFrom, package: str | None) -> str | None:
+    """The absolute module an ``import from`` names (relative ones resolved
+    against ``package``)."""
+    if node.level == 0:
+        return node.module
+    if package is None:
+        return None
+    return importlib.util.resolve_name("." * node.level + (node.module or ""), package)
+
+
+def _scoped(scope: ast.AST, inherited: dict, package: str | None = None):
+    """``(node, aliases, scope)`` for every node of ``scope`` and of the
+    functions in it, ``aliases`` mapping each local name bound to the library
+    to ``(module, attribute path)``: imports at module level and inside
+    functions (relative ones too, given the file's ``package``), minus names a
+    function rebinds to something else."""
     nodes = _own_nodes(scope)
     aliases = dict(inherited)
     for node in nodes:
@@ -68,17 +90,18 @@ def _scoped(scope: ast.AST, inherited: dict):
         elif isinstance(node, ast.arg):
             aliases.pop(node.arg, None)
     for node in nodes:
-        if isinstance(node, ast.ImportFrom) and node.level == 0 and _is_lib(node.module):
+        module = _from_module(node, package) if isinstance(node, ast.ImportFrom) else None
+        if _is_lib(module):
             for a in node.names:
-                aliases[a.asname or a.name] = (node.module, [a.name])
+                aliases[a.asname or a.name] = (module, [a.name])
         elif isinstance(node, ast.Import):
             for a in node.names:
                 if _is_lib(a.name):  # ``import pkg.mod`` binds ``pkg``
                     aliases[a.asname or PKG] = (a.name if a.asname else PKG, [])
     for node in nodes:
-        yield node, aliases
+        yield node, aliases, scope
         if isinstance(node, _SCOPES):
-            yield from _scoped(node, aliases)
+            yield from _scoped(node, aliases, package)
 
 
 def _chain(node: ast.AST, aliases: dict) -> tuple[str, list[str]] | None:
@@ -117,7 +140,7 @@ def test_callers_use_existing_names_and_keywords():
     problems, n_refs, n_calls = [], 0, 0
     for path in CALLERS:
         where = path.relative_to(ROOT)
-        for node, aliases in _scoped(ast.parse(path.read_text(), str(path)), {}):
+        for node, aliases, _ in _scoped(ast.parse(path.read_text(), str(path)), {}):
             if isinstance(node, ast.ImportFrom) and node.level == 0 and _is_lib(node.module):
                 refs = [(node.module, [a.name]) for a in node.names]
             elif isinstance(node, (ast.Name, ast.Attribute)):
@@ -143,3 +166,91 @@ def test_callers_use_existing_names_and_keywords():
                 problems.append(f"{where}:{node.lineno}: {'.'.join([ref[0], *ref[1]])}(...): {why}")
     assert n_refs > 100 and n_calls > 50, (n_refs, n_calls)  # the scan found the callers' uses
     assert not problems, "\n".join(problems)
+
+
+def _is_column_param(name: str) -> bool:
+    return name.endswith("_col") or name == "out" or name.endswith("_out") or name.startswith("out_")
+
+
+def _library_functions() -> dict:
+    """``{function: (qualified name, column-name parameters)}`` for every
+    public function and public method defined in the library."""
+    found = {}
+    for path in LIBRARY:
+        mod = importlib.import_module(_module_of(path))
+        members = [(n, o) for n, o in vars(mod).items() if not n.startswith("_")]
+        for name, obj in members:
+            if getattr(obj, "__module__", None) != mod.__name__:
+                continue
+            fns = [(name, obj)] if inspect.isfunction(obj) else []
+            if inspect.isclass(obj):
+                fns += [(f"{name}.{m}", f) for m, f in vars(obj).items()
+                        if inspect.isfunction(f) and not m.startswith("_")]
+            for qual, fn in fns:
+                cols = [p for p in inspect.signature(fn).parameters if _is_column_param(p)]
+                if cols:
+                    found[fn] = (f"{mod.__name__}.{qual}", cols)
+    return found
+
+
+def _passed(sig: inspect.Signature, call: ast.Call) -> list[tuple[str, ast.AST]]:
+    """``(parameter, value)`` for each value ``call`` passes, by position or
+    by keyword."""
+    positional = [p.name for p in sig.parameters.values()
+                  if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)]
+    passed = []
+    for i, a in enumerate(call.args):
+        if isinstance(a, ast.Starred):
+            break
+        if i < len(positional):
+            passed.append((positional[i], a))
+    return passed + [(k.arg, k.value) for k in call.keywords if k.arg is not None]
+
+
+def test_every_column_name_parameter_is_set_by_some_call():
+    """A column-name parameter (``*_col``, ``out``, ``*_out``, ``out_*``)
+    stays only while some call in the benchmark, the entry points, ``tools/``,
+    the tests or the library itself passes it a value. With one value in use,
+    the column name is a constant, not an option. A library function that only
+    forwards its own parameter of the same name sets it only if its own
+    parameter is set."""
+    functions = _library_functions()
+    used: set[tuple] = set()
+    forwards: list[tuple[tuple, tuple]] = []  # (caller, name) → (callee, name)
+    n_calls = 0
+    for path in [*CALLERS, *TESTS, *LIBRARY]:
+        tree = ast.parse(path.read_text(), str(path))
+        package, inherited, mod = None, {}, None
+        if path in LIBRARY:
+            module = _module_of(path)
+            mod = importlib.import_module(module)
+            package = module if path.name == "__init__.py" else module.rpartition(".")[0]
+            inherited = {n.name: (module, [n.name]) for n in tree.body
+                         if isinstance(n, (ast.FunctionDef, ast.ClassDef))}
+        for node, aliases, scope in _scoped(tree, inherited, package):
+            ref = _chain(node.func, aliases) if isinstance(node, ast.Call) else None
+            if ref is None:
+                continue
+            try:
+                fn = _lookup(*ref)
+                sig = inspect.signature(fn)
+            except (ImportError, AttributeError, TypeError, ValueError):
+                continue
+            n_calls += 1
+            own = set()
+            if mod is not None and scope in tree.body and isinstance(scope, ast.FunctionDef):
+                own = {a.arg for a in ast.walk(scope.args) if isinstance(a, ast.arg)}
+            for name, value in _passed(sig, node):
+                if isinstance(value, ast.Name) and value.id == name and name in own:
+                    forwards.append(((vars(mod)[scope.name], name), (fn, name)))
+                else:
+                    used.add((fn, name))
+    while True:
+        more = {dst for src, dst in forwards if src in used and dst not in used}
+        if not more:
+            break
+        used |= more
+    unset = [f"{qual}({p}=)" for fn, (qual, cols) in functions.items()
+             for p in cols if (fn, p) not in used]
+    assert n_calls > 100, n_calls  # the scan found the calls
+    assert not unset, f"{len(unset)} column-name parameters no call sets:\n" + "\n".join(sorted(unset))

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.multiline import merge_multiline, split_lines
-from loongcollector_spark.operators.ratelimit import rate_limit_batch, rate_limit_stream
+from loongcollector_spark.operators.ratelimit import rate_limit_batch
 from loongcollector_spark.plans.spl import SPLError, compile_spl
 
 
@@ -95,29 +95,6 @@ def test_rate_limit_batch(spark):
     got = sorted((r["k"], r["i"]) for r in out.collect())
     # u1 second 0 → first 2 of 3; second 1 → both; u2 → 1
     assert got == [("u1", 0), ("u1", 1), ("u1", 3), ("u1", 4), ("u2", 99)]
-
-
-def test_rate_limit_stream(spark, tmp_path):
-    import os
-    rows = [("u1", f"2024-01-01 00:00:{s:02d}.{frac:03d}") for s, frac in
-            [(0, 0), (0, 100), (0, 200), (1, 0), (2, 0), (2, 1)]]
-    src = str(tmp_path / "in")
-    spark.createDataFrame(rows, "k string, ts_s string").withColumn(
-        "ts", F.to_timestamp("ts_s")
-    ).drop("ts_s").coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("k string, ts timestamp").parquet(src)
-    limited = rate_limit_stream(stream, ["k"], rate_per_sec=1.0, burst=1.0)
-    q = (
-        limited.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = sorted(r["ts"].isoformat() for r in spark.read.parquet(str(tmp_path / "out")).collect())
-    # bucket cap 1, refill 1/s: pass at 00.000, 01.000, 02.000 — rest rejected
-    assert got == ["2024-01-01T00:00:00", "2024-01-01T00:00:01", "2024-01-01T00:00:02"]
 
 
 def test_spl_parse_kv_missing_key(spark):

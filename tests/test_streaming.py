@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.aggregate import sink_counts
 from loongcollector_spark.plans.pipeline import build_pipeline
+from loongcollector_spark.schema import SEQUENCE_SCHEMA
 from loongcollector_spark.streaming.job import start_fanout, stream_pipeline, stream_sequences
 from loongcollector_spark.synth import ensure_sequences, write_sequences
 
@@ -178,7 +179,8 @@ def test_fanout_crash_replay_is_exactly_once(spark, tmp_path, monkeypatch, fail_
         monkeypatch.setattr(J, "_write_ledger", flaky_ledger)
 
     def run():
-        routed = build_pipeline(stream_sequences(spark, inp, max_files_per_trigger=1))
+        seqs = spark.readStream.schema(SEQUENCE_SCHEMA).option("maxFilesPerTrigger", 1).parquet(inp)
+        routed = build_pipeline(seqs)
         return start_fanout(routed, out, ckpt, available_now=True)
 
     with pytest.raises(StreamingQueryException):
@@ -203,33 +205,3 @@ def test_fanout_crash_replay_is_exactly_once(spark, tmp_path, monkeypatch, fail_
         f"batch-{i}.parquet" for i in range(3)
     ]
     assert not os.path.exists(os.path.join(out, "sinks", "_inprogress"))
-
-
-def test_stream_exact_dedup(spark, tmp_path):
-    """Planted duplicate rows are dropped within the watermark horizon."""
-    import pyspark.sql.functions as F
-    from loongcollector_spark.operators.dedup import stream_exact_dedup
-
-    src = str(tmp_path / "in")
-    rows = [
-        (1, "2024-01-01 00:00:00", "the same text"),
-        (2, "2024-01-01 00:01:00", "the  SAME   text"),   # normalized dup of 1
-        (3, "2024-01-01 00:02:00", "something different"),
-    ]
-    spark.createDataFrame(rows, "doc_id int, ts string, text string").withColumn(
-        "event_time", F.col("ts").cast("timestamp")
-    ).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(
-        "doc_id int, ts string, text string, event_time timestamp"
-    ).parquet(src)
-    deduped = stream_exact_dedup(stream, watermark="10 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {r["doc_id"] for r in spark.sql("select * from dedup_out").collect()}
-    assert 3 in got and len(got) == 2  # one of {1,2} survived, 3 survived

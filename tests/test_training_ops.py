@@ -1,5 +1,5 @@
 """Training-data pipeline operators: dedup (exact/ngram/minhash-LSH/simhash/
-embedding), text analysis, grok, JSON flatten, multimodal plumbing."""
+embedding), text analysis, grok, JSON flatten."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from loongcollector_spark.operators import dedup as D
 from loongcollector_spark.operators import grok as G
-from loongcollector_spark.operators import multimodal as M
 from loongcollector_spark.operators import text as X
 from loongcollector_spark.operators.parse import json_flatten
 
@@ -91,6 +90,7 @@ def test_embedding_dup_pairs_exact_gemm(spark):
     """Chunked-GEMM exact pairs == brute-force pairs, and the plan contains
     no BroadcastNestedLoopJoin (round-1's scale-killer shape)."""
     import random
+    import warnings
 
     rng = random.Random(11)
     rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(120)]
@@ -99,7 +99,12 @@ def test_embedding_dup_pairs_exact_gemm(spark):
         (r["id_a"], r["id_b"]): r["cos"]
         for r in D.embedding_dup_pairs(df, 0.3).collect()
     }
-    gemm_df = D.embedding_dup_pairs_exact(df, 0.3, target_chunk=32)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        gemm_df = D.embedding_dup_pairs_exact(df, 0.3, target_chunk=32)
+    # the grouped-map function's type hints must not leave its eval type
+    # uninferable (pyspark warns on every applyInPandas build)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
     plan = gemm_df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     gemm = {(r["id_a"], r["id_b"]): r["cos"] for r in gemm_df.collect()}
@@ -215,53 +220,6 @@ def test_json_flatten_depth(spark):
     assert arr["d_0"] == "1" and arr["d_1"] == "2"
 
 
-# --- multimodal -------------------------------------------------------------
-
-def test_media_features(spark):
-    media = M.synth_media(spark, 12)
-    feats = M.media_features(media).collect()
-    assert len(feats) == 12
-    for r in feats:
-        assert len(r["feature"]) == M.FEATURE_DIM
-        assert r["n_bytes"] > 0
-    # determinism: same payload → same feature
-    again = M.media_features(M.synth_media(spark, 12)).collect()
-    assert {r["media_id"]: r["feature"] for r in feats} == {
-        r["media_id"]: r["feature"] for r in again
-    }
-
-
-def test_image_resize_plumbing(spark):
-    media = M.synth_media(spark, 6)
-    out = M.image_resize(media, 64, 64)
-    assert out.schema == media.schema
-    rows = {r["media_id"]: r for r in out.collect()}
-    orig = {r["media_id"]: r for r in media.collect()}
-    for mid, r in rows.items():
-        if r["kind"] == "image":
-            assert bytes(r["payload"]) != bytes(orig[mid]["payload"])
-        else:
-            assert bytes(r["payload"]) == bytes(orig[mid]["payload"])
-
-
-def test_media_feature_dedup_integration(spark):
-    """Features feed the embedding dedup operator (same payload → cos 1.0)."""
-    import pyspark.sql.types as T
-    media = M.synth_media(spark, 6)
-    dup = media.limit(2).withColumn("media_id", F.concat(F.lit("dup-"), "media_id"))
-    both = media.unionByName(dup)
-    feats = M.media_features(both).withColumn(
-        "feature", F.col("feature").cast(T.ArrayType(T.DoubleType()))
-    )
-    pairs = D.embedding_dup_pairs(feats, 0.9999, id_col="media_id", vec_col="feature").collect()
-    found = {(min(r["id_a"], r["id_b"]).replace("dup-", ""), max(r["id_a"], r["id_b"]).replace("dup-", ""))
-             for r in pairs}
-    # every planted duplicate (same underlying payload) must be recovered;
-    # the toy stub features may also pair distinct-but-similar payloads
-    identical = {(a, b) for a, b in found if a == b}
-    assert len(identical) == 2
-
-
 def test_ann_ivf_topk(spark):
     """IVF returns a candidate-restricted top-k: every returned cos matches
     the exact cosine, recall vs brute force is positive, and the candidate
@@ -304,143 +262,6 @@ def test_ann_ivf_topk(spark):
     assert common, "IVF found none of the true top-k (nprobe=3/8 should catch some)"
     for key in common:
         assert abs(ivf[key] - brute[key]) < 1e-9  # exact cosines, same rounding
-
-
-def test_media_probe_real_bytes(spark):
-    """REAL container bytes (not fakes): a valid PNG built with zlib, a valid
-    WAV from the stdlib wave module, a handcrafted JPEG SOF0 header, a GIF89a
-    header — the probe must extract true dimensions / duration."""
-    import io
-    import struct
-    import wave
-    import zlib
-
-    # 3x2 PNG, truly valid (CRC-checked chunks)
-    def chunk(typ, data):
-        c = typ + data
-        return struct.pack(">I", len(data)) + c + struct.pack(">I", zlib.crc32(c))
-
-    raw = b"".join(b"\x00" + b"\x10\x20\x30" * 3 for _ in range(2))  # 2 scanlines
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 2, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-    # 0.5s 8kHz mono 16-bit WAV via stdlib wave
-    buf = io.BytesIO()
-    w = wave.open(buf, "wb")
-    w.setnchannels(1)
-    w.setsampwidth(2)
-    w.setframerate(8000)
-    w.writeframes(b"\x00\x01" * 4000)
-    w.close()
-    wav = buf.getvalue()
-
-    # JPEG: SOI + APP0 + SOF0 (640x480, 3 components) — marker-walk parseable
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-        + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08" + struct.pack(">HH", 480, 640)
-        + b"\x03\x01\x22\x00\x02\x11\x01\x03\x11\x01"
-    )
-
-    gif = b"GIF89a" + struct.pack("<HH", 12, 34) + b"\x00" * 6
-    mp4 = struct.pack(">I", 20) + b"ftypisom" + b"\x00" * 12
-
-    from loongcollector_spark.operators.multimodal import media_probe, probe_media_bytes
-
-    # pure-function checks
-    assert probe_media_bytes(png) == {"mime": "image/png", "width": 3, "height": 2, "duration_ms": None}
-    assert probe_media_bytes(wav)["duration_ms"] == 500
-    assert probe_media_bytes(jpeg) == {"mime": "image/jpeg", "width": 640, "height": 480, "duration_ms": None}
-    assert probe_media_bytes(gif) == {"mime": "image/gif", "width": 12, "height": 34, "duration_ms": None}
-    assert probe_media_bytes(mp4)["mime"] == "video/mp4"
-
-    # distributed path
-    rows = [
-        ("png1", "binary", bytearray(png), None),
-        ("wav1", "binary", bytearray(wav), None),
-        ("jpg1", "binary", bytearray(jpeg), None),
-        ("mp41", "binary", bytearray(mp4), None),
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in media_probe(df).collect()}
-    assert out["png1"]["kind"] == "image" and out["png1"]["meta"]["width"] == 3
-    assert out["wav1"]["kind"] == "audio" and out["wav1"]["meta"]["duration_ms"] == 500
-    assert out["jpg1"]["meta"]["width"] == 640 and out["jpg1"]["meta"]["height"] == 480
-    assert out["mp41"]["kind"] == "video"
-    assert out["png1"]["meta"]["n_bytes"] == len(png)
-
-
-def test_png_pixel_decode_real():
-    """REAL pixel decode (stdlib zlib): exact pixel values come back for every
-    filter type (None/Sub/Up/Average/Paeth), grayscale, palette, and RGBA;
-    non-PNG payloads fall back to the labeled deterministic fake."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def chunk(typ, data):
-        c = typ + data
-        return struct.pack(">I", len(data)) + c + struct.pack(">I", zlib.crc32(c))
-
-    def png(w, h, color, raw, plte=None):
-        out = b"\x89PNG\r\n\x1a\n" + chunk(
-            b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-        )
-        if plte is not None:
-            out += chunk(b"PLTE", plte)
-        return out + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-
-    # RGB 2x2, filter 0: exact round-trip
-    pix = np.array([[[10, 20, 30], [40, 50, 60]], [[70, 80, 90], [100, 110, 120]]], np.uint8)
-    raw = b"".join(b"\x00" + pix[y].tobytes() for y in range(2))
-    got = M._decode_png(png(2, 2, 2, raw))
-    assert np.array_equal(got, pix)
-
-    # filter exercises on a known 3x2 RGB image
-    img = np.array(
-        [[[1, 2, 3], [5, 7, 9], [10, 20, 30]], [[2, 4, 6], [6, 9, 12], [60, 50, 40]]], np.uint8
-    )
-    # row0 Sub (delta from left pixel), row1 Up (delta from row above)
-    row0 = np.concatenate([img[0, 0], (img[0, 1] - img[0, 0]), (img[0, 2] - img[0, 1])])
-    row1 = (img[1] - img[0]).reshape(-1)
-    raw = b"\x01" + row0.astype(np.uint8).tobytes() + b"\x02" + row1.astype(np.uint8).tobytes()
-    assert np.array_equal(M._decode_png(png(3, 2, 2, raw)), img)
-
-    # Average (row0: pred = left/2) and Paeth (row1)
-    r0 = [img[0].reshape(-1)[i] - ((int(img[0].reshape(-1)[i - 3]) if i >= 3 else 0) + 0) // 2
-          for i in range(9)]
-    flat0, flat1 = img[0].reshape(-1).astype(int), img[1].reshape(-1).astype(int)
-    r1 = []
-    for i in range(9):
-        a = flat1[i - 3] if i >= 3 else 0
-        b = flat0[i]
-        c = flat0[i - 3] if i >= 3 else 0
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-        r1.append(flat1[i] - pred)
-    raw = (
-        b"\x03" + np.array(r0, np.uint8).tobytes() + b"\x04" + np.array(r1, np.uint8).tobytes()
-    )
-    assert np.array_equal(M._decode_png(png(3, 2, 2, raw)), img)
-
-    # grayscale -> replicated RGB; palette -> PLTE lookup; RGBA -> alpha dropped
-    g = M._decode_png(png(2, 1, 0, b"\x00\x11\xee"))
-    assert np.array_equal(g, [[[0x11] * 3, [0xEE] * 3]])
-    p = M._decode_png(png(2, 1, 3, b"\x00\x01\x00", plte=bytes([9, 8, 7, 1, 2, 3])))
-    assert np.array_equal(p, [[[1, 2, 3], [9, 8, 7]]])
-    a = M._decode_png(png(1, 1, 6, b"\x00\x05\x06\x07\xff"))
-    assert np.array_equal(a, [[[5, 6, 7]]])
-
-    # real PNG flows through the public decode entry; non-PNG falls back to 8x8 fake
-    assert np.array_equal(M._decode_image_stub(png(2, 2, 2, b"".join(
-        b"\x00" + pix[y].tobytes() for y in range(2)))), pix)
-    assert M._decode_image_stub(b"not a png").shape == (8, 8, 3)
 
 
 def test_connected_components_chain(spark):
@@ -800,59 +621,6 @@ def test_quantize_int8(spark):
     assert (out[2]["q_sum"], out[2]["q_min"], out[2]["q_max"]) == (0, 0, 0)
     # single negative: q = floor(-127 + .5) = -127
     assert out[3]["q_sum"] == -127
-
-
-def test_wav_sample_decode_real():
-    """REAL WAV PCM decode (stdlib struct): exact sample values come back for
-    16-bit/8-bit/float32 PCM incl. stereo mono-mix; compressed/non-WAV
-    payloads fall back to the labeled deterministic fake."""
-    import io
-    import struct as st
-    import wave
-
-    import numpy as np
-
-    def wav16(frames: bytes, n_ch: int = 1, sr: int = 8000) -> bytes:
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(n_ch)
-            w.setsampwidth(2)
-            w.setframerate(sr)
-            w.writeframes(frames)
-        return buf.getvalue()
-
-    # mono 16-bit: exact values
-    vals = [0, 16384, -16384, 32767, -32768]
-    got = M._decode_wav(wav16(st.pack("<5h", *vals)))
-    assert np.allclose(got, np.array(vals, np.float32) / 32768.0)
-
-    # stereo 16-bit: mono mix = channel mean
-    st_frames = st.pack("<4h", 1000, 3000, -2000, -4000)
-    got = M._decode_wav(wav16(st_frames, n_ch=2))
-    assert np.allclose(got, np.array([2000, -3000], np.float32) / 32768.0)
-
-    # 8-bit unsigned PCM via hand-built RIFF (wave module writes 8-bit too,
-    # but build it raw to pin the chunk walk)
-    def riff(fmt_tag, n_ch, sr, bits, data):
-        bps = sr * n_ch * bits // 8
-        fmt = st.pack("<HHIIHH", fmt_tag, n_ch, sr, bps, n_ch * bits // 8, bits)
-        body = b"fmt " + st.pack("<I", len(fmt)) + fmt + b"data" + st.pack("<I", len(data)) + data
-        return b"RIFF" + st.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-    got = M._decode_wav(riff(1, 1, 8000, 8, bytes([128, 255, 0])))
-    assert np.allclose(got, [(128 - 128) / 128, (255 - 128) / 128, (0 - 128) / 128])
-
-    # float32 PCM (tag 3)
-    got = M._decode_wav(riff(3, 1, 8000, 32, st.pack("<3f", 0.5, -0.25, 1.0)))
-    assert np.allclose(got, [0.5, -0.25, 1.0])
-
-    # compressed tag (ADPCM=2) and non-WAV: None -> stub path returns the fake
-    assert M._decode_wav(riff(2, 1, 8000, 4, b"\x00\x01")) is None
-    fake = M._decode_audio_stub(b"not a wav at all")
-    assert fake.dtype == np.float32 and fake.shape == (160,)
-    # the stub dispatcher uses the REAL decode for WAV payloads
-    real = M._decode_audio_stub(wav16(st.pack("<2h", 100, -100)))
-    assert np.allclose(real, np.array([100, -100], np.float32) / 32768.0)
 
 
 def test_winnow_fingerprints_guarantee(spark):
