@@ -31,30 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 from pyspark.sql import types as T
 
-from .parse import _dedup_entries_last_wins, _entries_map, _opt_entry, merge_maps
-
-
-def _set_field(base: Column, key: str, value: Column, present: Column) -> Column:
-    """fields-map with ``key`` set to ``value`` where ``present`` (else left
-    untouched). STRUCTURALLY duplicate-free: the shadowed base entry is
-    filtered out before map construction, so this works under any
-    ``spark.sql.mapKeyDedupPolicy`` (the driver's harness session carries the
-    default EXCEPTION — round 1 lost 3 queries to a LAST_WIN conf dependency).
-    Overwrite semantics per LogEvent::SetContent (core/models/LogEvent.h:115-124)."""
-    from .parse import _let
-
-    def build(b: Column, v: Column) -> Column:
-        def with_cond(cond: Column) -> Column:
-            kept = F.filter(F.map_entries(b), lambda e: ~cond | (e["key"] != F.lit(key)))
-            return F.map_from_entries(F.concat(kept, _opt_entry(key, v, cond)))
-
-        # cond is read per map entry inside the filter lambda — bind it so the
-        # present/value trees evaluate once per row, not once per entry
-        return _let(F.coalesce(present & v.isNotNull(), F.lit(False)), with_cond)
-
-    # let-bind: value (often a regex/hash over the field) and base are each
-    # referenced 2+ times — interpreted HOFs would re-evaluate them per use
-    return _let(base, lambda b: _let(value, lambda v: build(b, v)))
+from .. import sqltext as S
 
 
 def dict_map(
@@ -69,7 +46,7 @@ def dict_map(
     """Lookup-table enrich from ``lookup``: a Python ``dict`` or a
     2-column ``(key, value)`` DataFrame.
 
-    A ``dict`` becomes a literal ``create_map`` looked up per row — a plain
+    A ``dict`` becomes a literal ``map(...)`` looked up per row — a plain
     projection, no join and no broadcast job (processor_dict_map.go caps
     dicts at 1000 entries, .go:96-146, so the literal stays small). A
     DataFrame is a broadcast hash join → no shuffle of the big side. A null
@@ -77,51 +54,43 @@ def dict_map(
     ``dest_key`` is absent; ``missing`` is the HandleMissing default
     (.go:148-186; None → leave row unenriched).
     """
-    src = F.col("fields")[source_key] if source_is_field else F.col(source_key)
+    src = S.get("fields", source_key) if source_is_field else S.ident(source_key)
     if isinstance(lookup, dict):
-        pairs = [F.lit(x) for kv in lookup.items() if kv[0] is not None for x in kv]
-        joined, mapped = df, F.create_map(*pairs)[src] if pairs else F.lit(None).cast("string")
+        pairs = {k: v for k, v in lookup.items() if k is not None}
+        joined, mapped = df, f"{S.literal_map(pairs)}[{src}]" if pairs else "CAST(NULL AS STRING)"
     else:
         k, v = lookup.columns[:2]
         d = broadcast(lookup.select(F.col(k).alias("__dm_key"), F.col(v).alias("__dm_val")))
-        joined, mapped = df.join(d, src == F.col("__dm_key"), "left"), F.col("__dm_val")
+        joined, mapped = df.join(d, F.expr(src) == F.col("__dm_key"), "left"), "__dm_val"
     if missing is not None:
         # HandleMissing fills only rows that HAVE the source key
-        mapped = F.when(src.isNotNull(), F.coalesce(mapped, F.lit(missing)))
-    base = F.col("fields")
-    if mode == "fill":
-        new_val = F.coalesce(base[dest_key], mapped)
-    else:
-        new_val = mapped
-    out_map = _set_field(base, dest_key, new_val, new_val.isNotNull())
-    return joined.withColumn("fields", out_map).drop("__dm_key", "__dm_val")
+        mapped = f"(CASE WHEN ({src} IS NOT NULL) THEN coalesce({mapped}, {S.lit(missing)}) END)"
+    new_val = f"coalesce({S.get('fields', dest_key)}, {mapped})" if mode == "fill" else mapped
+    out_map = S.set_field("fields", dest_key, new_val, f"({new_val} IS NOT NULL)")
+    return joined.withColumn("fields", F.expr(out_map)).drop("__dm_key", "__dm_val")
 
 
 def rename_keys(df: DataFrame, source_keys: list[str], dest_keys: list[str]) -> DataFrame:
     """processor_rename: positional key rename inside the fields map."""
-    mapping = dict(zip(source_keys, dest_keys))
-    pairs = [x for kv in mapping.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
-    lookup = F.create_map(*pairs)
-    renamed = F.transform(
-        F.map_entries(F.col("fields")),
-        lambda e: F.struct(
-            F.coalesce(lookup[e["key"]], e["key"]).alias("key"), e["value"].alias("value")
-        ),
-    )
+    lookup = S.literal_map(dict(zip(source_keys, dest_keys)))
+
+    def renamed(e: str) -> str:
+        return f"named_struct('key', coalesce({lookup}[{e}.key], {e}.key), 'value', {e}.value)"
+
+    entries = f"transform(map_entries(fields), {S.lam(renamed)})"
     # renaming onto an existing key must not crash map construction → last-wins
-    return df.withColumn("fields", F.map_from_entries(_dedup_entries_last_wins(renamed)))
+    return df.withColumn("fields", F.expr(f"map_from_entries({S.dedup_entries_last_wins(entries)})"))
 
 
 def add_fields(df: DataFrame, fields: dict[str, str], ignore_if_exist: bool = False) -> DataFrame:
     """processor_add_fields: append constant fields."""
-    add = F.create_map(*[F.lit(x) for kv in fields.items() for x in kv])
-    base = F.col("fields")
+    add = S.literal_map(fields)
     if ignore_if_exist:
         # keys already in base are filtered from `add` → concat stays disjoint
         # (key-presence check, not value-null check: null-valued keys count)
-        add = F.map_filter(add, lambda k, _: ~F.array_contains(F.map_keys(base), k))
-        return df.withColumn("fields", F.map_concat(base, add))
-    return df.withColumn("fields", merge_maps(base, add))
+        absent = S.lam(lambda k, _: f"(NOT array_contains(map_keys(fields), {k}))", 2)
+        return df.withColumn("fields", F.expr(f"map_concat(fields, map_filter({add}, {absent}))"))
+    return df.withColumn("fields", F.expr(S.merge_maps("fields", add)))
 
 
 # processor_appender / processor_cloud_meta metadata source. The reference
@@ -175,17 +144,26 @@ def expand_appender_template(
     return _TEMPLATE_RE.sub(repl, value)
 
 
-def sort_labels_value(col: Column) -> Column:
-    """SortLabels post-step (processor_appender.go:93-105): parse the value as
-    ``k#$#v|k#$#v…`` metric labels and re-emit sorted by key; values without
-    any valid ``#$#`` pair are left untouched (MetricLabels.Len()==0 guard)."""
-    labels = F.split(col, r"\|")
-    valid = F.filter(labels, lambda l: l.contains("#$#"))
-    structs = F.transform(
-        valid, lambda l: F.struct(F.substring_index(l, "#$#", 1).alias("k"), l.alias("l"))
-    )
-    sorted_val = F.array_join(F.transform(F.array_sort(structs), lambda s: s["l"]), "|")
-    return F.when(F.size(valid) > 0, sorted_val).otherwise(col)
+_LABEL_SEP = S.lit("#$#")
+_PIPE_RX = S.lit(r"\|")
+
+
+def sort_labels_value(value: str) -> str:
+    """SortLabels post-step (processor_appender.go:93-105), over the SQL text
+    ``value``: parse it as ``k#$#v|k#$#v…`` metric labels and re-emit sorted
+    by key; values without any valid ``#$#`` pair are left untouched
+    (MetricLabels.Len()==0 guard)."""
+
+    def has_pair(label: str) -> str:
+        return f"contains({label}, {_LABEL_SEP})"
+
+    def keyed(label: str) -> str:
+        return f"named_struct('k', substring_index({label}, {_LABEL_SEP}, 1), 'l', {label})"
+
+    valid = f"filter(split({value}, {_PIPE_RX}), {S.lam(has_pair)})"
+    structs = f"transform({valid}, {S.lam(keyed)})"
+    sorted_val = f"array_join(transform(array_sort({structs}), {S.lam(lambda s: s + '.l')}), '|')"
+    return f"(CASE WHEN (size({valid}) > 0) THEN {sorted_val} ELSE {value} END)"
 
 
 def appender(
@@ -201,11 +179,10 @@ def appender(
     resulting ``k#$#v|…`` label string by key (.go:93-105)."""
     if "{{" in value:
         value = expand_appender_template(value, **(template_vars or {}))
-    base = F.col("fields")
-    new = F.concat(F.coalesce(base[key], F.lit("")), F.lit(value))
+    new = f"concat(coalesce({S.get('fields', key)}, ''), {S.lit(value)})"
     if sort_labels:
         new = sort_labels_value(new)
-    return df.withColumn("fields", _set_field(base, key, new, F.lit(True)))
+    return df.withColumn("fields", F.expr(S.set_field("fields", key, new, "true")))
 
 
 def desensitize_const(
@@ -218,28 +195,21 @@ def desensitize_const(
 ) -> DataFrame:
     """processor_desensitize const mode: regex redaction → constant
     (ProcessorDesensitizeNative.cpp:202-207). Native regexp_replace."""
-    def first_only(cur):
+    rx, rep = S.lit(regex), S.lit(replacement)
+
+    def first_only(cur: str) -> str:
         # Replace only the FIRST occurrence (Replace vs GlobalReplace,
         # ProcessorDesensitizeNative.cpp:202-207): stitch around the first match.
-        # regexp_instr's pattern parameter is a COLUMN (unlike regexp_extract/
-        # regexp_replace, which accept str) — a bare str is resolved as a
-        # column NAME and fails analysis (found by the redaction differential)
-        pos = F.regexp_instr(cur, F.lit(regex))  # 1-based start, 0 if no match
-        hit = F.regexp_extract(cur, regex, 0)
-        stitched = F.concat(
-            F.substr(cur, F.lit(1), pos - F.lit(1)),
-            F.lit(replacement),
-            F.substr(cur, pos + F.length(hit), F.length(cur)),
-        )
-        return F.when(pos > 0, stitched).otherwise(cur)
+        pos = f"regexp_instr({cur}, {rx})"  # 1-based start, 0 if no match
+        hit = f"regexp_extract({cur}, {rx}, 0)"
+        stitched = f"concat(substr({cur}, 1, {pos} - 1), {rep}, substr({cur}, {pos} + length({hit}), length({cur})))"
+        return f"(CASE WHEN ({pos} > 0) THEN {stitched} ELSE {cur} END)"
 
+    cur = S.get("fields", key) if source_is_field else S.ident(key)
+    new = f"regexp_replace({cur}, {rx}, {rep})" if replace_all else first_only(cur)
     if source_is_field:
-        base = F.col("fields")
-        cur = base[key]
-        new = F.regexp_replace(cur, regex, replacement) if replace_all else first_only(cur)
-        return df.withColumn("fields", _set_field(base, key, new, cur.isNotNull()))
-    new = F.regexp_replace(F.col(key), regex, replacement) if replace_all else first_only(F.col(key))
-    return df.withColumn(key, new)
+        return df.withColumn("fields", F.expr(S.set_field("fields", key, new, f"({cur} IS NOT NULL)")))
+    return df.withColumn(key, F.expr(new))
 
 
 def _md5_sub(series: pd.Series, pattern: str) -> pd.Series:
@@ -262,15 +232,17 @@ def desensitize_md5(
         return _md5_sub(s, regex)
 
     if source_is_field:
-        # the UDF result must land in a real column first: Spark forbids
-        # Python-UDF references inside higher-order-function lambdas, and
-        # _set_field's structural filter is one
+        # the UDF result lands in a real column first: the map update is SQL
+        # text, which can name a column but not hold a Python UDF
         out = df.withColumn("__dsm_val__", md5_sub_udf(F.col("fields")[key]))
-        base = F.col("fields")
+        present = f"({S.get('fields', key)} IS NOT NULL)"
         return out.withColumn(
-            "fields", _set_field(base, key, F.col("__dsm_val__"), base[key].isNotNull())
+            "fields", F.expr(S.set_field("fields", key, "__dsm_val__", present))
         ).drop("__dsm_val__")
     return df.withColumn(key, md5_sub_udf(F.col(key)))
+
+
+_UNQUOTE_RX = r'^"(.*)"$'
 
 
 def string_replace(
@@ -283,23 +255,23 @@ def string_replace(
 ) -> DataFrame:
     """processor_string_replace: regex | const | unquote
     (plugins/processor/stringreplace/processor_string_replace.go:41-55)."""
-    base = F.col("fields")
-    cur = base[key]
+    cur = S.get("fields", key)
     if method == "regex":
-        new = F.regexp_replace(cur, match, replacement)
+        new = f"regexp_replace({cur}, {S.lit(match)}, {S.lit(replacement)})"
     elif method == "const":
-        new = F.replace(cur, F.lit(match), F.lit(replacement))
+        new = f"replace({cur}, {S.lit(match)}, {S.lit(replacement)})"
     elif method == "unquote":
-        new = F.regexp_replace(cur, r'^"(.*)"$', "$1")
+        new = f"regexp_replace({cur}, {S.lit(_UNQUOTE_RX)}, '$1')"
     else:
         raise ValueError(f"unknown method {method!r}")
-    dk = dest_key or key
-    return df.withColumn("fields", _set_field(base, dk, new, cur.isNotNull()))
+    return df.withColumn("fields", F.expr(S.set_field("fields", dest_key or key, new, f"({cur} IS NOT NULL)")))
 
 
 # Go base64.StdEncoding shape: 4-char groups, exact '='/'==' tail padding.
 # (\r/\n are stripped BEFORE this check — Go's decoder ignores them too.)
 _B64_STRICT = r"(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?"
+_CRLF = S.lit("[\r\n]")
+_SPACES_RX = S.lit(r"\s+")
 
 
 def base64_field(df: DataFrame, key: str, dest_key: str, decode: bool = False) -> DataFrame:
@@ -317,33 +289,28 @@ def base64_field(df: DataFrame, key: str, dest_key: str, decode: bool = False) -
     Spark's own base64 parser is MIME-lenient (skips ALL whitespace, accepts
     missing padding; probed) and ``unbase64`` is worse (decodes invalid
     input to garbage bytes)."""
-    base = F.col("fields")
-    cur = base[key]
+    cur = S.get("fields", key)
     if decode:
-        cleaned = F.regexp_replace(cur, "[\r\n]", "")
-        new = F.when(
-            cleaned.rlike(f"^{_B64_STRICT}$"),
-            F.try_to_binary(cleaned, F.lit("base64")).cast("string"),
-        )
+        cleaned = f"regexp_replace({cur}, {_CRLF}, '')"
+        decoded = f"CAST(try_to_binary({cleaned}, 'base64') AS STRING)"
+        new = f"(CASE WHEN {S.rlike(cleaned, f'^{_B64_STRICT}$')} THEN {decoded} END)"
     else:
-        new = F.regexp_replace(F.base64(cur.cast("binary")), "[\r\n]", "")
-    return df.withColumn("fields", _set_field(base, dest_key, new, cur.isNotNull()))
+        new = f"regexp_replace(base64(CAST({cur} AS BINARY)), {_CRLF}, '')"
+    return df.withColumn("fields", F.expr(S.set_field("fields", dest_key, new, f"({cur} IS NOT NULL)")))
 
 
 def md5_field(df: DataFrame, key: str, dest_key: str) -> DataFrame:
     """processor_md5: md5 hex of field value."""
-    base = F.col("fields")
-    cur = base[key]
-    return df.withColumn(
-        "fields", _set_field(base, dest_key, F.md5(cur.cast("binary")), cur.isNotNull())
-    )
+    cur = S.get("fields", key)
+    md5 = f"md5(CAST({cur} AS BINARY))"
+    return df.withColumn("fields", F.expr(S.set_field("fields", dest_key, md5, f"({cur} IS NOT NULL)")))
 
 
 def pack_json(df: DataFrame, source_keys: list[str], dest_key: str) -> DataFrame:
     """processor_packjson: pack listed fields into one JSON object string."""
-    base = F.col("fields")
-    obj = F.to_json(F.struct(*[base[k].alias(k) for k in source_keys]))
-    return df.withColumn("fields", _set_field(base, dest_key, obj, F.lit(True)))
+    members = ", ".join(f"{S.lit(k)}, {S.get('fields', k)}" for k in source_keys)
+    obj = f"to_json(named_struct({members}))"
+    return df.withColumn("fields", F.expr(S.set_field("fields", dest_key, obj, "true")))
 
 
 def gotime(
@@ -363,8 +330,7 @@ def gotime(
     ``go_layout=True`` the formats are Go reference layouts exactly as a
     reference config writes them (``"2006-01-02 15:04:05"``), translated via
     :mod:`.gotime_layout`; otherwise raw Spark/JDK patterns."""
-    base = F.col("fields")
-    src_val = base[source_key]
+    src_val = S.get("fields", source_key)
     if go_layout:
         from .gotime_layout import (
             WEEKDAY_STRIP_REGEX,
@@ -375,19 +341,19 @@ def gotime(
 
         if go_layout_has_weekday(source_format):
             # Spark bans 'E' in parse patterns; the day name is redundant
-            src_val = F.regexp_replace(src_val, WEEKDAY_STRIP_REGEX, "")
+            src_val = f"regexp_replace({src_val}, {S.lit(WEEKDAY_STRIP_REGEX)}, '')"
         if go_layout_needs_pad_collapse(source_format):
             # Go's _2 space-pads single digits ("Jan  2"); JDK 'd' rejects the
             # extra space — collapse runs before the parse
-            src_val = F.regexp_replace(src_val, r"\s+", " ")
+            src_val = f"regexp_replace({src_val}, {_SPACES_RX}, ' ')"
         source_format = go_layout_to_spark(source_format, for_parse=True)
         dest_format = go_layout_to_spark(dest_format)
-    ts = F.to_utc_timestamp(F.try_to_timestamp(src_val, F.lit(source_format)), source_tz)
-    formatted = F.date_format(F.from_utc_timestamp(ts, dest_tz), dest_format)
-    out = df.withColumn("fields", _set_field(base, dest_key, formatted, formatted.isNotNull()))
+    ts = f"to_utc_timestamp(try_to_timestamp({src_val}, {S.lit(source_format)}), {S.lit(source_tz)})"
+    formatted = f"date_format(from_utc_timestamp({ts}, {S.lit(dest_tz)}), {S.lit(dest_format)})"
+    out = df.withColumn("fields", F.expr(S.set_field("fields", dest_key, formatted, f"({formatted} IS NOT NULL)")))
     if set_time:
-        prev = F.col("event_time") if "event_time" in df.columns else F.lit(None).cast("timestamp")
-        out = out.withColumn("event_time", F.coalesce(ts, prev))
+        prev = "event_time" if "event_time" in df.columns else S.NULL_TS
+        out = out.withColumn("event_time", F.expr(f"coalesce({ts}, {prev})"))
     return out
 
 
@@ -400,46 +366,31 @@ def anchor(
     """processor_anchor: substring extraction between Start/Stop anchor strings
     per ``{"start":…, "stop":…, "field":…}`` (plugins/processor/anchor/
     anchor.go:46). Empty start → begin of line; empty stop → end of line."""
-    src = F.col("fields")[source_key] if source_is_field else F.col(source_key)
-    base = (
-        F.coalesce(F.col("fields"), F.create_map().cast("map<string,string>"))
-        if "fields" in df.columns
-        else F.create_map().cast("map<string,string>")
-    )
-    pairs = []
+    src = S.get("fields", source_key) if source_is_field else S.ident(source_key)
+    base = f"coalesce(fields, {S.EMPTY_MAP})" if "fields" in df.columns else S.EMPTY_MAP
+    entries = []
     for a in anchors:
         start, stop, field = a.get("start", ""), a.get("stop", ""), a["field"]
         # FIRST occurrence of Start (anchor.go:175 uses strings.Index), then
         # Stop searched strictly after it; a non-empty Stop that is absent
         # skips the field entirely (anchor.go:183-188)
+        present = [f"({src} IS NOT NULL)"]
         if start:
-            sp = F.locate(start, src)  # 1-based, 0 = absent
-            after = F.substr(src, sp + F.lit(len(start)), F.length(src))
-            found_start = sp > 0
+            sp = f"locate({S.lit(start)}, {src})"  # 1-based, 0 = absent
+            after = f"substr({src}, {sp} + {len(start)}, length({src}))"
+            present.append(f"({sp} > 0)")
         else:
             after = src
-            found_start = F.lit(True)
         if stop:
-            ep = F.locate(stop, after)
-            val = F.substr(after, F.lit(1), ep - F.lit(1))
-            present = src.isNotNull() & found_start & (ep > 0)
+            ep = f"locate({S.lit(stop)}, {after})"
+            val = f"substr({after}, 1, {ep} - 1)"
+            present.append(f"({ep} > 0)")
         else:
             val = after
-            present = src.isNotNull() & found_start
-        pairs.append((field, val, present))
-    entries = [
-        F.slice(
-            F.array(F.struct(F.lit(k).alias("key"), v.alias("value"))), 1,
-            F.when(p, F.lit(1)).otherwise(F.lit(0)),
-        )
-        for k, v, p in pairs
-    ]
-    arr = entries[0] if len(entries) == 1 else F.concat(*entries)
-    add = F.coalesce(
-        F.map_from_entries(_dedup_entries_last_wins(arr)),
-        F.create_map().cast("map<string,string>"),
-    )
-    return df.withColumn("fields", merge_maps(base, add))
+        entries.append(S.opt_entry(S.lit(field), val, f"({' AND '.join(present)})"))
+    arr = entries[0] if len(entries) == 1 else f"concat({', '.join(entries)})"
+    add = f"coalesce(map_from_entries({S.dedup_entries_last_wins(arr)}), {S.EMPTY_MAP})"
+    return df.withColumn("fields", F.expr(S.merge_maps(base, add)))
 
 
 def encrypt_fields(
@@ -450,27 +401,22 @@ def encrypt_fields(
     NOTE: Spark prepends the IV to CBC output — the bytes after the 16-byte
     prefix are the OpenSSL-compatible ciphertext (known-answer test in
     tests/test_parsers.py::test_encrypt_known_answer)."""
-    base = F.col("fields")
-    key_b = F.unhex(F.lit(key_hex))
-    iv_b = F.unhex(F.lit(iv_hex)) if iv_hex else F.lit(b"")
-    m = base
+    key_b = f"unhex({S.lit(key_hex)})"
+    iv_b = f"unhex({S.lit(iv_hex)})" if iv_hex else "X''"
     for k in keys:
-        cur = m[k]
-        enc = F.hex(F.aes_encrypt(cur.cast("binary"), key_b, F.lit("CBC"), F.lit("PKCS"), iv_b))
-        m = _set_field(m, k, enc, cur.isNotNull())
-    return df.withColumn("fields", m)
+        cur = S.get("fields", k)
+        enc = f"hex(aes_encrypt(CAST({cur} AS BINARY), {key_b}, 'CBC', 'PKCS', {iv_b}))"
+        df = df.withColumn("fields", F.expr(S.set_field("fields", k, enc, f"({cur} IS NOT NULL)")))
+    return df
 
 
 def add_tags(df: DataFrame, tags: dict[str, str]) -> DataFrame:
     """processor_tag_native: inject host/env tags as group tags
     (core/plugin/processor/inner/ProcessorTagNative.cpp:44-120)."""
-    add = F.create_map(*[F.lit(x) for kv in tags.items() for x in kv])
+    add = S.literal_map(tags)
     if "tags" in df.columns:
-        return df.withColumn(
-            "tags",
-            merge_maps(F.coalesce(F.col("tags"), F.create_map().cast("map<string,string>")), add),
-        )
-    return df.withColumn("tags", add)
+        add = S.merge_maps(f"coalesce(tags, {S.EMPTY_MAP})", add)
+    return df.withColumn("tags", F.expr(add))
 
 
 def log_to_metric(
@@ -586,29 +532,24 @@ def geoip(
         & (F.col("__ip_long") <= F.col("__geo.ip_end")),
         "left",
     )
-    g = F.col("__geo")
+
     # format_string("%.8f", NULL) yields the literal string "null" (Java
     # String.format semantics) — gate on the input, not the formatted output
-    coord = lambda c: F.when(g[c].isNotNull(), F.format_string("%.8f", g[c]))  # noqa: E731
-    emit: list[tuple[str, Column]] = [
-        (f"{source_key}_city_", g["city"]),
-        (f"{source_key}_province_", g["province"]),
-        (f"{source_key}_province_code_", g["province_code"]),
-        (f"{source_key}_country_", g["country"]),
-        (f"{source_key}_country_code_", g["country_code"]),
+    def coord(c: str) -> str:
+        return f"(CASE WHEN (__geo.{c} IS NOT NULL) THEN format_string('%.8f', __geo.{c}) END)"
+
+    emit: list[tuple[str, str]] = [
+        (f"{source_key}_{c}_", f"__geo.{c}")
+        for c in ("city", "province", "province_code", "country", "country_code")
     ]
     if not no_coordinate:
-        emit += [
-            (f"{source_key}_longitude_", coord("longitude")),
-            (f"{source_key}_latitude_", coord("latitude")),
-        ]
-    base = F.coalesce(F.col("fields"), F.create_map().cast("map<string,string>"))
+        emit += [(f"{source_key}_longitude_", coord("longitude")), (f"{source_key}_latitude_", coord("latitude"))]
+    base = f"coalesce(fields, {S.EMPTY_MAP})"
     if source_is_field and not keep_source:
-        base = F.map_from_entries(
-            F.filter(F.map_entries(base), lambda e: e["key"] != F.lit(source_key))
-        )
-    add = _entries_map(*[_opt_entry(k, v, v.isNotNull()) for k, v in emit])
-    out = joined.withColumn("fields", merge_maps(base, add))
+        kept = S.lam(lambda e: f"({e}.key != {S.lit(source_key)})")
+        base = f"map_from_entries(filter(map_entries({base}), {kept}))"
+    add = S.entries_map(*[S.opt_entry(S.lit(k), v, f"({v} IS NOT NULL)") for k, v in emit])
+    out = joined.withColumn("fields", F.expr(S.merge_maps(base, add)))
     return out.drop("__geo", "__blk", "__ip_long", "__ip_blk")
 
 
@@ -635,18 +576,15 @@ def cloud_meta(
     src = provider or MOCK_CLOUD_META
     rename = rename or {}
     meta = {rename.get(k, k): src[k] for k in metadata if k in src}
-    add = F.create_map(*[F.lit(x) for kv in meta.items() for x in kv])
-    base = F.coalesce(F.col("fields"), F.create_map().cast("map<string,string>"))
+    add = S.literal_map(meta)
+    base = f"coalesce(fields, {S.EMPTY_MAP})"
     if json_path is None:
-        return df.withColumn("fields", merge_maps(base, add))
+        return df.withColumn("fields", F.expr(S.merge_maps(base, add)))
     field_key, *inner_path = json_path.split(".")
     if not inner_path:
-        obj = F.coalesce(
-            F.from_json(base[field_key], "map<string,string>"),
-            F.create_map().cast("map<string,string>"),
-        )
-        packed = F.to_json(merge_maps(obj, add))
-        return df.withColumn("fields", _set_field(base, field_key, packed, F.lit(True)))
+        obj = f"coalesce(from_json({S.get(base, field_key)}, {S.lit(S.MAP_T)}), {S.EMPTY_MAP})"
+        packed = f"to_json({S.merge_maps(obj, add)})"
+        return df.withColumn("fields", F.expr(S.set_field(base, field_key, packed, "true")))
 
     import json as _json
 
@@ -673,10 +611,8 @@ def cloud_meta(
 
         return s.map(one)
 
-    # the UDF result must be a plain column before _set_field: Spark rejects
-    # Python UDFs inside higher-order-function lambdas
+    # the UDF result lands in a real column first: the map update is SQL
+    # text, which can name a column but not hold a Python UDF
     tmp = "__cloud_meta_packed__"
-    out = df.withColumn(tmp, insert_nested(base[field_key]))
-    return out.withColumn(
-        "fields", _set_field(base, field_key, F.col(tmp), F.lit(True))
-    ).drop(tmp)
+    out = df.withColumn(tmp, insert_nested(F.expr(S.get(base, field_key))))
+    return out.withColumn("fields", F.expr(S.set_field(base, field_key, tmp, "true"))).drop(tmp)

@@ -9,8 +9,6 @@
 * ``filter_key_regex`` — keep row iff every Include regex matches some KEY NAME
   and no key name matches Exclude
   (plugins/processor/filter/keyregex/processor_filter_key_regex.go:28-100).
-* ``sanitize_non_utf8`` — DiscardingNonUTF8 byte rewrite
-  (ProcessorFilterNative.cpp:191-213,297-376).
 * ``drop_keys`` / ``pick_keys`` / ``drop_last_key`` — projection operators
   (plugins/processor/{drop,pickkey,droplastkey}).
 * ``fields_with_condition`` — switch-case field actions
@@ -24,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .. import sqltext as S
 
 
 def _field(fields_col: str, key: str, df_cols: list[str] | None = None) -> Column:
@@ -106,64 +106,6 @@ def filter_key_regex(
     return df.filter(cond)
 
 
-def sanitize_utf8_bytes(b: bytes | None) -> str | None:
-    """Pure-Python core of the DiscardingNonUTF8 rewrite
-    (ProcessorFilterNative.cpp:297-376): valid UTF-8 sequences pass through
-    byte-for-byte, every invalid byte becomes exactly ONE space, so the
-    output's UTF-8 byte length always equals the input byte length. Module
-    level (not nested in the UDF) so property tests can drive it directly."""
-    if b is None:
-        return None
-    out = bytearray()
-    i, n = 0, len(b)
-    while i < n:
-        c = b[i]
-        if c < 0x80:
-            out.append(c)
-            i += 1
-            continue
-        # multi-byte lead: 110x->1, 1110x->2, 11110x->3 continuations
-        need = 1 if 0xC2 <= c <= 0xDF else 2 if 0xE0 <= c <= 0xEF else 3 if 0xF0 <= c <= 0xF4 else -1
-        seq = bytes(b[i : i + need + 1]) if need > 0 else b""
-        ok = need > 0 and len(seq) == need + 1
-        if ok:
-            try:
-                seq.decode("utf-8")
-            except UnicodeDecodeError:
-                ok = False
-        if ok:
-            out.extend(seq)
-            i += need + 1
-        else:
-            out.append(0x20)  # ONE space per invalid byte (.cpp:297-376)
-            i += 1
-    return out.decode("utf-8")
-
-
-def sanitize_non_utf8(df: DataFrame, col: str = "content") -> DataFrame:
-    """Rewrite invalid UTF-8 bytes to spaces (ProcessorFilterNative.cpp:297-376).
-
-    On a STRING column Arrow has already collapsed invalid bytes to U+FFFD, so
-    only the replacement character can be rewritten (byte counts lost). On a
-    BINARY column the reference's one-space-PER-BYTE rewrite is reproduced
-    exactly with an Arrow-batched UDF walking the UTF-8 state machine — read
-    payloads as binary to keep byte fidelity.
-    """
-    from pyspark.sql.types import BinaryType
-
-    field = df.schema[col]
-    if not isinstance(field.dataType, BinaryType):
-        return df.withColumn(col, F.regexp_replace(F.col(col), "�", " "))
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def fix_bytes(s):  # pd.Series -> pd.Series (hints omitted: local import)
-        return s.map(sanitize_utf8_bytes)
-
-    return df.withColumn(col, fix_bytes(F.col(col)))
-
-
 def drop_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     """processor_drop: remove listed keys from the fields map."""
     key_arr = F.array(*[F.lit(k) for k in keys])
@@ -219,65 +161,50 @@ def fields_with_condition(
     "add_fields": {...}, "drop_keys": [...]}``
     (processor_fields_with_condition.go:31-160 — relation applies per field
     condition, logical combines them; defaults equals/and). Compiled to one
-    chained when/otherwise over the fields map.
+    CASE over the fields map.
     """
-    base = F.col("fields")
 
-    def case_cond(c: dict) -> Column:
+    def case_cond(c: dict) -> str:
         rel = c.get("relation_operator", "equals")
         logical = c.get("logical_operator", "and")
         terms = []
         for k, v in c.get("condition", {}).items():
-            fld = base[k]
+            fld = S.get("fields", k)
             if rel == "regexp":
-                t = fld.rlike(v)
+                t = S.rlike(fld, v)
             elif rel == "contains":
-                t = fld.contains(v)
+                t = f"contains({fld}, {S.lit(v)})"
             elif rel == "startwith":
-                t = fld.startswith(v)
+                t = f"startswith({fld}, {S.lit(v)})"
             else:
-                t = fld == F.lit(v)
-            terms.append(F.coalesce(t, F.lit(False)))
+                t = f"({fld} = {S.lit(v)})"
+            terms.append(f"coalesce({t}, false)")
         if not terms:
-            return F.lit(True)
-        cond = terms[0]
-        for t in terms[1:]:
-            cond = (cond | t) if logical == "or" else (cond & t)
-        return cond
+            return "true"
+        return "(" + f" {'OR' if logical == 'or' else 'AND'} ".join(terms) + ")"
 
-    def case_apply(c: dict) -> Column:
-        m = base
+    def case_apply(c: dict) -> str:
+        m = "fields"
         if c.get("drop_keys"):
-            darr = F.array(*[F.lit(k) for k in c["drop_keys"]])
-            m = F.map_filter(m, lambda k, _: ~F.array_contains(darr, k))
+            darr = f"array({', '.join(S.lit(k) for k in c['drop_keys'])})"
+            m = f"map_filter({m}, {S.lam(lambda k, _: f'(NOT array_contains({darr}, {k}))', 2)})"
         if c.get("add_fields"):
-            from .parse import merge_maps
-
-            add = F.create_map(*[F.lit(x) for kv in c["add_fields"].items() for x in kv])
-            m = merge_maps(m, add)
+            m = S.merge_maps(m, S.literal_map(c["add_fields"]))
         return m
 
     # CASE WHEN is first-match-wins by construction — re-ANDing each branch
     # with the negation of all prior conditions re-encoded every earlier
     # predicate into every later branch (O(k²) expression size for zero
     # semantic effect).
-    new_map = None
-    for c in cases:
-        cond = case_cond(c)
-        applied = case_apply(c)
-        new_map = F.when(cond, applied) if new_map is None else new_map.when(cond, applied)
-    new_map = new_map.otherwise(base) if new_map is not None else base
+    new_map = S.case([(case_cond(c), case_apply(c)) for c in cases], "fields") if cases else "fields"
     # Match is decided on the ORIGINAL fields, so the drop filter must run
     # BEFORE the map is rewritten: filtering after withColumn re-resolves
-    # `base` against the transformed map, and a row whose only matching term
+    # `fields` against the transformed map, and a row whose only matching term
     # was clobbered by its own case's add_fields (e.g. condition lvl~err.*
     # plus add_fields lvl=case0) would be wrongly dropped (fresh-seed
     # differential, round 5).  Filter-first is also the cheaper plan: only
     # survivors pay for the map rewrite.
     out = df
     if drop_if_not_match:
-        keep = F.lit(False)
-        for c in cases:
-            keep = keep | case_cond(c)
-        out = out.filter(keep)
-    return out.withColumn("fields", new_map)
+        out = out.filter(F.expr("(" + " OR ".join(["false"] + [case_cond(c) for c in cases]) + ")"))
+    return out.withColumn("fields", F.expr(new_map))

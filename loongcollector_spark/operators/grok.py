@@ -20,9 +20,10 @@ from __future__ import annotations
 
 import re as _re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import sqltext as S
 from . import parse as P
 
 # Self-authored subset of the standard grok vocabulary.
@@ -250,13 +251,13 @@ def compile_grok(
 
 
 def grok_fields(
-    src: Column,
+    src: str,
     match_patterns: list[str],
     lib: dict[str, str] | None = None,
     full_match: bool = False,
     opts: P.ParserOptions = P.ParserOptions(keep_source_on_success=True),
-    enabled: Column | None = None,
-) -> tuple[Column, Column]:
+    enabled: str | None = None,
+) -> tuple[str, str]:
     """(fields_map, ok): patterns tried in order, first hit wins — each later
     pattern's input is gated on all earlier failures, so a row evaluates
     pattern i+1 only if i missed (the sequential-try semantics of
@@ -264,12 +265,12 @@ def grok_fields(
 
     Reference defaults KeepSource=true, IgnoreParseFailure=true (.go:360-375)
     → opts defaults differ from the native regex parser."""
-    en = F.lit(True) if enabled is None else enabled
+    en = "true" if enabled is None else enabled
     compiled = compile_grok(match_patterns, lib, full_match)
-    maps: list[Column] = []
-    ok_any: Column | None = None
+    maps: list[str] = []
+    ok_any: str | None = None
     for rx, keys, _types in compiled:
-        gate = en if ok_any is None else en & ~ok_any
+        gate = en if ok_any is None else f"({en} AND (NOT {ok_any}))"
         m, ok = P.regex_fields(
             src,
             rx,
@@ -277,14 +278,11 @@ def grok_fields(
             opts=P.ParserOptions(keep_source_on_fail=False),  # policy applied once below
             enabled=gate,
         )
-        ok = F.coalesce(ok, F.lit(False))
+        ok = f"coalesce({ok}, false)"
         maps.append(m)
-        ok_any = ok if ok_any is None else ok_any | ok
-    fields = maps[0] if len(maps) == 1 else F.map_concat(*maps)
-    pol = P._policy_entries(src, ok_any, en, opts)
-    if pol:
-        fields = F.map_concat(fields, P._entries_map(*pol))
-    return fields, ok_any
+        ok_any = ok if ok_any is None else f"({ok_any} OR {ok})"
+    fields = maps[0] if len(maps) == 1 else f"map_concat({', '.join(maps)})"
+    return P._with_policy(fields, src, ok_any, en, opts), ok_any
 
 
 def parse_grok(
@@ -302,7 +300,7 @@ def parse_grok(
     the %{PAT:field:int|float} hints (.go:54,377) as CAST top-level columns —
     the fields map stays string-typed (LogContents are strings), the typed
     projection is the Spark-native reading of the hint."""
-    m, ok = grok_fields(F.col(source_col), match_patterns, lib, full_match, opts)
+    m, ok = grok_fields(S.ident(source_col), match_patterns, lib, full_match, opts)
     out = P._finalize_fields(df, m, ok, opts)
     if not ignore_parse_failure:
         out = out.filter(F.col(P.PARSE_OK))

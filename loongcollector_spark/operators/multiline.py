@@ -72,26 +72,6 @@ def merge_multiline(
     return merged.drop("_solo")
 
 
-def split_lines(df: DataFrame, stream_col: str = "stream_id", split_char: str = "\n") -> DataFrame:
-    """processor_split_string_native
-    (core/plugin/processor/inner/ProcessorSplitLogStringNative.cpp:74-176):
-    one event per line, line number preserved for downstream merge/order."""
-    import re as _re
-
-    # the reference splits on a LITERAL SplitChar; F.split takes a regex —
-    # escape so '.', '|' etc. split on the character, not match-anything
-    lines = F.split(F.col("content"), _re.escape(split_char), -1)
-    exploded = df.withColumn(
-        "_ln", F.explode(F.arrays_zip(F.sequence(F.lit(1), F.size(lines)).alias("line_no"), lines.alias("line")))
-    )
-    return (
-        exploded.drop("content")
-        .withColumn("line_no", F.col("_ln.line_no"))
-        .withColumn("content", F.col("_ln.line"))
-        .drop("_ln")
-    )
-
-
 def split_log_regex(
     df: DataFrame,
     split_regex: str,

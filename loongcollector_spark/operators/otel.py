@@ -47,8 +47,10 @@ per-log warn-and-skip (``processor_otel_trace.go:58-64``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import sqltext as S
 
 _KV = "array<struct<key:string, value:struct<stringValue:string, intValue:string, doubleValue:double, boolValue:boolean>>>"
 
@@ -83,19 +85,17 @@ struct<resourceMetrics: array<struct<
 """.strip()
 
 
-def _any_value(v: Column) -> Column:
+def _any_value(v: str) -> str:
     """anyValueToString (otlp_trace_parser.go:26-46): typed AnyValue → string.
     OTLP-JSON carries intValue as a digit STRING already; bools lowercase."""
-    return F.coalesce(
-        v["stringValue"],
-        v["intValue"],
-        F.when(v["boolValue"].isNotNull(), v["boolValue"].cast("string")),
-        F.when(v["doubleValue"].isNotNull(), v["doubleValue"].cast("string")),
-        F.lit(""),
+    return (
+        f"coalesce({v}.stringValue, {v}.intValue, "
+        f"(CASE WHEN ({v}.boolValue IS NOT NULL) THEN CAST({v}.boolValue AS STRING) END), "
+        f"(CASE WHEN ({v}.doubleValue IS NOT NULL) THEN CAST({v}.doubleValue AS STRING) END), '')"
     )
 
 
-def _attrs_map(attrs: Column) -> Column:
+def _attrs_map(attrs: str) -> str:
     """KeyValue list → map with SORTED keys (Go json.Marshal sorts map keys;
     array_sort on (key, value) structs orders by key first).
 
@@ -103,26 +103,23 @@ def _attrs_map(attrs: Column) -> Column:
     list order — Go's map-insert loop semantics — BEFORE the sort; without
     the dedup, map_from_entries would THROW on such payloads under the
     driver's vanilla mapKeyDedupPolicy=EXCEPTION session."""
-    from .parse import _dedup_entries_last_wins
-
-    pairs = F.array_sort(
-        _dedup_entries_last_wins(
-            F.transform(
-                attrs,
-                lambda kv: F.struct(kv["key"].alias("key"), _any_value(kv["value"]).alias("value")),
-            )
-        )
-    )
-    return F.map_from_entries(pairs)
+    entry = S.lam(lambda kv: f"named_struct('key', {kv}.key, 'value', {_any_value(kv + '.value')})")
+    return f"map_from_entries(array_sort({S.dedup_entries_last_wins(f'transform({attrs}, {entry})')}))"
 
 
-def _attrs_json(attrs: Column) -> Column:
-    return F.coalesce(F.to_json(_attrs_map(attrs)), F.lit("{}"))
+def _attrs_json(attrs: str) -> str:
+    return f"coalesce(to_json({_attrs_map(attrs)}), '{{}}')"
 
 
-def _resource_attr(attrs: Column, key: str) -> Column:
-    hit = F.get(F.filter(attrs, lambda kv: kv["key"] == key), 0)
-    return F.coalesce(hit["value"]["stringValue"], F.lit(""))
+def _resource_attr(attrs: str, key: str) -> str:
+    hit = f"get(filter({attrs}, {S.lam(lambda kv: f'({kv}.key = {S.lit(key)})')}), 0)"
+    return f"coalesce({hit}.value.stringValue, '')"
+
+
+def _not_host_or_service(kv: str) -> str:
+    # host.name / service.name are REMOVED from the remainder JSON
+    # (otlp_trace_parser.go:69,82: attrs.Remove)
+    return f"(NOT ({kv}.key IN ('host.name', 'service.name')))"
 
 
 _KIND = {1: "internal", 2: "server", 3: "client", 4: "producer", 5: "consumer"}
@@ -140,21 +137,14 @@ def otel_trace_parse(
     t = df.withColumn("_otlp", F.from_json(F.col(source_key), OTLP_TRACE_SCHEMA))
     t = t.filter(F.col("_otlp.resourceSpans").isNotNull())
     t = t.select(*keep, F.explode("_otlp.resourceSpans").alias("_rs"))
-    rattrs = F.col("_rs.resource.attributes")
+    rattrs = "_rs.resource.attributes"
     t = t.select(
         *keep,
-        _resource_attr(rattrs, "host.name").alias("host"),
-        _resource_attr(rattrs, "service.name").alias("service"),
+        F.expr(_resource_attr(rattrs, "host.name")).alias("host"),
+        F.expr(_resource_attr(rattrs, "service.name")).alias("service"),
         # host.name / service.name are REMOVED from the remainder JSON
         # (otlp_trace_parser.go:69,82: attrs.Remove)
-        F.coalesce(
-            F.to_json(
-                _attrs_map(
-                    F.filter(rattrs, lambda kv: ~kv["key"].isin("host.name", "service.name"))
-                )
-            ),
-            F.lit("{}"),
-        ).alias("resource"),
+        F.expr(_attrs_json(f"filter({rattrs}, {S.lam(_not_host_or_service)})")).alias("resource"),
         F.explode("_rs.scopeSpans").alias("_ss"),
     )
     t = t.select(
@@ -178,32 +168,21 @@ def otel_trace_parse(
     for k, v in _KIND.items():
         kind_str = F.when(kind == k, F.lit(v)).otherwise(kind_str)
     code = F.col("_sp.status.code")
-    links = F.coalesce(
-        F.to_json(
-            F.transform(
-                sp["links"],
-                lambda l: F.struct(
-                    _attrs_map(l["attributes"]).alias("attribute"),
-                    F.lower(F.coalesce(l["spanId"], F.lit(""))).alias("spanID"),
-                    F.lower(F.coalesce(l["traceId"], F.lit(""))).alias("traceID"),
-                ),
-            )
-        ),
-        F.lit("[]"),
-    )
-    logs = F.coalesce(
-        F.to_json(
-            F.transform(
-                sp["events"],
-                lambda e: F.struct(
-                    _attrs_map(e["attributes"]).alias("attribute"),
-                    F.coalesce(e["name"], F.lit("")).alias("name"),
-                    F.coalesce(e["timeUnixNano"].try_cast("long"), F.lit(0)).alias("time"),
-                ),
-            )
-        ),
-        F.lit("[]"),
-    )
+
+    def link(li: str) -> str:
+        return (
+            f"named_struct('attribute', {_attrs_map(li + '.attributes')}, "
+            f"'spanID', lower(coalesce({li}.spanId, '')), 'traceID', lower(coalesce({li}.traceId, '')))"
+        )
+
+    def log(e: str) -> str:
+        return (
+            f"named_struct('attribute', {_attrs_map(e + '.attributes')}, 'name', coalesce({e}.name, ''), "
+            f"'time', coalesce(try_cast({e}.timeUnixNano AS BIGINT), 0))"
+        )
+
+    links = F.expr(f"coalesce(to_json(transform(_sp.links, {S.lam(link)})), '[]')")
+    logs = F.expr(f"coalesce(to_json(transform(_sp.events, {S.lam(log)})), '[]')")
     return t.select(
         *keep,
         "host",
@@ -224,7 +203,7 @@ def otel_trace_parse(
         F.call_function("div", start_ns, F.lit(1000)).alias("start"),
         F.call_function("div", end_ns, F.lit(1000)).alias("end"),
         F.call_function("div", end_ns - start_ns, F.lit(1000)).alias("duration"),
-        _attrs_json(sp["attributes"]).alias("attribute"),
+        F.expr(_attrs_json("_sp.attributes")).alias("attribute"),
         F.when(code == 2, "ERROR").when(code == 1, "OK").otherwise("UNSET").alias("statusCode"),
         F.coalesce(sp["status"]["message"], F.lit("")).alias("statusMessage"),
         F.call_function("div", end_ns, F.lit(1_000_000_000)).alias("time"),
@@ -297,20 +276,14 @@ OTEL_METRIC_FIXTURE: list[tuple[int, str]] = [
 ]
 
 
-def _labels_str(rattrs: Column, dpattrs: Column) -> Column:
+def _labels_str(rattrs: str, dpattrs: str) -> str:
     """MetricLabels: resource attrs + datapoint attrs, SORTED by key, joined
     ``k#$#v|...`` (pkg/helper MetricLabels, see log_helper_test.go:33)."""
-    both = F.concat(
-        F.coalesce(rattrs, F.array().cast(_KV)), F.coalesce(dpattrs, F.array().cast(_KV))
-    )
-    pairs = F.array_sort(
-        F.transform(
-            both, lambda kv: F.struct(kv["key"].alias("k"), _any_value(kv["value"]).alias("v"))
-        )
-    )
-    return F.array_join(
-        F.transform(pairs, lambda p: F.concat(p["k"], F.lit("#$#"), p["v"])), "|"
-    )
+    empty = f"CAST(array() AS {_KV})"
+    both = f"concat(coalesce({rattrs}, {empty}), coalesce({dpattrs}, {empty}))"
+    kv = S.lam(lambda x: f"named_struct('k', {x}.key, 'v', {_any_value(x + '.value')})")
+    joined = S.lam(lambda p: f"concat({p}.k, '#$#', {p}.v)")
+    return f"array_join(transform(array_sort(transform({both}, {kv})), {joined}), '|')"
 
 
 def otel_metric_parse(df: DataFrame, source_key: str = "content") -> DataFrame:
@@ -341,7 +314,7 @@ def otel_metric_parse(df: DataFrame, source_key: str = "content") -> DataFrame:
     return dp.select(
         *keep,
         "__name__",
-        _labels_str(F.col("_rattrs"), F.col("_dp.attributes")).alias("__labels__"),
+        F.expr(_labels_str("_rattrs", "_dp.attributes")).alias("__labels__"),
         F.coalesce(F.col("_dp.timeUnixNano").try_cast("long"), F.lit(0)).alias("__time_nano__"),
         val.alias("__value__"),
     )

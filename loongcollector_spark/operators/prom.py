@@ -43,11 +43,10 @@ from __future__ import annotations
 import re as _re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .parse import _dedup_entries_last_wins as _dedup_last_wins
-from .parse import _let, merge_maps
+from .. import sqltext as S
 
 _NAME = r"[A-Za-z_:][A-Za-z0-9_:]*"
 _LNAME = r"[A-Za-z_][A-Za-z0-9_]*"
@@ -60,7 +59,7 @@ _LINE = rf"^\s*({_NAME})\s*({_LABELS})?\s*({_NUM})(?:[ \t]+({_NUM}))?[ \t]*(?:#.
 _SENTINEL = "\x01"
 
 
-def _unescape(v: Column) -> Column:
+def _unescape(v: str) -> str:
     """Left-to-right prometheus label-value unescape via a COLLISION-PROOF
     sentinel chain: a raw 0x01 byte in the input (exporters can emit any
     byte; the reference TextParser passes bytes through untouched) is first
@@ -69,67 +68,73 @@ def _unescape(v: Column) -> Column:
     input byte sequence can forge an ``S1``/``S2`` token, so genuine 0x01
     bytes survive verbatim. Invalid pairs (e.g. ``\\x``) fall through
     verbatim — reference behavior."""
-    s = F.replace(v, F.lit(_SENTINEL), F.lit(_SENTINEL + "2"))
-    s = F.replace(s, F.lit("\\\\"), F.lit(_SENTINEL + "1"))
-    s = F.replace(s, F.lit('\\"'), F.lit('"'))
-    s = F.replace(s, F.lit("\\n"), F.lit("\n"))
-    s = F.replace(s, F.lit(_SENTINEL + "1"), F.lit("\\"))
-    return F.replace(s, F.lit(_SENTINEL + "2"), F.lit(_SENTINEL))
+    steps = [
+        (_SENTINEL, _SENTINEL + "2"), ("\\\\", _SENTINEL + "1"), ('\\"', '"'), ("\\n", "\n"),
+        (_SENTINEL + "1", "\\"), (_SENTINEL + "2", _SENTINEL),
+    ]
+    for old, new in steps:
+        v = f"replace({v}, {S.lit(old)}, {S.lit(new)})"
+    return v
+
+
+_KEY_RX = rf"^({_LNAME})"
+_VALUE_RX = r'"((?:[^"\\]|\\.)*)"'
+
+
+def _label_entry(pair: str) -> str:
+    key = f"regexp_extract({pair}, {S.lit(_KEY_RX)}, 1)"
+    value = _unescape(f"regexp_extract({pair}, {S.lit(_VALUE_RX)}, 1)")
+    return f"named_struct('key', {key}, 'value', {value})"
 
 
 def prom_parse(df: DataFrame, default_ts_ms: int = 0, honor_timestamps: bool = True) -> DataFrame:
     """Parse one exposition line per row into
     ``(name, labels map<string,string>, value double, ts_ms bigint)``,
     dropping comment/blank/invalid lines; all other columns pass through."""
-    c = F.col("content")
-    stripped = F.regexp_replace(c, r"^[ \t]+", "")
-    is_metric = (F.length(stripped) > 0) & ~stripped.startswith("#")
-    shape_ok = c.rlike(_LINE)
-    name = F.regexp_extract(c, _LINE, 1)
-    blk = F.regexp_extract(c, _LINE, 2)
-    vs = F.regexp_extract(c, _LINE, 3)
-    ts_s = F.regexp_extract(c, _LINE, 4)
+    line = S.lit(_LINE)
 
-    pairs = F.regexp_extract_all(blk, F.lit(rf"({_PAIR})"), 1)
-    entries = F.transform(
-        pairs,
-        lambda p: F.struct(
-            F.regexp_extract(p, rf"^({_LNAME})", 1).alias("key"),
-            _unescape(F.regexp_extract(p, rf'"((?:[^"\\]|\\.)*)"', 1)).alias("value"),
-        ),
-    )
-    with_name = F.concat(
-        entries, F.array(F.struct(F.lit("__name__").alias("key"), name.alias("value")))
-    )
-    labels = F.map_from_entries(_dedup_last_wins(with_name))
+    def group(i: int) -> str:
+        return f"regexp_extract(content, {line}, {i})"
 
-    lv = F.lower(vs)
-    value = (
-        F.when(lv.isin("inf", "+inf", "infinity", "+infinity"), F.lit(float("inf")))
-        .when(lv.isin("-inf", "-infinity"), F.lit(float("-inf")))
-        .when(lv.isin("nan", "+nan", "-nan"), F.lit(float("nan")))
-        .otherwise(vs.try_cast("double"))
+    leading_ws = S.lit(r"^[ \t]+")
+    stripped = f"regexp_replace(content, {leading_ws}, '')"
+    is_metric = f"((length({stripped}) > 0) AND (NOT startswith({stripped}, '#')))"
+    shape_ok = f"(content RLIKE {line})"
+    name, vs, ts_s = group(1), group(3), group(4)
+
+    pairs = f"regexp_extract_all({group(2)}, {S.lit(f'({_PAIR})')}, 1)"
+    name_entry = f"named_struct('key', '__name__', 'value', {name})"
+    with_name = f"concat(transform({pairs}, {S.lam(_label_entry)}), array({name_entry}))"
+    labels = f"map_from_entries({S.dedup_entries_last_wins(with_name)})"
+
+    lv = f"lower({vs})"
+    value = S.case(
+        [
+            (f"({lv} IN ('inf', '+inf', 'infinity', '+infinity'))", S.lit(float("inf"))),
+            (f"({lv} IN ('-inf', '-infinity'))", S.lit(float("-inf"))),
+            (f"({lv} IN ('nan', '+nan', '-nan'))", S.lit(float("nan"))),
+        ],
+        f"try_cast({vs} AS DOUBLE)",
     )
 
-    has_ts = ts_s != ""
-    tnum = ts_s.try_cast("double")
-    milli = F.when(tnum < F.lit(float(1 << 31)), tnum * 1000).otherwise(tnum)
+    has_ts = f"({ts_s} != '')"
+    tnum = f"try_cast({ts_s} AS DOUBLE)"
+    milli = f"(CASE WHEN ({tnum} < {S.lit(float(1 << 31))}) THEN ({tnum} * 1000) ELSE {tnum} END)"
     # STRICT bounds on the value actually cast: float(2^63) itself (what a
     # 19-digit decimal rounds to) does NOT fit in a long — an inclusive bound
     # let that single line overflow the cast (a job-killing error under ANSI)
     # instead of being dropped per the parser's invalid-line contract.
     ts_ok = (
-        tnum.isNotNull()
-        & (milli < F.lit(float(1 << 63)))
-        & (milli > F.lit(float(-(1 << 63))))
+        f"(({tnum} IS NOT NULL) AND ({milli} < {S.lit(float(1 << 63))}) "
+        f"AND ({milli} > {S.lit(float(-(1 << 63)))}))"
     )
     if honor_timestamps:
-        ts_ok = ts_ok & (F.floor(milli / 1000) >= 1000000000)
-        ts_ms = F.when(has_ts, milli.cast("long")).otherwise(F.lit(default_ts_ms))
+        ts_ok = f"({ts_ok} AND (floor(({milli} / 1000)) >= 1000000000))"
+        ts_ms = f"(CASE WHEN {has_ts} THEN CAST({milli} AS BIGINT) ELSE {S.lit(default_ts_ms)} END)"
     else:
-        ts_ms = F.lit(default_ts_ms).cast("long")
+        ts_ms = f"CAST({S.lit(default_ts_ms)} AS BIGINT)"
 
-    ok = is_metric & shape_ok & value.isNotNull() & (~has_ts | ts_ok)
+    ok = f"({is_metric} AND {shape_ok} AND ({value} IS NOT NULL) AND ((NOT {has_ts}) OR {ts_ok}))"
     keep = [col for col in df.columns if col != "content"]
     clash = sorted(set(keep) & {"name", "labels", "value", "ts_ms"})
     if clash:
@@ -142,11 +147,9 @@ def prom_parse(df: DataFrame, default_ts_ms: int = 0, honor_timestamps: bool = T
     return (
         df.select(
             *keep,
-            ok.alias("_ok"),
-            F.when(ok, name).alias("name"),
-            F.when(ok, labels).alias("labels"),
-            F.when(ok, value).alias("value"),
-            F.when(ok, ts_ms).alias("ts_ms"),
+            F.expr(ok).alias("_ok"),
+            *[F.expr(f"(CASE WHEN {ok} THEN {v} END)").alias(c) for c, v in
+              (("name", name), ("labels", labels), ("value", value), ("ts_ms", ts_ms))],
         )
         .filter(F.col("_ok"))
         .drop("_ok")
@@ -246,12 +249,9 @@ def _java_template(template: str, regex: str) -> str:
     return "".join(out)
 
 
-def _src_val(labels: Column, rule: RelabelRule) -> Column:
-    vals = [
-        F.coalesce(F.try_element_at(labels, F.lit(sl)), F.lit(""))
-        for sl in rule.source_labels
-    ] or [F.lit("")]
-    return F.concat_ws(rule.separator, *vals)
+def _src_val(labels: str, rule: RelabelRule) -> str:
+    vals = [f"coalesce(try_element_at({labels}, {S.lit(sl)}), '')" for sl in rule.source_labels]
+    return f"concat_ws({S.lit(rule.separator)}, {', '.join(vals or [S.lit('')])})"
 
 
 def prom_relabel(df: DataFrame, rules: list[RelabelRule]) -> DataFrame:
@@ -260,7 +260,7 @@ def prom_relabel(df: DataFrame, rules: list[RelabelRule]) -> DataFrame:
     rewrites fold into one map expression per rule.
 
     CRITICAL plan-shape detail: every rule's expression reads the CURRENT
-    labels map through exactly ONE ``_let`` binding. withColumn chains
+    labels map through exactly ONE ``sqltext.let`` binding. withColumn chains
     collapse into a single Project, substituting rule N's full expression
     into every reference rule N+1 makes — with the 3-6 naked references the
     naive form needs (val per source label, erase branch, merge branch) the
@@ -269,79 +269,63 @@ def prom_relabel(df: DataFrame, rules: list[RelabelRule]) -> DataFrame:
     evaluation of the incoming map per rule at runtime."""
     out = df
 
+    def one_label(key: str, value: str) -> str:
+        return f"map_from_arrays(array({key}), array({value}))"
+
     def rewrite(rule: RelabelRule, a: str, full: str):
-        def fn(labels: Column) -> Column:
+        rx = S.lit(full)
+
+        def fn(labels: str) -> str:
             val = _src_val(labels, rule)
             if a == "replace":
-                matched = val.rlike(full)
-                newkey = F.regexp_replace(val, full, _java_template(rule.target_label, full))
-                newval = F.regexp_replace(val, full, _java_template(rule.replacement, full))
-                erased = F.map_filter(labels, lambda k, _: k != newkey)
-                rewritten = F.when(newval == "", erased).otherwise(
-                    merge_maps(
-                        labels, F.map_from_arrays(F.array(newkey), F.array(newval))
-                    )
-                )
-                return F.when(matched, rewritten).otherwise(labels)
+                newkey = f"regexp_replace({val}, {rx}, {S.lit(_java_template(rule.target_label, full))})"
+                newval = f"regexp_replace({val}, {rx}, {S.lit(_java_template(rule.replacement, full))})"
+                erased = f"map_filter({labels}, {S.lam(lambda k, _: f'({k} != {newkey})', 2)})"
+                merged = S.merge_maps(labels, one_label(newkey, newval))
+                rewritten = f"(CASE WHEN ({newval} = '') THEN {erased} ELSE {merged} END)"
+                return f"(CASE WHEN ({val} RLIKE {rx}) THEN {rewritten} ELSE {labels} END)"
             if a in ("lowercase", "uppercase"):
-                cased = F.lower(val) if a == "lowercase" else F.upper(val)
-                return merge_maps(
-                    labels,
-                    F.map_from_arrays(F.array(F.lit(rule.target_label)), F.array(cased)),
-                )
+                cased = f"{'lower' if a == 'lowercase' else 'upper'}({val})"
+                return S.merge_maps(labels, one_label(S.lit(rule.target_label), cased))
             if a == "hashmod":
                 # last 8 md5 bytes as uint64 mod modulus (Relabel.cpp:195-206);
                 # conv() yields the unsigned decimal string, decimal(38,0)
                 # holds the full uint64 range
-                h = F.conv(F.substring(F.md5(val.cast("binary")), 17, 16), 16, 10)
-                mod = F.pmod(h.cast("decimal(38,0)"), F.lit(rule.modulus)).cast("bigint")
-                return merge_maps(
-                    labels,
-                    F.map_from_arrays(
-                        F.array(F.lit(rule.target_label)), F.array(mod.cast("string"))
-                    ),
-                )
+                h = f"conv(substring(md5(CAST({val} AS BINARY)), 17, 16), 16, 10)"
+                mod = f"CAST(pmod(CAST({h} AS DECIMAL(38,0)), {rule.modulus}) AS BIGINT)"
+                return S.merge_maps(labels, one_label(S.lit(rule.target_label), f"CAST({mod} AS STRING)"))
             if a == "labelmap":
-                mapped = F.transform(
-                    F.filter(F.map_entries(labels), lambda e: e["key"].rlike(full)),
-                    lambda e: F.struct(
-                        F.regexp_replace(
-                            e["key"], full, _java_template(rule.replacement, full)
-                        ).alias("key"),
-                        e["value"].alias("value"),
-                    ),
-                )
-                return merge_maps(labels, F.map_from_entries(_dedup_last_wins(mapped)))
+                template = S.lit(_java_template(rule.replacement, full))
+
+                def renamed(e: str) -> str:
+                    return f"named_struct('key', regexp_replace({e}.key, {rx}, {template}), 'value', {e}.value)"
+
+                hits = f"filter(map_entries({labels}), {S.lam(lambda e: f'({e}.key RLIKE {rx})')})"
+                mapped = f"transform({hits}, {S.lam(renamed)})"
+                return S.merge_maps(labels, f"map_from_entries({S.dedup_entries_last_wins(mapped)})")
             if a == "labeldrop":
-                return F.map_filter(labels, lambda k, _: ~k.rlike(full))
+                return f"map_filter({labels}, {S.lam(lambda k, _: f'(NOT ({k} RLIKE {rx}))', 2)})"
             if a == "labelkeep":
-                return F.map_filter(labels, lambda k, _: k.rlike(full))
+                return f"map_filter({labels}, {S.lam(lambda k, _: f'({k} RLIKE {rx})', 2)})"
             raise ValueError(f"unknown relabel action {a!r}")
 
         return fn
 
     def condition(rule: RelabelRule, a: str, full: str):
-        def fn(labels: Column) -> Column:
+        def fn(labels: str) -> str:
             val = _src_val(labels, rule)
+            target = f"coalesce(try_element_at({labels}, {S.lit(rule.target_label)}), '')"
             if a == "keep":
-                return val.rlike(full)
+                return S.rlike(val, full)
             if a == "drop":
-                return ~val.rlike(full)
+                return f"(NOT {S.rlike(val, full)})"
             if a == "keepequal":
-                return (
-                    F.coalesce(
-                        F.try_element_at(labels, F.lit(rule.target_label)), F.lit("")
-                    )
-                    == val
-                )
+                return f"({target} = {val})"
             if a == "dropequal":
-                return (
-                    F.coalesce(
-                        F.try_element_at(labels, F.lit(rule.target_label)), F.lit("")
-                    )
-                    != val
-                )
-            return ~val.isin(*rule.match_list)  # dropmetric
+                return f"({target} != {val})"
+            if not rule.match_list:  # dropmetric with nothing to drop
+                return "true"
+            return f"(NOT ({val} IN ({', '.join(S.lit(m) for m in rule.match_list)})))"
 
         return fn
 
@@ -349,9 +333,7 @@ def prom_relabel(df: DataFrame, rules: list[RelabelRule]) -> DataFrame:
         full = f"^(?:{rule.regex})$"
         a = rule.action
         if a in ("keep", "drop", "keepequal", "dropequal", "dropmetric"):
-            out = out.filter(_let(F.col("labels"), condition(rule, a, full)))
+            out = out.filter(F.expr(S.let("labels", condition(rule, a, full))))
         else:
-            out = out.withColumn(
-                "labels", _let(F.col("labels"), rewrite(rule, a, full))
-            )
+            out = out.withColumn("labels", F.expr(S.let("labels", rewrite(rule, a, full))))
     return out

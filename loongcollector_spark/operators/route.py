@@ -3,7 +3,7 @@
 * ``route_rows`` — aggregator_logstore_router semantics: anchored full-match
   regexes tried in order, first hit wins, non-matching rows → default sink or
   dropped (plugins/aggregator/logstorerouter/aggregator_router.go:97-133).
-  Compiles to ONE chained when/otherwise — a single projection, no shuffle.
+  Compiles to ONE SQL ``CASE`` — a single projection, no shuffle.
 * ``sink_conditions`` — Router fan-out semantics
   (core/collection_pipeline/route/Router.cpp:50-82): unconditional sinks always
   receive a copy; conditional sinks receive rows matching their Condition
@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .. import sqltext as S
 
 
 @dataclass(frozen=True)
@@ -47,16 +49,10 @@ def route_rows(
     ``default_sink=None`` reproduces DropDisMatch (aggregator_router.go:97-133):
     non-matching rows are dropped.
     """
-    src = F.col(source_key) if source_key in df.columns else F.col("fields")[source_key]
-    expr: Column | None = None
-    for rule in rules:
-        cond = src.isNotNull() & src.rlike(_anchor(rule.regex))
-        expr = F.when(cond, F.lit(rule.sink)) if expr is None else expr.when(cond, F.lit(rule.sink))
-    if expr is None:
-        expr = F.lit(default_sink)
-    else:
-        expr = expr.otherwise(F.lit(default_sink))
-    out = df.withColumn("route", expr)
+    src = S.ident(source_key) if source_key in df.columns else S.get("fields", source_key)
+    hits = [(f"(({src} IS NOT NULL) AND {S.rlike(src, _anchor(r.regex))})", S.lit(r.sink)) for r in rules]
+    expr = S.case(hits, S.lit(default_sink)) if hits else S.lit(default_sink)
+    out = df.withColumn("route", F.expr(expr))
     if default_sink is None:
         out = out.filter(F.col("route").isNotNull())
     return out

@@ -194,22 +194,6 @@ def repetition_stats(df: DataFrame, n: int = 2) -> DataFrame:
     )
 
 
-def repetition_filter(
-    df: DataFrame,
-    n: int = 2,
-    max_dup_frac: float = 0.5,
-    max_top_frac: float = 0.12,
-) -> DataFrame:
-    """Keep documents whose n-gram repetition is below the thresholds
-    (Gopher-style quality cut); broadcast-free — the stats join back to the
-    corpus on the id key."""
-    stats = repetition_stats(df, n)
-    ok = stats.filter(
-        (F.col("dup_gram_frac") <= max_dup_frac) & (F.col("top_gram_frac") <= max_top_frac)
-    ).select("doc_id", "dup_gram_frac", "top_gram_frac")
-    return df.join(ok, "doc_id")
-
-
 def unigram_logprob(df: DataFrame) -> DataFrame:
     """Corpus-unigram language-model quality score: per document, the mean
     negative log-probability (nats) of its words under an add-one-smoothed

@@ -2,8 +2,9 @@
 ``Router::Route`` + flusher-commit lifecycle (SURVEY.md §3.1) as one resumable
 Spark job.
 
-    read sequences → decode (JVM decode_tokens_utf8) → parse (per-source,
-      compiled once per config) → enrich (literal map lookup) → route
+    read sequences → decode (JVM decode_tokens_utf8) → parse (per-source)
+      → enrich (literal map lookup) → route; the plan is built from SQL
+      text in tens of py4j calls, once per run
       → _sink column (a copy of route, or one exploded copy per matching
         sink condition)
       → ONE Spark job: salted (_sink, xxhash64(doc_id)) repartition →

@@ -3,9 +3,14 @@
 (Python dict) is compiled ONCE into a DataFrame DAG; Catalyst is the optimizer
 the reference never had.
 
-Key scale decision: per-``source`` parser dispatch happens inside ONE lazy CASE
+Key scale decision: per-``source`` parser dispatch happens inside ONE lazy
 projection (``parse_by_source``), so the input table is scanned exactly once and
 each row evaluates only its own parser — no per-source unions, no repeated IO.
+
+Every stage's expressions are Spark SQL text generated in Python
+(``sqltext``), applied with one ``withColumns`` of ``F.expr`` columns: a warm
+build is tens of py4j calls, where a Column tree costs one per expression
+node. The build still runs per job (the stream builds once per query).
 
 A full pipeline = decode → parse(by source) → filters → enrich → route →
 salted repartition → fan-out sinks + per-sink counts.
@@ -16,9 +21,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import sqltext as S
 from ..codec import with_content
 from ..operators import parse as P
 from ..operators.route import RouteRule, route_rows
@@ -40,10 +46,8 @@ class ParserSpec:
     opts: P.ParserOptions = field(default_factory=P.ParserOptions)
 
 
-def _branch_fields(
-    spec: ParserSpec, src: Column, enabled: Column
-) -> tuple[Column, Column, Column | None]:
-    """(masked_fields_map, matched, event_ts|None) for one parser spec.
+def _branch_fields(spec: ParserSpec, src: str, enabled: str) -> tuple[str, str, str | None]:
+    """(masked_fields_map, matched, event_ts|None) SQL text for one parser spec.
 
     The map is EMPTY on rows where ``enabled`` is false, and each parser gates
     its input string on ``enabled`` so the expensive work (regex, json parse)
@@ -61,8 +65,7 @@ def _branch_fields(
         )
         return m, ok, None
     if spec.kind == "apsara":
-        m, ok, ts = P.apsara_fields(src, spec.opts, enabled)
-        return m, ok, ts
+        return P.apsara_fields(src, spec.opts, enabled)
     if spec.kind == "kv":
         m, ok = P.kv_fields(src, spec.kv_delimiter, spec.kv_separator, enabled)
         return m, ok, None
@@ -73,11 +76,12 @@ def parse_by_source(df: DataFrame, parsers: dict[str, ParserSpec]) -> DataFrame:
     """Dispatch parsers per source value in one projection (single scan).
 
     The fields map is a ``map_concat`` of per-source MASKED maps (empty for
-    rows of other sources) — NOT a when/otherwise chain: CASE with map-typed
+    rows of other sources) — NOT a CASE over maps: CASE with map-typed
     branches costs ~5× the map construction itself (see operators/parse.py
     module docstring). Conditionals stay on primitives (source equality, slice
     lengths); per-parser input gating keeps each regex/json evaluation on its
-    own source's rows only.
+    own source's rows only. The three columns are SQL text, applied in one
+    ``withColumns``.
 
     Rows whose source has no configured parser keep an empty fields map and
     ``_parse_ok = false`` (they still flow — routing decides their sink).
@@ -87,26 +91,17 @@ def parse_by_source(df: DataFrame, parsers: dict[str, ParserSpec]) -> DataFrame:
     """
     if not parsers:
         raise ValueError("parse_by_source: parsers dict is empty — configure at least one source")
-    src = F.col("content")
-    empty = F.create_map().cast("map<string,string>")
-    base = F.coalesce(F.col("fields"), empty) if "fields" in df.columns else None
-
-    maps: list[Column] = []
-    ok_expr: Column | None = None
-    ts_expr: Column | None = None
-    prev_ts = F.col("event_time") if "event_time" in df.columns else F.lit(None).cast("timestamp")
+    prev_ts = "event_time" if "event_time" in df.columns else S.NULL_TS
+    maps: list[str] = []
+    oks: list[tuple[str, str]] = []
+    tss: list[tuple[str, str]] = []
     for source_val, spec in parsers.items():
-        cond = F.col("source") == F.lit(source_val)
-        parsed, matched, ts = _branch_fields(spec, src, cond)
+        cond = f"(source = {S.lit(source_val)})"
+        parsed, matched, ts = _branch_fields(spec, "content", cond)
         maps.append(parsed)
-        ok_expr = F.when(cond, matched) if ok_expr is None else ok_expr.when(cond, matched)
+        oks.append((cond, matched))
         # fall back to the pre-existing event time, never clobber it with NULL
-        branch_ts = (
-            F.when(matched, F.coalesce(ts, prev_ts)).otherwise(prev_ts)
-            if ts is not None
-            else prev_ts
-        )
-        ts_expr = F.when(cond, branch_ts) if ts_expr is None else ts_expr.when(cond, branch_ts)
+        tss.append((cond, prev_ts if ts is None else f"(CASE WHEN {matched} THEN coalesce({ts}, {prev_ts}) ELSE {prev_ts} END)"))
 
     # Per-source parsed maps never collide with EACH OTHER (mutually exclusive
     # source conditions → at most one is non-empty per row), but any of them CAN
@@ -115,11 +110,13 @@ def parse_by_source(df: DataFrame, parsers: dict[str, ParserSpec]) -> DataFrame:
     # base entries structurally (last-wins, LogEvent::SetContent semantics)
     # instead of letting map_concat throw DUPLICATE_MAP_KEY under the default
     # mapKeyDedupPolicy=EXCEPTION.
-    parsed_expr = maps[0] if len(maps) == 1 else F.map_concat(*maps)
+    parsed_expr = maps[0] if len(maps) == 1 else f"map_concat({', '.join(maps)})"
+    if "fields" in df.columns:
+        parsed_expr = S.merge_maps(f"coalesce(fields, {S.EMPTY_MAP})", parsed_expr)
     return df.withColumns({
-        "fields": parsed_expr if base is None else P.merge_maps(base, parsed_expr),
-        P.PARSE_OK: F.coalesce(ok_expr.otherwise(F.lit(False)), F.lit(False)),
-        "event_time": ts_expr.otherwise(prev_ts),
+        "fields": F.expr(parsed_expr),
+        P.PARSE_OK: F.expr(f"coalesce({S.case(oks, 'false')}, false)"),
+        "event_time": F.expr(S.case(tss, prev_ts)),
     })
 
 

@@ -90,9 +90,8 @@ def test_strict_decode_flags_null_tokens(spark):
     # without the explicit isNull() check a null token passed the strict gate
     # and then vanished silently in array_join.
     import pytest
-    from pyspark.sql import functions as F
     from loongcollector_spark.codec import decode_tokens_utf8
 
     df = spark.createDataFrame([([104, None, 105],)], "tokens array<int>")
     with pytest.raises(Exception, match="byte contract"):
-        df.select(decode_tokens_utf8(F.col("tokens"), strict=True)).collect()
+        df.select(decode_tokens_utf8("tokens", strict=True)).collect()

@@ -11,14 +11,9 @@
   a custom joiner, and trailing-newline blobs (the final empty line attaches
   to the last event).
 
-* ``split_lines`` (ProcessorSplitLogStringNative.cpp:74-176): literal
-  SplitChar split with 1-based line numbers — incl. regex-metachar chars
-  ('.', '|') that must split literally, adjacent separators producing empty
-  lines, and separator-free rows.
-
-Mutation-checked: a search-instead-of-fullmatch start detector, a
-solo-prefix-events emulator (the merge_multiline semantics), and a
-regex-interpreting '.' splitter must each fail somewhere on the corpus.
+Mutation-checked: a search-instead-of-fullmatch start detector and a
+solo-prefix-events emulator (the merge_multiline semantics) must each fail
+somewhere on the corpus.
 """
 
 from __future__ import annotations
@@ -28,7 +23,7 @@ import re
 
 from pyspark.sql import types as T
 
-from loongcollector_spark.operators.multiline import split_lines, split_log_regex
+from loongcollector_spark.operators.multiline import split_log_regex
 
 SEED = 20260819
 
@@ -96,33 +91,6 @@ def test_split_log_regex_differential(spark):
             )
 
 
-def test_split_lines_differential(spark):
-    rng = random.Random(SEED + 1)
-    toks = ["a", "bb", "", " ", "x.y", "p|q", "\t", "end"]
-    for sep in ("\n", ".", "|"):
-        rows = []
-        for i in range(100):
-            rows.append((i, sep.join(rng.choice(toks) for _ in range(rng.randint(1, 6)))))
-        rows += [(100, ""), (101, sep), (102, sep * 3), (103, "no-sep-here")]
-        # tokens containing other configs' separators ("x.y", "p|q") stay in:
-        # both sides split on the SAME literal, so they're decisive, not noise
-        df = spark.createDataFrame(
-            rows,
-            T.StructType([
-                T.StructField("rid", T.LongType()),
-                T.StructField("content", T.StringType()),
-                ]),
-        )
-        out = split_lines(df, stream_col="rid", split_char=sep)
-        got: dict[int, dict] = {}
-        for r in out.collect():
-            got.setdefault(r["rid"], {})[r["line_no"]] = r["content"]
-        want = {
-            i: {n + 1: ln for n, ln in enumerate(s.split(sep))} for i, s in rows
-        }
-        assert got == want, (sep, {k: (got[k], want[k]) for k in got if got[k] != want[k]})
-
-
 def test_split_corpus_kills_mutants():
     rng = random.Random(SEED)
 
@@ -171,6 +139,3 @@ def test_split_corpus_kills_mutants():
                     killed_solo = True
     assert killed_search, "corpus never exercises full-match anchoring"
     assert killed_solo, "corpus never exercises the one-chunk prefix flush"
-
-    # '.' as a literal separator must matter
-    assert "x.y".split(".") != re.split(r".", "x.y")

@@ -461,25 +461,6 @@ def test_encrypt_known_answer(spark):
     assert got[2] == iv + "79AA917FA5534AAB2753669EE074F09F3B1194B07E6732129D06987ED4EFDBD4"
 
 
-def test_sanitize_non_utf8_byte_fidelity(spark):
-    """Binary path: ONE space per invalid byte (ProcessorFilterNative.cpp
-    :297-376) — consecutive invalid bytes must not merge."""
-    from loongcollector_spark.operators.filters import sanitize_non_utf8
-
-    rows = [
-        (1, b"ok ascii"),
-        (2, b"a\xff\xfeb"),            # 2 invalid bytes -> 2 spaces
-        (3, b"x\xe4\xbd\xa0y"),        # valid 3-byte CJK survives
-        (4, b"t\xe4\xbdz"),            # truncated 3-byte seq -> 2 spaces
-    ]
-    df = spark.createDataFrame(rows, "id int, content binary")
-    out = {r["id"]: r["content"] for r in sanitize_non_utf8(df).collect()}
-    assert out[1] == "ok ascii"
-    assert out[2] == "a  b"
-    assert out[3] == "x你y"
-    assert out[4] == "t  z"
-
-
 def test_fields_with_condition_relations(spark):
     """relation_operator (regexp/contains/startwith) and logical_operator
     (or) — processor_fields_with_condition.go:31-160."""

@@ -115,6 +115,64 @@ def test_default_enrich_is_a_projection(spark, seq_path):
     assert "Join" not in plan
 
 
+def _lambdas(df) -> int:
+    """LambdaFunction nodes in the analyzed plan: each one is a higher-order
+    function body that Spark evaluates interpreted, per element, outside
+    whole-stage codegen."""
+    return df._jdf.queryExecution().analyzed().toString().count("lambdafunction(")
+
+
+def test_pipeline_lambdas_are_bounded(spark, seq_path):
+    """The enrich and route stages run no lambda at all, and the whole
+    pipeline keeps at most the 25 that remain: the apsara chain (gated to its
+    own rows), the kv fold and the decode's two byte joins."""
+    from loongcollector_spark.codec import with_content
+    from loongcollector_spark.operators.route import route_rows
+    from loongcollector_spark.plans.pipeline import (
+        DEFAULT_PARSERS, DEFAULT_ROUTES, build_pipeline, default_enrich, parse_by_source,
+    )
+    from loongcollector_spark.sources.io import read_sequences
+
+    scan = read_sequences(spark, seq_path)
+    parsed = parse_by_source(with_content(scan), DEFAULT_PARSERS)
+    enriched = default_enrich(spark)(parsed)
+    routed = route_rows(enriched, DEFAULT_ROUTES, source_key="source", default_sink="sink_default")
+    assert _lambdas(enriched) == _lambdas(parsed)
+    assert _lambdas(routed) == _lambdas(enriched)
+    assert _lambdas(build_pipeline(scan, enrich=default_enrich(spark))) <= 25
+
+
+def test_pipeline_build_is_tens_of_gateway_calls(spark, seq_path):
+    """A warm ``build_pipeline`` reaches the JVM as SQL text, one ``F.expr``
+    per column and one ``withColumns`` per stage, not one py4j round trip per
+    expression node (thousands). Only the building thread's calls count: py4j's
+    finalizer thread sends the deletes of freed JVM objects, other tests'
+    included, at times of its own."""
+    import threading
+
+    from loongcollector_spark.plans.pipeline import build_pipeline, default_enrich
+    from loongcollector_spark.sources.io import read_sequences
+
+    scan = read_sequences(spark, seq_path)
+    build_pipeline(scan, enrich=default_enrich(spark))  # warm-up
+    client = spark.sparkContext._gateway._gateway_client
+    building_thread = threading.get_ident()
+    calls = []
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == building_thread:
+            calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build_pipeline(scan, enrich=default_enrich(spark))
+    finally:
+        del client.send_command
+    assert 0 < len(calls) <= 150
+
+
 def test_tfidf_and_unigram_broadcast_no_smj(spark, docs_path):
     """The vocabulary-sized df/LM tables must join back by BROADCAST (at web
     scale the corpus side must not shuffle for a vocab lookup), and the only

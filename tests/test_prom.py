@@ -187,6 +187,20 @@ def test_relabel_template_translation(spark):
     assert [r.labels["t"] for r in out3] == ["$web!"]
 
 
+def test_relabel_java_named_group_reference(spark):
+    # Python's re cannot compile a Java named group, so the template passes
+    # through untranslated and Java expands ${host}: the literal must reach
+    # the engine as written, not as an (empty) SQL variable substitution
+    lines = ['m{instance="db1:9100"} 1']
+    df = prom_parse(spark.createDataFrame(list(enumerate(lines, 1)), "id int, content string"))
+    out = prom_relabel(
+        df,
+        [RelabelRule(action="replace", source_labels=("instance",), regex=r"(?<host>[^:]+):\d+",
+                     target_label="host", replacement="${host}")],
+    ).collect()
+    assert [r.labels["host"] for r in out] == ["db1"]
+
+
 def test_parse_ts_long_overflow_dropped(spark):
     # a 19-digit timestamp that rounds to exactly 2^63 must be DROPPED (the
     # parser's invalid-line contract), not overflow the long cast (which is a

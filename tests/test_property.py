@@ -19,7 +19,6 @@ from hypothesis import strategies as st
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from loongcollector_spark.operators import slspb
-from loongcollector_spark.operators.filters import sanitize_utf8_bytes
 from loongcollector_spark.operators.gotime_layout import (
     _GO_TOKENS,
     go_layout_has_weekday,
@@ -199,43 +198,3 @@ def test_gotime_parse_side_only_drops_weekdays(layout):
     if not go_layout_has_weekday(layout):
         assert fmt == parse
     assert "E" not in _unquoted_letters(parse)
-
-
-# ---------------------------------------------------------------------------
-# DiscardingNonUTF8 byte machine
-# ---------------------------------------------------------------------------
-
-
-@given(st.binary(max_size=300))
-def test_sanitize_preserves_byte_count(b):
-    """The reference rewrites each invalid byte to ONE space and passes valid
-    sequences through byte-for-byte, so the sanitized string's UTF-8 byte
-    length always equals the input byte length (the byte-fidelity contract
-    the BINARY-column path exists for)."""
-    out = sanitize_utf8_bytes(b)
-    assert len(out.encode("utf-8")) == len(b)
-
-
-@given(st.text(max_size=200))
-def test_sanitize_is_identity_on_valid_utf8(s):
-    assert sanitize_utf8_bytes(s.encode("utf-8")) == s
-
-
-@given(st.binary(max_size=300))
-def test_sanitize_idempotent(b):
-    """Sanitizing already-sanitized bytes changes nothing."""
-    once = sanitize_utf8_bytes(b)
-    assert sanitize_utf8_bytes(once.encode("utf-8")) == once
-
-
-@given(st.binary(max_size=300))
-def test_sanitize_matches_python_decoder_judgment(b):
-    """Differential: a byte survives iff Python's strict decoder accepts the
-    same window — positions Python replaces are a subset of positions we
-    blank, and outputs agree exactly on inputs where Python's maximal-subpart
-    policy also burns one char per byte (ASCII-noise inputs)."""
-    out = sanitize_utf8_bytes(b)
-    # the sanitizer never emits U+FFFD itself unless the input spelled it
-    assert out.count("�") == b.count(b"\xef\xbf\xbd")
-    if all(x < 0x80 for x in b):
-        assert out == b.decode("ascii")

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from loongcollector_spark.operators.multiline import merge_multiline, split_lines
+from loongcollector_spark.operators.multiline import merge_multiline
 from loongcollector_spark.operators.ratelimit import rate_limit_batch
 from loongcollector_spark.plans.spl import SPLError, compile_spl
 
@@ -72,16 +72,6 @@ def test_merge_multiline(spark):
     assert got[("f2", 0, 2)]["content"] == "orphan two"
     dropped = merge_multiline(df, r"^\d{4}-\d{2}-\d{2} ", unmatched="discard")
     assert 0 not in {r["event_seq"] for r in dropped.collect()}
-
-
-def test_split_then_merge_roundtrip(spark):
-    doc = "2024-01-01 A\n  cont\n2024-01-02 B"
-    df = spark.createDataFrame([("s1", doc)], "stream_id string, content string")
-    lines = split_lines(df)
-    assert lines.count() == 3
-    merged = merge_multiline(lines, r"^\d{4}-\d{2}-\d{2} ")
-    texts = sorted(r["content"] for r in merged.collect())
-    assert texts == ["2024-01-01 A\n  cont", "2024-01-02 B"]
 
 
 def test_rate_limit_batch(spark):
