@@ -35,7 +35,6 @@ import os
 import re
 import shutil
 import tempfile
-import uuid
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -93,8 +92,7 @@ class CheckpointLog:
         stage: str,
         n_rows: int,
         n_bytes: int,
-        partitions: list[dict] | None = None,
-        extra: dict | None = None,
+        partitions: list[dict],
     ) -> None:
         rec = {
             "run_id": run_id,
@@ -102,8 +100,7 @@ class CheckpointLog:
             "status": "committed",
             "n_rows": int(n_rows),
             "n_bytes": int(n_bytes),
-            "partitions": partitions or [],
-            **(extra or {}),
+            "partitions": partitions,
         }
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".tmp")
         with os.fdopen(fd, "w") as f:
@@ -176,14 +173,12 @@ class ResumableRun:
     if ``(run_id, name)`` is not yet committed; ``fn`` writes into the
     in-progress dir, which is atomically renamed on success.
 
-    ``fn`` returns ``(n_rows, n_bytes, partitions)`` for the checkpoint record
-    (``partitions`` may be None → file lineage is derived from the sink).
+    ``fn`` returns ``(n_rows, n_bytes, partitions)`` for the checkpoint record.
     """
 
-    def __init__(self, spark: SparkSession, out_root: str, run_id: str | None = None) -> None:
-        self.spark = spark
+    def __init__(self, out_root: str, run_id: str) -> None:
         self.out_root = out_root
-        self.run_id = _validate_run_id(run_id) if run_id else uuid.uuid4().hex[:12]
+        self.run_id = _validate_run_id(run_id)
         self.log = CheckpointLog(os.path.join(out_root, "_checkpoint"))
         self.executed: list[str] = []  # stages actually run (not resumed-over)
         os.makedirs(out_root, exist_ok=True)
@@ -198,13 +193,10 @@ class ResumableRun:
             return final
         inprog = final + ".inprogress"
         shutil.rmtree(inprog, ignore_errors=True)  # idempotent re-run after crash
-        res = fn(inprog)
-        n_rows, n_bytes, partitions = res if res is not None else (0, 0, None)
+        n_rows, n_bytes, partitions = fn(inprog)
         if os.path.exists(inprog):
             shutil.rmtree(final, ignore_errors=True)
             os.replace(inprog, final)  # the "snapshot commit"
-            if partitions is None:
-                partitions = file_lineage(final)
-        self.log.record(self.run_id, name, n_rows, n_bytes, partitions or [])
+        self.log.record(self.run_id, name, n_rows, n_bytes, partitions)
         self.executed.append(name)
         return final

@@ -38,13 +38,12 @@ def shard_hash(
     df: DataFrame,
     source_keys: list[str],
     shard_count: int,
-    connector: str = "_",
 ) -> DataFrame:
-    """md5-bucket rows into ``shard_count`` (power of 2) shards on the concat of
-    source key values; emits the shard id and repartitions on it so co-located
+    """md5-bucket rows into ``shard_count`` (power of 2) shards on the
+    ``_``-joined source key values; emits the shard id and repartitions on it so co-located
     rows land in the same output file (sink shard affinity)."""
     assert shard_count & (shard_count - 1) == 0, "shard_count must be a power of 2"
-    concat = F.concat_ws(connector, *[F.col(k).cast("string") for k in source_keys])
+    concat = F.concat_ws("_", *[F.col(k).cast("string") for k in source_keys])
     # top bits of md5 → shard, mirroring aggregator_shardhash.go:164-204
     shard = (F.conv(F.substring(F.md5(concat.cast("binary")), 1, 8), 16, 10).cast("long") % shard_count).cast("int")
     out = df.withColumn("__shardhash__", shard)
@@ -240,18 +239,19 @@ def skew_probe(
     )
 
 
+ALL_LABEL = "(all)"  # a rolled-up dim's value in rollup_counts
+
+
 def rollup_counts(
     df: DataFrame,
     dims: list[str],
-    measure: DataFrame | None = None,
     measure_col: str | None = None,
-    all_label: str = "(all)",
 ) -> DataFrame:
     """Multi-dimensional rollup — the hypertable-style hierarchical aggregate
     (totals at every prefix of ``dims``) the reference's aggregators compute
     level-by-level; here it is ONE ``ROLLUP`` pass Catalyst expands with a
     single Expand+HashAggregate, not |dims|+1 separate scans.  Rows: one per
-    (prefix level × group): every dim coalesced to ``all_label`` where
+    (prefix level × group): every dim coalesced to ``ALL_LABEL`` where
     aggregated, ``gid`` = grouping bitmask (Spark ``grouping_id`` == DuckDB
     ``GROUPING``), n_rows, and sum/avg of ``measure_col`` when given.
 
@@ -259,20 +259,19 @@ def rollup_counts(
     partial aggregation collapses each level map-side, so the shuffle carries
     only |groups| rows per level — the standard cube/rollup trade, far cheaper
     than re-scanning 100 TB once per level."""
-    src = measure if measure is not None else df
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if measure_col is not None:
         aggs.append(F.sum(measure_col).cast("long").alias(f"sum_{measure_col}"))
         aggs.append(F.round(F.avg(measure_col), 6).alias(f"avg_{measure_col}"))
-    rolled = src.rollup(*dims).agg(F.grouping_id().alias("gid"), *aggs)
-    # Label a dim `all_label` only when its grouping bit says it was rolled
+    rolled = df.rollup(*dims).agg(F.grouping_id().alias("gid"), *aggs)
+    # Label a dim ALL_LABEL only when its grouping bit says it was rolled
     # up — a genuine NULL detail value labeled '(all)' was indistinguishable
     # from the subtotal row by the dim columns alone (a consumer ignoring gid
     # double-counts). Genuine NULLs render '(null)'. Bit for dims[i] in
     # grouping_id is (len(dims)-1-i).
     def _dim(d: str, i: int) -> Column:
         rolled_up = F.shiftright(F.col("gid"), len(dims) - 1 - i).bitwiseAND(F.lit(1)) == 1
-        return F.when(rolled_up, F.lit(all_label)).otherwise(
+        return F.when(rolled_up, F.lit(ALL_LABEL)).otherwise(
             F.coalesce(F.col(d).cast("string"), F.lit("(null)"))
         ).alias(d)
 
@@ -283,13 +282,15 @@ def rollup_counts(
     )
 
 
+PERCENTILE_ACCURACY = 10000  # approx_percentile accuracy in percentile_panel
+
+
 def percentile_panel(
     df: DataFrame,
     value_col: str,
     group_cols: list[str],
     ps: tuple[float, ...] = (0.5, 0.9, 0.99),
     exact: bool = False,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Per-group latency/value percentile panel — the SLO table every log
     pipeline ends in (reference analog: the SPL ``stats`` verb's percentile
@@ -300,8 +301,8 @@ def percentile_panel(
 
     Scale shape: the DEFAULT is ``exact=False`` — ``approx_percentile``
     keeps a bounded KLL-style sketch per group map-side: constant memory,
-    one shuffle of sketches, rank error ≤ 1/accuracy — the only safe default
-    when one group may hold 10^11 values.  ``exact=True`` opts in to Spark's
+    one shuffle of sketches, rank error ≤ 1/``PERCENTILE_ACCURACY`` — the
+    only safe default when one group may hold 10^11 values.  ``exact=True`` opts in to Spark's
     exact ``percentile``, a sort-based aggregate that buffers each group's
     FULL value set on the reducer (OOM on a hot group at scale) — reserved
     for bounded group sizes and for the oracle path, where the exact type-7
@@ -318,7 +319,7 @@ def percentile_panel(
         pct = (
             F.percentile(v, F.lit(float(p)))
             if exact
-            else F.approx_percentile(v, F.lit(float(p)), F.lit(accuracy))
+            else F.approx_percentile(v, F.lit(float(p)), F.lit(PERCENTILE_ACCURACY))
         )
         aggs.append(F.round(pct, 6).alias(name))
     return df.groupBy(*group_cols).agg(*aggs)

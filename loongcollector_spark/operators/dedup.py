@@ -70,13 +70,12 @@ def normalize_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", keep: str = "min") -> DataFrame:
+def exact_dedup(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Exact dedup on normalized text: one row per duplicate class with the
-    representative id and the class size. ``keep``: min|max id wins."""
-    agg_id = F.min(id_col) if keep == "min" else F.max(id_col)
+    representative (min) id and the class size."""
     return (
         df.groupBy(normalize_text(F.col("text")).alias("dup_key"))
-        .agg(agg_id.alias("rep_id"), F.count(F.lit(1)).alias("dup_cnt"))
+        .agg(F.min(id_col).alias("rep_id"), F.count(F.lit(1)).alias("dup_cnt"))
     )
 
 
@@ -334,15 +333,14 @@ def minhash_lsh_pairs(
     n: int = 2,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    persist_buckets: bool = False,
 ) -> DataFrame:
     """Banded-LSH candidate generation + exact-Jaccard verification.
 
     sig split into ``bands`` rows of ``num_hashes/bands``; docs colliding on
     (band_idx, band_hash) become candidates (shuffle by band-hash — no N²);
     candidates are verified with exact n-gram Jaccard and filtered at
-    ``threshold``. Returns (id_a, id_b, jaccard). ``persist_buckets``:
-    compute signatures once at 100 TB scale (_maybe_persist_buckets)."""
+    ``threshold``. Returns (id_a, id_b, jaccard). The md5 twin
+    (``minhash_lsh_pairs_md5``) can persist its bucket table."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
     sigs = minhash_signatures(df, num_hashes, n)
@@ -367,7 +365,6 @@ def minhash_lsh_pairs(
             )
         ).alias("bb"),
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    banded = _cached_buckets = _maybe_persist_buckets(banded, persist_buckets)
     if max_bucket_size is not None:
         # stop-bucket cap: a (band, bucket) holding m docs yields m²/2 candidate
         # pairs — degenerate hot buckets (vocabulary-limited corpora, boilerplate)
@@ -388,10 +385,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    out = _verify_candidates_jaccard(df, cands, n, threshold)
-    if persist_buckets:
-        out._lsh_buckets = _cached_buckets  # unpersist handle (see _maybe_persist_buckets)
-    return out
+    return _verify_candidates_jaccard(df, cands, n, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -590,7 +584,6 @@ def simhash_dup_pairs(
     df: DataFrame,
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
-    persist_buckets: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ k via the 4-block pigeonhole
     trick: split 64 bits into k+1 blocks — any pair within distance k agrees
@@ -599,7 +592,7 @@ def simhash_dup_pairs(
     nblocks = max_hamming + 1
     width = 64 // nblocks
     sh = simhash64(df.select(F.col("doc_id").alias("id"), "text"), id_col="id")
-    return _simhash_block_pairs(sh, nblocks, width, max_hamming, max_bucket_size, persist_buckets)
+    return _simhash_block_pairs(sh, nblocks, width, max_hamming, max_bucket_size)
 
 
 # ---------------------------------------------------------------------------
@@ -620,13 +613,13 @@ def embedding_dup_pairs_exact(
     df: DataFrame,
     threshold: float = 0.95,
     target_chunk: int = 1024,
-    n_chunks: int | None = None,
 ) -> DataFrame:
     """EXACT all-pairs cosine ≥ τ via distributed chunked GEMM — the scalable
     replacement for the O(N²) BroadcastNestedLoopJoin form (round-1's
     scale-killer).
 
-    Vectors are hash-assigned to ``n_chunks`` chunks; each of the
+    Vectors are hash-assigned to ``n_chunks`` chunks of about
+    ``target_chunk`` rows; each of the
     n_chunks·(n_chunks+1)/2 chunk-pair tasks is a shuffle key, and within a
     task an Arrow-batched ``applyInPandas`` does one numpy (BLAS) matmul of
     the two normalized chunk matrices. Work is still inherently O(N²) flops
@@ -641,19 +634,16 @@ def embedding_dup_pairs_exact(
 
     For corpora where O(N²) flops is unaffordable, use
     ``embedding_dup_pairs_lsh`` (approximate, truly sub-quadratic).
-    ``n_chunks=None`` sizes chunks to ``target_chunk`` rows from a
-    COLUMN-PRUNED count (count(*) over a parquet scan reads footer row-group
-    counts, not data pages — cheap, but still a job over every split; at
-    10^9+ vectors pass ``n_chunks`` explicitly from catalog stats and skip
-    the extra stage entirely)."""
+    ``n_chunks`` comes from a COLUMN-PRUNED count (count(*) over a parquet
+    scan reads footer row-group counts, not data pages — cheap, but still a
+    job over every split)."""
     import math
 
     import pandas as pd  # noqa: F811
 
-    if n_chunks is None:
-        # select(lit(1)) guarantees the scan is column-pruned to zero data
-        # columns whatever projections sit on df
-        n_chunks = max(1, math.ceil(df.select(F.lit(1)).count() / target_chunk))
+    # select(lit(1)) guarantees the scan is column-pruned to zero data
+    # columns whatever projections sit on df
+    n_chunks = max(1, math.ceil(df.select(F.lit(1)).count() / target_chunk))
     id_type = dict(df.dtypes)["vec_id"]
     v = df.select(
         F.col("vec_id").alias("id"),
@@ -704,7 +694,12 @@ def embedding_dup_pairs_exact(
     return repl.groupBy("ti", "tj").applyInPandas(compute, out_schema)
 
 
-def hyperplane_planes(dim: int, bands: int, planes_per_band: int, seed: int = 7) -> "np.ndarray":
+HYPERPLANE_SEED = 7  # the planes hyperplane_buckets draws
+
+
+def hyperplane_planes(
+    dim: int, bands: int, planes_per_band: int, seed: int = HYPERPLANE_SEED
+) -> "np.ndarray":
     """Deterministic random-hyperplane set, shape (bands, planes_per_band, dim)."""
     return np.random.RandomState(seed).standard_normal((bands, planes_per_band, dim))
 
@@ -714,7 +709,6 @@ def hyperplane_buckets(
     dim: int,
     bands: int = 8,
     planes_per_band: int = 8,
-    seed: int = 7,
 ) -> DataFrame:
     """(id, band, bucket) sign-bit LSH rows: bucket = Σ_j [v·p_bj ≥ 0]·2^j.
 
@@ -726,7 +720,7 @@ def hyperplane_buckets(
     the same plane literals via ``list_dot_product`` (hyperplane_bucket_sql);
     a sign flip between numpy and DuckDB needs |dot| ≲ 1e-13, measure-zero
     for random planes."""
-    planes = hyperplane_planes(dim, bands, planes_per_band, seed)
+    planes = hyperplane_planes(dim, bands, planes_per_band)
     flat = planes.reshape(bands * planes_per_band, dim).T.copy()  # (dim, B*H)
     weights = (1 << np.arange(planes_per_band, dtype=np.int64))
 
@@ -749,7 +743,7 @@ def hyperplane_buckets(
 
 
 def hyperplane_bucket_sql(
-    dim: int, bands: int, planes_per_band: int, seed: int = 7, vec_expr: str = "v"
+    dim: int, bands: int, planes_per_band: int, seed: int = HYPERPLANE_SEED, vec_expr: str = "v"
 ) -> list[str]:
     """DuckDB bucket expressions (one per band) matching hyperplane_buckets —
     identical plane literals via float repr round-trip, ``list_dot_product``
@@ -773,7 +767,6 @@ def embedding_dup_pairs_lsh(
     threshold: float = 0.85,
     bands: int = 8,
     planes_per_band: int = 8,
-    seed: int = 7,
     dim: int = 64,
 ) -> DataFrame:
     """APPROXIMATE cosine ≥ τ pairs, truly sub-quadratic: candidates collide in
@@ -786,7 +779,7 @@ def embedding_dup_pairs_lsh(
     regime tool; use embedding_dup_pairs_exact when τ is low. Random-pair
     collision is 2^-H per band, so candidate volume ≈ B·N²/2^H only for the
     tiny cosine-~0 mass, i.e. ~linear for clustered corpora."""
-    bk = hyperplane_buckets(df, dim, bands, planes_per_band, seed)
+    bk = hyperplane_buckets(df, dim, bands, planes_per_band)
     a, b = bk.alias("a"), bk.alias("b")
     cands = (
         a.join(
@@ -863,15 +856,13 @@ def _ckpt_severed(df: DataFrame) -> DataFrame:
     return DataFrame(severed, spark)
 
 
-def connected_components(
-    edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components over an undirected duplicate-pair graph; every
-    node's label converges to the smallest id reachable from it. Returns
-    (node, lab).
+CC_MAX_ROUNDS = 30  # star-contraction rounds before connected_components gives up
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components over the undirected duplicate-pair graph of
+    ``edges`` (``id_a``, ``id_b``); every node's label converges to the
+    smallest id reachable from it. Returns (node, lab).
 
     Every pair generator in this module (ngram/minhash/simhash/embedding)
     emits PAIRS; turning pairs into dedup decisions needs the transitive
@@ -892,7 +883,7 @@ def connected_components(
     component is a min-centered star) — measured: a shuffled 1024-node chain
     converges in 8 rounds, real near-dup graphs (shallow stars/chains) in
     2-4. The previous min-label-propagation loop was O(diameter) — a silent
-    wrong answer for any component deeper than ``max_iter`` (a fresh-seed
+    wrong answer for any component deeper than the round cap (a fresh-seed
     differential caught a 63-node chain of depth 31 at the 30-round cap).
     Convergence failure RAISES instead of returning stale labels — this
     feeds destructive dedup, wrong is worse than loud.
@@ -911,7 +902,7 @@ def connected_components(
     collect of data rows.
     """
     e0 = edges.select(
-        F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
+        F.col("id_a").cast("long").alias("a"), F.col("id_b").cast("long").alias("b")
     )
     nodes = _ckpt_severed(
         e0.select(F.col("a").alias("node"))
@@ -924,7 +915,7 @@ def connected_components(
         .distinct()
     )
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # ---- large-star: emit (v, min(Γ(u) ∪ u)) for v ∈ Γ(u), v > u
         und = ed.union(ed.select(F.col("b").alias("a"), F.col("a").alias("b")))
         mins = (
@@ -967,7 +958,7 @@ def connected_components(
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
+            f"connected_components did not converge in {CC_MAX_ROUNDS} rounds "
             "(star-contraction is O(log² n) — this graph is implausibly "
             "adversarial; investigate before trusting any dedup built on it)"
         )
@@ -977,14 +968,12 @@ def connected_components(
     ).select("node", F.coalesce(F.col("ctr"), F.col("node")).alias("lab"))
 
 
-def dup_clusters(
-    edges: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 30
-) -> DataFrame:
+def dup_clusters(edges: DataFrame) -> DataFrame:
     """Resolve dup pairs into clusters: one row per clustered document with
     its canonical representative (the cluster's min id) and the cluster size.
     Rows: (doc_id, rep_doc_id, cluster_size); every emitted doc belongs to a
     cluster of ≥2 (isolated docs never appear in the edge list)."""
-    labels = connected_components(edges, id_a=id_a, id_b=id_b, max_iter=max_iter)
+    labels = connected_components(edges)
     sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("cluster_size"))
     return labels.join(sizes, "lab").select(
         F.col("node").alias("doc_id"),
@@ -1053,7 +1042,7 @@ def segment_dedup(df: DataFrame, seg_words: int = 10) -> DataFrame:
     )
 
 
-def line_dedup(df: DataFrame, sep: str = "\n") -> DataFrame:
+def line_dedup(df: DataFrame) -> DataFrame:
     """WITHIN-document repeated-line removal (Gopher's intra-doc twin of
     ``segment_dedup``'s corpus-global keep-first): drop every line after its
     first occurrence inside the SAME document, rebuild the text in original
@@ -1068,11 +1057,7 @@ def line_dedup(df: DataFrame, sep: str = "\n") -> DataFrame:
     bounded by document size, the right trade at corpus scale vs ANY
     exploded/shuffled form (for pathological million-line docs, explode +
     min(pos) per (id, line) + reassemble is the fallback; same result)."""
-    import re as _re
-
-    # F.split takes a REGEX but array_join emits the literal — escape so a
-    # metachar separator ('.', '|') splits on the same literal it rejoins with
-    lines = F.split(F.col("content"), _re.escape(sep), -1)
+    lines = F.split(F.col("content"), "\n", -1)
     kept = F.filter(
         lines, lambda x, i: F.array_position(lines, x) == (i + F.lit(1)).cast("bigint")
     )
@@ -1080,7 +1065,7 @@ def line_dedup(df: DataFrame, sep: str = "\n") -> DataFrame:
         F.col("doc_id"),
         F.size(lines).alias("n_lines"),
         (F.size(lines) - F.size(kept)).alias("n_removed"),
-        F.array_join(kept, sep).alias("content_clean"),
+        F.array_join(kept, "\n").alias("content_clean"),
     )
 
 
@@ -1090,6 +1075,7 @@ def line_dedup(df: DataFrame, sep: str = "\n") -> DataFrame:
 
 _WINNOW_POSCAP = 1_000_000  # max gram positions per doc the key packing holds
 _WINNOW_HMOD = 1 << 40  # fingerprint hash space (2^40 · 10^6 fits int64)
+WINNOW_MAX_FP_DOCS = 50  # a fingerprint in more documents is boilerplate
 
 
 def winnow_fingerprints(df: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
@@ -1142,18 +1128,17 @@ def winnow_pairs(
     k: int = 3,
     w: int = 4,
     min_shared: int = 2,
-    max_fp_docs: int = 50,
 ) -> DataFrame:
     """Partial-overlap candidate pairs: documents sharing ≥ ``min_shared``
     distinct winnowing fingerprints, with the shared count. The inverted
     fingerprint index joins on fp like the n-gram index; fingerprints in more
-    than ``max_fp_docs`` documents are boilerplate and are dropped via a
+    than ``WINNOW_MAX_FP_DOCS`` documents are boilerplate and are dropped via a
     broadcast anti-join BEFORE the self-join (the same stop-gram treatment as
     ``ngram_jaccard_pairs`` — at web scale a viral footer fingerprint would
     otherwise emit a quadratic bucket)."""
     fps = winnow_fingerprints(df, k, w).select("doc_id", "fp").distinct()
     hot = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_df")).filter(
-        F.col("_df") > max_fp_docs
+        F.col("_df") > WINNOW_MAX_FP_DOCS
     ).select("fp")
     cold = fps.join(F.broadcast(hot), "fp", "left_anti")
     a = cold.alias("a")
@@ -1319,7 +1304,6 @@ def semdedup(
     k: int = 8,
     iters: int = 1,
     tau: float = 0.9,
-    cache: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup via k-means clustering of
     embeddings + within-cluster cosine pruning — near-duplicates in MEANING
@@ -1349,19 +1333,16 @@ def semdedup(
     driver-side ``for`` builds ONE lazy plan).
 
     Persistence: the normalized-vector table is referenced 2·iters + 3 times,
-    so by default it is ``.cache()``d; Spark offers no scope-bound unpersist
-    for a lazy result, so the cached partitions live until the caller frees
-    them — the handle is exposed as ``result._semdedup_cached`` (call
-    ``.unpersist()`` once the returned plan has been materialized), or pass
-    ``cache=False`` to recompute instead of caching (ADVICE r4: repeated
-    calls otherwise accumulate executor storage for the session lifetime)."""
+    so it is ``.cache()``d; Spark offers no scope-bound unpersist for a lazy
+    result, so the cached partitions live until the caller frees them — the
+    handle is exposed as ``result._semdedup_cached`` (call ``.unpersist()``
+    once the returned plan has been materialized; repeated calls otherwise
+    accumulate executor storage for the session lifetime)."""
     v = df.select(
         F.col("vec_id").alias("_id"), F.col("embedding").cast("array<double>").alias("_e")
     )
     l2 = F.sqrt(F.aggregate("_e", F.lit(0.0), lambda a, x: a + x * x))
-    v = v.select("_id", F.transform("_e", lambda x: x / l2).alias("_v"))
-    if cache:
-        v = v.cache()
+    v = v.select("_id", F.transform("_e", lambda x: x / l2).alias("_v")).cache()
     # init: k lowest ids via TakeOrdered (orderBy+limit — NOT a full sort);
     # the row_number window runs on the k-row result only
     cent = (
@@ -1427,6 +1408,5 @@ def semdedup(
             "max_earlier_cos",
         )
     )
-    if cache:
-        out._semdedup_cached = v  # unpersist handle (see docstring)
+    out._semdedup_cached = v  # unpersist handle (see docstring)
     return out

@@ -82,20 +82,15 @@ def rename_keys(df: DataFrame, source_keys: list[str], dest_keys: list[str]) -> 
     return df.withColumn("fields", F.expr(f"map_from_entries({S.dedup_entries_last_wins(entries)})"))
 
 
-def add_fields(df: DataFrame, fields: dict[str, str], ignore_if_exist: bool = False) -> DataFrame:
-    """processor_add_fields: append constant fields."""
-    add = S.literal_map(fields)
-    if ignore_if_exist:
-        # keys already in base are filtered from `add` → concat stays disjoint
-        # (key-presence check, not value-null check: null-valued keys count)
-        absent = S.lam(lambda k, _: f"(NOT array_contains(map_keys(fields), {k}))", 2)
-        return df.withColumn("fields", F.expr(f"map_concat(fields, map_filter({add}, {absent}))"))
-    return df.withColumn("fields", F.expr(S.merge_maps("fields", add)))
+def add_fields(df: DataFrame, fields: dict[str, str]) -> DataFrame:
+    """processor_add_fields: append constant fields, overwriting a key that is
+    already there (the reference's IgnoreIfExist=false default)."""
+    return df.withColumn("fields", F.expr(S.merge_maps("fields", S.literal_map(fields))))
 
 
 # processor_appender / processor_cloud_meta metadata source. The reference
 # reads a live cloud platform API (pkg/helper/platformmeta/interface.go:18-28);
-# this deterministic mock stands in — swap a real provider dict in production.
+# this deterministic mock stands in.
 MOCK_CLOUD_META: dict[str, str] = {
     "__cloud_instance_id__": "i-mock0001",
     "__cloud_instance_name__": "mock-instance",
@@ -115,17 +110,16 @@ def expand_appender_template(
     env: dict[str, str] | None = None,
     ip: str = "127.0.0.1",
     host: str = "localhost",
-    cloud: dict[str, str] | None = None,
 ) -> str:
     """Plan-build-time expansion of appender ``{{...}}`` templates
     (processor_appender.go:55-63,118-133): ``{{$NAME}}`` → env var,
-    ``{{__ip__}}`` → ip, ``{{__host__}}`` → host, ``{{__cloud_*__}}`` → cloud
-    metadata; unknown keys expand to themselves. ``env``/``ip``/``host`` are
-    injectable for deterministic tests (the reference reads the live host)."""
+    ``{{__ip__}}`` → ip, ``{{__host__}}`` → host, ``{{__cloud_*__}}`` →
+    ``MOCK_CLOUD_META``; unknown keys expand to themselves. ``env``/``ip``/
+    ``host`` are injectable for deterministic tests (the reference reads the
+    live host)."""
     import os
 
     env = dict(os.environ) if env is None else env
-    cloud = MOCK_CLOUD_META if cloud is None else cloud
 
     def repl(m: re.Match) -> str:
         key = m.group(1)
@@ -137,9 +131,7 @@ def expand_appender_template(
             return ip
         if key == "__host__":
             return host
-        if key in cloud:
-            return cloud[key]
-        return key
+        return MOCK_CLOUD_META.get(key, key)
 
     return _TEMPLATE_RE.sub(repl, value)
 
@@ -221,25 +213,22 @@ def _md5_sub(series: pd.Series, pattern: str) -> pd.Series:
     return series.map(lambda s: rx.sub(repl, s) if s is not None else None)
 
 
-def desensitize_md5(
-    df: DataFrame, key: str, regex: str, source_is_field: bool = True
-) -> DataFrame:
-    """processor_desensitize md5 mode: matched segment → md5 hex
-    (ProcessorDesensitizeNative.cpp:208-248). Pandas UDF (needs callback sub)."""
+def desensitize_md5(df: DataFrame, key: str, regex: str) -> DataFrame:
+    """processor_desensitize md5 mode: matched segment of field ``key`` → md5
+    hex (ProcessorDesensitizeNative.cpp:208-248). Pandas UDF (needs callback
+    sub)."""
 
     @pandas_udf(T.StringType())
     def md5_sub_udf(s: pd.Series) -> pd.Series:
         return _md5_sub(s, regex)
 
-    if source_is_field:
-        # the UDF result lands in a real column first: the map update is SQL
-        # text, which can name a column but not hold a Python UDF
-        out = df.withColumn("__dsm_val__", md5_sub_udf(F.col("fields")[key]))
-        present = f"({S.get('fields', key)} IS NOT NULL)"
-        return out.withColumn(
-            "fields", F.expr(S.set_field("fields", key, "__dsm_val__", present))
-        ).drop("__dsm_val__")
-    return df.withColumn(key, md5_sub_udf(F.col(key)))
+    # the UDF result lands in a real column first: the map update is SQL
+    # text, which can name a column but not hold a Python UDF
+    out = df.withColumn("__dsm_val__", md5_sub_udf(F.col("fields")[key]))
+    present = f"({S.get('fields', key)} IS NOT NULL)"
+    return out.withColumn(
+        "fields", F.expr(S.set_field("fields", key, "__dsm_val__", present))
+    ).drop("__dsm_val__")
 
 
 _UNQUOTE_RX = r'^"(.*)"$'

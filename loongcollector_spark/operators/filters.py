@@ -114,25 +114,14 @@ def drop_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def pick_keys(
-    df: DataFrame,
-    include: list[str] | None = None,
-    exclude: list[str] | None = None,
-    drop_empty_rows: bool = True,
-) -> DataFrame:
-    """processor_pick_key: whitelist then blacklist keys; drop rows left empty
-    (processor_pick_key.go:67-96)."""
+def pick_keys(df: DataFrame, include: list[str] | None = None) -> DataFrame:
+    """processor_pick_key: keep the whitelisted keys; drop rows left empty
+    (processor_pick_key.go:67-96). The blacklist is not carried."""
     m = F.col("fields")
     if include:
         inc = F.array(*[F.lit(k) for k in include])
         m = F.map_filter(m, lambda k, _: F.array_contains(inc, k))
-    if exclude:
-        exc = F.array(*[F.lit(k) for k in exclude])
-        m = F.map_filter(m, lambda k, _: ~F.array_contains(exc, k))
-    out = df.withColumn("fields", m)
-    if drop_empty_rows:
-        out = out.filter(F.size(F.col("fields")) > 0)
-    return out
+    return df.withColumn("fields", m).filter(F.size(F.col("fields")) > 0)
 
 
 def drop_last_key(df: DataFrame, drop_key: str, include: list[str]) -> DataFrame:

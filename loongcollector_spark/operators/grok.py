@@ -12,8 +12,9 @@ as processor_parse_regex (operators/parse.py) — no Python at runtime, and the
 DuckDB oracle can run the identical expanded regex for the correctness gate.
 
 The pattern library below is a self-written subset of the conventional grok
-vocabulary (the de-facto names every grok implementation shares); add custom
-patterns via the ``lib`` argument (CustomPatterns config, .go:360-375).
+vocabulary (the de-facto names every grok implementation shares). ``expand``
+takes extra patterns (``lib``, the CustomPatterns config, .go:360-375); the
+parser uses the library as it is.
 """
 
 from __future__ import annotations
@@ -229,7 +230,7 @@ _GROK_TYPE_TO_SPARK = {"int": "long", "long": "long", "float": "double", "string
 
 
 def compile_grok(
-    match_patterns: list[str], lib: dict[str, str] | None = None, full_match: bool = False
+    match_patterns: list[str], full_match: bool = False
 ) -> list[tuple[str, list[str], dict[str, str]]]:
     """Expand every match pattern once in the driver → [(regex, keys, types)]
     where ``types`` maps hinted fields (%{PAT:field:int|float}) to Spark type
@@ -239,7 +240,7 @@ def compile_grok(
     the pattern in ``^.*?(…).*$`` wrappers handled at evaluation time."""
     out = []
     for p in match_patterns:
-        rx, fields = expand(p, lib)
+        rx, fields = expand(p)
         keys = [f for f, _ in fields]
         types = {f: _GROK_TYPE_TO_SPARK[t] for f, t in fields if t}
         if not keys:
@@ -250,27 +251,21 @@ def compile_grok(
     return out
 
 
-def grok_fields(
-    src: str,
-    match_patterns: list[str],
-    lib: dict[str, str] | None = None,
-    full_match: bool = False,
-    opts: P.ParserOptions = P.ParserOptions(keep_source_on_success=True),
-    enabled: str | None = None,
-) -> tuple[str, str]:
+# Reference defaults KeepSource=true, IgnoreParseFailure=true (.go:360-375):
+# unlike the native regex parser, the raw line is kept on success too
+_OPTS = P.ParserOptions(keep_source_on_success=True)
+
+
+def grok_fields(src: str, match_patterns: list[str], full_match: bool = False) -> tuple[str, str]:
     """(fields_map, ok): patterns tried in order, first hit wins — each later
     pattern's input is gated on all earlier failures, so a row evaluates
     pattern i+1 only if i missed (the sequential-try semantics of
-    processor_grok.go:147-193 without per-row Python).
-
-    Reference defaults KeepSource=true, IgnoreParseFailure=true (.go:360-375)
-    → opts defaults differ from the native regex parser."""
-    en = "true" if enabled is None else enabled
-    compiled = compile_grok(match_patterns, lib, full_match)
+    processor_grok.go:147-193 without per-row Python)."""
+    compiled = compile_grok(match_patterns, full_match)
     maps: list[str] = []
     ok_any: str | None = None
     for rx, keys, _types in compiled:
-        gate = en if ok_any is None else f"({en} AND (NOT {ok_any}))"
+        gate = None if ok_any is None else f"(NOT {ok_any})"
         m, ok = P.regex_fields(
             src,
             rx,
@@ -282,16 +277,14 @@ def grok_fields(
         maps.append(m)
         ok_any = ok if ok_any is None else f"({ok_any} OR {ok})"
     fields = maps[0] if len(maps) == 1 else f"map_concat({', '.join(maps)})"
-    return P._with_policy(fields, src, ok_any, en, opts), ok_any
+    return P._with_policy(fields, src, ok_any, None, _OPTS), ok_any
 
 
 def parse_grok(
     df: DataFrame,
     match_patterns: list[str],
     source_col: str = "content",
-    lib: dict[str, str] | None = None,
     full_match: bool = False,
-    opts: P.ParserOptions = P.ParserOptions(keep_source_on_success=True),
     ignore_parse_failure: bool = True,
     typed_columns: bool = False,
 ) -> DataFrame:
@@ -300,13 +293,13 @@ def parse_grok(
     the %{PAT:field:int|float} hints (.go:54,377) as CAST top-level columns —
     the fields map stays string-typed (LogContents are strings), the typed
     projection is the Spark-native reading of the hint."""
-    m, ok = grok_fields(S.ident(source_col), match_patterns, lib, full_match, opts)
-    out = P._finalize_fields(df, m, ok, opts)
+    m, ok = grok_fields(S.ident(source_col), match_patterns, full_match)
+    out = P._finalize_fields(df, m, ok, _OPTS)
     if not ignore_parse_failure:
         out = out.filter(F.col(P.PARSE_OK))
     if typed_columns:
         hinted: dict[str, str] = {}
-        for _rx, _keys, types in compile_grok(match_patterns, lib, full_match):
+        for _rx, _keys, types in compile_grok(match_patterns, full_match):
             for f, t in types.items():
                 hinted.setdefault(f, t)
         for f, t in hinted.items():

@@ -75,7 +75,6 @@ def merge_multiline(
 def split_log_regex(
     df: DataFrame,
     split_regex: str,
-    preserve_others: bool = True,
     joiner: str = "\n",
 ) -> DataFrame:
     """processor_split_log_regex (plugins/processor/split/logregex/
@@ -87,8 +86,8 @@ def split_log_regex(
 
     Spark formulation: explode lines per input row, running count of
     full-matches = event id, group back — all per-row (no cross-row shuffle:
-    the window partitions on a per-input-row id). Returns the input columns
-    (``preserve_others``) plus ``(event_seq, content, n_lines)``."""
+    the window partitions on a per-input-row id). Returns the other input
+    columns plus ``(event_seq, content, n_lines)``."""
     anchored = split_regex
     if not anchored.startswith("^"):
         anchored = "^(?:" + anchored + ")"
@@ -96,7 +95,7 @@ def split_log_regex(
         anchored = anchored + "$"
     rid = F.monotonically_increasing_id()
     lines = F.split(F.col("content"), "\n", -1)
-    others = [c for c in df.columns if c != "content"] if preserve_others else []
+    others = [c for c in df.columns if c != "content"]
     exploded = (
         df.withColumn("__rid", rid)
         .select(

@@ -125,16 +125,14 @@ def _not_host_or_service(kv: str) -> str:
 _KIND = {1: "internal", 2: "server", 3: "client", 4: "producer", 5: "consumer"}
 
 
-def otel_trace_parse(
-    df: DataFrame, source_key: str = "content", fmt: str = "json"
-) -> DataFrame:
-    """OTLP-JSON trace payload in ``source_key`` → one output row per span
-    (all original columns kept, 20 span columns appended).  Malformed rows
-    and rows without the key are dropped (NoKeyError=false default)."""
+def otel_trace_parse(df: DataFrame, fmt: str = "json") -> DataFrame:
+    """OTLP-JSON trace payload in ``content`` → one output row per span
+    (the other original columns kept, 20 span columns appended).  Malformed
+    rows and rows without a payload are dropped (NoKeyError=false default)."""
     if fmt.lower() not in ("json", "protojson"):
         raise ValueError(f"format {fmt!r} not supported: this engine decodes OTLP-JSON")
-    keep = [c for c in df.columns if c != source_key]
-    t = df.withColumn("_otlp", F.from_json(F.col(source_key), OTLP_TRACE_SCHEMA))
+    keep = [c for c in df.columns if c != "content"]
+    t = df.withColumn("_otlp", F.from_json(F.col("content"), OTLP_TRACE_SCHEMA))
     t = t.filter(F.col("_otlp.resourceSpans").isNotNull())
     t = t.select(*keep, F.explode("_otlp.resourceSpans").alias("_rs"))
     rattrs = "_rs.resource.attributes"
@@ -286,13 +284,13 @@ def _labels_str(rattrs: str, dpattrs: str) -> str:
     return f"array_join(transform(array_sort(transform({both}, {kv})), {joined}), '|')"
 
 
-def otel_metric_parse(df: DataFrame, source_key: str = "content") -> DataFrame:
-    """OTLP-JSON metrics payload → SLS metric rows: one row per gauge/sum
-    data point — (__name__, __labels__, __time_nano__, __value__); point
-    value = asDouble, else asInt (otlp_metric_parser.go newMetricLogFromRaw
-    callers).  Original columns kept."""
-    keep = [c for c in df.columns if c != source_key]
-    t = df.withColumn("_otlp", F.from_json(F.col(source_key), OTLP_METRIC_SCHEMA))
+def otel_metric_parse(df: DataFrame) -> DataFrame:
+    """OTLP-JSON metrics payload in ``content`` → SLS metric rows: one row
+    per gauge/sum data point — (__name__, __labels__, __time_nano__,
+    __value__); point value = asDouble, else asInt (otlp_metric_parser.go
+    newMetricLogFromRaw callers).  The other original columns kept."""
+    keep = [c for c in df.columns if c != "content"]
+    t = df.withColumn("_otlp", F.from_json(F.col("content"), OTLP_METRIC_SCHEMA))
     t = t.filter(F.col("_otlp.resourceMetrics").isNotNull())
     t = t.select(*keep, F.explode("_otlp.resourceMetrics").alias("_rm"))
     t = t.select(

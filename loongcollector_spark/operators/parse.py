@@ -18,8 +18,9 @@ Reproduces the semantics of the reference's native parsers (SURVEY.md §2.2):
 Shared **CommonParserOptions** semantics
 (core/plugin/processor/CommonParserOptions.h:30-39, .cpp:91-117):
 on success the source key is removed unless ``keep_source_on_success`` keeps the
-raw under ``renamed_source_key``; on failure the raw is kept
-(``keep_source_on_fail``) or the event is **dropped**.
+raw under ``__raw__``; on failure the raw is kept under ``__raw_log__``
+(``keep_source_on_fail``) or the event is **dropped**. Only the regex parser
+takes non-default options; the others keep the raw line on failure.
 
 Architecture — the "masked slice" scheme, built as Spark SQL text
 (``sqltext``): a stage's columns are generated in Python and reach the JVM as
@@ -42,7 +43,7 @@ sources never enter it, and the kv fold, which runs only on its own source's
 rows.
 
 Each parser exposes an expression-level builder
-``*_fields(src, ..., opts, enabled) -> (fields_map, ok[, ts])`` over SQL text
+``*_fields(src, ..., enabled) -> (fields_map, ok[, ts])`` over SQL text
 — ``enabled`` masks the parser to an empty map on rows of other sources —
 plus a thin DataFrame wrapper. Everything is native Catalyst (zero Python in
 the hot path); the regex parser uses a single-pass packing trick —
@@ -88,12 +89,16 @@ def _ok(cond: str) -> str:
 
 @dataclass(frozen=True)
 class ParserOptions:
-    """CommonParserOptions (CommonParserOptions.h:30-39)."""
+    """CommonParserOptions (CommonParserOptions.h:30-39); the raw line is
+    kept under ``RAW_ON_SUCCESS_KEY``/``RAW_ON_FAIL_KEY``."""
 
     keep_source_on_success: bool = False
     keep_source_on_fail: bool = True
-    renamed_source_key: str = "__raw__"
-    copy_raw_on_fail_key: str = "__raw_log__"
+
+
+RAW_ON_SUCCESS_KEY = "__raw__"  # the reference's RenamedSourceKey default
+RAW_ON_FAIL_KEY = "__raw_log__"  # the reference's CopingRawLog key
+_DEFAULT_OPTS = ParserOptions()
 
 
 def _policy_entries(src: str, ok: str, enabled: str | None, opts: ParserOptions) -> list[str]:
@@ -102,9 +107,9 @@ def _policy_entries(src: str, ok: str, enabled: str | None, opts: ParserOptions)
     en = "true" if enabled is None else enabled
     out = []
     if opts.keep_source_on_fail:
-        out.append(S.opt_entry(S.lit(opts.copy_raw_on_fail_key), src, f"({en} AND (NOT {ok}))"))
+        out.append(S.opt_entry(S.lit(RAW_ON_FAIL_KEY), src, f"({en} AND (NOT {ok}))"))
     if opts.keep_source_on_success:
-        out.append(S.opt_entry(S.lit(opts.renamed_source_key), src, f"({en} AND {ok})"))
+        out.append(S.opt_entry(S.lit(RAW_ON_SUCCESS_KEY), src, f"({en} AND {ok})"))
     return out
 
 
@@ -197,11 +202,7 @@ def parse_regex(
 # json (processor_parse_json_native)
 # ---------------------------------------------------------------------------
 
-def json_fields(
-    src: str,
-    opts: ParserOptions = ParserOptions(),
-    enabled: str | None = None,
-) -> tuple[str, str]:
+def json_fields(src: str, enabled: str | None = None) -> tuple[str, str]:
     """(fields_map, ok): top-level members → string fields; nested values stay
     serialized JSON (ProcessorParseJsonNative.cpp:186-200); non-object /
     malformed → failure (.cpp:167-181).
@@ -211,16 +212,12 @@ def json_fields(
     prints plain ("0.0002"); identical within the plain-notation range."""
     parsed = f"from_json({_gate(src, enabled)}, {S.lit(S.MAP_T)})"
     ok = f"({parsed} IS NOT NULL)"
-    return _with_policy(f"coalesce({parsed}, {S.EMPTY_MAP})", src, ok, enabled, opts), ok
+    return _with_policy(f"coalesce({parsed}, {S.EMPTY_MAP})", src, ok, enabled, _DEFAULT_OPTS), ok
 
 
-def parse_json(
-    df: DataFrame,
-    source_col: str = "content",
-    opts: ParserOptions = ParserOptions(),
-) -> DataFrame:
-    m, ok = json_fields(S.ident(source_col), opts)
-    return _finalize_fields(df, m, ok, opts)
+def parse_json(df: DataFrame, source_col: str = "content") -> DataFrame:
+    m, ok = json_fields(S.ident(source_col))
+    return _finalize_fields(df, m, ok, _DEFAULT_OPTS)
 
 
 # ---------------------------------------------------------------------------
@@ -234,7 +231,6 @@ def delimiter_fields(
     overflow: str = "extend",  # extend | keep | discard
     allow_shortened: bool = False,
     max_extend_cols: int = 8,
-    opts: ParserOptions = ParserOptions(),
     enabled: str | None = None,
 ) -> tuple[str, str]:
     """(fields_map, ok). Overflow policies
@@ -268,38 +264,29 @@ def delimiter_fields(
         glued = f"array_join(slice({arr}, {n + 1}, greatest({sz} - {n}, 0)), {S.lit(separator)})"
         extras.append(S.opt_entry(S.lit(f"__column{n}__"), glued, f"({on} AND ({sz} > {n}))"))
 
-    extras.extend(_policy_entries(src, _ok(ok), en, opts))
+    extras.extend(_policy_entries(src, _ok(ok), en, _DEFAULT_OPTS))
     if extras:
         parsed = f"map_concat({parsed}, {S.entries_map(*extras)})"
     return parsed, ok
 
 
-def csv_fields(
-    src: str,
-    keys: list[str],
-    separator: str,
-    quote: str,
-    opts: ParserOptions = ParserOptions(),
-    enabled: str | None = None,
-) -> tuple[str, str]:
+def csv_fields(src: str, keys: list[str], separator: str, quote: str) -> tuple[str, str]:
     """Quoted delimiter mode via from_csv (FSM semantics,
     ProcessorParseDelimiterNative.cpp:251-256). Also serves processor_csv
     (plugins/processor/csv/processor_csv.go:30). ``escape`` is set to the
     quote char for RFC-4180 doubled-quote unescaping ("" → ") — Go
     encoding/csv and the native FSM both do this; Spark's univocity default
-    (backslash escape) would leave the doubled quotes in the value."""
-    en = "true" if enabled is None else enabled
-    # a DDL string (the schema parser does no variable substitution)
-    schema = ", ".join("`" + k.replace("`", "``") + "` string" for k in keys)
+    (backslash escape) would leave the doubled quotes in the value.
+
+    The struct's fields are positional (``_c0`` … ``_cN``), mapped back to
+    ``keys`` in the entries: struct field lookup ignores case, so keys that
+    differ only in case would be ambiguous as field names."""
+    schema = ", ".join(f"_c{i} string" for i in range(len(keys)))
     csv_opts = S.literal_map({"sep": separator, "quote": quote, "escape": quote})
-    st = f"from_csv({_gate(src, enabled)}, {S.lit(schema)}, {csv_opts})"
-
-    def fld(k: str) -> str:
-        return f"{st}[{S.lit(k)}]"
-
-    ok = f"(({st} IS NOT NULL) AND ({fld(keys[0])} IS NOT NULL))"
-    entries = [S.opt_entry(S.lit(k), fld(k), f"({en} AND ({fld(k)} IS NOT NULL))") for k in keys]
-    entries.extend(_policy_entries(src, ok, en, opts))
+    st = f"from_csv({src}, {S.lit(schema)}, {csv_opts})"
+    ok = f"(({st} IS NOT NULL) AND ({st}._c0 IS NOT NULL))"
+    entries = [S.opt_entry(S.lit(k), f"{st}._c{i}", f"({st}._c{i} IS NOT NULL)") for i, k in enumerate(keys)]
+    entries.extend(_policy_entries(src, ok, None, _DEFAULT_OPTS))
     return S.entries_map(*entries), ok
 
 
@@ -312,14 +299,13 @@ def parse_delimiter(
     allow_shortened: bool = False,
     quote: str | None = None,
     max_extend_cols: int = 8,
-    opts: ParserOptions = ParserOptions(),
 ) -> DataFrame:
     src = S.ident(source_col)
     if quote:
-        m, ok = csv_fields(src, list(keys), separator, quote, opts)
+        m, ok = csv_fields(src, list(keys), separator, quote)
     else:
-        m, ok = delimiter_fields(src, list(keys), separator, overflow, allow_shortened, max_extend_cols, opts)
-    return _finalize_fields(df, m, ok, opts)
+        m, ok = delimiter_fields(src, list(keys), separator, overflow, allow_shortened, max_extend_cols)
+    return _finalize_fields(df, m, ok, _DEFAULT_OPTS)
 
 
 # ---------------------------------------------------------------------------
@@ -349,11 +335,7 @@ def _epoch_time(tstr: str, epoch: str) -> str:
     return f"(CASE WHEN {S.rlike(tstr, _DIGITS_RX)} THEN {seconds} ELSE try_to_timestamp({tstr}) END)"
 
 
-def apsara_fields(
-    src: str,
-    opts: ParserOptions = ParserOptions(),
-    enabled: str | None = None,
-) -> tuple[str, str, str]:
+def apsara_fields(src: str, enabled: str | None = None) -> tuple[str, str, str]:
     """(fields_map, ok, event_ts) for Apsara format
     ``[time]\\t[LEVEL]\\t[thread]\\t[file:line]\\tk:v…``.
 
@@ -442,7 +424,7 @@ def apsara_fields(
                         entry("__THREAD__", thr, thr),
                         entry("__FILE__", file_path, fl),
                         entry("__LINE__", line_no, fl),
-                        *_policy_entries(src, m2, en, opts),
+                        *_policy_entries(src, m2, en, _DEFAULT_OPTS),
                     )
                     return S.merge_maps(base, kv_map)
 
@@ -458,10 +440,10 @@ def apsara_fields(
     return fields, matched, ts
 
 
-def parse_apsara(df: DataFrame, opts: ParserOptions = ParserOptions()) -> DataFrame:
-    m, ok, ts = apsara_fields("content", opts)
+def parse_apsara(df: DataFrame) -> DataFrame:
+    m, ok, ts = apsara_fields("content")
     prev_ts = "event_time" if "event_time" in df.columns else S.NULL_TS
-    out = _finalize_fields(df, m, ok, opts)
+    out = _finalize_fields(df, m, ok, _DEFAULT_OPTS)
     return out.withColumn("event_time", F.expr(f"(CASE WHEN {ok} THEN {ts} ELSE {prev_ts} END)"))
 
 
@@ -473,14 +455,12 @@ def parse_timestamp(
     df: DataFrame,
     source_key: str,
     fmt: str,
-    source_is_field: bool = True,
     discard_before: str | None = None,
 ) -> DataFrame:
-    """strptime SourceKey → event timestamp; ``discard_before`` mirrors dropping
-    events older than ilogtail_discard_interval
+    """strptime the ``source_key`` field → event timestamp; ``discard_before``
+    mirrors dropping events older than ilogtail_discard_interval
     (ProcessorParseTimestampNative.cpp:125-171)."""
-    src = F.col("fields")[source_key] if source_is_field else F.col(source_key)
-    ts = F.try_to_timestamp(src, F.lit(fmt))
+    ts = F.try_to_timestamp(F.col("fields")[source_key], F.lit(fmt))
     prev = F.col("event_time") if "event_time" in df.columns else F.lit(None).cast("timestamp")
     out = df.withColumn("event_time", F.coalesce(ts, prev))
     if discard_before is not None:
@@ -547,13 +527,11 @@ def split_key_value(df: DataFrame, delimiter: str = "\t", separator: str = ":") 
 def json_flatten(
     df: DataFrame,
     expand_depth: int = 0,  # 0 = unlimited (processor_json.go:29-41)
-    connector: str = "_",
-    prefix: str = "",
     expand_array: bool = False,
-    ignore_first_connector: bool = False,
 ) -> DataFrame:
-    """processor_json (Go): recursive flatten with ExpandDepth/ExpandConnector/
-    Prefix/ExpandArray (plugins/processor/json/processor_json.go:29-41,120-180).
+    """processor_json (Go): recursive flatten with ExpandDepth/ExpandArray
+    (plugins/processor/json/processor_json.go:29-41,120-180); keys join with
+    the default ExpandConnector ``_`` and carry no Prefix.
 
     Depth-bounded recursive flatten is not expressible natively → Arrow-batched
     pandas UDF (slow path by design; the native ``parse_json`` covers the
@@ -584,7 +562,7 @@ def json_flatten(
                 return
             items = obj.items() if isinstance(obj, dict) else enumerate(obj)
             for k, v in items:
-                nk = f"{key}{connector}{k}" if key else str(k)
+                nk = f"{key}_{k}" if key else str(k)
                 walk(v, nk, depth + 1, out)
 
         def one(line):
@@ -597,7 +575,7 @@ def json_flatten(
             if not isinstance(obj, (dict, list)):
                 return None
             out: dict = {}
-            walk(obj, prefix.rstrip(connector) if ignore_first_connector else prefix, 0, out)
+            walk(obj, "", 0, out)
             return out
 
         return s.map(one)

@@ -15,7 +15,7 @@
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -72,7 +72,7 @@ class SinkCondition:
     discard_tag: bool = False  # DiscardingTag removes the tag after routing
 
 
-def sink_predicate(cond: SinkCondition, df_cols: list[str]) -> Column:
+def sink_predicate(cond: SinkCondition) -> Column:
     if cond.type == "always":
         return F.lit(True)
     if cond.type == "event_type":
@@ -107,7 +107,7 @@ def fan_out(df: DataFrame, conditions: list[SinkCondition]) -> dict[str, DataFra
     check_distinct_sinks(conditions)
     out: dict[str, DataFrame] = {}
     for c in conditions:
-        sunk = df.filter(sink_predicate(c, df.columns))
+        sunk = df.filter(sink_predicate(c))
         if c.type == "tag" and c.discard_tag:
             sunk = sunk.withColumn("tags", _discard_tag(c))
         out[c.sink] = sunk
@@ -120,7 +120,7 @@ def with_sink_column(df: DataFrame, conditions: list[SinkCondition]) -> DataFram
     k times, a row in none is dropped — so ONE ``partitionBy("_sink")`` write
     commits every sink. ``discard_tag`` applies to its own sink's copies."""
     check_distinct_sinks(conditions)
-    hits = F.array(*[F.when(sink_predicate(c, df.columns), F.lit(c.sink)) for c in conditions])
+    hits = F.array(*[F.when(sink_predicate(c), F.lit(c.sink)) for c in conditions])
     out = df.withColumn("_sink", F.explode(F.filter(hits, lambda s: s.isNotNull())))
     discards = [c for c in conditions if c.type == "tag" and c.discard_tag]
     if discards:

@@ -17,13 +17,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def hash_bucket(col: Column, buckets: int = 10_000) -> Column:
-    """Deterministic bucket in [0, buckets): first 8 hex chars of md5 of the
-    key's string form, mod ``buckets``. Matches the DuckDB expression
-    ``('0x' || substr(md5(cast(k as varchar)), 1, 8))::bigint % buckets``."""
+BUCKETS = 10_000  # hash buckets: sampling and split fractions resolve to 1/BUCKETS
+
+
+def hash_bucket(col: Column) -> Column:
+    """Deterministic bucket in [0, BUCKETS): first 8 hex chars of md5 of the
+    key's string form, mod ``BUCKETS``. Matches the DuckDB expression
+    ``('0x' || substr(md5(cast(k as varchar)), 1, 8))::bigint % 10000``."""
     return (
         F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
-        % F.lit(buckets)
+        % F.lit(BUCKETS)
     )
 
 
@@ -77,7 +80,6 @@ def hash_split(
     df: DataFrame,
     key_col: str,
     splits: dict[str, float] | None = None,
-    buckets: int = 10_000,
 ) -> DataFrame:
     """Deterministic train/val/test assignment: each row's split is a pure
     function of its key hash, so the same document lands in the same split on
@@ -88,13 +90,13 @@ def hash_split(
 
     Scan-side CASE on the hash bucket — no shuffle, no state."""
     splits = splits or {"train": 0.98, "val": 0.01, "test": 0.01}
-    b = hash_bucket(F.col(key_col), buckets)
+    b = hash_bucket(F.col(key_col))
     names = list(splits)
     expr = None
     cum = 0.0
     for name in names:
         cum += splits[name]
-        thr = int(round(cum * buckets))
+        thr = int(round(cum * BUCKETS))
         cond = b < F.lit(thr)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     return df.withColumn("split", expr.otherwise(F.lit(names[-1])))
@@ -158,9 +160,8 @@ def stratified_sample(
     strata_col: str,
     rates: dict[str, float],
     default_rate: float = 1.0,
-    buckets: int = 10_000,
 ) -> DataFrame:
-    """Keep each row iff hash_bucket(key) < rate(stratum) · buckets.
+    """Keep each row iff hash_bucket(key) < rate(stratum) · BUCKETS.
 
     ``rates`` maps stratum values (e.g. source names) to keep-fractions;
     unlisted strata use ``default_rate``. The rate table is a tiny CASE
@@ -174,13 +175,13 @@ def stratified_sample(
     buckets hash_split assigns to train first, so any sample at r ≤ train
     share contains ZERO val/test rows (and sampling after splitting empties
     val/test). Salted, the two bucketings are independent."""
-    thr: Column = F.lit(int(round(default_rate * buckets)))
+    thr: Column = F.lit(int(round(default_rate * BUCKETS)))
     for stratum, rate in sorted(rates.items()):
         thr = F.when(
-            F.col(strata_col) == F.lit(stratum), F.lit(int(round(rate * buckets)))
+            F.col(strata_col) == F.lit(stratum), F.lit(int(round(rate * BUCKETS)))
         ).otherwise(thr)
     salted = F.concat(F.lit("strat:"), F.col(key_col).cast("string"))
-    return df.filter(hash_bucket(salted, buckets) < thr)
+    return df.filter(hash_bucket(salted) < thr)
 
 
 def length_batching(

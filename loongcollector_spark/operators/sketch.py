@@ -161,9 +161,8 @@ def cms_build(
     item: Column,
     depth: int = 4,
     width: int = 1024,
-    weight: Column | None = None,
 ) -> DataFrame:
-    """Count-Min sketch over an item stream: ``depth`` independent hash rows ×
+    """Count-Min sketch (unit weights) over an item stream: ``depth`` independent hash rows ×
     ``width`` counters; estimate(x) = min over rows of cell[r, h_r(x)] —
     always an OVERcount (one-sided error ≤ εN with ε = e/width at the
     standard depth, Cormode & Muthukrishnan 2005). The point-query sibling of
@@ -181,11 +180,10 @@ def cms_build(
     the property that makes CMS the standard streaming/distributed counter.
     """
     cells = _cms_cells(item, depth, width)
-    w = F.lit(1).cast("bigint") if weight is None else weight.cast("bigint")
     return (
-        df.select(F.explode(cells).alias("_cell"), w.alias("_w"))
+        df.select(F.explode(cells).alias("_cell"))
         .groupBy(F.col("_cell.r").alias("r"), F.col("_cell.col").alias("col"))
-        .agg(F.sum("_w").alias("c"))
+        .agg(F.count(F.lit(1)).alias("c"))
     )
 
 

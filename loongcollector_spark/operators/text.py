@@ -32,18 +32,17 @@ def _words(col: Column) -> Column:
     return F.array_remove(F.split(F.trim(F.lower(col)), r"\s+", -1), "")
 
 
-def language_id(df: DataFrame, stopwords: dict[str, list[str]] | None = None) -> DataFrame:
-    """Stopword-vote language ID: the language whose stopword list intersects
-    the document's word set most wins; ties and zero hits → 'und'.
+def language_id(df: DataFrame) -> DataFrame:
+    """Stopword-vote language ID: the language whose ``STOPWORDS`` list
+    intersects the document's word set most wins; ties and zero hits → 'und'.
 
     One pass, native set ops — at 100 TB this is a projection, no shuffle."""
-    sw = stopwords or STOPWORDS
     words = F.array_distinct(_words(F.col("text")))
     scores = {
         lang: F.size(F.array_intersect(words, F.array(*[F.lit(w) for w in lst])))
-        for lang, lst in sw.items()
+        for lang, lst in STOPWORDS.items()
     }
-    best_score = F.greatest(*scores.values()) if len(scores) > 1 else next(iter(scores.values()))
+    best_score = F.greatest(*scores.values())
     # deterministic tie-break: first language (dict order) achieving the max
     pred = F.lit("und")
     for lang in reversed(list(scores)):
@@ -516,16 +515,14 @@ def char_entropy(df: DataFrame) -> DataFrame:
     )
 
 
-def gopher_rules(
-    df: DataFrame,
-    min_words: int = 20,
-    max_words: int = 120,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 10.0,
-    max_punct_word_ratio: float = 0.10,
-    min_alpha_word_frac: float = 0.80,
-    min_stopword_hits: int = 1,
-) -> DataFrame:
+# Gopher rule thresholds besides the word-count band
+GOPHER_MEAN_WORD_LEN = (2.0, 10.0)  # inclusive band
+GOPHER_MAX_PUNCT_WORD_RATIO = 0.10
+GOPHER_MIN_ALPHA_WORD_FRAC = 0.80
+GOPHER_MIN_STOPWORD_HITS = 1
+
+
+def gopher_rules(df: DataFrame, min_words: int = 20, max_words: int = 120) -> DataFrame:
     """Gopher-style document-format rules (Rae et al. 2021 §A1.1) as explicit
     per-rule booleans — the audit-friendly form of ``quality_score``: a
     curation run wants to know WHICH rule dropped a document, not just the
@@ -548,10 +545,11 @@ def gopher_rules(
     en_sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     sw_hits = F.size(F.array_intersect(F.array_distinct(words), en_sw))
     r_wc = (n_words >= min_words) & (n_words <= max_words)
-    r_mwl = (mean_wl >= min_mean_word_len) & (mean_wl <= max_mean_word_len)
-    r_punct = F.round(punct / F.greatest(n_words, F.lit(1)).cast("double"), 6) <= max_punct_word_ratio
-    r_alpha = F.round(alpha_words / F.greatest(n_words, F.lit(1)).cast("double"), 6) >= min_alpha_word_frac
-    r_sw = sw_hits >= min_stopword_hits
+    lo, hi = GOPHER_MEAN_WORD_LEN
+    r_mwl = (mean_wl >= lo) & (mean_wl <= hi)
+    r_punct = F.round(punct / F.greatest(n_words, F.lit(1)).cast("double"), 6) <= GOPHER_MAX_PUNCT_WORD_RATIO
+    r_alpha = F.round(alpha_words / F.greatest(n_words, F.lit(1)).cast("double"), 6) >= GOPHER_MIN_ALPHA_WORD_FRAC
+    r_sw = sw_hits >= GOPHER_MIN_STOPWORD_HITS
     return df.select(
         "doc_id",
         n_words.alias("n_words"),
@@ -575,32 +573,31 @@ KEYWORD_TAXONOMY: dict[str, list[str]] = {
 }
 
 
-def keyword_tag(df: DataFrame, taxonomy: dict[str, list[str]] | None = None) -> DataFrame:
-    """Taxonomy tagging: count keyword OCCURRENCES (not distinct) per topic
-    and pick the winning topic (most hits; ties break on taxonomy declaration
-    order). Rows: (doc_id, <topic>_hits per topic, total_hits, top_topic —
+def keyword_tag(df: DataFrame) -> DataFrame:
+    """``KEYWORD_TAXONOMY`` tagging: count keyword OCCURRENCES (not
+    distinct) per topic and pick the winning topic (most hits; ties break on
+    taxonomy declaration order). Rows: (doc_id, <topic>_hits per topic, total_hits, top_topic —
     'none' when zero hits).
 
     Scale shape: pure projection — per-topic counts are codegen'd
     ``size(filter(words, ...))`` over the split array; the argmax is a
     greatest/when chain. No shuffle, no join, no Python, and the keyword
     lists live in the plan as literals (nothing to broadcast)."""
-    tax = taxonomy if taxonomy is not None else KEYWORD_TAXONOMY
     words = _words(F.col("text"))
     hit_cols = {}
-    for topic, kws in tax.items():
+    for topic, kws in KEYWORD_TAXONOMY.items():
         arr = F.array(*[F.lit(k) for k in kws])
         hit_cols[topic] = F.size(F.filter(words, lambda w: F.array_contains(arr, w)))
     total = None
     for c in hit_cols.values():
         total = c if total is None else total + c
-    best = F.greatest(*hit_cols.values()) if len(hit_cols) > 1 else list(hit_cols.values())[0]
+    best = F.greatest(*hit_cols.values())
     top = F.lit("none")
-    for topic in reversed(list(tax)):  # earlier topics win ties -> apply last
+    for topic in reversed(list(KEYWORD_TAXONOMY)):  # earlier topics win ties -> apply last
         top = F.when((hit_cols[topic] > 0) & (hit_cols[topic] == best), topic).otherwise(top)
     return df.select(
         "doc_id",
-        *[hit_cols[t].cast("long").alias(f"{t}_hits") for t in tax],
+        *[hit_cols[t].cast("long").alias(f"{t}_hits") for t in KEYWORD_TAXONOMY],
         total.cast("long").alias("total_hits"),
         top.alias("top_topic"),
     )
@@ -636,16 +633,16 @@ def zipf_fit(df: DataFrame, top_v: int = 50) -> DataFrame:
 DATASET_CARD_LANGS = ["en", "fr", "es", "de", "zh"]
 
 
-def dataset_card(df: DataFrame, langs: list[str] | None = None) -> DataFrame:
+def dataset_card(df: DataFrame) -> DataFrame:
     """Per-source dataset card — the summary table a data curator publishes
     with a training mix: doc/word/char volumes, length spread, and the
-    language composition as fixed per-lang doc counts (fixed column set =
+    language composition as per-lang doc counts over ``DATASET_CARD_LANGS``
+    (fixed column set =
     deterministic schema; no argmax tie hazards). Rows: one per source.
 
     Scale shape: ONE map-side-combined groupBy(source) over per-row
     projections (word counts via size(split), lang indicator sums) — a
     100 TB corpus reduces to |sources| rows in a single shuffle."""
-    ls = langs if langs is not None else DATASET_CARD_LANGS
     n_words = F.size(_words(F.col("text")))
     aggs = [
         F.count(F.lit(1)).alias("n_docs"),
@@ -655,7 +652,7 @@ def dataset_card(df: DataFrame, langs: list[str] | None = None) -> DataFrame:
         F.max(n_words).alias("max_words"),
         F.round(F.avg(n_words), 6).alias("avg_words"),
     ]
-    for lang in ls:
+    for lang in DATASET_CARD_LANGS:
         aggs.append(
             F.sum(F.when(F.col("lang") == lang, 1).otherwise(0)).alias(f"docs_{lang}")
         )

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..checkpoint import ResumableRun, _validate_stage, partition_lineage
 from ..operators.route import RouteRule, SinkCondition, check_distinct_sinks, with_sink_column
 from ..sources.io import read_sequences, sink_writer, write_staged
-from .pipeline import DEFAULT_ROUTES, ParserSpec, build_pipeline, default_enrich
+from .pipeline import DEFAULT_ROUTES, build_pipeline, default_enrich
 
 _COUNTS_SCHEMA = pa.schema([("route", pa.string()), ("n_rows", pa.int64()), ("n_tok_sum", pa.int64())])
 
@@ -87,7 +87,6 @@ def run_job(
     input_path: str,
     out_root: str,
     run_id: str,
-    parsers: dict[str, ParserSpec] | None = None,
     routes: list[RouteRule] | None = None,
     conditions: list[SinkCondition] | None = None,
     default_sink: str | None = "sink_default",
@@ -97,7 +96,7 @@ def run_job(
     "executed": [stage...]}`` — ``executed`` is empty on a fully-resumed run.
     """
     names = _sink_names(routes, conditions, default_sink)
-    run = ResumableRun(spark, out_root, run_id)
+    run = ResumableRun(out_root, run_id)
 
     # Fast resume: the counts stage commits LAST, so its presence means every
     # sink is committed too — read counts from the committed records instead
@@ -123,8 +122,7 @@ def run_job(
     files = {n: run.log.read(run.run_id, f"sink_{n}")["partitions"] for n in done}
     if pending:
         routed = build_pipeline(
-            read_sequences(spark, input_path), parsers, routes, default_sink,
-            enrich=default_enrich(spark),
+            read_sequences(spark, input_path), routes, default_sink, enrich=default_enrich(spark),
         )
         if conditions is None:
             plan = routed.withColumn("_sink", F.col("route"))

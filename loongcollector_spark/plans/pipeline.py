@@ -18,8 +18,7 @@ salted repartition → fan-out sinks + per-sink counts.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,35 +38,32 @@ class ParserSpec:
     regex: str = ""
     keys: tuple[str, ...] = ()
     separator: str = "|"
-    kv_delimiter: str = "\t"
-    kv_separator: str = ":"
-    overflow: str = "extend"
     allow_shortened: bool = False
-    opts: P.ParserOptions = field(default_factory=P.ParserOptions)
 
 
 def _branch_fields(spec: ParserSpec, src: str, enabled: str) -> tuple[str, str, str | None]:
-    """(masked_fields_map, matched, event_ts|None) SQL text for one parser spec.
+    """(masked_fields_map, matched, event_ts|None) SQL text for one parser spec,
+    with the default CommonParserOptions (raw line kept under ``__raw_log__``
+    on failure); delimiter overflow is ``extend`` and kv splits on tab/colon.
 
     The map is EMPTY on rows where ``enabled`` is false, and each parser gates
     its input string on ``enabled`` so the expensive work (regex, json parse)
     runs only on its own source's rows."""
     if spec.kind == "regex":
-        m, ok = P.regex_fields(src, spec.regex, list(spec.keys), spec.opts, enabled)
+        m, ok = P.regex_fields(src, spec.regex, list(spec.keys), enabled=enabled)
         return m, ok, None
     if spec.kind == "json":
-        m, ok = P.json_fields(src, spec.opts, enabled)
+        m, ok = P.json_fields(src, enabled)
         return m, ok, None
     if spec.kind == "delimiter":
         m, ok = P.delimiter_fields(
-            src, list(spec.keys), spec.separator, spec.overflow, spec.allow_shortened,
-            opts=spec.opts, enabled=enabled,
+            src, list(spec.keys), spec.separator, allow_shortened=spec.allow_shortened, enabled=enabled
         )
         return m, ok, None
     if spec.kind == "apsara":
-        return P.apsara_fields(src, spec.opts, enabled)
+        return P.apsara_fields(src, enabled)
     if spec.kind == "kv":
-        m, ok = P.kv_fields(src, spec.kv_delimiter, spec.kv_separator, enabled)
+        m, ok = P.kv_fields(src, enabled=enabled)
         return m, ok, None
     raise ValueError(f"unknown parser kind {spec.kind!r}")
 
@@ -187,21 +183,19 @@ def default_enrich(spark) -> "Callable[[DataFrame], DataFrame]":  # noqa: F821
 
 def build_pipeline(
     df: DataFrame,
-    parsers: dict[str, ParserSpec] | None = None,
     routes: list[RouteRule] | None = None,
     default_sink: str | None = "sink_default",
     enrich=None,
 ) -> DataFrame:
-    """decode → parse(by source) → [enrich] → route. ``tokens`` is carried
-    untouched.
+    """decode → parse(by source, ``DEFAULT_PARSERS``) → [enrich] → route.
+    ``tokens`` is carried untouched.
 
     ``enrich`` is a DataFrame→DataFrame stage (see ``default_enrich``) applied
     between parse and route — the lookup / desensitize line.
     """
-    parsers = DEFAULT_PARSERS if parsers is None else parsers
     routes = DEFAULT_ROUTES if routes is None else routes
     out = with_content(df)
-    out = parse_by_source(out, parsers)
+    out = parse_by_source(out, DEFAULT_PARSERS)
     if enrich is not None:
         out = enrich(out)
     return route_rows(out, routes, source_key="source", default_sink=default_sink)

@@ -133,7 +133,6 @@ def write_sequences(
     path: str,
     n_rows: int,
     seed: int = 42,
-    row_group_size: int = 16 * 1024,
     rows_per_file: int = 20_000,
 ) -> str:
     """Materialize the sequences table as a DIRECTORY of parquet part files
@@ -170,7 +169,7 @@ def write_sequences(
                 "source": pa.array(sources, pa.string()),
             }
         )
-        pq.write_table(table, os.path.join(tmp, f"part-{part:05d}.parquet"), row_group_size=row_group_size)
+        pq.write_table(table, os.path.join(tmp, f"part-{part:05d}.parquet"), row_group_size=16 * 1024)
         part += 1
         doc_ids, tokens, n_toks, sources = [], [], [], []
 
@@ -191,5 +190,6 @@ def default_sequences_path(n_rows: int, base_dir: str | None = None) -> str:
     return os.path.join(base, f"sequences_{n_rows}_v2.parquet")
 
 
-def ensure_sequences(n_rows: int, seed: int = 42, base_dir: str | None = None) -> str:
-    return write_sequences(default_sequences_path(n_rows, base_dir), n_rows, seed)
+def ensure_sequences(n_rows: int, base_dir: str | None = None) -> str:
+    """The seed-42 table of ``n_rows`` rows at its cached path."""
+    return write_sequences(default_sequences_path(n_rows, base_dir), n_rows)

@@ -82,7 +82,7 @@ def test_partial_failure_then_resume(spark, seq_path, tmp_path):
     """Simulate a crash mid-run: commit two stages, die, resume — only the
     remaining stages execute."""
     out = str(tmp_path / "job4")
-    run = ResumableRun(spark, out, run_id="crash")
+    run = ResumableRun(out, run_id="crash")
     run.stage("sink_a", lambda d: (1, 1, [{"partition_id": 0, "n_rows": 1, "n_bytes": 1}]))
     run.stage("sink_b", lambda d: (2, 2, []))
 
@@ -95,7 +95,7 @@ def test_partial_failure_then_resume(spark, seq_path, tmp_path):
     with pytest.raises(RuntimeError):
         run.stage("sink_c", failing)
 
-    resumed = ResumableRun(spark, out, run_id="crash")
+    resumed = ResumableRun(out, run_id="crash")
     calls = []
 
     def fn(name):
@@ -132,7 +132,7 @@ def test_run_id_separator_rejected(tmp_path):
     with pytest.raises(ValueError):
         log.stages("bad__id")
     with pytest.raises(ValueError):
-        ResumableRun(None, str(tmp_path / "out"), run_id="a__b")
+        ResumableRun(str(tmp_path / "out"), run_id="a__b")
     # clean ids still work
     log.record("run1", "sink_a", 1, 2, [])
     assert log.stages("run1") == ["sink_a"]

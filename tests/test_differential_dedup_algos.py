@@ -328,7 +328,7 @@ def test_connected_components_differential(spark):
 def test_connected_components_deep_chain(spark):
     """Pin O(log² n) star-contraction on a deep graph: a 256-node shuffled
     chain (diameter 255) is far above what an O(diameter) min-label
-    propagation could finish inside max_iter=30 — the fresh-seed
+    propagation could finish inside the 30-round cap — the fresh-seed
     differential caught the old hook-only implementation returning a
     silently-stale label at depth 31.  Large-star/small-star must converge
     well inside the cap (measured: 6-8 rounds) and raise rather than

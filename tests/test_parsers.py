@@ -124,6 +124,17 @@ def test_delimiter_quoted(spark):
     assert f == {"x": "a", "y": "b,with,commas", "z": "c"}
 
 
+def test_delimiter_quoted_keys_differing_in_case(spark):
+    """Keys that differ only in case (or hold a back-tick) are distinct fields
+    in the quoted mode, as in the unquoted one: the parse must not resolve
+    them as struct field names, whose lookup ignores case."""
+    keys = ["K", "k", "z `q"]
+    quoted = _fields(P.parse_delimiter(_df(spark, ['1,"x,y",3']), keys, ",", quote='"'))[0]
+    assert quoted == {"K": "1", "k": "x,y", "z `q": "3"}
+    plain = _fields(P.parse_delimiter(_df(spark, ["1,2,3"]), keys, ","))[0]
+    assert plain == {"K": "1", "k": "2", "z `q": "3"}
+
+
 # ---- apsara (ProcessorParseApsaraNativeUnittest.cpp) ------------------------
 
 def test_apsara_full(spark):

@@ -169,12 +169,12 @@ def test_lsh_persist_buckets_identical_and_single_signature_pass(spark):
             (F.col("id") % 7).cast("string"),
         ).alias("text"),
     )
-    for fn, kw in (
-        (minhash_lsh_pairs_md5, dict(num_hashes=16, bands=8, threshold=0.3)),
-        (simhash_dup_pairs_md5, dict(max_hamming=7)),
+    minhash = dict(num_hashes=16, bands=8, threshold=0.3, max_bucket_size=50)
+    simhash = dict(max_hamming=7, max_bucket_size=50)
+    for base, cached in (
+        (minhash_lsh_pairs_md5(docs, **minhash), minhash_lsh_pairs_md5(docs, persist_buckets=True, **minhash)),
+        (simhash_dup_pairs_md5(docs, **simhash), simhash_dup_pairs_md5(docs, persist_buckets=True, **simhash)),
     ):
-        base = fn(docs, max_bucket_size=50, **kw)
-        cached = fn(docs, max_bucket_size=50, persist_buckets=True, **kw)
         try:
             got_base = sorted(tuple(r) for r in base.collect())
             got_cached = sorted(tuple(r) for r in cached.collect())

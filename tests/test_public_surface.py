@@ -1,15 +1,14 @@
 """The library names that the benchmark (``perfbench/``, ``bench.py``), the
 query entry point (``__spark_entry__.py``) and ``tools/`` use still exist, and
-still take the keywords those callers pass; and every column-name parameter of
-the library is set by some call.
+still take the keywords those callers pass; and every option of the library (a
+parameter with a default) is set by some call.
 
 Those files import from ``loongcollector_spark`` at module level and inside
 functions, so a library change that drops a name or a keyword they use would
-otherwise fail only when the benchmark or those queries run. The row schema
-(SURVEY.md §1.2) is fixed, so a parameter that names one of its columns but
-that no call sets is a configuration nothing runs. Checked statically: the
-callers are parsed with ``ast``, only the library is imported, and no Spark
-session starts.
+otherwise fail only when the benchmark or those queries run. An option that
+no call sets is a configuration nothing runs: its other values take branches
+no test covers. Checked statically: the callers are parsed with ``ast``, only
+the library is imported, and no Spark session starts.
 """
 
 from __future__ import annotations
@@ -168,28 +167,47 @@ def test_callers_use_existing_names_and_keywords():
     assert not problems, "\n".join(problems)
 
 
-def _is_column_param(name: str) -> bool:
-    return name.endswith("_col") or name == "out" or name.endswith("_out") or name.startswith("out_")
+CONFIG_CLASSES = ["ParserSpec", "RouteRule", "SinkCondition", "ParserOptions"]
+
+# The pure-Python reference the tests compare the operators against: its
+# options mirror the reference plugins', not this library's calls.
+REFERENCE = f"{PKG}.oracle"
+
+# Options a deployment sets (table format, cache location); no code here does.
+DEPLOYMENT = {
+    f"{PKG}.sources.io.read_sequences(fmt=)": "Iceberg in production, parquet here",
+    f"{PKG}.synth.default_sequences_path(base_dir=)": "the synth cache's directory",
+    f"{PKG}.synth.ensure_sequences(base_dir=)": "the synth cache's directory",
+}
+
+# Options set by a call the scan cannot resolve, and the line that sets each.
+SET_OUT_OF_SIGHT = {
+    f"{PKG}.plans.job.run_job(default_sink=)": "tests/test_checkpoint.py:313",  # **kw of a parametrize
+}
 
 
 def _library_functions() -> dict:
-    """``{function: (qualified name, column-name parameters)}`` for every
-    public function and public method defined in the library."""
+    """``{callable: (qualified name, parameters with a default)}`` for every
+    public function, public method and config dataclass defined in the
+    library (but the reference); a dataclass is called by its class name."""
     found = {}
     for path in LIBRARY:
+        if _module_of(path) == REFERENCE:
+            continue
         mod = importlib.import_module(_module_of(path))
         members = [(n, o) for n, o in vars(mod).items() if not n.startswith("_")]
         for name, obj in members:
             if getattr(obj, "__module__", None) != mod.__name__:
                 continue
-            fns = [(name, obj)] if inspect.isfunction(obj) else []
+            fns = [(name, obj)] if inspect.isfunction(obj) or name in CONFIG_CLASSES else []
             if inspect.isclass(obj):
                 fns += [(f"{name}.{m}", f) for m, f in vars(obj).items()
                         if inspect.isfunction(f) and not m.startswith("_")]
             for qual, fn in fns:
-                cols = [p for p in inspect.signature(fn).parameters if _is_column_param(p)]
-                if cols:
-                    found[fn] = (f"{mod.__name__}.{qual}", cols)
+                opts = [p.name for p in inspect.signature(fn).parameters.values()
+                        if p.default is not p.empty]
+                if opts:
+                    found[fn] = (f"{mod.__name__}.{qual}", opts)
     return found
 
 
@@ -207,13 +225,14 @@ def _passed(sig: inspect.Signature, call: ast.Call) -> list[tuple[str, ast.AST]]
     return passed + [(k.arg, k.value) for k in call.keywords if k.arg is not None]
 
 
-def test_every_column_name_parameter_is_set_by_some_call():
-    """A column-name parameter (``*_col``, ``out``, ``*_out``, ``out_*``)
-    stays only while some call in the benchmark, the entry points, ``tools/``,
-    the tests or the library itself passes it a value. With one value in use,
-    the column name is a constant, not an option. A library function that only
-    forwards its own parameter of the same name sets it only if its own
-    parameter is set."""
+def test_every_option_is_set_by_some_call():
+    """A parameter with a default stays only while some call in the
+    benchmark, the entry points, ``tools/``, the tests or the library itself
+    passes it a value. With one value in use, the option is a constant, and
+    the branch another value would take runs nowhere. A library function that
+    only forwards its own parameter of the same name sets it only if its own
+    parameter is set. An option a deployment sets, or one set by a call the
+    scan cannot resolve, is listed above with its reason or its line."""
     functions = _library_functions()
     used: set[tuple] = set()
     forwards: list[tuple[tuple, tuple]] = []  # (caller, name) → (callee, name)
@@ -245,12 +264,20 @@ def test_every_column_name_parameter_is_set_by_some_call():
                     forwards.append(((vars(mod)[scope.name], name), (fn, name)))
                 else:
                     used.add((fn, name))
+    options = {f"{qual}({p}=)": (fn, p) for fn, (qual, opts) in functions.items() for p in opts}
+    seen = {o for o, key in options.items() if key in used}
+    stale = sorted(seen & {*DEPLOYMENT, *SET_OUT_OF_SIGHT})
+    assert not stale, f"exempt, but a call the scan sees sets it: {stale}"
+    for option, where in SET_OUT_OF_SIGHT.items():
+        path, line = where.split(":")
+        name = option.rpartition("(")[2][:-2]
+        assert name in (ROOT / path).read_text().splitlines()[int(line) - 1], (option, where)
+        used.add(options[option])
     while True:
         more = {dst for src, dst in forwards if src in used and dst not in used}
         if not more:
             break
         used |= more
-    unset = [f"{qual}({p}=)" for fn, (qual, cols) in functions.items()
-             for p in cols if (fn, p) not in used]
+    unset = sorted(o for o, key in options.items() if key not in used and o not in DEPLOYMENT)
     assert n_calls > 100, n_calls  # the scan found the calls
-    assert not unset, f"{len(unset)} column-name parameters no call sets:\n" + "\n".join(sorted(unset))
+    assert not unset, f"{len(unset)} options no call sets:\n" + "\n".join(unset)

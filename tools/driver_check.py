@@ -1,6 +1,5 @@
-"""Strict emulation of the DRIVER's correctness gate.
-
-Differences from tools/check_oracle.py (the builder's friendly checker):
+"""Strict emulation of the DRIVER's correctness gate: every query against its
+DuckDB oracle.
 
 * The SparkSession is VANILLA — built exactly like a harness would build it
   (no ``mapKeyDedupPolicy``, no custom confs beyond master/shuffle-partitions),
@@ -8,7 +7,7 @@ Differences from tools/check_oracle.py (the builder's friendly checker):
   3 queries to a session-conf dependency this checker would have caught.
 * ``canon`` does NOT round decimals/floats — Decimals stringify at full scale,
   floats use repr().  Round 1 lost 3 TPC-H queries to decimal canonicalization
-  differences the friendly checker's round-to-9 masked.
+  differences that a round-to-9 canonicalization masked.
 
 If a query passes here it has no excuse to fail in CORRECTNESS_r{N}.json.
 

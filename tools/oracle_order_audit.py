@@ -8,9 +8,9 @@ DuckDB (different thread count → different partial-sum tree) rounds a
 boundary-sitting value to a different 6th decimal.
 
 This audit perturbs execution order DELIBERATELY: every oracle runs under
-DuckDB threads=1, threads=4 and threads=32, and the canonical value hash
-(same canonicalization as tools/check_oracle.py / the driver) is compared
-across the three runs. A query whose oracle hash is thread-count-unstable
+DuckDB threads=1, threads=4 and threads=32, and the canonical value hash of
+tools/driver_check.py (floats by ``repr``, unrounded, as the driver compares
+them) is compared across the three runs. A query whose oracle hash is thread-count-unstable
 would eventually red in SOME driver environment — the fix is integer-exact
 outputs (skew_probe's ppm bigints, time_rollup's integer grid).
 
@@ -28,7 +28,7 @@ _TOOLS = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [os.path.dirname(_TOOLS), _TOOLS]  # repo root, then tools/
 
 import __spark_entry__ as entrymod  # noqa: E402
-from check_oracle import TABLES, value_hash  # noqa: E402
+from driver_check import TABLES, value_hash  # noqa: E402
 
 
 def main() -> int:
